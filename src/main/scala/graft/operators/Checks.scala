@@ -16,21 +16,25 @@ object Checks {
 
   /** Rows whose multiplicities differ between `a` and `b` (by `a`'s
     * column set), with the signed multiplicity delta — EMPTY iff the
-    * two frames are multiset-equal. One shuffle, one action when the
-    * caller runs `.isEmpty`. */
+    * two frames are multiset-equal. Column names match
+    * case-insensitively, like Spark's default resolution. One shuffle,
+    * one action when the caller runs `.isEmpty`. */
   def multisetMismatch(a: DataFrame, b: DataFrame): DataFrame = {
     // selecting b by a's names must not silently pass a b with EXTRA
     // columns (the old exceptAll spelling raised an arity error), and
     // an input already carrying the helper names would have its data
     // overwritten before the compare — both weaken the proof
-    require(a.columns.toSet == b.columns.toSet,
+    def lower(df: DataFrame) = df.columns.map(_.toLowerCase).toSet
+    require(lower(a) == lower(b),
       s"multiset compare needs identical column sets, got " +
         s"${a.columns.toSeq.sorted} vs ${b.columns.toSeq.sorted}")
-    require(!a.columns.contains("__w") && !a.columns.contains("__d"),
+    require(!lower(a).contains("__w") && !lower(a).contains("__d"),
       "multiset compare inputs must not carry the __w/__d helper names")
     val cols = a.columns.toSeq.map(col)
+    // b's columns take a's spelling, so the union lines up by name
     a.select(cols: _*).withColumn("__w", lit(1L))
-      .unionByName(b.select(cols: _*).withColumn("__w", lit(-1L)))
+      .unionByName(b.select(a.columns.toSeq.map(c => col(c).as(c)): _*)
+        .withColumn("__w", lit(-1L)))
       .groupBy(cols: _*).agg(sum(col("__w")).as("__d"))
       .where(col("__d") =!= 0L)
   }

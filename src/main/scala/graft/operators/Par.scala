@@ -16,23 +16,35 @@ object Par {
 
   /** Run the thunks concurrently and wait for ALL of them (a failed
     * sibling must not leave another thunk's commit half-observed);
-    * propagate the first failure after every thunk has finished. */
+    * propagate the first failure after every thunk has finished. An
+    * interrupt of the caller does not cut the wait short either: it is
+    * remembered, the wait goes on, and the caller's interrupt status
+    * is restored once every thunk is done. */
   def all(thunks: (() => Unit)*): Unit = {
     if (thunks.sizeIs <= 1) { thunks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    var interrupted = false
     try {
       val futs = thunks.map { t =>
         pool.submit(new Runnable { override def run(): Unit = t() })
       }
       var first: Throwable = null
       futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (first == null) first = e.getCause
+        var done = false
+        while (!done) {
+          try { f.get(); done = true }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (first == null) first = e.getCause
+              done = true
+            case _: InterruptedException => interrupted = true
+          }
         }
       }
       if (first != null) throw first
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 }

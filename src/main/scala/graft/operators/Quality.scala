@@ -15,17 +15,6 @@ object Quality {
     df.groupBy(col(key)).agg(count(lit(1)).as("n_rows"))
       .where(col("n_rows") > 1)
 
-  /** Offending rows for a `not_null` test — empty result = pass. */
-  def notNullViolations(df: DataFrame, column: String): DataFrame =
-    df.where(col(column).isNull)
-
-  /** Offending rows for an `accepted_values` test. Matches dbt's
-    * generated NOT-IN semantics: NULLs pass (they are `not_null`'s
-    * job, not this test's).
-    */
-  def acceptedValuesViolations(df: DataFrame, column: String, accepted: Seq[String]): DataFrame =
-    df.where(col(column).isNotNull && !col(column).isin(accepted: _*))
-
   /** Run all checks and return one summary frame
     * (check_name, n_violations) — the shape of the reference's
     * `dbt_test` stage output.

@@ -301,8 +301,8 @@ object TxLog {
     throw new IllegalStateException("unreachable")
   }
 
-  private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
+  private[graft] def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private[graft] def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
   /** Line format: `path[\trows[\t(dtype\tcol\tmin\tmax)+]]` — 2 + 4k
     * fields. The single-stats v2 line (6 fields) is the k=1 case, so
@@ -470,7 +470,7 @@ object TxLog {
     * to the line format, a new meta-line kind, or a new entry-group
     * dtype MUST bump the matching version here. These are the engine's
     * CAPABILITY ceilings; the version a table REQUIRES is
-    * feature-derived at commit time (publishEntries) — (2, 2) only
+    * feature-derived at commit time ([[TableMeta.stampedProtocol]]) — (2, 2) only
     * when column mapping is active, (1, 1) otherwise — so enabling a
     * v2 feature on one table never locks older engines out of the
     * rest of the lake. Version 2 = `#colmap` column-mapping
@@ -507,14 +507,6 @@ object TxLog {
   private[graft] val ReaderVersion = 5
   private[graft] val WriterVersion = 8 // 8 = column DEFAULT values
 
-  private[graft] def parseProtocolLines(lines: Seq[String])
-      : Option[(Int, Int)] =
-    lines.find(_.startsWith("#protocol\t")).map(_.split('\t') match {
-      case Array(_, r, w) => (r.toInt, w.toInt)
-      case other => throw new IllegalStateException(
-        s"malformed protocol line (${other.length} fields)")
-    })
-
   private[graft] def linesOf(spark: SparkSession, base: String,
                       p: Path): Seq[String] = {
     val in = fs(base, spark).open(p)
@@ -525,7 +517,7 @@ object TxLog {
     // the reader gate lives at the ONE choke point every manifest and
     // checkpoint read passes through — a too-new table errors here,
     // before any line is interpreted
-    parseProtocolLines(lines).foreach { case (r, _) =>
+    TableMeta.protocolOf(lines).foreach { case (r, _) =>
       if (r > ReaderVersion) throw new IllegalStateException(
         s"$p requires log reader version $r; this engine implements " +
           s"$ReaderVersion — upgrade the engine to read this table")
@@ -624,8 +616,8 @@ object TxLog {
       val it = physSchemaCache.keySet.iterator()
       while (it.hasNext) if (it.next()._1 == key) it.remove()
     }
-    widenCache.synchronized {
-      val it = widenCache.keySet.iterator()
+    metaCache.synchronized {
+      val it = metaCache.keySet.iterator()
       while (it.hasNext) if (it.next()._1 == key) it.remove()
     }
   }
@@ -730,13 +722,37 @@ object TxLog {
       }
     }.toMap
 
-  private def parseConstraintLines(lines: Seq[String]): Map[String, String] =
-    lines.filter(_.startsWith("#constraint\t"))
-      .map(_.split('\t') match {
-        case Array(_, n, ex) => dec(n) -> dec(ex)
-        case other => throw new IllegalStateException(
-          s"malformed constraint line (${other.length} fields)")
-      }).toMap
+  /** The table metadata of one published version (schema, column
+    * mapping, partitioning, constraints, … — see [[TableMeta]]).
+    * Served from a driver-side LRU keyed like the snapshot/schema
+    * caches by (canonical base, version, commit mtime): metadata sits
+    * on every read and write path, so after the first probe of a
+    * version it costs one cached lookup guarded by a stat RPC, never a
+    * manifest open+parse. A vacuumed version fails with the same
+    * FileNotFound a manifest read gives. */
+  def metaOf(spark: SparkSession, base: String, v: Long): TableMeta = {
+    val key = (canonicalBase(base), v, commitModTime(spark, base, v))
+    metaCache.synchronized(Option(metaCache.get(key))).getOrElse {
+      val m = TableMeta.parse(manifestLines(spark, base, v))
+      metaCache.synchronized(metaCache.put(key, m))
+      m
+    }
+  }
+
+  /** [[metaOf]] the latest version ([[TableMeta.empty]] for an empty
+    * store). */
+  private[graft] def latestMeta(spark: SparkSession,
+                                base: String): TableMeta =
+    latestVersion(spark, base).map(metaOf(spark, base, _))
+      .getOrElse(TableMeta.empty)
+
+  private val metaCache =
+    new java.util.LinkedHashMap[(String, Long, Long), TableMeta](
+      32, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, Long), TableMeta]): Boolean =
+        size() > 256
+    }
 
   private def parseOpLines(lines: Seq[String]): Option[String] =
     lines.find(_.startsWith("#op\t")).map(_.split('\t') match {
@@ -759,61 +775,6 @@ object TxLog {
                              v: Long): Option[String] =
     manifestLines(spark, base, v).find(_.startsWith("#cdfop\t"))
       .map(l => dec(l.split('\t')(1)))
-
-  private def parseSchemaLines(lines: Seq[String])
-      : Option[org.apache.spark.sql.types.StructType] =
-    lines.find(_.startsWith("#schema\t")).map(_.split('\t') match {
-      case Array(_, json) =>
-        org.apache.spark.sql.types.DataType.fromJson(dec(json))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case other => throw new IllegalStateException(
-        s"malformed schema line (${other.length} fields)")
-    })
-
-  /** The DECLARED table schema of one published version — the
-    * `#schema` meta line written by [[alterAddColumns]] (and carried
-    * forward by every later commit), Delta's versioned `metaData`
-    * action analog. None for tables whose schema has only ever been
-    * inferred from data files. A declared column missing from every
-    * data file (just ALTERed, nothing written yet) scans as NULL;
-    * time travel to a version BEFORE the ALTER resolves that
-    * version's own line, so the old snapshot does not grow the new
-    * column. */
-  def declaredSchemaOf(spark: SparkSession, base: String,
-                       v: Long): Option[org.apache.spark.sql.types.StructType] =
-    parseSchemaLines(manifestLines(spark, base, v))
-
-  /** `#colmap\t<nextId>(\t<enc(logical)>\t<enc(physical)>)*` — pairs in
-    * column order (the order reads project). */
-  private def parseColMapLines(lines: Seq[String]): Option[ColMap] =
-    lines.find(_.startsWith("#colmap\t")).map { l =>
-      val parts = l.split('\t')
-      require(parts.length >= 2 && parts.length % 2 == 0,
-        s"malformed colmap line (${parts.length} fields)")
-      val pairs = parts.drop(2).grouped(2).map {
-        case Array(lg, ph) => dec(lg) -> dec(ph)
-      }.toSeq
-      ColMap(pairs, parts(1).toInt)
-    }
-
-  private def serColMapLine(cm: ColMap): String =
-    (s"#colmap\t${cm.nextId}" +: cm.cols.map {
-      case (l, p) => s"${enc(l)}\t${enc(p)}"
-    }).mkString("\t")
-
-  /** The column mapping of one published version (None = identity —
-    * the table has never had a RENAME/DROP COLUMN). Versioned with the
-    * log: time travel below the first rename resolves no mapping, so
-    * old snapshots keep their old names. */
-  def columnMappingOf(spark: SparkSession, base: String,
-                      v: Long): Option[ColMap] =
-    parseColMapLines(manifestLines(spark, base, v))
-
-  /** The latest published version's column mapping (None for an empty
-    * store or a never-renamed table). */
-  private[graft] def columnMapping(spark: SparkSession,
-                                   base: String): Option[ColMap] =
-    latestVersion(spark, base).flatMap(columnMappingOf(spark, base, _))
 
   /** Rename a user-facing (logical-named) DataFrame to physical names
     * for landing. A column the mapping does not know is a loud error:
@@ -927,22 +888,19 @@ object TxLog {
     * user predicates/assignments evaluate on inside the DML verbs.
     * Identity when the table has no mapping. */
   private def logicalView(spark: SparkSession, base: String, df: DataFrame,
-                          keep: Seq[String] = Nil): DataFrame =
-    columnMapping(spark, base) match {
-      case Some(cm) => toLogicalDf(df, cm, latestDeclaredSchema(spark, base),
-        keep)
+                          keep: Seq[String] = Nil): DataFrame = {
+    val m = latestMeta(spark, base)
+    m.colMap match {
+      case Some(cm) => toLogicalDf(df, cm, m.schema, keep)
       case None => df
     }
-
-  private def latestDeclaredSchema(spark: SparkSession, base: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    latestVersion(spark, base).flatMap(declaredSchemaOf(spark, base, _))
+  }
 
   /** Translate one user-facing column name to physical (identity
     * without a mapping). */
   private[graft] def physicalName(spark: SparkSession, base: String,
                                   column: String): String =
-    columnMapping(spark, base) match {
+    latestMeta(spark, base).colMap match {
       case Some(cm) => cm.physical(column)
       case None => column
     }
@@ -952,65 +910,10 @@ object TxLog {
     * unmapped tables keep their exact current plans). */
   private def toPhysicalIfMapped(spark: SparkSession, base: String,
                                  df: DataFrame): DataFrame =
-    columnMapping(spark, base) match {
+    latestMeta(spark, base).colMap match {
       case Some(cm) => toPhysicalDf(df, cm)
       case None => df
     }
-
-  private def parseIdentityLines(lines: Seq[String]): Map[String, Long] =
-    lines.filter(_.startsWith("#identity\t"))
-      .map(_.split('\t') match {
-        case Array(_, c, hw) => dec(c) -> hw.toLong
-        case other => throw new IllegalStateException(
-          s"malformed identity line (${other.length} fields)")
-      }).toMap
-
-  /** `#partition\t(<enc(col)>\t<dtype>)+` — the table's partition
-    * columns in declared order (Delta's `partitionColumns`). Names are
-    * PHYSICAL (frozen at column birth, like stats/identity keys), so
-    * RENAME COLUMN on a partition column is the usual zero-rewrite
-    * rebind. `dtype` is the [[statsDtype]] the exact-value stats are
-    * collected under. Declared at table birth and carried forward by
-    * every commit; absent line = unpartitioned. */
-  private[graft] def parsePartitionLines(lines: Seq[String])
-      : Seq[(String, String)] =
-    lines.find(_.startsWith("#partition\t")).map { l =>
-      val parts = l.split('\t')
-      require(parts.length >= 3 && parts.length % 2 == 1,
-        s"malformed partition line (${parts.length} fields)")
-      parts.drop(1).grouped(2).map {
-        case Array(c, t) => dec(c) -> t
-      }.toSeq
-    }.getOrElse(Seq.empty)
-
-  private def serPartitionLine(ps: Seq[(String, String)]): String =
-    ("#partition" +: ps.map { case (c, t) => s"${enc(c)}\t$t" })
-      .mkString("\t")
-
-  /** `#cluster\t<enc(physCol)>...` — declared clustering keys (Delta
-    * liquid clustering's `CLUSTER BY` registration), PHYSICAL names
-    * in declared order, so RENAME COLUMN never invalidates them. The
-    * line is carried by every commit; its presence makes (1) every
-    * API write verb tile its batch by the keys' interleave and stamp
-    * their stats, and (2) plain OPTIMIZE incremental — re-tile only
-    * weak/polluted files via the existing compactZorder sweep. */
-  private[graft] def parseClusterLines(lines: Seq[String]): Seq[String] =
-    lines.find(_.startsWith("#cluster\t"))
-      .map(_.split('\t').drop(1).map(dec).toSeq).getOrElse(Seq.empty)
-
-  private def serClusterLine(cols: Seq[String]): String =
-    ("#cluster" +: cols.map(enc)).mkString("\t")
-
-  /** `#rowid\t<highWater>` — row tracking (Delta 4.0 row IDs): the
-    * next FRESH stable row id. Presence of the line enables tracking:
-    * every commit assigns each new known-count file a contiguous id
-    * span `[base, base + rows)` (the `rid` entry group) and advances
-    * the high-water; rewrites MATERIALIZE ids into a physical
-    * [[RowIdCol]] column so a row keeps its id across compaction and
-    * COW DML for its whole life. A row's id =
-    * coalesce(materialized column, base + parquet row index). */
-  private[graft] def parseRowIdLines(lines: Seq[String]): Option[Long] =
-    lines.find(_.startsWith("#rowid\t")).map(_.split('\t')(1).toLong)
 
   /** In-commit timestamp of one manifest (Delta 4.0 ICT): the commit
     * WROTE its own wall-clock millis as a `#ict` line, clamped
@@ -1037,17 +940,6 @@ object TxLog {
     * Hidden from every user-facing read surface (dropped like the DV
     * coordinates); surfaced explicitly by [[readWithRowIds]]. */
   private[graft] val RowIdCol = "__row_id"
-
-  /** Row-tracking high-water of one published version (None = the
-    * feature is off). */
-  def rowIdHighWaterOf(spark: SparkSession, base: String,
-                       v: Long): Option[Long] =
-    parseRowIdLines(manifestLines(spark, base, v))
-
-  private[graft] def rowTracked(spark: SparkSession,
-                                base: String): Boolean =
-    latestVersion(spark, base)
-      .flatMap(rowIdHighWaterOf(spark, base, _)).isDefined
 
   /** The write verbs REJECT a user batch carrying the reserved
     * materialized row-id column — accepting one would forge/collide
@@ -1115,7 +1007,7 @@ object TxLog {
     * rewrite-materialized column wins, else entry base + row ordinal
     * — [[rowIdReadRaw]]'s coalesce, for frames whose coordinates must
     * SURVIVE (mask computation reads them downstream). Caller checks
-    * [[rowTracked]]. */
+    * the table is row-tracked. */
   private def attachRowIds(spark: SparkSession, touched: Seq[Entry],
                            tagged: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
@@ -1137,7 +1029,7 @@ object TxLog {
     * against the LIVE touched rows (min() elects the survivor if the
     * target held duplicate keys — the others are masked away by the
     * merge). Unmatched (insert) rows carry NULL and take their file's
-    * fresh span id at read. Caller checks [[rowTracked]]. */
+    * fresh span id at read. Caller checks the table is row-tracked. */
   private def inheritMergeIds(source: DataFrame, liveTarget: DataFrame,
                               keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, min}
@@ -1159,7 +1051,7 @@ object TxLog {
     withCasRetry(maxAttempts) { _ =>
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
-      if (rowIdHighWaterOf(spark, base, cur).isDefined) cur
+      if (metaOf(spark, base, cur).rowIdHighWater.isDefined) cur
       else {
         val (entries, txns) = manifest(spark, base, cur)
         require(entries.forall(_.rows >= 0),
@@ -1171,7 +1063,7 @@ object TxLog {
         }
         publishEntries(spark, base, cur + 1L, backfilled, txns,
           dataChange = false, operation = "ENABLE ROW TRACKING",
-          rowIdSeed = Some(hw))
+          meta = _.copy(rowIdHighWater = Some(hw)))
         cur + 1L
       }
     }
@@ -1190,46 +1082,20 @@ object TxLog {
     * join on `_row_id` to diff its life. */
   def readVersionWithRowIds(spark: SparkSession, base: String,
                             v: Long): DataFrame = {
-    require(rowIdHighWaterOf(spark, base, v).isDefined,
+    val m = metaOf(spark, base, v)
+    require(m.rowIdHighWater.isDefined,
       s"row tracking is not enabled on $base at version $v " +
         "(enableRowTracking first)")
     val (entries, _) = manifest(spark, base, v)
-    val requested = widenedPhysSchema(spark, base, v)
+    val requested = m.widenedPhysSchema
       .orElse(Some(cachedPhysUnionSchema(spark, base, v)))
     val df = rowIdReadRaw(spark, base, entries, requested)
-    val out = columnMappingOf(spark, base, v) match {
-      case Some(cm) => toLogicalDf(df, cm, declaredSchemaOf(spark, base, v),
-        keep = Seq(RowIdCol))
+    val out = m.colMap match {
+      case Some(cm) => toLogicalDf(df, cm, m.schema, keep = Seq(RowIdCol))
       case None => df
     }
     out.withColumnRenamed(RowIdCol, "_row_id")
   }
-
-  /** Declared clustering keys (physical names) of one published
-    * version; empty = the table is not clustered. */
-  def clusterByOf(spark: SparkSession, base: String,
-                  v: Long): Seq[String] =
-    parseClusterLines(manifestLines(spark, base, v))
-
-  /** The latest version's clustering keys (empty for an empty store
-    * or an unclustered table). */
-  private[graft] def clusterKeys(spark: SparkSession,
-                                 base: String): Seq[String] =
-    latestVersion(spark, base)
-      .map(clusterByOf(spark, base, _)).getOrElse(Seq.empty)
-
-  /** Partition columns (physical name → stats dtype, declared order)
-    * of one published version; empty = unpartitioned. */
-  def partitionSpecOf(spark: SparkSession, base: String,
-                      v: Long): Seq[(String, String)] =
-    parsePartitionLines(manifestLines(spark, base, v))
-
-  /** The latest version's partition columns (empty for an empty store
-    * or an unpartitioned table). */
-  private[graft] def partitionSpec(spark: SparkSession,
-                                   base: String): Seq[(String, String)] =
-    latestVersion(spark, base)
-      .map(partitionSpecOf(spark, base, _)).getOrElse(Seq.empty)
 
   /** A file's partition tuple under `pspec` (inner None = all-NULL
     * component); outer None = the file SPANS values on some partition
@@ -1256,10 +1122,11 @@ object TxLog {
   def showPartitions(spark: SparkSession, base: String): DataFrame = {
     val v = latestVersion(spark, base).getOrElse(
       throw new IllegalStateException(s"no committed version at $base"))
-    val pspec = partitionSpecOf(spark, base, v)
+    val m = metaOf(spark, base, v)
+    val pspec = m.partitions
     require(pspec.nonEmpty,
       s"SHOW PARTITIONS: txlog($base) is not a partitioned table")
-    val cm = columnMappingOf(spark, base, v)
+    val cm = m.colMap
     val names = pspec.map { case (p, _) =>
       cm.map(_.logicalOf(p)).getOrElse(p) }
     val entries = snapshotEntries(spark, base, v)
@@ -1318,7 +1185,7 @@ object TxLog {
     * is the all-NULL tuple, pure by construction. */
   private[graft] def requirePartitionPure(spark: SparkSession, base: String,
                                           entries: Seq[Entry]): Unit = {
-    val ps = partitionSpec(spark, base)
+    val ps = latestMeta(spark, base).partitions
     if (ps.isEmpty) return
     for { (c, _) <- ps; e <- entries; st <- e.statsFor(c) }
       require(st.min == st.max,
@@ -1326,164 +1193,6 @@ object TxLog {
           s"on '$c' — the write was planned against a different table " +
           "shape; restart it against the current (partitioned) table")
   }
-
-  /** `#generatedcol\t<enc(col)>\t<enc(sqlExpr)>` — GENERATED ALWAYS AS
-    * columns (Delta generated columns): `col` and the expression speak
-    * LOGICAL names, like CHECK constraints. The API write verbs
-    * COMPUTE the column when a batch omits it and VALIDATE it
-    * (`col <=> expr`, null-safe) when supplied; the DSv2/SQL write
-    * paths validate at commit and require the column supplied (the
-    * data is already landed executor-side — nothing left to compute).
-    * Declared at table birth, carried forward by every commit. The
-    * flagship pairing: a generated `CAST(ts AS DATE)` day column as
-    * the PARTITION column — the pattern the TIMESTAMP-partition ban
-    * points at. */
-  private[graft] def parseGeneratedLines(lines: Seq[String])
-      : Seq[(String, String)] =
-    lines.collect { case l if l.startsWith("#generatedcol\t") =>
-      l.split('\t') match {
-        case Array(_, c, ex) => dec(c) -> dec(ex)
-        case other => throw new IllegalStateException(
-          s"malformed generated-column line (${other.length} fields)")
-      }
-    }
-
-  /** `#defaultcol\t<enc(col)>\t<enc(sqlExpr)>` — column DEFAULT values
-    * (Delta's `allowColumnDefaults` writer feature): a CONSTANT
-    * (foldable, no column references — Delta's own restriction) SQL
-    * expression materialized into every FUTURE write that omits the
-    * column. Never applied to existing rows and never a read-time
-    * fill: files that landed without the column keep reading NULL —
-    * Delta draws the same line, which is why its ALTER ADD COLUMN
-    * refuses a DEFAULT clause. Keyed on LOGICAL names like generated
-    * columns; carried forward by every commit; writer-gated (v8) —
-    * an ignorant writer reconstructing meta lines would silently drop
-    * the line and start landing NULLs where the user declared a
-    * fill. */
-  private[graft] def parseDefaultLines(lines: Seq[String])
-      : Seq[(String, String)] =
-    lines.collect { case l if l.startsWith("#defaultcol\t") =>
-      l.split('\t') match {
-        case Array(_, c, ex) => dec(c) -> dec(ex)
-        case other => throw new IllegalStateException(
-          s"malformed default-column line (${other.length} fields)")
-      }
-    }
-
-  def defaultColumnsOf(spark: SparkSession, base: String,
-                       v: Long): Seq[(String, String)] =
-    parseDefaultLines(manifestLines(spark, base, v))
-
-  /** `#varstats\t<enc(physCol)>\t<enc(path)>\t<dtype>` — DECLARED
-    * variant extraction paths ([[declareVariantStats]]): every
-    * subsequent API-verb write collects per-file min/max on
-    * `try_variant_get(col, path)` in the same scan as its ordinary
-    * stats columns, so typed skipping over semi-structured bronze
-    * stays FRESH without maintenance sweeps (Delta's shredded-leaf
-    * stats collected at write). Keyed on the frozen PHYSICAL column
-    * name like `#widencol`, carried forward by every commit, reset by
-    * REPLACE TABLE. NOT writer-gated and NOT in the re-base meta
-    * signature: a writer that drops the line (or lands entries
-    * without the key) only loses skipping freshness — files without
-    * path stats are conservatively scanned, never wrongly pruned. */
-  private[graft] def parseVarStatsLines(lines: Seq[String])
-      : Seq[(String, String, String)] =
-    lines.collect { case l if l.startsWith("#varstats\t") =>
-      l.split('\t') match {
-        case Array(_, c, p, t) => (dec(c), dec(p), t)
-        case other => throw new IllegalStateException(
-          s"malformed varstats line (${other.length} fields)")
-      }
-    }
-
-  def variantStatsOf(spark: SparkSession, base: String,
-                     v: Long): Seq[(String, String, String)] =
-    parseVarStatsLines(manifestLines(spark, base, v))
-
-  private[graft] def defaultColumns(spark: SparkSession,
-                                    base: String): Seq[(String, String)] =
-    latestVersion(spark, base)
-      .map(defaultColumnsOf(spark, base, _)).getOrElse(Seq.empty)
-
-  /** `#widencol\t<enc(physCol)>\t<enc(typeJson)>` — columns widened by
-    * `ALTER COLUMN ... TYPE` (Delta type widening). The line is what
-    * tells every reader to request the DECLARED (widened) type
-    * explicitly: after the ALTER, old files keep their narrow bytes
-    * and new files land wide, and neither plain inference (first
-    * footer wins) nor mergeSchema (CANNOT_MERGE_SCHEMAS on int vs
-    * long) can serve that mix — only an explicit requested schema
-    * (Spark's parquet readers upcast per file) can. Cumulative,
-    * carried forward by every commit, reset by REPLACE TABLE. */
-  private[graft] def parseWidenLines(lines: Seq[String])
-      : Seq[(String, org.apache.spark.sql.types.DataType)] =
-    lines.collect { case l if l.startsWith("#widencol\t") =>
-      l.split('\t') match {
-        case Array(_, c, tj) =>
-          dec(c) -> org.apache.spark.sql.types.DataType.fromJson(dec(tj))
-        case other => throw new IllegalStateException(
-          s"malformed widencol line (${other.length} fields)")
-      }
-    }
-
-  /** Widened columns (physical name → declared type) of one published
-    * version; empty = the table was never widened. Cache-served (the
-    * DSv2 schema resolution probes this per load). */
-  def widenedColumnsOf(spark: SparkSession, base: String,
-                       v: Long): Seq[(String, org.apache.spark.sql.types.DataType)] =
-    widenedOfCached(spark, base, v)
-
-  /** Driver-side LRU of a version's parsed widen set, keyed like the
-    * snapshot/schema caches by (canonical base, version, commit
-    * mtime). The PRESENCE check sits on every read path (readVersion,
-    * the DML verbs' tagged read, readEntriesCurrent), so it must not
-    * cost a manifest open+parse per query — after the first probe of
-    * a version it is one cached lookup guarded by a stat RPC. */
-  private val widenCache =
-    new java.util.LinkedHashMap[(String, Long, Long),
-        Seq[(String, org.apache.spark.sql.types.DataType)]](32, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long),
-            Seq[(String, org.apache.spark.sql.types.DataType)]]): Boolean =
-        size() > 256
-    }
-  private def widenedOfCached(spark: SparkSession, base: String, v: Long)
-      : Seq[(String, org.apache.spark.sql.types.DataType)] = {
-    val key = (canonicalBase(base), v, commitModTime(spark, base, v))
-    val hit = widenCache.synchronized(Option(widenCache.get(key)))
-    hit.getOrElse {
-      val w = parseWidenLines(manifestLines(spark, base, v))
-      widenCache.synchronized(widenCache.put(key, w))
-      w
-    }
-  }
-
-  /** The explicit PHYSICAL requested schema of version `v` when the
-    * table carries widenings, None otherwise. Built from the declared
-    * `#schema` (the widened types live there), translated through the
-    * version's column mapping. Every read of a widened table must go
-    * through this schema — see [[parseWidenLines]] for why. */
-  private[graft] def widenedPhysSchema(spark: SparkSession, base: String,
-                                       v: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    if (widenedOfCached(spark, base, v).isEmpty) None
-    else {
-      val lines = manifestLines(spark, base, v)
-      val declared = parseSchemaLines(lines).getOrElse(
-        throw new IllegalStateException(
-          s"$base carries #widencol lines but no #schema line — the " +
-            "declared schema is the widened read surface"))
-      val cm = parseColMapLines(lines)
-      Some(org.apache.spark.sql.types.StructType(declared.fields.map(f =>
-        f.copy(name = cm.map(_.physical(f.name)).getOrElse(f.name)))))
-    }
-  }
-
-  /** [[widenedPhysSchema]] at the latest version (None on an empty
-    * store — nothing to read there anyway). */
-  private def widenedPhysSchemaLatest(spark: SparkSession, base: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    latestVersion(spark, base)
-      .flatMap(v => widenedPhysSchema(spark, base, v))
 
   /** `ALTER TABLE ... ALTER COLUMN col TYPE <wider>` (Delta's type
     * widening): a METADATA-ONLY commit — the declared `#schema`
@@ -1504,6 +1213,7 @@ object TxLog {
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
+      val m = metaOf(spark, base, cur)
       // the declared surface: the versioned #schema line, else the
       // current snapshot's logical schema synthesized once — from the
       // ALTER on, the declared schema IS the read surface. Because
@@ -1520,10 +1230,8 @@ object TxLog {
       // writes), so any extra physical file column is a DROPped
       // column's bytes, which must stay hidden.
       val declared0 = {
-        val stated = declaredSchemaOf(spark, base, cur).getOrElse(
-          readVersion(spark, base, cur).schema)
-        if (entries.isEmpty || columnMappingOf(spark, base, cur).isDefined)
-          stated
+        val stated = m.schema.getOrElse(readVersion(spark, base, cur).schema)
+        if (entries.isEmpty || m.colMap.isDefined) stated
         else {
           val union = cachedPhysUnionSchema(spark, base, cur)
           val have = stated.fieldNames.map(_.toLowerCase).toSet
@@ -1576,21 +1284,19 @@ object TxLog {
       // partition tuple identity and generated-column validation are
       // typed at declaration; widening under them would need re-stamped
       // metadata this verb does not rewrite — loud veto, not drift
-      require(!partitionSpec(spark, base).exists(
-        _._1.equalsIgnoreCase(phys)),
+      require(!m.partitions.exists(_._1.equalsIgnoreCase(phys)),
         s"cannot widen partition column '${f.name}' — partition tuple " +
           "identity is typed at declaration")
-      require(!generatedColumns(spark, base).exists(
-        _._1.equalsIgnoreCase(f.name)),
+      require(!m.generated.exists(_._1.equalsIgnoreCase(f.name)),
         s"cannot widen GENERATED column '${f.name}' — its type is fixed " +
           "by the generation expression")
-      require(!clusterKeys(spark, base).exists(_.equalsIgnoreCase(phys)),
+      require(!m.cluster.exists(_.equalsIgnoreCase(phys)),
         s"cannot widen CLUSTER BY key '${f.name}' — the layout's " +
           "interleave and stats family are typed at declaration; drop " +
           "clustering first (alterClusterBy(..., Seq.empty))")
       val declared = StructType(
         declared0.fields.updated(idx, f.copy(dataType = newType)))
-      val widen = widenedColumnsOf(spark, base, cur)
+      val widen = m.widened
         .filterNot(_._1.equalsIgnoreCase(phys)) :+ (phys -> newType)
       // manifest stats carried across a CROSS-FAMILY widen must stay
       // sound against the NEW family's predicate reprs: integer→
@@ -1615,22 +1321,10 @@ object TxLog {
       }
       publishEntries(spark, base, cur + 1L, entriesAdj, txns,
         dataChange = false, operation = "ALTER COLUMN",
-        declaredSchemaOverride = Some(declared),
-        widenOverride = Some(widen))
+        meta = _.copy(schema = Some(declared), widened = widen))
       cur + 1L
     }
   }
-
-  /** GENERATED ALWAYS AS columns (column → SQL expression, declared
-    * order) of one published version; empty = none. */
-  def generatedColumnsOf(spark: SparkSession, base: String,
-                         v: Long): Seq[(String, String)] =
-    parseGeneratedLines(manifestLines(spark, base, v))
-
-  private[graft] def generatedColumns(spark: SparkSession,
-                                      base: String): Seq[(String, String)] =
-    latestVersion(spark, base)
-      .map(generatedColumnsOf(spark, base, _)).getOrElse(Seq.empty)
 
   /** The null-safe validation predicate for a SUPPLIED generated
     * column — rides the existing constraint scan over the landed
@@ -1644,9 +1338,10 @@ object TxLog {
   private[graft] def generatedChecksFor(spark: SparkSession, base: String,
                                         cols: Seq[String])
       : Map[String, String] = {
-    val gens = generatedColumns(spark, base)
+    val m = latestMeta(spark, base)
+    val gens = m.generated
     if (gens.isEmpty) return Map.empty
-    val cm = columnMapping(spark, base)
+    val cm = m.colMap
     val have = cols.map(_.toLowerCase).toSet
     gens.map { case (c, ex) =>
       // landed files carry PHYSICAL names; `cols` is as-landed
@@ -1726,34 +1421,11 @@ object TxLog {
     }
   }
 
-  /** CHECK constraints (name → SQL expression) of one published
-    * version — `#constraint` meta lines. */
-  def constraintsOf(spark: SparkSession, base: String,
-                    v: Long): Map[String, String] =
-    parseConstraintLines(manifestLines(spark, base, v))
-
-  /** CHECK constraints of the latest published version (empty for an
-    * empty store). */
-  def constraints(spark: SparkSession, base: String): Map[String, String] =
-    latestVersion(spark, base)
-      .map(constraintsOf(spark, base, _)).getOrElse(Map.empty)
-
   /** Did version `v` change data logically? False for pure physical
     * rewrites (compaction, DV purge) stamped `#nodatachange` — the
     * change feeds skip those versions. */
   def dataChangeOf(spark: SparkSession, base: String, v: Long): Boolean =
     !manifestLines(spark, base, v).contains("#nodatachange")
-
-  /** Identity-column high-waters (column → highest id ever assigned)
-    * of one published version — `#identity` meta lines. */
-  def identityOf(spark: SparkSession, base: String,
-                 v: Long): Map[String, Long] =
-    parseIdentityLines(manifestLines(spark, base, v))
-
-  private def latestIdentity(spark: SparkSession,
-                             base: String): Map[String, Long] =
-    latestVersion(spark, base)
-      .map(identityOf(spark, base, _)).getOrElse(Map.empty)
 
   /** GENERATED ALWAYS guard for INSERT-shaped writes (append,
     * appendOnce, applyChanges inserts, the DSv2 sink): a batch that
@@ -1767,7 +1439,7 @@ object TxLog {
   private[graft] def requireNoIdentityColumns(
       spark: SparkSession, base: String,
       columns: Seq[String]): Unit =
-    failOnIdentityClash(latestIdentity(spark, base).keySet, columns)
+    failOnIdentityClash(latestMeta(spark, base).identity.keySet, columns)
 
   /** Write-side column-mapping gate for the DSv2 sink's COMMIT phase:
     * on a mapped table every incoming (logical) column must be bound
@@ -1778,7 +1450,7 @@ object TxLog {
     * against a since-mapped table stays a silent no-op. */
   private[graft] def requireMappedColumns(spark: SparkSession, base: String,
                                           columns: Seq[String]): Unit =
-    columnMapping(spark, base).foreach { cm =>
+    latestMeta(spark, base).colMap.foreach { cm =>
       val unknown = columns.filterNot(cm.hasLogical)
       require(unknown.isEmpty,
         s"column(s) ${unknown.mkString(", ")} are not in this table's " +
@@ -1792,7 +1464,7 @@ object TxLog {
     * re-issue them. Case-insensitive, like the insert guard. */
   private def requireNoIdentityAssignment(spark: SparkSession, base: String,
                                           cols: Seq[String]): Unit = {
-    val lower = latestIdentity(spark, base).keySet.map(_.toLowerCase)
+    val lower = latestMeta(spark, base).identity.keySet.map(_.toLowerCase)
     val clash = cols.filter(c => lower.contains(c.toLowerCase))
     require(clash.isEmpty,
       s"UPDATE may not assign IDENTITY column(s) ${clash.mkString(", ")} " +
@@ -1826,7 +1498,7 @@ object TxLog {
     // case-insensitive match (Spark's default column resolution): the
     // high-water must advance even when the source spells the identity
     // column ROW_ID — but the map key stays the table's canonical name
-    val byLower = latestIdentity(spark, base).keySet
+    val byLower = latestMeta(spark, base).identity.keySet
       .map(c => c.toLowerCase -> c).toMap
     val present = source.columns.toSeq
       .flatMap(sc => byLower.get(sc.toLowerCase).map(canon => (sc, canon)))
@@ -1843,19 +1515,14 @@ object TxLog {
     }
   }
 
-  /** Identity override for a merge publish: the CURRENT high-waters
-    * advanced past the source's maxima. None when nothing advances
-    * (publishEntries then carries the latest map unchanged). */
-  private def mergeIdentityAdvance(spark: SparkSession, base: String,
-                                   cur: Long, maxes: Map[String, Long])
-      : Option[Map[String, Long]] = {
-    if (maxes.isEmpty) return None
-    val ident = identityOf(spark, base, cur)
-    val updated = maxes.foldLeft(ident) { case (m, (c, mx)) =>
-      m + (c -> math.max(m.getOrElse(c, 0L), mx))
-    }
-    if (updated == ident) None else Some(updated)
-  }
+  /** A merge publish's metadata edit: the high-waters advanced past
+    * the source's maxima (applied inside the CAS, so a lost race
+    * advances the winner's water). */
+  private def mergeIdentityAdvance(maxes: Map[String, Long])
+      : TableMeta => TableMeta = m =>
+    m.copy(identity = maxes.foldLeft(m.identity) { case (id, (c, mx)) =>
+      id + (c -> math.max(id.getOrElse(c, 0L), mx))
+    })
 
   /** Modification time of version `v`'s commit file — the commit's
     * wall-clock stamp ([[versionAtTimestamp]]'s clock) and a cheap
@@ -1910,9 +1577,10 @@ object TxLog {
     * travel below a RENAME shows the old names). */
   def readVersion(spark: SparkSession, base: String, v: Long): DataFrame = {
     // widened tables read through the declared schema explicitly
-    // (narrow old files upcast per file); see parseWidenLines
-    val wide = widenedPhysSchema(spark, base, v)
-    columnMappingOf(spark, base, v) match {
+    // (narrow old files upcast per file); see TableMeta.widenedPhysSchema
+    val m = metaOf(spark, base, v)
+    val wide = m.widenedPhysSchema
+    m.colMap match {
       // the logical projection must see the UNION of the files'
       // physical columns — a plain read infers from one footer, and a
       // column only newer files carry would silently NULL-fill from
@@ -1924,7 +1592,7 @@ object TxLog {
         readEntries(spark, base, manifest(spark, base, v)._1,
           requested = wide.orElse(
             Some(cachedPhysUnionSchema(spark, base, v)))),
-        cm, declaredSchemaOf(spark, base, v))
+        cm, m.schema)
       case None => readEntries(spark, base, manifest(spark, base, v)._1,
         requested = wide)
     }
@@ -2045,21 +1713,21 @@ object TxLog {
   def readEvolved(spark: SparkSession, base: String): DataFrame = {
     val v = latestVersion(spark, base).getOrElse(
       throw new IllegalStateException(s"no committed version at $base"))
-    val wide = widenedPhysSchema(spark, base, v)
+    val m = metaOf(spark, base, v)
     val df = readEntries(spark, base, manifest(spark, base, v)._1,
-      requested = wide.orElse(Some(cachedPhysUnionSchema(spark, base, v))))
-    columnMappingOf(spark, base, v) match {
+      requested = m.widenedPhysSchema
+        .orElse(Some(cachedPhysUnionSchema(spark, base, v))))
+    m.colMap match {
       // an active mapping subsumes the declared-NULL step: the logical
       // projection fills just-ALTERed columns from the declared schema
-      case Some(cm) =>
-        return toLogicalDf(df, cm, declaredSchemaOf(spark, base, v))
+      case Some(cm) => return toLogicalDf(df, cm, m.schema)
       case None => ()
     }
     // a column DECLARED (ALTER ADD COLUMNS) but not yet present in any
     // file scans as a typed NULL, appended after the file columns —
     // the same surface Delta gives between the ALTER and the first
     // write carrying the column
-    declaredSchemaOf(spark, base, v) match {
+    m.schema match {
       case Some(ds) =>
         val have = df.columns.map(_.toLowerCase).toSet
         ds.fields.filterNot(f => have(f.name.toLowerCase))
@@ -2184,7 +1852,7 @@ object TxLog {
     * cached per version (zero footer opens after the first), and the
     * explicit request also skips per-query inference entirely.
     * Time-travel callers use [[readEntries]] with the TARGET
-    * version's [[widenedPhysSchema]] — never this. */
+    * version's [[TableMeta.widenedPhysSchema]] — never this. */
   private def readEntriesCurrent(spark: SparkSession, base: String,
                                  entries: Seq[Entry],
                                  mergeSchema: Boolean = false,
@@ -2195,12 +1863,13 @@ object TxLog {
     // O(band) rewrite); a one-footer inferred read would silently
     // DROP the columns the un-inferred footers carry and a REWRITE
     // would land that loss permanently
-    val wide = widenedPhysSchemaLatest(spark, base)
+    val m = latestMeta(spark, base)
+    val wide = m.widenedPhysSchema
     // REWRITE verbs (withRowIds) on a tracked table read each row's
     // stable id attached, so their landed output MATERIALIZES it —
     // ids survive compaction/ZORDER/COW DML. Scan verbs drop the
     // materialized column like every user surface.
-    if (withRowIds && rowTracked(spark, base))
+    if (withRowIds && m.rowIdHighWater.isDefined)
       rowIdReadRaw(spark, base, entries, wide)
     else dropRowId(readEntries(spark, base, entries,
       mergeSchema = wide.isEmpty, requested = wide))
@@ -2376,14 +2045,11 @@ object TxLog {
                                           Set.empty)
       : (Seq[Entry], Map[String, String]) = {
     val spark = df.sparkSession
-    // ONE manifest read serves both meta checks (constraints + the
-    // identity guard) — a second listing per write is a network
-    // round trip wasted on object stores
-    val latestLines: Seq[String] = latestVersion(spark, base)
-      .map(manifestLines(spark, base, _)).getOrElse(Seq.empty)
+    // ONE version resolution serves every meta check below
+    val latest = latestVersion(spark, base)
+    val m = latest.map(metaOf(spark, base, _)).getOrElse(TableMeta.empty)
     if (guardIdentity)
-      failOnIdentityClash(parseIdentityLines(latestLines).keySet,
-        df.columns.toSeq)
+      failOnIdentityClash(m.identity.keySet, df.columns.toSeq)
     // GENERATED ALWAYS AS: compute every declared column the batch
     // omits (before landing — the computed value may also be the
     // partition split key); supplied ones validate below via the
@@ -2392,8 +2058,8 @@ object TxLog {
     // have changed) pass recomputeGenerated — the stale derived value
     // is dropped and re-derived instead of failing validation,
     // Delta's own recompute-on-update rule.
-    val gens = parseGeneratedLines(latestLines)
-    val cmapParsed = parseColMapLines(latestLines)
+    val gens = m.generated
+    val cmapParsed = m.colMap
     val df0 =
       if (!recomputeGenerated || gens.isEmpty) df
       else {
@@ -2406,27 +2072,20 @@ object TxLog {
     // column DEFAULTs: fill whatever the batch omits AFTER generated
     // compute (a generated column never takes a default — the ALTER
     // vetoes the combination, so order is only about clarity)
-    val df2 = applyDefaultColumns(spark, df2x,
-      parseDefaultLines(latestLines), cmapParsed,
-      parseSchemaLines(latestLines),
-      latestVersion(spark, base).flatMap(v =>
+    val df2 = applyDefaultColumns(spark, df2x, m.defaults, cmapParsed,
+      m.schema, latest.flatMap(v =>
         scala.util.Try(cachedPhysUnionSchema(spark, base, v)).toOption))
     // widened tables pin every read to the DECLARED schema — a batch
     // carrying a column outside it would land bytes no read can ever
     // serve (silently unreachable data, where an unwidened table
     // surfaces the column via union reads). Loud veto: declare the
     // column first (ALTER TABLE ... ADD COLUMNS), then write.
-    val widenParsed = parseWidenLines(latestLines)
-    if (widenParsed.nonEmpty) {
-      val declared = parseSchemaLines(latestLines).getOrElse(
-        throw new IllegalStateException(
-          s"$base carries #widencol lines but no #schema line"))
+    m.widenedPhysSchema.foreach { wide =>
       // `pendingDeclared` (physical, lowercased) are columns the
       // CALLING verb will declare in the SAME commit that references
       // these files (merge schema evolution) — readable the instant
       // they are visible, so the veto admits them
-      val declaredPhys = declared.fieldNames.map(n =>
-        cmapParsed.map(_.physical(n)).getOrElse(n).toLowerCase).toSet ++
+      val declaredPhys = wide.fieldNames.map(_.toLowerCase).toSet ++
         pendingDeclared + RowIdCol.toLowerCase // engine-internal
       val extra = df2.columns.filterNot(c =>
         declaredPhys.contains(c.toLowerCase))
@@ -2437,10 +2096,9 @@ object TxLog {
           "bytes would be unreachable; ALTER TABLE ... ADD COLUMNS " +
           "first, then write")
     }
-    val cons = parseConstraintLines(latestLines)
+    val cons = m.constraints
     val entries =
-      landEntriesRaw(df2, base, statsCols, parsePartitionLines(latestLines),
-        parseVarStatsLines(latestLines))
+      landEntriesRaw(df2, base, statsCols, m.partitions, m.varStats)
     // the one choke point every data write passes through — CHECK
     // constraints veto the batch here, before any manifest publishes
     val genChecks = gens.map { case (c, ex) =>
@@ -2849,7 +2507,7 @@ object TxLog {
                                         entries: Seq[Entry],
                                         checked: Map[String, String])
       : Map[String, String] = {
-    val now = constraints(spark, base)
+    val now = latestMeta(spark, base).constraints
     if (now != checked) enforceConstraints(spark, base, entries, now)
     now
   }
@@ -2879,16 +2537,18 @@ object TxLog {
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
-      val cons = constraintsOf(spark, base, cur)
-      require(!cons.contains(name), s"constraint '$name' already exists")
+      val m = metaOf(spark, base, cur)
+      require(!m.constraints.contains(name),
+        s"constraint '$name' already exists")
       val bad =
         if (entries.isEmpty) 0L
         else logicalView(spark, base, readEntriesCurrent(spark, base, entries,
-            mergeSchema = columnMapping(spark, base).isDefined))
+            mergeSchema = m.colMap.isDefined))
           .where(!coalesce(expr(checkExpr), lit(true))).count()
       if (bad > 0) throw new ConstraintViolationException(name, checkExpr, bad)
       publishEntries(spark, base, cur + 1L, entries, txns,
-        Some(cons + (name -> checkExpr)), operation = "ADD CONSTRAINT")
+        operation = "ADD CONSTRAINT",
+        meta = _.copy(constraints = m.constraints + (name -> checkExpr)))
       cur + 1L
     }
   }
@@ -2922,8 +2582,9 @@ object TxLog {
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
-      val cmOpt = columnMappingOf(spark, base, cur)
-      val existing = declaredSchemaOf(spark, base, cur)
+      val m = metaOf(spark, base, cur)
+      val cmOpt = m.colMap
+      val existing = m.schema
         .orElse(baseSchema)
         .getOrElse {
           require(entries.nonEmpty,
@@ -2946,9 +2607,8 @@ object TxLog {
         colMapWithAdded(spark, base, entries, cm, cols.fields.toSeq))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "ADD COLUMNS",
-        declaredSchemaOverride = Some(
-          org.apache.spark.sql.types.StructType(existing.fields ++ cols.fields)),
-        colMapOverride = cmExt)
+        meta = _.copy(schema = Some(org.apache.spark.sql.types.StructType(
+          existing.fields ++ cols.fields)), colMap = cmExt))
       cur + 1L
     }
   }
@@ -3000,21 +2660,21 @@ object TxLog {
   private def requireNoDependents(spark: SparkSession, base: String,
                                   cur: Long, logical: String,
                                   physical: String, verb: String): Unit = {
-    val dependents = constraintsOf(spark, base, cur).filter {
+    val m = metaOf(spark, base, cur)
+    val dependents = m.constraints.filter {
       case (_, ex) => constraintRefLowers(spark, ex)
         .contains(logical.toLowerCase)
     }.keys.toSeq.sorted
     require(dependents.isEmpty,
       s"cannot $verb column '$logical': CHECK constraint(s) " +
         s"${dependents.mkString(", ")} reference it — drop them first")
-    require(!identityOf(spark, base, cur).keySet
-        .exists(_.equalsIgnoreCase(physical)),
+    require(!m.identity.keySet.exists(_.equalsIgnoreCase(physical)),
       s"cannot $verb column '$logical': it is a GENERATED ALWAYS " +
         "IDENTITY column")
     // a dangling #generatedcol line (unresolvable expression, or a
     // vanished target column) would brick every later write — the
     // exact dependency rule Delta applies to generated columns
-    val gens = generatedColumnsOf(spark, base, cur)
+    val gens = m.generated
     require(!gens.exists(_._1.equalsIgnoreCase(logical)),
       s"cannot $verb column '$logical': it is GENERATED ALWAYS AS")
     val genDeps = gens.filter { case (_, ex) =>
@@ -3047,13 +2707,14 @@ object TxLog {
       val refs = constraintRefPaths(spark, ex)
       refs.contains(lower) || refs.contains(top)
     }
-    val dependents = constraintsOf(spark, base, cur)
+    val m = metaOf(spark, base, cur)
+    val dependents = m.constraints
       .filter { case (_, ex) => hits(ex) }.keys.toSeq.sorted
     require(dependents.isEmpty,
       s"cannot $verb nested column '$path': CHECK constraint(s) " +
         s"${dependents.mkString(", ")} reference it (or its parent " +
         "struct) — drop them first")
-    val genDeps = generatedColumnsOf(spark, base, cur).filter {
+    val genDeps = m.generated.filter {
       case (c, ex) => c.equalsIgnoreCase(path) || hits(ex) }.map(_._1)
     require(genDeps.isEmpty,
       s"cannot $verb nested column '$path': generated column(s) " +
@@ -3083,7 +2744,8 @@ object TxLog {
   private def seedNested(spark: SparkSession, base: String, cur: Long,
                          cm: ColMap, top: String): ColMap = {
     if (cm.nestedUnder(top).nonEmpty) return cm
-    require(widenedColumnsOf(spark, base, cur).isEmpty,
+    val m = metaOf(spark, base, cur)
+    require(m.widened.isEmpty,
       "nested column mapping on a type-widened table is not supported")
     val p = cm.physical(top)
     val entries = manifest(spark, base, cur)._1
@@ -3097,7 +2759,7 @@ object TxLog {
           case other => throw new IllegalArgumentException(
             s"'$top' is not a struct column (files store $other)")
         }
-    val declOnly = declaredSchemaOf(spark, base, cur)
+    val declOnly = m.schema
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(top)))
       .map(_.dataType).toSeq.flatMap {
         case s: org.apache.spark.sql.types.StructType =>
@@ -3114,14 +2776,15 @@ object TxLog {
     * performs (existing physical names are frozen as-is; zero data
     * moves). */
   private def colMapOrSeed(spark: SparkSession, base: String,
-                           cur: Long): ColMap =
-    columnMappingOf(spark, base, cur).getOrElse {
+                           cur: Long): ColMap = {
+    val m = metaOf(spark, base, cur)
+    m.colMap.getOrElse {
       val entries = manifest(spark, base, cur)._1
       val fileFields: Seq[String] =
         if (entries.isEmpty) Seq.empty
         else readEntriesCurrent(spark, base, entries, mergeSchema = true)
           .schema.fieldNames.toSeq
-      val declaredOnly = declaredSchemaOf(spark, base, cur)
+      val declaredOnly = m.schema
         .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
         .filterNot(d => fileFields.exists(_.equalsIgnoreCase(d)))
       val all = fileFields ++ declaredOnly
@@ -3129,6 +2792,7 @@ object TxLog {
         s"cannot derive a schema for $base (no files, no declared schema)")
       ColMap(all.map(n => n -> n), 1)
     }
+  }
 
   /** RENAME COLUMN (Delta column-mapping name mode): rebind `from`'s
     * logical name to `to` — a metadata-only commit; ZERO data files
@@ -3161,21 +2825,21 @@ object TxLog {
       val renamed = cm.copy(cols = cm.cols.map { case (l, p) =>
         if (l.equalsIgnoreCase(from)) (to, p) else (l, p)
       })
-      val newDeclared = declaredSchemaOf(spark, base, cur).map(ds =>
+      val m = metaOf(spark, base, cur)
+      val newDeclared = m.schema.map(ds =>
         org.apache.spark.sql.types.StructType(ds.fields.map(f =>
           if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)))
       // the DEFAULT binding follows the rename (Delta preserves
       // column metadata through renames) — leaving it under the old
       // name would dangle and silently stop filling
-      val newDefaults = defaultColumnsOf(spark, base, cur).map {
+      val newDefaults = m.defaults.map {
         case (c, ex) if c.equalsIgnoreCase(from) => (to, ex)
         case other => other
       }
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "RENAME COLUMN",
-        colMapOverride = Some(renamed),
-        declaredSchemaOverride = newDeclared,
-        defaultOverride = Some(newDefaults))
+        meta = _.copy(colMap = Some(renamed), schema = newDeclared,
+          defaults = newDefaults))
       cur + 1L
     }
   }
@@ -3200,29 +2864,26 @@ object TxLog {
         s"(table columns: ${cm.logicalNames.mkString(", ")})")
       require(cm.cols.size > 1, "cannot drop the last column")
       requireNoDependents(spark, base, cur, name, cm.physical(name), "drop")
+      val m = metaOf(spark, base, cur)
       // partition columns are structural: every write splits and
       // stats-indexes on them — dropping one would orphan the layout
-      require(!partitionSpecOf(spark, base, cur).exists(
-          _._1.equalsIgnoreCase(cm.physical(name))),
+      require(!m.partitions.exists(_._1.equalsIgnoreCase(cm.physical(name))),
         s"cannot drop column '$name': it is a partition column")
-      require(!clusterByOf(spark, base, cur).exists(
-          _.equalsIgnoreCase(cm.physical(name))),
+      require(!m.cluster.exists(_.equalsIgnoreCase(cm.physical(name))),
         s"cannot drop column '$name': it is a CLUSTER BY key — drop " +
           "clustering first (alterClusterBy(..., Seq.empty))")
       val dropped = cm.copy(cols =
         cm.cols.filterNot(_._1.equalsIgnoreCase(name)))
-      val newDeclared = declaredSchemaOf(spark, base, cur).map(ds =>
+      val newDeclared = m.schema.map(ds =>
         org.apache.spark.sql.types.StructType(
           ds.fields.filterNot(_.name.equalsIgnoreCase(name))))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "DROP COLUMN",
-        colMapOverride = Some(dropped),
-        declaredSchemaOverride = newDeclared,
         // the column's DEFAULT binding dies with it — a dangling
         // #defaultcol line would re-materialize the dropped name on
         // the next write
-        defaultOverride = Some(defaultColumnsOf(spark, base, cur)
-          .filterNot(_._1.equalsIgnoreCase(name))))
+        meta = _.copy(colMap = Some(dropped), schema = newDeclared,
+          defaults = m.defaults.filterNot(_._1.equalsIgnoreCase(name))))
       cur + 1L
     }
   }
@@ -3283,14 +2944,13 @@ object TxLog {
         if (l.equalsIgnoreCase(fromPath)) (toPath, p) else (l, p)
       })
       val newDeclared = mapDeclaredStruct(
-        declaredSchemaOf(spark, base, cur), top)(s =>
+        metaOf(spark, base, cur).schema, top)(s =>
         org.apache.spark.sql.types.StructType(s.fields.map(fd =>
           if (fd.name.equalsIgnoreCase(fromLeaf)) fd.copy(name = to)
           else fd)))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "RENAME COLUMN",
-        colMapOverride = Some(renamed),
-        declaredSchemaOverride = newDeclared)
+        meta = _.copy(colMap = Some(renamed), schema = newDeclared))
       cur + 1L
     }
 
@@ -3318,20 +2978,18 @@ object TxLog {
       requireNoNestedDependents(spark, base, cur, path, "drop")
       // structural guard, mirroring top-level DROP: a clustered leaf
       // keys every write's tiling and the manifest's pruning index
-      require(!clusterByOf(spark, base, cur).exists(
-          _.equalsIgnoreCase(cm.physical(path))),
+      val m = metaOf(spark, base, cur)
+      require(!m.cluster.exists(_.equalsIgnoreCase(cm.physical(path))),
         s"cannot drop column '$path': it is a CLUSTER BY key — drop " +
           "clustering first (alterClusterBy(..., Seq.empty))")
       val dropped = cm.copy(cols =
         cm.cols.filterNot(_._1.equalsIgnoreCase(path)))
-      val newDeclared = mapDeclaredStruct(
-        declaredSchemaOf(spark, base, cur), top)(s =>
+      val newDeclared = mapDeclaredStruct(m.schema, top)(s =>
         org.apache.spark.sql.types.StructType(
           s.fields.filterNot(_.name.equalsIgnoreCase(leaf))))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "DROP COLUMN",
-        colMapOverride = Some(dropped),
-        declaredSchemaOverride = newDeclared)
+        meta = _.copy(colMap = Some(dropped), schema = newDeclared))
       cur + 1L
     }
 
@@ -3388,7 +3046,7 @@ object TxLog {
       // the declared schema is what types a just-added field's NULL
       // fill — derive the full logical surface when the table never
       // declared one
-      val declared0 = declaredSchemaOf(spark, base, cur).getOrElse {
+      val declared0 = metaOf(spark, base, cur).schema.getOrElse {
         require(entries.nonEmpty,
           s"cannot derive a schema for $base (no files, no declared " +
             "schema)")
@@ -3406,8 +3064,7 @@ object TxLog {
           } else fd))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "ADD COLUMNS",
-        colMapOverride = Some(cmExt),
-        declaredSchemaOverride = Some(newDeclared))
+        meta = _.copy(colMap = Some(cmExt), schema = Some(newDeclared)))
       cur + 1L
     }
   }
@@ -3419,10 +3076,11 @@ object TxLog {
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
-      val cons = constraintsOf(spark, base, cur)
+      val cons = metaOf(spark, base, cur).constraints
       require(cons.contains(name), s"no constraint named '$name'")
-      publishEntries(spark, base, cur + 1L, entries, txns, Some(cons - name),
-        operation = "DROP CONSTRAINT")
+      publishEntries(spark, base, cur + 1L, entries, txns,
+        operation = "DROP CONSTRAINT",
+        meta = _.copy(constraints = cons - name))
       cur + 1L
     }
 
@@ -3434,10 +3092,11 @@ object TxLog {
                              v: Long, files: Seq[String]): Unit =
     publishEntries(spark, base, v, files.map(Entry(_, -1L, Nil)), Map.empty)
 
-  /** Publish a manifest. CHECK-constraint meta lines are carried
-    * forward from the latest published version automatically (every
-    * DML/maintenance verb republishes without knowing about them);
-    * only [[addConstraint]]/[[dropConstraint]] pass an override.
+  /** Publish a manifest. The table metadata ([[TableMeta]]) is
+    * carried forward from the latest published version — every
+    * DML/maintenance verb republishes without knowing about it; a DDL
+    * verb passes `meta`, its edit of that carried value (applied here,
+    * inside the CAS, to the latest version's metadata).
     * `dataChange=false` (compaction, DV purge — pure physical
     * rewrites) stamps a `#nodatachange` line so the change feeds skip
     * the version instead of emitting phantom delete+insert pairs for
@@ -3445,34 +3104,13 @@ object TxLog {
   private[graft] def publishEntries(spark: SparkSession, base: String, v: Long,
                                     entries: Seq[Entry],
                                     txns: Map[String, Long],
-                                    constraintsOverride: Option[Map[String, String]] =
-                                      None,
                                     dataChange: Boolean = true,
-                                    identityOverride: Option[Map[String, Long]] =
-                                      None,
-                                    declaredSchemaOverride: Option[org.apache.spark.sql.types.StructType] =
-                                      None,
                                     operation: String = "WRITE",
-                                    colMapOverride: Option[ColMap] = None,
-                                    partitionOverride: Option[Seq[(String, String)]] =
-                                      None,
-                                    generatedOverride: Option[Seq[(String, String)]] =
-                                      None,
-                                    clearColMap: Boolean = false,
-                                    widenOverride: Option[Seq[(String, org.apache.spark.sql.types.DataType)]] =
-                                      None,
                                     cdfOp: Option[String] = None,
-                                    clusterOverride: Option[Seq[String]] =
-                                      None,
-                                    rowIdSeed: Option[Long] = None,
-                                    defaultOverride: Option[Seq[(String, String)]] =
-                                      None,
-                                    clearRowIds: Boolean = false,
-                                    recomputeProtocol: Boolean = false,
                                     deltaChange: Option[Seq[String]] =
                                       None,
-                                    varStatsOverride: Option[Seq[(String, String, String)]] =
-                                      None): Unit = {
+                                    meta: TableMeta => TableMeta =
+                                      identity): Unit = {
     // a concurrent vacuum can delete the version this commit diffs
     // against (the committer's snapshot is stale by definition then —
     // its CAS would lose anyway): surface the FileNotFound as a
@@ -3483,79 +3121,37 @@ object TxLog {
       try body
       catch { case _: java.io.FileNotFoundException =>
         throw new CommitConflictException(v) }
-    // ONE read of the latest manifest serves every carried meta kind
-    // (a second listing + parse per commit is pure waste on stores
-    // where each is a network round trip)
-    lazy val latestLines: Seq[String] = staleAsConflict(
+    // ONE read of the latest manifest serves the carried metadata and
+    // the parent's in-commit timestamp
+    val latestLines: Seq[String] = staleAsConflict(
       latestVersion(spark, base)
         .map(manifestLines(spark, base, _)).getOrElse(Seq.empty))
-    val cons = constraintsOverride
-      .getOrElse(parseConstraintLines(latestLines))
-    val ident = identityOverride
-      .getOrElse(parseIdentityLines(latestLines))
-    val declared = declaredSchemaOverride
-      .orElse(parseSchemaLines(latestLines))
-    // REPLACE TABLE resets the logical lineage: the new definition's
-    // names bind fresh, so a carried mapping (keyed on the OLD data
-    // files' physical names) must drop rather than mistranslate
-    val cmap = if (clearColMap) None
-               else colMapOverride.orElse(parseColMapLines(latestLines))
-    val pspec = partitionOverride.getOrElse(parsePartitionLines(latestLines))
-    val gens = generatedOverride.getOrElse(parseGeneratedLines(latestLines))
-    // column DEFAULTs mirror generated columns: logical-name-keyed,
-    // carried forward, reset only by an explicit override (REPLACE
-    // TABLE passes the new DDL's set)
-    val dflt = if (clearColMap) defaultOverride.getOrElse(Seq.empty)
-               else defaultOverride.getOrElse(parseDefaultLines(latestLines))
-    // REPLACE TABLE (clearColMap) also resets widenings: the new
-    // definition's types bind fresh, and the old widen lines are keyed
-    // on the old data files' physical columns
-    val widen = if (clearColMap) Seq.empty
-                else widenOverride.getOrElse(parseWidenLines(latestLines))
-    // ... and clustering keys (same reasoning: keyed on the old
-    // definition's physical columns)
-    val cluster = if (clearColMap) Seq.empty
-                  else clusterOverride.getOrElse(parseClusterLines(latestLines))
-    // ... and declared variant-stats paths (keyed on the old
-    // definition's physical variant columns)
-    val vstats = if (clearColMap) varStatsOverride.getOrElse(Seq.empty)
-                 else varStatsOverride.getOrElse(parseVarStatsLines(latestLines))
+    val latest = TableMeta.parse(latestLines)
+    // writer gate: a table stamped by a newer engine with a higher
+    // required writer version must not be committed to by this one —
+    // the meta lines below are RECONSTRUCTED from the kinds this
+    // writer knows, so an ignorant commit would silently drop the
+    // newer table features (Delta's minWriterVersion exists for
+    // exactly this). Checked on the carried floor, before the edit.
+    if (latest.protocol._2 > WriterVersion) throw new IllegalStateException(
+      s"$base requires log writer version ${latest.protocol._2}; this " +
+        s"engine implements $WriterVersion — upgrade the engine before writing")
+    val edited = meta(latest)
     // row tracking: the ONE assignment choke point — every commit to
     // a tracked table gives each new known-count file a contiguous id
     // span above the high-water and republishes the advanced water.
     // Runs inside the CAS (a lost race re-reads the winner's water),
-    // so spans never collide across writers. REPLACE resets lineage.
-    val rowHw0 =
-      if (clearRowIds) None // DROP FEATURE rowTracking: unbind the water
-      else if (clearColMap) rowIdSeed
-      else rowIdSeed.orElse(parseRowIdLines(latestLines))
-    val (entriesR, rowHw) = rowHw0 match {
-      case None => (entries, None)
+    // so spans never collide across writers.
+    val (entriesR, next) = edited.rowIdHighWater match {
+      case None => (entries, edited)
       case Some(hw0) =>
         var hw = hw0
         val es = entries.map { e =>
           if (e.baseRowId.isDefined || e.rows < 0) e
           else { val b = hw; hw += e.rows; e.copy(baseRowId = Some(b)) }
         }
-        (es, Some(hw))
+        (es, edited.copy(rowIdHighWater = Some(hw)))
     }
-    // writer gate + carry: a table stamped by a newer engine with a
-    // higher required writer version must not be committed to by this
-    // one — the meta lines below are RECONSTRUCTED from the kinds this
-    // writer knows, so an ignorant commit would silently drop the
-    // newer table features (Delta's minWriterVersion exists for
-    // exactly this). The carried stamp is the max of the table's and
-    // ours, so requirements never regress.
-    val (tblR0, tblW0) = parseProtocolLines(latestLines).getOrElse((1, 1))
-    if (tblW0 > WriterVersion) throw new IllegalStateException(
-      s"$base requires log writer version $tblW0; this engine implements " +
-        s"$WriterVersion — upgrade the engine before writing")
-    // DROP FEATURE is the one verb allowed to LOWER the floors: it
-    // recomputes them from the features actually present after the
-    // drop (the write gate above already proved this writer knows
-    // every feature the table carries). Every other commit carries
-    // the max — requirements never regress by accident.
-    val (tblR, tblW) = if (recomputeProtocol) (1, 1) else (tblR0, tblW0)
     // in-commit timestamp (Delta 4.0 ICT): every commit writes its own
     // wall-clock millis, clamped STRICTLY above the parent's stamp —
     // monotonic even across clock skew, and `TIMESTAMP AS OF` stays
@@ -3577,47 +3173,7 @@ object TxLog {
       // fully-masked-drop case (no surviving mask transition) and
       // would make stream labels depend on the consumer's pushdown.
       cdfOp.toSeq.map(h => s"#cdfop\t${enc(h)}") ++
-      // the REQUIRED protocol is feature-derived, not engine-derived:
-      // only a table with active column mapping demands (2,2) — a
-      // pre-mapping reader would serve physical names and resurrect
-      // dropped columns, the exact misread the gate exists to stop.
-      // Unmapped tables keep stamping (1,1), so older engines read and
-      // write them unchanged.
-      // feature-derived writer floor: column mapping demands (2,2);
-      // declared partitioning demands writer 3 and generated columns
-      // writer 4 (reader stays — both are ordinary physical columns
-      // with ordinary stats lines, readable by any engine version; an
-      // IGNORANT WRITER is what would corrupt them: unsplit files /
-      // un-computed, un-validated columns, plus the dropped meta line)
-      // widened columns demand writer 5 AND reader 3: an ignorant
-      // writer would reconstruct the meta lines without #widencol and
-      // silently un-widen the table's read surface; an ignorant READER
-      // would footer-infer a narrow/mixed schema instead of the
-      // declared widened one (Delta's type widening is reader-visible
-      // for the same reason)
-      Seq(s"#protocol\t${Seq(tblR, if (cmap.isDefined) 2 else 1,
-          if (widen.nonEmpty) 3 else 1,
-          if (rowHw.isDefined) 4 else 1).max}" +
-        s"\t${Seq(tblW, if (cmap.isDefined) 2 else 1,
-          if (pspec.nonEmpty) 3 else 1,
-          if (gens.nonEmpty) 4 else 1,
-          if (widen.nonEmpty) 5 else 1,
-          if (cluster.nonEmpty) 6 else 1,
-          if (rowHw.isDefined) 7 else 1,
-          if (dflt.nonEmpty) 8 else 1).max}") ++
-      declared.toSeq.map(s => s"#schema\t${enc(s.json)}") ++
-      (if (pspec.nonEmpty) Seq(serPartitionLine(pspec)) else Seq.empty) ++
-      (if (cluster.nonEmpty) Seq(serClusterLine(cluster)) else Seq.empty) ++
-      widen.map { case (c, dt) => s"#widencol\t${enc(c)}\t${enc(dt.json)}" } ++
-      gens.map { case (c, ex) => s"#generatedcol\t${enc(c)}\t${enc(ex)}" } ++
-      dflt.map { case (c, ex) => s"#defaultcol\t${enc(c)}\t${enc(ex)}" } ++
-      vstats.map { case (c, p, t) => s"#varstats\t${enc(c)}\t${enc(p)}\t$t" } ++
-      cmap.toSeq.map(serColMapLine) ++
-      cons.toSeq.sortBy(_._1).map { case (n, ex) =>
-        s"#constraint\t${enc(n)}\t${enc(ex)}" } ++
-      ident.toSeq.sortBy(_._1).map { case (c, hw) =>
-        s"#identity\t${enc(c)}\t$hw" } ++
-      rowHw.toSeq.map(hw => s"#rowid\t$hw") ++
+      next.lines ++
       txns.toSeq.sortBy(_._1).map { case (a, b) => s"#txn\t${enc(a)}\t$b" }
     // O(change) delta commit: only the entries that differ from the
     // v-1 snapshot are written — an append to a 10^5-file table
@@ -3840,11 +3396,9 @@ object TxLog {
     validateGeneratedExprs(spark, schema, gens)
     val ckeys = resolveClusterKeys(schema, clusterBy, pspec.map(_._1))
     publishEntries(spark, base, 1L, Seq.empty, Map.empty,
-      declaredSchemaOverride = Some(schema),
-      partitionOverride = if (pspec.isEmpty) None else Some(pspec),
-      generatedOverride = if (gens.isEmpty) None else Some(gens),
-      clusterOverride = if (ckeys.isEmpty) None else Some(ckeys),
-      operation = "CREATE TABLE")
+      operation = "CREATE TABLE",
+      meta = _.copy(schema = Some(schema), partitions = pspec,
+        generated = gens, cluster = ckeys))
     1L
   }
 
@@ -3915,8 +3469,9 @@ object TxLog {
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
       val declared = undeclaredFallbackSchema(spark, base, cur)
-      val cm = columnMappingOf(spark, base, cur)
-      val varDecls = parseVarStatsLines(manifestLines(spark, base, cur))
+      val m = metaOf(spark, base, cur)
+      val cm = m.colMap
+      val varDecls = m.varStats
       // keys may be NESTED leaves ("s.ts" — the event-time-inside-a-
       // struct fact shape): resolve by path walk, cluster on the
       // leaf. A VARIANT extraction key ("v$.price") must already be
@@ -3957,7 +3512,7 @@ object TxLog {
             s"CLUSTER BY key '$c' is not in the table schema " +
               s"(${declared.fieldNames.mkString(", ")})"))
       }
-      validateClusterKeys(fields, partitionSpec(spark, base).map(p =>
+      validateClusterKeys(fields, m.partitions.map(p =>
         cm.map(_.logicalOf(p._1)).getOrElse(p._1)))
       val physByPlain = plainKeys0.zip(fields.map(f =>
         cm.map(_.physical(f.name)).getOrElse(f.name))).toMap
@@ -3966,7 +3521,7 @@ object TxLog {
         variantPhys.getOrElse(k, physByPlain(k)))
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "CLUSTER BY",
-        clusterOverride = Some(phys))
+        meta = _.copy(cluster = phys))
       cur + 1L
     }
   }
@@ -3980,13 +3535,14 @@ object TxLog {
     * pay the mergeSchema read for the translated logical view. */
   private def undeclaredFallbackSchema(spark: SparkSession, base: String,
                                        cur: Long)
-      : org.apache.spark.sql.types.StructType =
-    declaredSchemaOf(spark, base, cur).getOrElse(scala.util.Try {
-      if (columnMappingOf(spark, base, cur).isEmpty)
-        cachedPhysUnionSchema(spark, base, cur)
+      : org.apache.spark.sql.types.StructType = {
+    val m = metaOf(spark, base, cur)
+    m.schema.getOrElse(scala.util.Try {
+      if (m.colMap.isEmpty) cachedPhysUnionSchema(spark, base, cur)
       else readEvolved(spark, base).schema
     }.getOrElse(throw new IllegalStateException(
       s"cannot resolve a schema for $base")))
+  }
 
   /** DDL-time validation of a column DEFAULT expression: it must
     * parse, resolve against ZERO columns (constant — Delta's own
@@ -4093,19 +3649,18 @@ object TxLog {
         .getOrElse(throw new IllegalArgumentException(
           s"DEFAULT target '$column' is not in the table schema " +
             s"(${declared.fieldNames.mkString(", ")})"))
-      require(!generatedColumnsOf(spark, base, cur)
-          .exists(_._1.equalsIgnoreCase(column)),
+      val m = metaOf(spark, base, cur)
+      require(!m.generated.exists(_._1.equalsIgnoreCase(column)),
         s"column '$column' is GENERATED ALWAYS AS — it computes its " +
           "own value; a DEFAULT would never apply")
-      require(!identityOf(spark, base, cur).keys
-          .exists(_.equalsIgnoreCase(column)),
+      require(!m.identity.keys.exists(_.equalsIgnoreCase(column)),
         s"column '$column' is an IDENTITY column — the high-water " +
           "allocates its value; a DEFAULT would never apply")
       sqlExpr.foreach { ex =>
         validateDefaultExpr(spark, field.name, ex, field.dataType)
         evalDefaultExpr(spark, ex, field.dataType) // must evaluate NOW
       }
-      val cur0 = defaultColumnsOf(spark, base, cur)
+      val cur0 = m.defaults
       val kept = cur0.filterNot(_._1.equalsIgnoreCase(column))
       val next = kept ++ sqlExpr.map(field.name -> _).toSeq
       if (sqlExpr.isEmpty)
@@ -4114,7 +3669,7 @@ object TxLog {
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false,
         operation = if (sqlExpr.isDefined) "SET DEFAULT" else "DROP DEFAULT",
-        defaultOverride = Some(next))
+        meta = _.copy(defaults = next))
       cur + 1L
     }
   }
@@ -4206,8 +3761,8 @@ object TxLog {
     val entries = landEntriesRaw(df, base, statsCols, pspec)
     try {
       publishEntries(spark, base, 1L, entries, Map.empty,
-        declaredSchemaOverride = Some(df.schema),
-        partitionOverride = Some(pspec), operation = "CREATE TABLE AS SELECT")
+        operation = "CREATE TABLE AS SELECT",
+        meta = _.copy(schema = Some(df.schema), partitions = pspec))
       1L
     } catch {
       case e: CommitConflictException =>
@@ -4262,14 +3817,10 @@ object TxLog {
 
   private def clusterTile(spark: SparkSession, base: String,
                           df: DataFrame): (DataFrame, Seq[String]) = {
-    val keys = clusterKeys(spark, base)
+    val m = latestMeta(spark, base)
+    val keys = m.cluster
     if (keys.isEmpty) return (df, Seq.empty)
-    val varDecls =
-      if (keys.exists(variantKeySplit(_).isDefined))
-        latestVersion(spark, base)
-          .map(v => parseVarStatsLines(manifestLines(spark, base, v)))
-          .getOrElse(Seq.empty)
-      else Seq.empty
+    val varDecls = m.varStats
     // keys are PHYSICAL; the df is in physical namespace here. A
     // dotted key resolves by path walk (nested leaf clustering); a
     // `col$path` key resolves through its varstats declaration to
@@ -4411,7 +3962,7 @@ object TxLog {
     if (freshAll.isEmpty) return (curV0, 0L, 0L)
     val df0 = spark.read.format(format).options(options)
       .load(freshAll.map(_.getPath.toString): _*)
-    val df = declaredSchemaOf(spark, base, curV0) match {
+    val df = metaOf(spark, base, curV0).schema match {
       case Some(ds) =>
         import org.apache.spark.sql.functions.col
         val unknown = df0.columns.filterNot(c =>
@@ -4669,7 +4220,7 @@ object TxLog {
     // pass over the band. Anything overlapping keeps the serialize-
     // by-recompute behavior (TxLogSpec's sequential-equivalence law).
     var rebase: Option[(Seq[Entry], Set[String], Map[String, String],
-      String)] = None // (newEntries, touchedPaths, basePrev sig, metaSig)
+      Option[TableMeta])] = None // (newEntries, touchedPaths, basePrev sig, metaSig)
     def discardRebase(): Unit = rebase.foreach { case (es, _, _, _) =>
       discard(spark, base, es.map(_.path)); rebase = None }
     try withCasRetry(maxAttempts) { attempt =>
@@ -4677,8 +4228,7 @@ object TxLog {
       val (entries, txns) = cur.map(manifest(spark, base, _))
         .getOrElse((Seq.empty[Entry], Map.empty[String, Long]))
       onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = cur.map(v =>
-        stableMetaSig(manifestLines(spark, base, v))).getOrElse("")
+      val metaSig = cur.map(metaOf(spark, base, _).rebaseKey)
       val rebasable = rebase.filter { case (_, touchedP, baseBy, sig) =>
         sig == metaSig && {
           val curBy = entries.map(e => e.path -> serLine(e)).toMap
@@ -4699,8 +4249,7 @@ object TxLog {
           val v = cur.getOrElse(0L) + 1L
           publishEntries(spark, base, v, carried2 ++ newEntries, txns,
             operation = "MERGE",
-            identityOverride = cur.flatMap(
-              mergeIdentityAdvance(spark, base, _, idMaxes)))
+            meta = mergeIdentityAdvance(idMaxes))
           v
         case None =>
           discardRebase() // overlapping winner: the land is stale
@@ -4730,8 +4279,7 @@ object TxLog {
             entries.map(e => e.path -> serLine(e)).toMap, metaSig))
           publishEntries(spark, base, v, carried ++ newEntries, txns,
             operation = "MERGE",
-            identityOverride = cur.flatMap(
-              mergeIdentityAdvance(spark, base, _, idMaxes)))
+            meta = mergeIdentityAdvance(idMaxes))
           v
       }
     } catch {
@@ -4739,19 +4287,6 @@ object TxLog {
       // land must not leak as an orphan txn dir
       case e: Throwable => discardRebase(); throw e
     }
-  }
-
-  /** The metadata surface a re-based commit must see UNCHANGED: any
-    * drift here (new constraint, schema/colmap/partition/widen/
-    * cluster/default change, row tracking enabled, protocol bump)
-    * means the landed output was produced under assumptions the
-    * winner invalidated — recompute instead. Sorted so line order
-    * never fakes a difference. */
-  private def stableMetaSig(lines: Seq[String]): String = {
-    val kinds = Seq("#constraint\t", "#schema\t", "#colmap\t",
-      "#partition\t", "#generatedcol\t", "#defaultcol\t", "#widencol\t",
-      "#cluster\t", "#rowid\t", "#protocol\t")
-    lines.filter(l => kinds.exists(l.startsWith)).sorted.mkString("\n")
   }
 
   /** Copy-on-write DELETE (Delta `DELETE WHERE` analog): remove rows
@@ -4845,14 +4380,14 @@ object TxLog {
     // touched predicate could match, metadata surface unchanged —
     // re-bases with one manifest write instead of re-scanning the band
     var rebase: Option[(String, Map[String, Long], Seq[Entry],
-      Map[String, String], String)] = None
+      Map[String, String], TableMeta)] = None
     def discardRebase(): Unit = rebase.foreach { case (dvDir, _, _, _, _) =>
       discardDir(spark, base, dvDir); rebase = None }
     try withCasRetry(maxAttempts) { _ =>
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
-      val metaSig = stableMetaSig(manifestLines(spark, base, cur))
+      val metaSig = metaOf(spark, base, cur).rebaseKey
       val rebasable = rebase.filter { case (_, _, touched0, baseBy, sig) =>
         sig == metaSig && {
           val touchedP = touched0.map(_.path).toSet
@@ -4885,7 +4420,7 @@ object TxLog {
             // view with the DV coordinates carried through (mergeSchema on
             // mapped tables: the projection must see the files' UNION of
             // physical columns, not one footer's)
-            val cmapped = columnMapping(spark, base).isDefined
+            val cmapped = latestMeta(spark, base).colMap.isDefined
             val raw = logicalView(spark, base,
               taggedRead(spark, base, touched, mergeSchema = cmapped),
               keep = Seq(DvFileCol, DvPosCol))
@@ -4918,14 +4453,14 @@ object TxLog {
     import org.apache.spark.sql.functions.col
     // widened tables: every DML verb's raw read requests the declared
     // (widened) physical schema — the mixed-width file set reads no
-    // other way (see parseWidenLines). All OTHER tables read the
+    // other way (see TableMeta.widenedPhysSchema). All OTHER tables read the
     // touched SUBSET's union (mergeSchema over the files at hand —
     // already being fully read, so the footer pass is proportional to
     // the work): the projection must see the UNION of those files'
     // physical columns (absent columns NULL-fill per file) — one
     // footer's inference on a schema-evolved touched subset would
     // silently DROP the other footers' columns from the landed images.
-    val rd = widenedPhysSchemaLatest(spark, base) match {
+    val rd = latestMeta(spark, base).widenedPhysSchema match {
       case Some(ws) => spark.read.schema(ws)
       case None => spark.read.option("mergeSchema", "true")
     }
@@ -5031,9 +4566,9 @@ object TxLog {
         // tables so the projection sees every file's physical
         // columns); the updated images rename back to physical just
         // before landing
+        val m = latestMeta(spark, base)
         val raw0 = logicalView(spark, base,
-          taggedRead(spark, base, touched,
-            mergeSchema = columnMapping(spark, base).isDefined),
+          taggedRead(spark, base, touched, mergeSchema = m.colMap.isDefined),
           keep = Seq(DvFileCol, DvPosCol, RowIdCol))
         // row tracking: an UPDATE logically keeps the row, so the
         // appended post-image MATERIALIZES each hit's stable id
@@ -5041,7 +4576,7 @@ object TxLog {
         // without this the masked-old/appended-new shape would
         // silently re-identify every updated row
         val raw =
-          if (!rowTracked(spark, base)) dropRowId(raw0)
+          if (m.rowIdHighWater.isEmpty) dropRowId(raw0)
           else attachRowIds(spark, touched, raw0)
         val hits0 = raw.where(coalesce(cond, lit(false)))
         // live hits only: a previously-masked (deleted) row matching
@@ -5187,7 +4722,8 @@ object TxLog {
       // row's stable id (Delta preserves ids through MERGE UPDATE);
       // unmatched rows land NULL and take the file's fresh span
       val sourceW =
-        if (touched.isEmpty || !rowTracked(spark, base)) source
+        if (touched.isEmpty ||
+            latestMeta(spark, base).rowIdHighWater.isEmpty) source
         else {
           val tagged = attachRowIds(spark, touched,
             taggedRead(spark, base, touched))
@@ -5207,7 +4743,7 @@ object TxLog {
         try {
           publishEntries(spark, base, cur + 1L,
             carried ++ masked ++ newEntries, txns, operation = "MERGE",
-            identityOverride = mergeIdentityAdvance(spark, base, cur, idMaxes))
+            meta = mergeIdentityAdvance(idMaxes))
           cur + 1L
         } catch {
           case e: CommitConflictException =>
@@ -5373,7 +4909,7 @@ object TxLog {
       // unmapped table could miss file-evolved columns, and the image
       // projection below would then land their loss permanently
       val baseSchema = scala.util.Try(readEvolved(spark, base).schema)
-        .getOrElse(declaredSchemaOf(spark, base, cur).getOrElse(
+        .getOrElse(metaOf(spark, base, cur).schema.getOrElse(
           throw new IllegalStateException(
             s"MERGE into the empty table at $base with no declared " +
               "schema — declare one (createTable / CREATE TABLE) or " +
@@ -5456,7 +4992,8 @@ object TxLog {
       val carried =
         if (needAllForBySource) Seq.empty[Entry]
         else rest
-      val cmCur = columnMapping(spark, base)
+      val mCur = latestMeta(spark, base)
+      val cmCur = mCur.colMap
       val cmapped = cmCur.isDefined
       // evolution on a MAPPED table assigns the new columns fresh
       // physical names (the ADD COLUMNS rule — a re-ADD of a DROPped
@@ -5478,7 +5015,7 @@ object TxLog {
       // column — update images INHERIT the fired target row's id
       // (Delta preserves ids through MERGE UPDATE), insert images
       // carry NULL and take the file's fresh span at read
-      val tracked = rowTracked(spark, base)
+      val tracked = mCur.rowIdHighWater.isDefined
       val live: Option[DataFrame] =
         if (touched.isEmpty) None
         else {
@@ -5592,14 +5129,12 @@ object TxLog {
           try {
             publishEntries(spark, base, cur + 1L,
               carried ++ masked ++ newEntries, txns, operation = "MERGE",
-              identityOverride =
-                mergeIdentityAdvance(spark, base, cur, idMaxes),
               // schema evolution rides the SAME commit: the evolved
               // #schema (and the extended mapping) become visible
               // atomically with the files that carry the new columns
-              declaredSchemaOverride =
-                if (extras.isEmpty) None else Some(targetSchema),
-              colMapOverride = if (extras.isEmpty) None else cmNew)
+              meta = mergeIdentityAdvance(idMaxes).andThen(m =>
+                if (extras.isEmpty) m
+                else m.copy(schema = Some(targetSchema), colMap = cmNew)))
             cur + 1L
           } catch {
             case e: CommitConflictException =>
@@ -5657,7 +5192,7 @@ object TxLog {
       val cur = latestVersion(spark, base)
       val (prev, txns) = cur.map(manifest(spark, base, _))
         .getOrElse((Seq.empty[Entry], Map.empty[String, Long]))
-      val ident = cur.map(identityOf(spark, base, _)).getOrElse(Map.empty)
+      val ident = cur.map(metaOf(spark, base, _).identity).getOrElse(Map.empty)
       val water = ident.getOrElse(idCol, 0L)
       onAttempt(attempt) // test seam: between snapshot read and land
       // DENSE allocation: per-partition cumulative offsets (one tiny
@@ -5739,7 +5274,7 @@ object TxLog {
       val v = cur.getOrElse(0L) + 1L
       try {
         publishEntries(spark, base, v, prev ++ entries, txns,
-          identityOverride = Some(ident + (idCol -> newWater)))
+          meta = _.copy(identity = ident + (idCol -> newWater)))
         v
       } catch {
         case e: CommitConflictException =>
@@ -5920,8 +5455,7 @@ object TxLog {
         try {
           publishEntries(spark, base, v, carried ++ masked ++ newEntries,
             txn.fold(txns)(txns + _), operation = "APPLY CHANGES",
-            identityOverride = cur.flatMap(
-              mergeIdentityAdvance(spark, base, _, idMaxes)))
+            meta = mergeIdentityAdvance(idMaxes))
           v
         } catch {
           case e: CommitConflictException => // this attempt's mask is dead
@@ -6058,7 +5592,7 @@ object TxLog {
         // WIDENED table pins the read to the declared schema instead
         // (mergeSchema cannot merge a narrow/wide mix), so the bloom
         // positions hash the WIDENED dtype — the same one probes see.
-        val raw = (widenedPhysSchemaLatest(spark, base) match {
+        val raw = (latestMeta(spark, base).widenedPhysSchema match {
           case Some(ws) => spark.read.schema(ws)
           case None => spark.read.option("mergeSchema", "true")
         }).parquet(indexable.map(e => resolve(base, e.path)): _*)
@@ -6218,7 +5752,7 @@ object TxLog {
     withCasRetry(maxAttempts) { _ =>
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
-      val declared = variantStatsOf(spark, base, cur)
+      val declared = metaOf(spark, base, cur).varStats
       require(!declared.exists(d => d._1 == phys && d._2 == path),
         s"variant stats already declared for $phys$path")
       val (entries, txns) = manifest(spark, base, cur)
@@ -6226,7 +5760,7 @@ object TxLog {
         path, dtype, sparkT)
       publishEntries(spark, base, cur + 1L, updated, txns,
         dataChange = false, operation = "DECLARE VARIANT STATS",
-        varStatsOverride = Some(declared :+ ((phys, path, dtype))))
+        meta = _.copy(varStats = declared :+ ((phys, path, dtype))))
       cur + 1L
     }
   }
@@ -6243,21 +5777,21 @@ object TxLog {
     withCasRetry(maxAttempts) { _ =>
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
-      val declared = variantStatsOf(spark, base, cur)
+      val m = metaOf(spark, base, cur)
+      val declared = m.varStats
       require(declared.exists(d => d._1 == phys && d._2 == path),
         s"no declared variant stats for $phys$path")
       // the layout depends on the declaration (it types the tiling
       // interleave and keeps every tile's skipping stats fresh):
       // un-cluster first, then drop
-      require(!clusterByOf(spark, base, cur)
-          .exists(_.equalsIgnoreCase(s"$phys$path")),
+      require(!m.cluster.exists(_.equalsIgnoreCase(s"$phys$path")),
         s"$phys$path is a registered CLUSTER BY key — " +
           "ALTER TABLE ... CLUSTER BY NONE (or re-cluster without " +
           "it) before dropping its stats declaration")
       val (entries, txns) = manifest(spark, base, cur)
       publishEntries(spark, base, cur + 1L, entries, txns,
         dataChange = false, operation = "DROP VARIANT STATS",
-        varStatsOverride = Some(declared.filterNot(d =>
+        meta = _.copy(varStats = declared.filterNot(d =>
           d._1 == phys && d._2 == path)))
       cur + 1L
     }
@@ -6402,7 +5936,8 @@ object TxLog {
     // pair each rewritten row's pre/post images by id
     rewriteRange(spark, base, column, lo, hi, maxAttempts,
       "UPDATE",
-      cdfOp = if (rowTracked(spark, base)) Some("update_cow") else None,
+      cdfOp = if (latestMeta(spark, base).rowIdHighWater.isDefined)
+        Some("update_cow") else None,
       onAttempt = onAttempt) {
       touched =>
       import org.apache.spark.sql.functions.{coalesce, col, lit, when}
@@ -6552,7 +6087,7 @@ object TxLog {
     // on a 100 TB table costs one extra commit attempt, not a second
     // pass over the band.
     var rebase: Option[(Seq[Entry], Set[String], Map[String, String],
-      String)] = None // (newEntries, touchedPaths, base path→line, metaSig)
+      TableMeta)] = None // (newEntries, touchedPaths, base path→line, metaSig)
     def discardRebase(): Unit = rebase.foreach { case (es, _, _, _) =>
       discard(spark, base, es.map(_.path)); rebase = None }
     try withCasRetry(maxAttempts) { attempt =>
@@ -6560,7 +6095,7 @@ object TxLog {
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
       onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = stableMetaSig(manifestLines(spark, base, cur))
+      val metaSig = metaOf(spark, base, cur).rebaseKey
       val rebasable = rebase.filter { case (_, touchedP, baseBy, sig) =>
         sig == metaSig && {
           val curBy = entries.map(e => e.path -> serLine(e)).toMap
@@ -6634,7 +6169,8 @@ object TxLog {
     // shape. (The sweep subsumes OPTIMIZE ... WHERE scoping: cold
     // well-tiled history is never touched regardless.) A single
     // registered key degenerates to band-per-file compaction on it.
-    clusterKeys(spark, base) match {
+    val m = latestMeta(spark, base)
+    m.cluster match {
       case ck if ck.size >= 2 =>
         return compactZorderPhys(spark, base, ck, smallThresholdRows,
           targetRows, maxAttempts, onAttempt)
@@ -6647,18 +6183,16 @@ object TxLog {
           smallThresholdRows, targetRows, maxAttempts, onAttempt)
       case Seq(one) if statsCol0.isEmpty =>
         return compact(spark, base, smallThresholdRows, targetRows,
-          Some(columnMapping(spark, base).map(_.logicalOf(one))
-            .getOrElse(one)), maxAttempts, range0, onAttempt)
+          Some(m.colMap.map(_.logicalOf(one)).getOrElse(one)),
+          maxAttempts, range0, onAttempt)
       case _ => ()
     }
     // the rewrite runs on raw (physical) reads; stats/range columns
     // translate once here — passthrough when the name is already
     // physical (the DSv2 sink's auto-compaction passes those)
-    val statsCol = statsCol0.map(c =>
-      columnMapping(spark, base).flatMap(_.physicalOf(c)).getOrElse(c))
-    val range = range0.map { case (c, lo, hi) =>
-      (columnMapping(spark, base).flatMap(_.physicalOf(c)).getOrElse(c),
-        lo, hi) }
+    def phys(c: String) = m.colMap.flatMap(_.physicalOf(c)).getOrElse(c)
+    val statsCol = statsCol0.map(phys)
+    val range = range0.map { case (c, lo, hi) => (phys(c), lo, hi) }
     // conflict-granular OCC for maintenance (Delta's conflict checker
     // allows OPTIMIZE to commit past a blind append): a CAS loss keeps
     // the bin-packed output, and if every small INPUT file is still
@@ -6669,7 +6203,7 @@ object TxLog {
     // sweeps them) — an OPTIMIZE racing a busy streaming sink on a
     // 100 TB table costs one extra commit attempt, not a second
     // rewrite job.
-    var rebase: Option[(Seq[Entry], Map[String, String], String)] =
+    var rebase: Option[(Seq[Entry], Map[String, String], TableMeta)] =
       None // (newEntries, small path→line, metaSig)
     def discardRebase(): Unit = rebase.foreach { case (es, _, _) =>
       discard(spark, base, es.map(_.path)); rebase = None }
@@ -6678,7 +6212,7 @@ object TxLog {
         throw new IllegalStateException(s"no committed version at $base"))
       onAttempt(attempt) // test seam: between snapshot read and publish
       val rebasable = rebase.filter { case (_, smallBy, sig) =>
-        sig == stableMetaSig(manifestLines(spark, base, cur)) &&
+        sig == metaOf(spark, base, cur).rebaseKey &&
           currentLinesAt(spark, base, cur, smallBy.keySet)
             .exists(curBy => smallBy.forall { case (p, l) =>
               curBy.get(p).contains(l) })
@@ -6706,7 +6240,7 @@ object TxLog {
       // 10^6-file table never materializes the entry list either.
       val rangeRepr = range.map { case (c, lo, hi) =>
         (c, reprOf(lo), reprOf(hi)) }
-      val metaSig = stableMetaSig(manifestLines(spark, base, cur))
+      val metaSig = metaOf(spark, base, cur).rebaseKey
       val (small, carriedOpt, txns) =
         TxLogPlan.smallEntriesForCompact(spark, base, cur,
             smallThresholdRows, rangeRepr) match {
@@ -6840,12 +6374,7 @@ object TxLog {
     // the declaration to type its extraction (and to keep the new
     // tiles' stats fresh) — a one-shot collectVariantStats sweep is
     // not enough, its keys die with the first rewrite
-    val varDecls =
-      if (cols0.exists(variantKeySplit(_).isDefined))
-        latestVersion(spark, base)
-          .map(v => parseVarStatsLines(manifestLines(spark, base, v)))
-          .getOrElse(Seq.empty)
-      else Seq.empty
+    val varDecls = latestMeta(spark, base).varStats
     val phys = cols0.map { c =>
       variantKeySplit(c) match {
         case Some((vc, p)) =>
@@ -6882,7 +6411,7 @@ object TxLog {
     // keeps the tiled output; unchanged inputs + unchanged metadata →
     // republish as a declared delta, zero re-tiling. The winner's adds
     // wait for the next sweep.
-    var rebase: Option[(Seq[Entry], Map[String, String], String)] = None
+    var rebase: Option[(Seq[Entry], Map[String, String], TableMeta)] = None
     def discardRebase(): Unit = rebase.foreach { case (es, _, _) =>
       discard(spark, base, es.map(_.path)); rebase = None }
     try withCasRetry(maxAttempts) { attempt =>
@@ -6890,7 +6419,7 @@ object TxLog {
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
       onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = stableMetaSig(manifestLines(spark, base, cur))
+      val metaSig = metaOf(spark, base, cur).rebaseKey
       val rebasable = rebase.filter { case (_, tiledBy, sig) =>
         sig == metaSig && {
           val curBy = entries.map(e => e.path -> serLine(e)).toMap
@@ -6939,10 +6468,7 @@ object TxLog {
           withRowIds = true)
         // variant keys re-tile on their declared extraction — the
         // same expression the write path collects stats through
-        val varDecls =
-          if (cols.exists(variantKeySplit(_).isDefined))
-            parseVarStatsLines(manifestLines(spark, base, cur))
-          else Seq.empty
+        val varDecls = metaOf(spark, base, cur).varStats
         def exprOf(k: String) =
           if (variantKeySplit(k).isDefined) variantKeyExpr(k, varDecls)
           else None
@@ -7046,7 +6572,8 @@ object TxLog {
                       else manifest(spark, base, v)._1)).toMap
     // the feed is served in the END version's surface; a widened end
     // version pins every slice read to its declared physical schema
-    val wide = widenedPhysSchema(spark, base, toInclusive)
+    val end = metaOf(spark, base, toInclusive)
+    val wide = end.widenedPhysSchema
     def slice(v: Long, es: Seq[Entry], kind: String): Option[DataFrame] =
       if (es.isEmpty) None
       else Some(readEntries(spark, base, es,
@@ -7115,7 +6642,7 @@ object TxLog {
       // row ids a COW update keeps the documented delete+insert.
       val cowUpdate = withDeletes &&
         cdfOpOf(spark, base, v).contains("update_cow") &&
-        rowIdHighWaterOf(spark, base, v).isDefined
+        metaOf(spark, base, v).rowIdHighWater.isDefined
       if (cowUpdate)
         cowUpdateSlices(spark, base, v, removedE, added, wide)
       else {
@@ -7145,9 +6672,8 @@ object TxLog {
     // the END version's logical surface (Delta CDF's contract — the
     // feed is served in the latest schema of the requested range),
     // CDF tag columns carried through
-    columnMappingOf(spark, base, toInclusive) match {
-      case Some(cm) => toLogicalDf(feed, cm,
-        declaredSchemaOf(spark, base, toInclusive),
+    end.colMap match {
+      case Some(cm) => toLogicalDf(feed, cm, end.schema,
         keep = Seq("_commit_version", "_change_type"))
       case None => feed
     }
@@ -7178,22 +6704,15 @@ object TxLog {
     * snapshot (None for an empty store) and returns the FULL new
     * table contents; on a CAS loss the landed files are discarded and
     * `body` re-runs against the winner's table — so a concurrent
-    * MERGE never silently last-write-wins. Returns the version
-    * published. */
+    * MERGE never silently last-write-wins. A stale read (the
+    * snapshot vacuumed underneath) retries as a conflict too. Returns
+    * the version published. */
   def transact(spark: SparkSession, base: String, maxAttempts: Int = 5)
-              (body: Option[DataFrame] => DataFrame): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+              (body: Option[DataFrame] => DataFrame): Long =
+    withCasRetry(maxAttempts) { _ =>
       val cur = latestVersion(spark, base)
-      val out = body(cur.map(v => readVersion(spark, base, v)))
-      try return commit(out, base, cur)
-      catch {
-        case _: CommitConflictException if attempt < maxAttempts => ()
-      }
+      commit(body(cur.map(v => readVersion(spark, base, v))), base, cur)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Version history (Delta DESCRIBE HISTORY analog): one row per
     * surviving published version — file count, row count (NULL when
@@ -7252,9 +6771,10 @@ object TxLog {
     val v = latestVersion(spark, base).getOrElse(
       throw new IllegalStateException(s"no committed version at $base"))
     // ONE read of the latest manifest serves entries (via the
-    // snapshot cache), txn map, and constraint/identity meta — not a
-    // second full-file round trip just for the meta lines
+    // snapshot cache), txn map, and table metadata — not a second
+    // full-file round trip just for the meta lines
     val lines = manifestLines(spark, base, v)
+    val m = TableMeta.parse(lines)
     val entries = snapshotEntries(spark, base, v)
     val txns = parseTxnLines(lines)
     val f = fs(base, spark)
@@ -7275,23 +6795,19 @@ object TxLog {
     }
     val lastModified = f.getFileStatus(manifestPath(base, v))
       .getModificationTime
-    val (protoR, protoW) = parseProtocolLines(lines).getOrElse((1, 1))
+    val (protoR, protoW) = m.protocol
     import spark.implicits._
     Seq((
       "txlog", base, v, lastModified,
       entries.size.toLong, nRows, entries.flatMap(_.dv).map(_.rows).sum,
       sizeBytes, statsCols.mkString(","),
-      parseConstraintLines(lines).size.toLong,
-      parseIdentityLines(lines).size.toLong,
+      m.constraints.size.toLong, m.identity.size.toLong,
       entries.flatMap(_.blooms.map(_.column)).distinct.size.toLong,
       txns.size.toLong, ckptV, protoR, protoW,
-      parsePartitionLines(lines).map(_._1).mkString(","),
-      parseClusterLines(lines).mkString(","),
-      parseRowIdLines(lines).isDefined,
-      parseDefaultLines(lines).map(_._1).mkString(","),
-      parseWidenLines(lines).map(_._1).mkString(","),
-      parseVarStatsLines(lines)
-        .map { case (c, p, t) => s"$c$p:$t" }.mkString(",")
+      m.partitions.map(_._1).mkString(","), m.cluster.mkString(","),
+      m.rowIdHighWater.isDefined, m.defaults.map(_._1).mkString(","),
+      m.widened.map(_._1).mkString(","),
+      m.varStats.map { case (c, p, t) => s"$c$p:$t" }.mkString(",")
     )).toDF("format", "location", "version", "last_modified_ms",
       "num_files", "num_rows", "num_masked_rows", "size_bytes",
       "stats_columns", "num_constraints", "num_identity_cols",
@@ -7324,17 +6840,18 @@ object TxLog {
       // DATAFRAMES and publish the DECLARED change set — a restore on
       // a 10^6-file table collects only the churn since v, never the
       // entry list
+      val restored: TableMeta => TableMeta =
+        _.copy(constraints = metaOf(spark, base, v).constraints)
       TxLogPlan.restoreDelta(spark, base, v, cur) match {
         case Some((upserts, removes)) =>
           publishEntries(spark, base, cur + 1L, upserts,
-            txnsOf(spark, base, cur),
-            Some(constraintsOf(spark, base, v)), operation = "RESTORE",
-            deltaChange = Some(removes))
+            txnsOf(spark, base, cur), operation = "RESTORE",
+            deltaChange = Some(removes), meta = restored)
         case None =>
           val (entries, _) = manifest(spark, base, v)
           val (_, txns) = manifest(spark, base, cur)
           publishEntries(spark, base, cur + 1L, entries, txns,
-            Some(constraintsOf(spark, base, v)), operation = "RESTORE")
+            operation = "RESTORE", meta = restored)
       }
       cur + 1L
     }
@@ -7354,6 +6871,15 @@ object TxLog {
         v
       case None => latest
     }
+  }
+
+  /** The metadata edit a clone of `srcBase`'s version `v` publishes:
+    * the source's value, minus its variant-stats declarations, on the
+    * new table's own protocol floor. */
+  private def cloneMeta(spark: SparkSession, srcBase: String,
+                        v: Long): TableMeta => TableMeta = {
+    val src = metaOf(spark, srcBase, v)
+    m => src.copy(varStats = Seq.empty, protocol = m.protocol)
   }
 
   /** Shallow clone (Delta `CREATE TABLE ... SHALLOW CLONE` analog):
@@ -7386,34 +6912,14 @@ object TxLog {
       path = resolve(srcAbs, e.path),
       dv = e.dv.map(d => d.copy(dir = resolve(srcAbs, d.dir))),
       blooms = e.blooms.map(b => b.copy(dir = resolve(srcAbs, b.dir)))))
-    // the clone inherits the source's CHECK constraints AND identity
-    // high-waters (Delta clones carry table metadata): a writable dev
-    // copy must neither accept rows the source would veto nor restart
-    // its identity allocation at 1 over cloned-in ids. The column
-    // mapping and declared schema ride too — without the `#colmap`
-    // line a mapped source's clone would serve PHYSICAL names and
-    // resurrect dropped columns
+    // the clone inherits the source version's table metadata (Delta
+    // clones carry it): a writable dev copy must neither accept rows
+    // the source would veto, nor restart identity allocation at 1 over
+    // cloned-in ids, nor serve a mapped source's PHYSICAL names, nor
+    // drop the partition/generated/widen/cluster declarations or the
+    // row-id high-water its entries' id spans depend on
     publishEntries(spark, dstBase, 1L, cloned, Map.empty,
-      Some(constraintsOf(spark, srcBase, v)), operation = "CLONE",
-      identityOverride = Some(identityOf(spark, srcBase, v)),
-      declaredSchemaOverride = declaredSchemaOf(spark, srcBase, v),
-      colMapOverride = columnMappingOf(spark, srcBase, v),
-      // the partition and generated-column declarations ride too —
-      // dropping either would silently strip the clone of write-side
-      // semantics (the exact hazard the writer-v3/v4 gates stop)
-      partitionOverride = Some(partitionSpecOf(spark, srcBase, v)),
-      generatedOverride = Some(generatedColumnsOf(spark, srcBase, v)),
-      // widen lines ride too: without them a widened source's clone
-      // would try to read its mixed-width files by inference and crash
-      widenOverride = Some(widenedColumnsOf(spark, srcBase, v)),
-      // ... as do the clustering keys (an ignorant clone would
-      // silently un-cluster every future write) and the row-id
-      // high-water (cloned entries carry id spans; without the line
-      // the clone's own commits would land span-less files next to
-      // them and the lineage surface would refuse to serve)
-      clusterOverride = Some(clusterByOf(spark, srcBase, v)),
-      rowIdSeed = rowIdHighWaterOf(spark, srcBase, v),
-      defaultOverride = Some(defaultColumnsOf(spark, srcBase, v)))
+      operation = "CLONE", meta = cloneMeta(spark, srcBase, v))
     1L
   }
 
@@ -7499,16 +7005,7 @@ object TxLog {
       blooms = e.blooms.map(b => b.copy(dir = dirMap(b.dir))))
     }
     publishEntries(spark, dstBase, 1L, cloned, Map.empty,
-      Some(constraintsOf(spark, srcBase, v)), operation = "CLONE DEEP",
-      identityOverride = Some(identityOf(spark, srcBase, v)),
-      declaredSchemaOverride = declaredSchemaOf(spark, srcBase, v),
-      colMapOverride = columnMappingOf(spark, srcBase, v),
-      partitionOverride = Some(partitionSpecOf(spark, srcBase, v)),
-      generatedOverride = Some(generatedColumnsOf(spark, srcBase, v)),
-      widenOverride = Some(widenedColumnsOf(spark, srcBase, v)),
-      clusterOverride = Some(clusterByOf(spark, srcBase, v)),
-      rowIdSeed = rowIdHighWaterOf(spark, srcBase, v),
-      defaultOverride = Some(defaultColumnsOf(spark, srcBase, v)))
+      operation = "CLONE DEEP", meta = cloneMeta(spark, srcBase, v))
     1L
   }
 
@@ -7548,39 +7045,43 @@ object TxLog {
       val cur = latestVersion(spark, base).getOrElse(
         throw new IllegalStateException(s"no committed version at $base"))
       val (entries, txns) = manifest(spark, base, cur)
+      val m = metaOf(spark, base, cur)
+      // DROP FEATURE is the one verb allowed to LOWER the protocol
+      // floor: it resets it to (1, 1) and the publish re-derives the
+      // stamp from the features still present (the writer gate has
+      // already proved this engine knows every feature the table has)
+      def dropping(edit: TableMeta => TableMeta): TableMeta => TableMeta =
+        edit.andThen(_.copy(protocol = (1, 1)))
       canon match {
         case "rowTracking" =>
-          require(rowIdHighWaterOf(spark, base, cur).isDefined,
+          require(m.rowIdHighWater.isDefined,
             s"$base does not have rowTracking enabled")
           publishEntries(spark, base, cur + 1L,
             entries.map(_.copy(baseRowId = None)), txns,
             dataChange = false, operation = "DROP FEATURE rowTracking",
-            clearRowIds = true, recomputeProtocol = true)
+            meta = dropping(_.copy(rowIdHighWater = None)))
           cur + 1L
         case "clustering" =>
-          require(clusterByOf(spark, base, cur).nonEmpty,
-            s"$base has no clustering keys")
+          require(m.cluster.nonEmpty, s"$base has no clustering keys")
           publishEntries(spark, base, cur + 1L, entries, txns,
             dataChange = false, operation = "DROP FEATURE clustering",
-            clusterOverride = Some(Seq.empty), recomputeProtocol = true)
+            meta = dropping(_.copy(cluster = Seq.empty)))
           cur + 1L
         case "columnDefaults" =>
-          require(defaultColumnsOf(spark, base, cur).nonEmpty,
-            s"$base has no column defaults")
+          require(m.defaults.nonEmpty, s"$base has no column defaults")
           publishEntries(spark, base, cur + 1L, entries, txns,
             dataChange = false, operation = "DROP FEATURE columnDefaults",
-            defaultOverride = Some(Seq.empty), recomputeProtocol = true)
+            meta = dropping(_.copy(defaults = Seq.empty)))
           cur + 1L
         case "typeWidening" =>
-          require(widenedColumnsOf(spark, base, cur).nonEmpty,
-            s"$base has no widened columns")
+          require(m.widened.nonEmpty, s"$base has no widened columns")
           // files that can still hold narrow bytes are exactly those
           // carried from the FIRST widen version (the widen commit is
           // metadata-only, and every later write lands at the declared
           // width). A vacuumed-away first-widen snapshot degrades to
           // the conservative full rewrite — Delta's worst case too.
           val firstWiden = (1L to cur).find(v =>
-            scala.util.Try(widenedColumnsOf(spark, base, v))
+            scala.util.Try(metaOf(spark, base, v).widened)
               .toOption.exists(_.nonEmpty))
           val narrowPaths: Option[Set[String]] = firstWiden.flatMap(w =>
             scala.util.Try(
@@ -7602,7 +7103,7 @@ object TxLog {
             publishEntries(spark, base, cur + 1L, carried ++ rewritten,
               txns, dataChange = false,
               operation = "DROP FEATURE typeWidening",
-              widenOverride = Some(Seq.empty), recomputeProtocol = true)
+              meta = dropping(_.copy(widened = Seq.empty)))
             cur + 1L
           } catch {
             case e: CommitConflictException =>

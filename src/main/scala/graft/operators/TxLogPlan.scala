@@ -179,19 +179,9 @@ object TxLogPlan {
     * checkpoint: the protocol line's READER floor is raised to
     * [[PqReaderVersion]] (the writer floor carries unchanged), and
     * the `#parquet` marker is appended. */
-  private def gateMeta(metaLines: Seq[String], v: Long): Seq[String] = {
-    val gated = metaLines.map { l =>
-      if (l.startsWith("#protocol\t")) l.split('\t') match {
-        case Array(_, r, w) =>
-          s"#protocol\t${math.max(r.toInt, PqReaderVersion)}\t$w"
-        case _ => l
-      } else l
-    }
-    val withProto =
-      if (gated.exists(_.startsWith("#protocol\t"))) gated
-      else s"#protocol\t$PqReaderVersion\t1" +: gated
-    withProto :+ s"$PqMarkerPrefix${pqDirName(v)}"
-  }
+  private def gateMeta(metaLines: Seq[String], v: Long): Seq[String] =
+    TableMeta.withReaderFloor(metaLines, PqReaderVersion) :+
+      s"$PqMarkerPrefix${pqDirName(v)}"
 
   /** Write a columnar checkpoint from a driver entry list (the
     * commit-path bridge: publishEntries already holds the list). The

@@ -635,7 +635,7 @@ object RegistryMaintDml {
         "schema evolution + merge must land as ONE commit")
       require(!TxLog.readVersion(s, base, 1L).columns.contains("o_channel"),
         "time travel below the merge must stay narrow")
-      require(TxLog.declaredSchemaOf(s, base, 2L).exists(
+      require(TxLog.metaOf(s, base, 2L).schema.exists(
         _.fieldNames.contains("o_channel")),
         "the evolved #schema must carry the new column")
       TxLog.readEvolved(s, base)

@@ -93,12 +93,12 @@ object RegistryMaintSchema {
         ev.where(col("event_id") < 300)
           .select("user_id", "event_type", "value"),
         base, "row_id", Some("row_id"))
-      val w1 = TxLog.identityOf(s, base, 1L)("row_id")
+      val w1 = TxLog.metaOf(s, base, 1L).identity("row_id")
       TxLog.appendIdentity(
         ev.where(col("event_id").between(300, 599))
           .select("user_id", "event_type", "value"),
         base, "row_id", Some("row_id"))
-      val w2 = TxLog.identityOf(s, base, 2L)("row_id")
+      val w2 = TxLog.metaOf(s, base, 2L).identity("row_id")
       require(w2 > w1 && w1 > 0,
         s"identity high-water must grow across commits: $w1 -> $w2")
       TxLog.read(s, base)
@@ -164,7 +164,7 @@ object RegistryMaintSchema {
       val vAlter = TxLog.alterAddColumns(s, base,
         StructType(Seq(StructField("note", StringType))))
       require(vAlter == 2L, s"ALTER must publish version 2, got $vAlter")
-      require(TxLog.declaredSchemaOf(s, base, 1L).isEmpty &&
+      require(TxLog.metaOf(s, base, 1L).schema.isEmpty &&
         !TxLog.readVersion(s, base, 1L).columns.contains("note"),
         "time travel below the ALTER must stay narrow")
       require(TxLog.readEvolved(s, base).where(col("note").isNotNull)
@@ -172,7 +172,7 @@ object RegistryMaintSchema {
       TxLog.append(ev.where(col("event_id") >= 600)
         .withColumn("note", concat(lit("n-"), col("event_type"))),
         base, Some("event_id"))
-      require(TxLog.declaredSchemaOf(s, base, 3L)
+      require(TxLog.metaOf(s, base, 3L).schema
         .exists(_.fieldNames.contains("note")),
         "the #schema line must carry forward through ordinary appends")
       TxLog.readEvolved(s, base)

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.{TxLog, TxLogPlan}
+import graft.operators.{TableMeta, TxLog, TxLogPlan}
 import graft.sources.{Ingest, Tables}
 
 /** Round-14 transaction-log witnesses: columnar (parquet)
@@ -45,7 +45,7 @@ object RegistryTx {
         "the latest version must resolve via the columnar checkpoint")
       val gate = TxLog.linesOf(s, base, TxLog.ckptPath(base, 3L))
       require(gate.exists(_.startsWith("#parquet\t")) &&
-        gate.exists(_.startsWith("#protocol\t5\t")),
+        TableMeta.protocolOf(gate).exists(_._1 == 5),
         "marker file must carry the parquet pointer AND the reader-5 " +
           "protocol gate")
       TxLog.cachePurge(base)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.TxLog
+import graft.operators.{TableMeta, TxLog}
 
 /** A DSv2 `TableCatalog` over [[TxLog]] tables — the catalog rung of
   * the connector ladder (the Delta analog is `DeltaCatalog`), and the
@@ -150,7 +150,7 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
       // the version's OWN `#schema` line beats the CREATE-time sidecar:
       // it is versioned (ALTER ADD COLUMNS publishes a new one), the
       // sidecar is the birth snapshot
-      .orElse(TxLog.declaredSchemaOf(spark, base, target))
+      .orElse(TxLog.metaOf(spark, base, target).schema)
       .orElse(readSchemaSidecar(base))
       .orElse(((target - 1) to 1L by -1L).iterator.flatMap { v =>
         try inferred(v) catch { case NonFatal(_) => None }
@@ -394,14 +394,10 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
     // validates. Pairs with PARTITIONED BY (day): the Delta-recommended
     // derived-partition pattern.
     TxLog.publishEntries(spark, dir.toString, 1L, Seq.empty, Map.empty,
-      declaredSchemaOverride = Some(schema),
-      partitionOverride = if (pspec.isEmpty) None else Some(pspec),
-      generatedOverride = if (gens.isEmpty) None else Some(gens),
-      identityOverride =
-        if (identitySeeds.isEmpty) None else Some(identitySeeds),
-      clusterOverride = if (ckeys.isEmpty) None else Some(ckeys),
-      defaultOverride = if (dflts.isEmpty) None else Some(dflts),
-      operation = "CREATE TABLE")
+      operation = "CREATE TABLE",
+      meta = _.copy(schema = Some(schema), partitions = pspec,
+        generated = gens, identity = identitySeeds, cluster = ckeys,
+        defaults = dflts))
     new TxLogTable(schema, dir.toString)
   }
 
@@ -453,7 +449,7 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
               () // DROP COLUMN IF EXISTS on a missing nested field: no-op
           }
         else if (TxLog.latestVersion(spark, base).exists(v =>
-            TxLog.columnMappingOf(spark, base, v).exists(
+            TxLog.metaOf(spark, base, v).colMap.exists(
               _.hasLogical(name)) ||
               schemaAt(base, v).fieldNames
                 .exists(_.equalsIgnoreCase(name))))
@@ -469,7 +465,7 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
             s"(UNIQUE/PRIMARY KEY/FOREIGN KEY are not): ${other.toDDL}")
       }
       case dc: TableChange.DropConstraint =>
-        if (TxLog.constraints(spark, base).contains(dc.name()))
+        if (TxLog.latestMeta(spark, base).constraints.contains(dc.name()))
           TxLog.dropConstraint(spark, base, dc.name())
         else if (!dc.ifExists()) throw new IllegalArgumentException(
           s"constraint '${dc.name()}' does not exist on " +
@@ -724,17 +720,15 @@ class StagedTxLogTable(base: String, ident: Identifier,
       }
       val txns = cur.map(v =>
         TxLog.manifest(spark, base, v)._2).getOrElse(Map.empty)
+      // the new definition's metadata replaces the old wholesale; only
+      // the protocol floor carries (requirements never regress)
       TxLog.publishEntries(spark, base, cur.getOrElse(0L) + 1L, staged,
         txns, // exactly-once sink cursors survive, like RESTORE
-        constraintsOverride = Some(Map.empty),
-        identityOverride = Some(identitySeeds),
-        declaredSchemaOverride = Some(tableSchema),
-        partitionOverride = Some(pspec),        // empty CLEARS
-        generatedOverride = Some(gens),         // empty CLEARS
-        defaultOverride = Some(dflts),          // empty CLEARS
-        clearColMap = true,
         operation =
-          if (cur.isEmpty) "CREATE TABLE AS SELECT" else "REPLACE TABLE")
+          if (cur.isEmpty) "CREATE TABLE AS SELECT" else "REPLACE TABLE",
+        meta = m => TableMeta(schema = Some(tableSchema), partitions = pspec,
+          generated = gens, defaults = dflts, identity = identitySeeds,
+          protocol = m.protocol))
     }
   }
 

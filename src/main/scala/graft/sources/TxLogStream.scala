@@ -129,7 +129,7 @@ class TxLogSource extends TableProvider {
       // earlier versions serve ids through the enablement backfill
       // (files still live at enable) or honest NULL (removed before)
       val rv = if (TxLogSource.changeFeed(options)) latest else target
-      require(TxLog.rowIdHighWaterOf(spark, base, rv).isDefined,
+      require(TxLog.metaOf(spark, base, rv).rowIdHighWater.isDefined,
         s"rowIds=true needs row tracking enabled on $base " +
           "(TxLog.enableRowTracking / ALTER TABLE ... SET " +
           "TBLPROPERTIES ('graft.rowTracking'='true'))")
@@ -192,12 +192,13 @@ object TxLogSource {
       // for columns that exist on disk); declared-only columns append
       // after, in declared order — versioned with the log, so a
       // time-travel read BEFORE the ALTER stays narrow.
-      val declared = TxLog.declaredSchemaOf(spark, base, target)
-      val cmap = TxLog.columnMappingOf(spark, base, target)
+      val m = TxLog.metaOf(spark, base, target)
+      val declared = m.schema
+      val cmap = m.colMap
       // a widened version's surface IS the declared schema (old files
       // upcast inside the readers); footer inference would serve the
       // narrow type — or crash on the mixed-width union
-      if (TxLog.widenedColumnsOf(spark, base, target).nonEmpty)
+      if (m.widened.nonEmpty)
         declared.getOrElse(throw new IllegalStateException(
           s"$base carries #widencol lines but no #schema line"))
       else if (files.isEmpty)
@@ -267,7 +268,7 @@ object TxLogSource {
     * stats pruning and both partition readers. */
   private[sources] def physMapOf(spark: SparkSession, base: String,
                                  target: Long): Map[String, String] =
-    TxLog.columnMappingOf(spark, base, target)
+    TxLog.metaOf(spark, base, target).colMap
       .map(_.cols.map { case (l, p) => l.toLowerCase -> p }.toMap)
       .getOrElse(Map.empty)
 
@@ -814,7 +815,7 @@ class TxLogTable(tableSchema: StructType, base: String,
     val spark = SparkSession.active
     val dflts = scala.util.Try(
       asOf.orElse(TxLog.latestVersion(spark, base))
-        .map(TxLog.defaultColumnsOf(spark, base, _)).getOrElse(Seq.empty))
+        .map(TxLog.metaOf(spark, base, _).defaults).getOrElse(Seq.empty))
       .getOrElse(Seq.empty)
     tableSchema.fields.map { f =>
       dflts.find(_._1.equalsIgnoreCase(f.name)) match {
@@ -840,10 +841,8 @@ class TxLogTable(tableSchema: StructType, base: String,
       : Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] = {
     import org.apache.spark.sql.connector.catalog.constraints.Constraint
     val spark = SparkSession.active
-    val cons = asOf match {
-      case Some(v) => TxLog.constraintsOf(spark, base, v)
-      case None => TxLog.constraints(spark, base)
-    }
+    val cons = asOf.map(TxLog.metaOf(spark, base, _))
+      .getOrElse(TxLog.latestMeta(spark, base)).constraints
     cons.toSeq.sortBy(_._1).map { case (n, ex) =>
       Constraint.check(n).predicateSql(ex).enforced(true)
         .validationStatus(Constraint.ValidationStatus.VALID)
@@ -860,9 +859,9 @@ class TxLogTable(tableSchema: StructType, base: String,
     val spark = SparkSession.active
     val v = asOf.orElse(TxLog.latestVersion(spark, base))
       .getOrElse(return Array.empty)
-    val cm = TxLog.columnMappingOf(spark, base, v)
-    TxLog.partitionSpecOf(spark, base, v).map { case (phys, _) =>
-      Expressions.identity(cm.map(_.logicalOf(phys)).getOrElse(phys))
+    val m = TxLog.metaOf(spark, base, v)
+    m.partitions.map { case (phys, _) =>
+      Expressions.identity(m.colMap.map(_.logicalOf(phys)).getOrElse(phys))
     }.toArray
   }
 
@@ -1196,7 +1195,8 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
       case None => Map.empty
       case Some(latest) =>
         def tracked(v: Long): Boolean = scala.util.Try(
-          TxLog.rowIdHighWaterOf(spark, base, v).isDefined).getOrElse(false)
+          TxLog.metaOf(spark, base, v).rowIdHighWater.isDefined)
+          .getOrElse(false)
         if (!tracked(latest)) Map.empty
         else {
           var lo = 1L; var hi = latest
@@ -2146,7 +2146,7 @@ class TxLogMicroBatchStream(scan: TxLogScan, base: String,
     val latest = latestCommitted()
     if (latest == 0L || consumedV >= latest) return
     def mapAt(v: Long): Option[Set[(String, String)]] =
-      TxLog.columnMappingOf(spark, base, v)
+      TxLog.metaOf(spark, base, v).colMap
         .map(_.cols.map { case (l, p) => (l.toLowerCase, p) }.toSet)
     val nowM = mapAt(latest)
     // the checkpointed version's manifest may be GONE (vacuumed while

@@ -108,9 +108,9 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     * restart sees the identical answer (no replay hazard). */
   private val logicalPartitionCols: Seq[String] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val cm = TxLog.columnMapping(spark, base)
-    TxLog.partitionSpec(spark, base).map { case (phys, _) =>
-      cm.map(_.logicalOf(phys)).getOrElse(phys)
+    val m = TxLog.latestMeta(spark, base)
+    m.partitions.map { case (phys, _) =>
+      m.colMap.map(_.logicalOf(phys)).getOrElse(phys)
     }
   }
 
@@ -121,9 +121,8 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     * interleave, and the incremental OPTIMIZE sweep perfects both). */
   private val logicalClusterCols: Seq[String] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val cm = TxLog.columnMapping(spark, base)
-    TxLog.clusterKeys(spark, base).map(p =>
-      cm.map(_.logicalOf(p)).getOrElse(p))
+    val m = TxLog.latestMeta(spark, base)
+    m.cluster.map(p => m.colMap.map(_.logicalOf(p)).getOrElse(p))
       .filter(c => info.schema().fieldNames
         .exists(_.equalsIgnoreCase(c)))
   }
@@ -163,7 +162,8 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
   private def partitionPlan(pSchema: StructType, pStats: Seq[String])
       : (Seq[Int], Seq[String]) = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val pPhys = TxLog.partitionSpec(spark, base).map(_._1)
+    val m = TxLog.latestMeta(spark, base)
+    val pPhys = m.partitions.map(_._1)
     val idx = pPhys.map { p =>
       val i = pSchema.fieldNames.indexWhere(_.equalsIgnoreCase(p))
       require(i >= 0,
@@ -176,7 +176,7 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     // so a batch supplying 'REGION' for partition column 'region' must
     // still land stats every reader resolves. CLUSTER BY keys always
     // stat too (their per-file band IS the layout's pruning index).
-    val cPhys = TxLog.clusterKeys(spark, base).filter(c =>
+    val cPhys = m.cluster.filter(c =>
       pSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
     val widened = (pPhys ++ cPhys ++
       pStats.filterNot(s => (pPhys ++ cPhys)
@@ -411,7 +411,7 @@ object TxLogWriteSupport {
   def toPhysical(spark: org.apache.spark.sql.SparkSession, base: String,
                  schema: StructType, statsCols: Seq[String],
                  strict: Boolean): (StructType, Seq[String]) =
-    TxLog.columnMapping(spark, base) match {
+    TxLog.latestMeta(spark, base).colMap match {
       case Some(cm) =>
         if (strict) {
           val unknown = schema.fieldNames.filterNot(cm.hasLogical)
@@ -551,7 +551,7 @@ object TxLogOverwriteSupport {
       "INSERT OVERWRITE with a predicate needs a PARTITIONED txlog " +
         "table; row-level replacement on unpartitioned tables is " +
         "REPLACE WHERE (TxLog.replaceRange) or DELETE + INSERT")
-    val cm = TxLog.columnMapping(spark, base)
+    val cm = TxLog.latestMeta(spark, base).colMap
     def phys(name: String): (String, String) = {
       val p = cm.flatMap(_.physicalOf(name)).getOrElse(name)
       pspec.find(_._1.equalsIgnoreCase(p)).getOrElse(
@@ -622,7 +622,7 @@ object TxLogWriteCommit {
     // before any manifest publishes — same contract as the API verbs.
     // `checked` records the set enforcement ACTUALLY ran under, so a
     // drop-then-re-add between reads cannot slip past the comparison
-    var checked = TxLog.constraints(spark, base)
+    var checked = TxLog.latestMeta(spark, base).constraints
     // GENERATED ALWAYS AS: this path cannot compute (data is already
     // landed executor-side) — require the columns supplied and
     // validate them through the same constraint scan
@@ -632,7 +632,7 @@ object TxLogWriteCommit {
     // spec is immutable); replaceWhere additionally validates the NEW
     // data up front — Delta's own rule: every written row must satisfy
     // the overwrite predicate, or the statement is rejected whole
-    val pspec = TxLog.partitionSpec(spark, base)
+    val pspec = TxLog.latestMeta(spark, base).partitions
     val matcher: Option[TxLog.Entry => Boolean] = mode match {
       case TxLogOverwriteWhere(filters) =>
         val m = TxLogOverwriteSupport.partitionMatcher(spark, base,
@@ -733,7 +733,7 @@ object TxLogWriteCommit {
         }
         checked = Some(checked match {
           case None =>
-            val cons = TxLog.constraints(spark, base)
+            val cons = TxLog.latestMeta(spark, base).constraints
             TxLog.enforceConstraints(spark, base, entries,
               cons ++ TxLog.generatedChecksFor(spark, base, schemaCols))
             cons

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.TxLog
+import org.apache.spark.sql.types._
+
+import graft.operators.{TableMeta, TxLog}
 
 /** Golden manifest meta lines: the exact `#` lines each DDL verb
   * publishes, written through the public verbs only (SQL DDL through
@@ -47,6 +49,56 @@ class TableMetaSpec extends AnyFunSuite {
     "#schema\t" + java.net.URLEncoder.encode(fields.map { case (n, t) =>
       s"""{"name":"$n","type":"$t","nullable":true,"metadata":{}}"""
     }.mkString("""{"type":"struct","fields":[""", ",", "]}"), "UTF-8")
+
+  /** One value per carried kind, each alone on an otherwise empty
+    * table and all of them together — stamped at its required
+    * protocol, so the protocol line round-trips too. */
+  private val eachKind: Seq[TableMeta] = {
+    val all = TableMeta(
+      schema = Some(StructType(Seq(StructField("k", LongType),
+        StructField("n a%me", StringType)))),
+      colMap = Some(TxLog.ColMap(Seq("k" -> "k", "n a%me" -> "c1_n"), 2)),
+      partitions = Seq("d\tay" -> "date", "r" -> "string"),
+      cluster = Seq("x", "s.ts"),
+      widened = Seq("n" -> LongType, "p" -> DecimalType(12, 2)),
+      generated = Seq("day" -> "CAST(etime AS DATE)"),
+      defaults = Seq("score" -> "7", "tag" -> "'none'"),
+      varStats = Seq(("v", "$.price", "double"), ("v", "$.a b", "long")),
+      constraints = Map("k_pos" -> "k > 0", "tag\tx" -> "tag <> '='"),
+      identity = Map("id" -> 99L, "id2" -> -4L),
+      rowIdHighWater = Some(1234L),
+      protocol = (3, 2))
+    val e = TableMeta.empty
+    Seq(e, e.copy(schema = all.schema), e.copy(colMap = all.colMap),
+      e.copy(partitions = all.partitions), e.copy(cluster = all.cluster),
+      e.copy(widened = all.widened), e.copy(generated = all.generated),
+      e.copy(defaults = all.defaults), e.copy(varStats = all.varStats),
+      e.copy(constraints = all.constraints), e.copy(identity = all.identity),
+      e.copy(rowIdHighWater = all.rowIdHighWater),
+      e.copy(protocol = all.protocol), all)
+      .map(m => m.copy(protocol = m.stampedProtocol))
+  }
+
+  test("TableMeta: parse(m.lines) == m for every carried kind") {
+    eachKind.foreach { m =>
+      assert(TableMeta.parse(m.lines) == m, m.lines.mkString("\n"))
+    }
+  }
+
+  test("TableMeta: per-commit and entry lines are not metadata; a " +
+    "pre-#protocol manifest parses at protocol (1, 1)") {
+    val legacy = Seq("#delta", "#op\tWRITE", "#ict\t17",
+      "#constraint\tk_pos\tk+%3E+0", "#identity\tid\t5",
+      "#txn\tapp\t3", "+\tdata/p-0.parquet\t10",
+      "-\tdata/p-1.parquet")
+    assert(TableMeta.parse(legacy) == TableMeta(
+      constraints = Map("k_pos" -> "k > 0"), identity = Map("id" -> 5L)))
+    assert(TableMeta.protocolOf(legacy).isEmpty)
+    assert(TableMeta.parse(Seq.empty) == TableMeta.empty)
+    // the stamp re-derives from the features present
+    val m = TableMeta.parse(legacy).copy(rowIdHighWater = Some(0L))
+    assert(TableMeta.parse(m.lines).protocol == (4, 7))
+  }
 
   test("golden: CREATE with partition, generated and identity columns") {
     val b = fresh("c1")

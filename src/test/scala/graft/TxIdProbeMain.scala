@@ -24,7 +24,7 @@ object TxIdProbeMain {
       TxLog.commit(batch, plain, None, None) }
     timed("appendIdentity (20M, dense ids)") {
       TxLog.appendIdentity(batch, ident, "row_id") }
-    val hw = TxLog.identityOf(spark, ident, 1L)("row_id")
+    val hw = TxLog.metaOf(spark, ident, 1L).identity("row_id")
     val distinct = TxLog.read(spark, ident)
       .agg(countDistinct(col("row_id"))).head().getLong(0)
     println(s"high-water=$hw (expect $n) distinct=$distinct dense=${hw == n && distinct == n}")

@@ -103,7 +103,7 @@ class TxLogCloneSpec extends AnyFunSuite {
     TxLog.cloneDeep(spark, src, dst, versionAsOf = Some(1L))
     assert(contents(TxLog.read(spark, dst)) == rows.take(120).toSet,
       "the clone must hold version 1's content only")
-    assert(TxLog.constraintsOf(spark, dst, 1L).isEmpty,
+    assert(TxLog.metaOf(spark, dst, 1L).constraints.isEmpty,
       "version 1 predates the constraint — it must NOT ride")
     val bad = intercept[IllegalArgumentException] {
       TxLog.cloneShallow(spark, src, "/tmp/graft_txclone/ver_nope",

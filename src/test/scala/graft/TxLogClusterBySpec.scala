@@ -110,7 +110,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
       .toDF("x", "y", "payload").coalesce(1), base, None, Some("x"))
     val v2 = TxLog.alterClusterBy(spark, base, Seq("x", "y"))
     assert(!TxLog.dataChangeOf(spark, base, v2))
-    assert(TxLog.clusterByOf(spark, base, v2) == Seq("x", "y"))
+    assert(TxLog.metaOf(spark, base, v2).cluster == Seq("x", "y"))
     assert(TxLog.operationOf(spark, base, v2).contains("CLUSTER BY"))
     // vetoes
     assert(intercept[IllegalArgumentException] {
@@ -127,7 +127,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     }.getMessage.contains("partition"))
     // drop clustering → widen passes, compact is plain again
     TxLog.alterClusterBy(spark, base, Seq.empty)
-    assert(TxLog.clusterKeys(spark, base).isEmpty)
+    assert(TxLog.latestMeta(spark, base).cluster.isEmpty)
     TxLog.alterWidenColumn(spark, base, "x", LongType)
     assert(TxLog.read(spark, base).schema("x").dataType == LongType)
   }
@@ -145,7 +145,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     s.sql("CREATE TABLE gcb.lake.ev (x INT, y INT, payload STRING) " +
       "USING graft.sources.TxLogSource CLUSTER BY (x, y)")
     val base = "/tmp/graft_txcb/wh/lake/ev"
-    assert(TxLog.clusterKeys(spark, base) == Seq("x", "y"))
+    assert(TxLog.latestMeta(spark, base).cluster == Seq("x", "y"))
     s.sql("INSERT INTO gcb.lake.ev SELECT cast(id * 7 % 100 AS INT), " +
       "cast(id * 13 % 100 AS INT), concat('p-', id) FROM range(20000)")
     assert(s.sql("SELECT count(*) FROM gcb.lake.ev").head.getLong(0)
@@ -164,9 +164,9 @@ class TxLogClusterBySpec extends AnyFunSuite {
       == 20001)
     // native ALTER TABLE ... CLUSTER BY re-registers / drops keys
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY (y, x)")
-    assert(TxLog.clusterKeys(spark, base) == Seq("y", "x"))
+    assert(TxLog.latestMeta(spark, base).cluster == Seq("y", "x"))
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY NONE")
-    assert(TxLog.clusterKeys(spark, base).isEmpty)
+    assert(TxLog.latestMeta(spark, base).cluster.isEmpty)
     // DESCRIBE DETAIL surfaces the registration
     graft.sources.TxLogSqlDml.ensureInjected(s0)
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY (x, y)")
@@ -180,7 +180,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     val vbase = "/tmp/graft_txcb/wh/lake/vb"
     TxLog.declareVariantStats(spark, vbase, "v", "$.price", "long")
     s.sql("ALTER TABLE gcb.lake.vb CLUSTER BY (`v$.price`)")
-    assert(TxLog.clusterKeys(spark, vbase) == Seq("v$.price"))
+    assert(TxLog.latestMeta(spark, vbase).cluster == Seq("v$.price"))
     s.sql("DROP TABLE gcb.lake.vb")
   }
 
@@ -212,7 +212,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
       TxLog.alterClusterBy(spark, base, Seq("v$.tag"))
     }.getMessage.contains("long or double"))
     val vReg = TxLog.alterClusterBy(spark, base, Seq("v$.price"))
-    assert(TxLog.clusterByOf(spark, base, vReg) == Seq("v$.price"))
+    assert(TxLog.metaOf(spark, base, vReg).cluster == Seq("v$.price"))
     // an unsorted 8-partition append lands RANGE-banded on the path
     val pre = TxLog.manifestFiles(spark, base, vReg).toSet
     TxLog.append(priced(4000 until 8000).repartition(8), base)
@@ -261,8 +261,8 @@ class TxLogClusterBySpec extends AnyFunSuite {
     }.getMessage.contains("CLUSTER BY"))
     TxLog.alterClusterBy(spark, base, Seq.empty)
     TxLog.dropVariantStats(spark, base, "v", "$.price")
-    assert(TxLog.variantStatsOf(spark, base,
-      TxLog.latestVersion(spark, base).get).size == 1) // $.tag stays
+    assert(TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).varStats.size == 1) // $.tag stays
   }
 
   test("mixed ZORDER: a plain column and a variant path interleave " +

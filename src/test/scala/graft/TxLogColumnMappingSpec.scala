@@ -121,8 +121,8 @@ class TxLogColumnMappingSpec extends AnyFunSuite {
     assert(out.columns.toSeq == Seq("k", "v"))
     assert(out.where(col("v").isNotNull).count() == 0L,
       "re-ADD after DROP must scan as NULL, not the dropped bytes")
-    val cm = TxLog.columnMappingOf(spark, base,
-      TxLog.latestVersion(spark, base).get).get
+    val cm = TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).colMap.get
     val physV = cm.physical("v")
     assert(physV != "v" && physV.startsWith("c"),
       s"re-ADDed column must get a fresh physical name, got $physV")
@@ -269,7 +269,7 @@ class TxLogColumnMappingSpec extends AnyFunSuite {
     (1L to 12L).foreach { i =>
       TxLog.append(Seq((1000L + i, i)).toDF("k", "amount"), base, Some("k"))
     }
-    assert(TxLog.columnMapping(spark, base).isDefined)
+    assert(TxLog.latestMeta(spark, base).colMap.isDefined)
     assert(TxLog.read(spark, base).columns.toSeq == Seq("k", "amount"))
     assert(TxLog.read(spark, base).count() == 22L)
     // identity on a mapped table: declare first (physical-name birth),

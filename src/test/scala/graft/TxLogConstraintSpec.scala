@@ -34,7 +34,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
     val base = "/tmp/graft_txcons/append"
     seed(base)
     assert(TxLog.addConstraint(spark, base, "v_pos", "v > 0") == 2L)
-    assert(TxLog.constraints(spark, base) == Map("v_pos" -> "v > 0"))
+    assert(TxLog.latestMeta(spark, base).constraints == Map("v_pos" -> "v > 0"))
     val dirsBefore = txnDirsOnDisk(base)
     val ex = intercept[TxLog.ConstraintViolationException] {
       TxLog.append(df(Seq(200L -> java.lang.Long.valueOf(-5L))), base)
@@ -59,7 +59,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
     }
     assert(ex.bad == 50L)
     assert(TxLog.latestVersion(spark, base).contains(1L))
-    assert(TxLog.constraints(spark, base).isEmpty)
+    assert(TxLog.latestMeta(spark, base).constraints.isEmpty)
   }
 
   test("constraints survive DML and maintenance, gate MOR appended " +
@@ -73,7 +73,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
       df(Seq(50L -> java.lang.Long.valueOf(500L))), Seq("k"), "k")
     TxLog.compact(spark, base, smallThresholdRows = 1000L,
       targetRows = 1000L, statsCol0 = Some("k"))
-    assert(TxLog.constraints(spark, base) == Map("v_pos" -> "v > 0"))
+    assert(TxLog.latestMeta(spark, base).constraints == Map("v_pos" -> "v > 0"))
     // a MOR update whose images violate must abort with no new version
     val before = TxLog.latestVersion(spark, base)
     intercept[TxLog.ConstraintViolationException] {
@@ -148,7 +148,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
     // v1 had no constraints; restoring its data must restore its
     // metadata too — else the table would advertise v > 0 while
     // holding v = -5
-    assert(TxLog.constraints(spark, base).isEmpty,
+    assert(TxLog.latestMeta(spark, base).constraints.isEmpty,
       "restore must republish the TARGET version's constraint set")
     assert(TxLog.read(spark, base).where(col("v") < 0).count() == 1)
   }
@@ -160,7 +160,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
     TxLog.addConstraint(spark, src, "v_pos", "v > 0")
     TxLog.drop(spark, dst)
     TxLog.cloneShallow(spark, src, dst)
-    assert(TxLog.constraints(spark, dst) == Map("v_pos" -> "v > 0"))
+    assert(TxLog.latestMeta(spark, dst).constraints == Map("v_pos" -> "v > 0"))
     intercept[TxLog.ConstraintViolationException] {
       TxLog.append(df(Seq(700L -> java.lang.Long.valueOf(-1L))), dst)
     }

@@ -57,11 +57,11 @@ class TxLogDefaultSpec extends AnyFunSuite {
     TxLog.drop(spark, base)
     TxLog.append(Seq((1L, 5)).toDF("k", "score"), base, Some("k"))
     val vSet = TxLog.alterColumnDefault(spark, base, "score", Some("7"))
-    assert(TxLog.defaultColumnsOf(spark, base, vSet) == Seq("score" -> "7"))
-    assert(TxLog.defaultColumnsOf(spark, base, vSet - 1).isEmpty,
+    assert(TxLog.metaOf(spark, base, vSet).defaults == Seq("score" -> "7"))
+    assert(TxLog.metaOf(spark, base, vSet - 1).defaults.isEmpty,
       "the binding is versioned — below the SET there is none")
     val vDrop = TxLog.alterColumnDefault(spark, base, "score", None)
-    assert(TxLog.defaultColumnsOf(spark, base, vDrop).isEmpty)
+    assert(TxLog.metaOf(spark, base, vDrop).defaults.isEmpty)
     TxLog.append(Seq(Tuple1(2L)).toDF("k"), base, Some("k"))
     val scores = TxLog.readEvolved(spark, base).select("k", "score")
       .collect().map(r => r.getLong(0) -> r.isNullAt(1)).toMap
@@ -158,8 +158,8 @@ class TxLogDefaultSpec extends AnyFunSuite {
     TxLog.alterColumnDefault(spark, base, "a", Some("11"))
     TxLog.alterColumnDefault(spark, base, "b", Some("22"))
     TxLog.renameColumn(spark, base, "a", "a2")
-    val afterRename = TxLog.defaultColumnsOf(spark, base,
-      TxLog.latestVersion(spark, base).get).toMap
+    val afterRename = TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).defaults.toMap
     assert(afterRename == Map("a2" -> "11", "b" -> "22"),
       s"the binding must follow the rename: $afterRename")
     TxLog.append(Seq(Tuple1(2L)).toDF("k"), base, Some("k"))
@@ -168,8 +168,8 @@ class TxLogDefaultSpec extends AnyFunSuite {
     assert(r.getInt(0) == 11 && r.getInt(1) == 22,
       "writes after the rename must fill under the NEW name")
     TxLog.dropColumn(spark, base, "b")
-    assert(TxLog.defaultColumnsOf(spark, base,
-      TxLog.latestVersion(spark, base).get).toMap == Map("a2" -> "11"),
+    assert(TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).defaults.toMap == Map("a2" -> "11"),
       "the dropped column's binding must die with it")
     // SQL: ADD COLUMNS with an inline DEFAULT is refused loudly
     val wh = "/tmp/graft_txdflt/warehouse"
@@ -196,7 +196,7 @@ class TxLogDefaultSpec extends AnyFunSuite {
     TxLog.cloneShallow(spark, base, sh)
     TxLog.cloneDeep(spark, base, dp)
     Seq(sh, dp).foreach { c =>
-      assert(TxLog.defaultColumnsOf(spark, c, 1L) == Seq("score" -> "42"),
+      assert(TxLog.metaOf(spark, c, 1L).defaults == Seq("score" -> "42"),
         s"defaults must ride the clone at $c")
       TxLog.append(Seq(Tuple1(2L)).toDF("k"), c, Some("k"))
       val got = TxLog.readEvolved(spark, c)
@@ -212,8 +212,8 @@ class TxLogDefaultSpec extends AnyFunSuite {
     cat.sql("REPLACE TABLE graft.lake.rp (k INT, score INT) " +
       "USING graft.sources.TxLogSource")
     val b = s"$wh/lake/rp"
-    assert(TxLog.defaultColumnsOf(cat, b,
-      TxLog.latestVersion(cat, b).get).isEmpty,
+    assert(TxLog.metaOf(cat, b,
+      TxLog.latestVersion(cat, b).get).defaults.isEmpty,
       "REPLACE binds the NEW definition — no defaults")
   }
 

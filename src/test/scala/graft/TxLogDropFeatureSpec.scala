@@ -84,7 +84,7 @@ class TxLogDropFeatureSpec extends AnyFunSuite {
     assert(TxLog.read(spark, base).agg(sum("k")).head.getLong(0)
       == (1L to 500L).sum)
     // below the drop, the widened version still demands its gates
-    assert(TxLog.widenedColumnsOf(spark, base, vWiden).nonEmpty)
+    assert(TxLog.metaOf(spark, base, vWiden).widened.nonEmpty)
     assert(TxLog.readVersion(spark, base, 1L).schema("k").dataType ==
       org.apache.spark.sql.types.IntegerType,
       "time travel below the widen serves the original narrow type")
@@ -100,12 +100,12 @@ class TxLogDropFeatureSpec extends AnyFunSuite {
     TxLog.alterColumnDefault(spark, base, "c", Some("5"))
     assert(writerFloor(base) == 8)
     TxLog.dropFeature(spark, base, "columnDefaults")
-    assert(TxLog.defaultColumnsOf(spark, base,
-      TxLog.latestVersion(spark, base).get).isEmpty)
+    assert(TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).defaults.isEmpty)
     assert(writerFloor(base) == 6, "clustering remains the floor")
     TxLog.dropFeature(spark, base, "clustering")
-    assert(TxLog.clusterByOf(spark, base,
-      TxLog.latestVersion(spark, base).get).isEmpty)
+    assert(TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).cluster.isEmpty)
     assert(writerFloor(base) == 1 && readerFloor(base) == 1)
     val absent = intercept[IllegalArgumentException] {
       TxLog.dropFeature(spark, base, "clustering")

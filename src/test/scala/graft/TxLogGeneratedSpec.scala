@@ -96,9 +96,9 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     s.sql("CREATE TABLE gg.lake.gt (id INT, etime TIMESTAMP, " +
       "day DATE GENERATED ALWAYS AS (CAST(etime AS DATE))) " +
       "USING graft.sources.TxLogSource PARTITIONED BY (day)")
-    assert(TxLog.generatedColumns(s, base) ==
+    assert(TxLog.latestMeta(s, base).generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
-    assert(TxLog.partitionSpec(s, base).map(_._1) == Seq("day"))
+    assert(TxLog.latestMeta(s, base).partitions.map(_._1) == Seq("day"))
     // the API append derives + splits
     TxLog.append(events(Seq((1, "2024-03-01 10:00:00"),
       (2, "2024-03-02 10:00:00"))), base)
@@ -174,7 +174,7 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     s.sql("CREATE TABLE gid.lake.idt (row_id BIGINT GENERATED ALWAYS " +
       "AS IDENTITY (START WITH 100 INCREMENT BY 1), v STRING) " +
       "USING graft.sources.TxLogSource")
-    assert(TxLog.identityOf(s, base, 1L) == Map("row_id" -> 99L),
+    assert(TxLog.metaOf(s, base, 1L).identity == Map("row_id" -> 99L),
       "the seed must make the FIRST allocation = START WITH")
     import s.implicits._
     TxLog.appendIdentity(Seq("a", "b", "c").toDF("v"), base, "row_id")
@@ -253,10 +253,10 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     TxLog.deleteRangeMor(spark, base, "id", 1, 5)
     TxLog.compact(spark, base, smallThresholdRows = 1000L,
       targetRows = 1000L)
-    assert(TxLog.generatedColumns(spark, base) ==
+    assert(TxLog.latestMeta(spark, base).generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
     TxLog.cloneShallow(spark, base, clone)
-    assert(TxLog.generatedColumns(spark, clone) ==
+    assert(TxLog.latestMeta(spark, clone).generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
     // the clone derives on append like the source
     TxLog.append(events(Seq((99, "2024-04-01 00:00:00"))), clone)

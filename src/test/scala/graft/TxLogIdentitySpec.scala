@@ -26,7 +26,7 @@ class TxLogIdentitySpec extends AnyFunSuite {
     TxLog.appendIdentity(df(100, "a"), base, "id")
     val batch1 = ids(base)
     assert(batch1.distinct.size == 100 && batch1.min >= 1L)
-    val water1 = TxLog.identityOf(spark, base, 1L)("id")
+    val water1 = TxLog.metaOf(spark, base, 1L).identity("id")
     assert(water1 == batch1.max)
     TxLog.appendIdentity(df(50, "b"), base, "id")
     val all = ids(base)
@@ -38,8 +38,8 @@ class TxLogIdentitySpec extends AnyFunSuite {
     TxLog.deleteRangeMor(spark, base, "id", batch1.min, batch1.min + 9)
     TxLog.compact(spark, base, smallThresholdRows = 10_000L,
       targetRows = 10_000L, statsCol0 = Some("id"))
-    val waterNow = TxLog.identityOf(spark, base,
-      TxLog.latestVersion(spark, base).get)("id")
+    val waterNow = TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).identity("id")
     assert(waterNow == all.max,
       s"identity high-water must survive MOR delete + compact: $waterNow")
     // a third append still allocates above the water mark
@@ -57,10 +57,10 @@ class TxLogIdentitySpec extends AnyFunSuite {
     val base = "/tmp/graft_txid/dense"
     TxLog.drop(spark, base)
     TxLog.appendIdentity(df(100, "a"), base, "id") // 4 partitions
-    assert(TxLog.identityOf(spark, base, 1L)("id") == 100L,
+    assert(TxLog.metaOf(spark, base, 1L).identity("id") == 100L,
       "100 rows must consume exactly ids 1..100")
     TxLog.appendIdentity(df(37, "b"), base, "id")
-    assert(TxLog.identityOf(spark, base, 2L)("id") == 137L)
+    assert(TxLog.metaOf(spark, base, 2L).identity("id") == 137L)
     assert(ids(base).sorted == (1L to 137L))
   }
 
@@ -116,8 +116,8 @@ class TxLogIdentitySpec extends AnyFunSuite {
     val source = Seq((50L, "updated"), (500L, "migrated"))
       .toDF("id", "s")
     TxLog.mergeMor(spark, base, source, Seq("id"), "id")
-    val water = TxLog.identityOf(spark, base,
-      TxLog.latestVersion(spark, base).get)("id")
+    val water = TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).identity("id")
     assert(water == 500L,
       s"the high-water must advance past the source's ids: $water")
     TxLog.appendIdentity(df(10, "b"), base, "id")

@@ -131,25 +131,25 @@ class TxLogInteractionSpec extends AnyFunSuite {
     s.sql("ALTER TABLE gix.lake.all RENAME COLUMN v TO amount")
     s.sql("ALTER TABLE gix.lake.all ALTER COLUMN amount TYPE BIGINT")
     val vBefore = TxLog.latestVersion(spark, base).get
-    assert(TxLog.columnMappingOf(spark, base, vBefore).isDefined)
-    assert(TxLog.widenedColumnsOf(spark, base, vBefore).nonEmpty)
-    assert(TxLog.partitionSpecOf(spark, base, vBefore).nonEmpty)
-    assert(TxLog.generatedColumnsOf(spark, base, vBefore).nonEmpty)
-    assert(TxLog.identityOf(spark, base, vBefore).nonEmpty)
+    assert(TxLog.metaOf(spark, base, vBefore).colMap.isDefined)
+    assert(TxLog.metaOf(spark, base, vBefore).widened.nonEmpty)
+    assert(TxLog.metaOf(spark, base, vBefore).partitions.nonEmpty)
+    assert(TxLog.metaOf(spark, base, vBefore).generated.nonEmpty)
+    assert(TxLog.metaOf(spark, base, vBefore).identity.nonEmpty)
     // REPLACE with a plain two-column definition
     s.sql("REPLACE TABLE gix.lake.all (k INT, s STRING) " +
       "USING graft.sources.TxLogSource")
     val vAfter = TxLog.latestVersion(spark, base).get
     assert(vAfter == vBefore + 1, "REPLACE is one new version")
-    assert(TxLog.columnMappingOf(spark, base, vAfter).isEmpty,
+    assert(TxLog.metaOf(spark, base, vAfter).colMap.isEmpty,
       "REPLACE must clear the column mapping")
-    assert(TxLog.widenedColumnsOf(spark, base, vAfter).isEmpty,
+    assert(TxLog.metaOf(spark, base, vAfter).widened.isEmpty,
       "REPLACE must clear widen lines")
-    assert(TxLog.partitionSpecOf(spark, base, vAfter).isEmpty,
+    assert(TxLog.metaOf(spark, base, vAfter).partitions.isEmpty,
       "REPLACE must clear partitioning")
-    assert(TxLog.generatedColumnsOf(spark, base, vAfter).isEmpty,
+    assert(TxLog.metaOf(spark, base, vAfter).generated.isEmpty,
       "REPLACE must clear generated columns")
-    assert(TxLog.identityOf(spark, base, vAfter).isEmpty,
+    assert(TxLog.metaOf(spark, base, vAfter).identity.isEmpty,
       "REPLACE must clear identity waters")
     // the new definition writes and reads as itself
     s.sql("INSERT INTO gix.lake.all VALUES (1, 'a')")
@@ -185,9 +185,9 @@ class TxLogInteractionSpec extends AnyFunSuite {
     TxLog.drop(spark, clone)
     TxLog.cloneShallow(spark, base, clone)
     val cv = TxLog.latestVersion(spark, clone).get
-    assert(TxLog.columnMappingOf(spark, clone, cv).isDefined)
-    assert(TxLog.widenedColumnsOf(spark, clone, cv).nonEmpty)
-    assert(TxLog.identityOf(spark, clone, cv).nonEmpty)
+    assert(TxLog.metaOf(spark, clone, cv).colMap.isDefined)
+    assert(TxLog.metaOf(spark, clone, cv).widened.nonEmpty)
+    assert(TxLog.metaOf(spark, clone, cv).identity.nonEmpty)
     assert(TxLog.read(spark, clone).schema("amount").dataType == LongType)
     // the clone's identity allocation continues ABOVE the source's
     TxLog.appendIdentity(Seq(40L).toDF("amount"), clone, "rid")

@@ -307,7 +307,7 @@ class TxLogMergeClausesSpec extends AnyFunSuite {
     val v = TxLog.latestVersion(spark, base).get
     assert(v == vPre + 1, "evolution and merge are one atomic commit")
     // the declared schema carries the new column, nullable
-    val decl = TxLog.declaredSchemaOf(spark, base, v).get
+    val decl = TxLog.metaOf(spark, base, v).schema.get
     assert(decl.fieldNames.contains("region"))
     // rows: k=1 untouched (old file → region NULL), k=2 updated,
     // k=3 inserted
@@ -341,8 +341,8 @@ class TxLogMergeClausesSpec extends AnyFunSuite {
     // seed the mapping via a rename, then rename BACK (mapping stays)
     TxLog.renameColumn(spark, base, "v", "val")
     TxLog.renameColumn(spark, base, "val", "v")
-    assert(TxLog.columnMappingOf(spark, base,
-      TxLog.latestVersion(spark, base).get).isDefined)
+    assert(TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).colMap.isDefined)
     TxLog.mergeClauses(spark, base,
       Seq((2, 22, 0.9), (4, 40, 0.4)).toDF("k", "v", "score"), Seq("k"),
       matched = Seq(MergeUpdate(None,
@@ -352,7 +352,7 @@ class TxLogMergeClausesSpec extends AnyFunSuite {
           "score" -> sourceCol("score")))),
       evolveSchema = true)
     val v = TxLog.latestVersion(spark, base).get
-    val cm = TxLog.columnMappingOf(spark, base, v).get
+    val cm = TxLog.metaOf(spark, base, v).colMap.get
     val phys = cm.physicalOf("score").get
     assert(phys != "score" && phys.startsWith("c"),
       s"fresh physical name expected, got $phys")

@@ -30,7 +30,7 @@ class TxLogRowTrackingSpec extends AnyFunSuite {
     val v = TxLog.enableRowTracking(spark, base)
     assert(v == 2L && !TxLog.dataChangeOf(spark, base, v))
     assert(TxLog.enableRowTracking(spark, base) == v, "idempotent")
-    assert(TxLog.rowIdHighWaterOf(spark, base, v).contains(100L))
+    assert(TxLog.metaOf(spark, base, v).rowIdHighWater.contains(100L))
     val d = TxLog.describeDetail(spark, base).head()
     assert(d.getAs[Int]("min_reader_version") == 4, d.toString)
     assert(d.getAs[Int]("min_writer_version") == 7, d.toString)
@@ -80,7 +80,7 @@ class TxLogRowTrackingSpec extends AnyFunSuite {
     s.sql("ALTER TABLE grt.lake.t " +
       "SET TBLPROPERTIES ('graft.rowTracking'='true')")
     val base = "/tmp/graft_txrid/wh/lake/t"
-    assert(TxLog.rowTracked(spark, base))
+    assert(TxLog.latestMeta(spark, base).rowIdHighWater.isDefined)
     assert(TxLog.readWithRowIds(spark, base)
       .select("_row_id").distinct().count() == 50)
     val det = s.sql("DESCRIBE DETAIL grt.lake.t").head()

@@ -92,6 +92,29 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.latestVersion(spark, base).contains(3L))
   }
 
+  test("transact retries a stale read (a manifest vacuumed under the " +
+    "attempt) as a conflict instead of letting FileNotFound escape") {
+    val base = "/tmp/graft_txlog/stale"
+    TxLog.drop(spark, base)
+    TxLog.commit(df(v1Rows), base, None)
+    var bodyRuns = 0
+    val v = TxLog.transact(spark, base) { snap =>
+      bodyRuns += 1
+      if (bodyRuns == 1)
+        throw new java.io.FileNotFoundException("v1 vacuumed mid-attempt")
+      snap.get
+    }
+    assert(bodyRuns == 2 && v == 2L)
+    assert(contents(TxLog.read(spark, base)) == v1Rows.toSet)
+    // out of attempts: the caller sees the conflict, never the raw FNFE
+    val e = intercept[TxLog.CommitConflictException] {
+      TxLog.transact(spark, base, maxAttempts = 2) { _ =>
+        throw new java.io.FileNotFoundException("always stale")
+      }
+    }
+    assert(e.getCause.isInstanceOf[java.io.FileNotFoundException])
+  }
+
   test("vacuum keeps the newest manifests and deletes unreferenced " +
     "txn dirs; surviving versions stay readable") {
     val base = "/tmp/graft_txlog/vac"

@@ -235,7 +235,7 @@ class TxLogVariantSpec extends AnyFunSuite {
       "declare must back-fill as a metadata-only commit")
     assert(TxLog.manifest(spark, base, v)._1
       .forall(_.statsFor("v$.id").isDefined))
-    assert(TxLog.variantStatsOf(spark, base, v) ==
+    assert(TxLog.metaOf(spark, base, v).varStats ==
       Seq(("v", "$.id", "long")))
     // an append now carries path stats IMMEDIATELY — no sweep commit
     TxLog.append(bronze("b", 1000 until 1010).coalesce(1), base,
@@ -307,7 +307,7 @@ class TxLogVariantSpec extends AnyFunSuite {
         .head().getLong(0) == 10L)
       assert(sql.sql("ALTER TABLE txvar_sql DECLARE VARIANT STATS " +
           "(v, '$.nested.d', long)").head().getLong(0) == 3L)
-      assert(TxLog.variantStatsOf(spark, base, 3L) ==
+      assert(TxLog.metaOf(spark, base, 3L).varStats ==
         Seq(("v", "$.nested.d", "long")))
       // a declared path collects at write time through the SQL-armed
       // lineage too
@@ -335,7 +335,7 @@ class TxLogVariantSpec extends AnyFunSuite {
       assert(ez.getMessage.contains("no declared stats"), ez.getMessage)
       val vDrop = sql.sql("ALTER TABLE txvar_sql DROP VARIANT STATS " +
         "(v, '$.nested.d')").head().getLong(0)
-      assert(TxLog.variantStatsOf(spark, base, vDrop).isEmpty)
+      assert(TxLog.metaOf(spark, base, vDrop).varStats.isEmpty)
     } finally sql.sql("DROP TABLE IF EXISTS txvar_sql")
   }
 

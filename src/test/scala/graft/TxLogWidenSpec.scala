@@ -254,8 +254,8 @@ class TxLogWidenSpec extends AnyFunSuite {
     assert(snap.where(col("extra") === "x2").count() == 1)
     assert(snap.where(col("extra").isNull).count() == 1)
     // folded INTO the published #schema, not just this one read
-    val decl = TxLog.declaredSchemaOf(spark, base,
-      TxLog.latestVersion(spark, base).get).get
+    val decl = TxLog.metaOf(spark, base,
+      TxLog.latestVersion(spark, base).get).schema.get
     assert(decl.fieldNames.contains("extra"))
     // widening is reader-visible (correct reads REQUIRE the declared
     // requested schema): protocol stamps reader 3 alongside writer 5

@@ -162,7 +162,7 @@ object TableMeta {
 
   private def protocolFields(f: Array[String]): (Int, Int) = f match {
     case Array(_, r, w) => (r.toInt, w.toInt)
-    case _ => throw malformed("protocol", f)
+    case _ => throw malformed("#protocol", f)
   }
 
   /** The `#protocol` (reader, writer) stamp of a manifest or checkpoint

@@ -114,9 +114,7 @@ object GraftExtensions {
       val name = String.valueOf(evalLit(args(0), "the table name"))
       val base = graft.sources.TxLogSqlParser.resolveBase(spark,
         graft.sources.TxLogSqlParser.parts(name))
-      val latest = graft.operators.TxLog.latestVersion(spark, base)
-        .getOrElse(throw new IllegalStateException(
-          s"no committed version at $base"))
+      val latest = graft.operators.TxLog.requireLatest(spark, base)
       // Delta's contract: each bound is a version number OR a
       // timestamp literal, disambiguated by TYPE (an epoch-millis
       // STRING is a timestamp). Timestamp resolution differs per

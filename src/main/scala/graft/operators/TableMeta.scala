@@ -6,7 +6,7 @@ import TxLog.{ColMap, dec, enc}
 
 /** The table metadata one published version carries (Delta's
   * `Metadata` + `Protocol` actions as one typed value). Every commit
-  * re-states all of it in full: `publishEntries` parses the latest
+  * re-states all of it in full: `Txn.publish` parses the latest
   * version's value, applies the committing verb's edit, and writes
   * [[lines]] — so the latest commit alone answers every metadata read,
   * and time travel sees each version's own metadata. Column names are

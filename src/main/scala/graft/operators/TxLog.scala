@@ -78,7 +78,7 @@ object TxLog {
       s"concurrent writer already committed version $version; " +
         "re-read the table and retry (see TxLog.transact)", null)
   }
-  private object CommitConflictException {
+  private[operators] object CommitConflictException {
     /** A snapshot read inside a writer's retry body hit a manifest a
       * concurrent vacuum deleted: the body's world is stale — its CAS
       * would lose anyway — so surface the same conflict a lost CAS
@@ -272,34 +272,21 @@ object TxLog {
       case None => true
     }
 
-  /** Retry `body` on CAS losses up to `maxAttempts`, rethrowing the
-    * final conflict. A body that lands files per attempt must discard
-    * them before rethrowing; files landed ONCE outside the loop are
-    * the caller's to clean on the final failure.
-    *
-    * A raw [[java.io.FileNotFoundException]] out of the body gets the
-    * same treatment: the only way a writer's snapshot resolution hits
-    * a missing manifest is a concurrent vacuum deleting the ancestry
-    * it was replaying (a fresh retry resolves off the vacuum's
-    * materialized checkpoint), so it converts to a
-    * [[CommitConflictException]] HERE — at every retry site at once —
-    * rather than ad-hoc wrappers inside individual verbs. On the final
-    * attempt the CONFLICT (never the raw FNFE) reaches the caller, so
-    * outer landed-file cleanup paths keyed on the conflict type fire. */
-  private[graft] def withCasRetry[T](maxAttempts: Int)(body: Int => T): T = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return body(attempt)
-      catch {
-        case _: CommitConflictException if attempt < maxAttempts => ()
-        case fnfe: java.io.FileNotFoundException =>
-          val conflict = CommitConflictException.staleRead(fnfe)
-          if (attempt >= maxAttempts) throw conflict
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  /** Run `body` as one optimistic transaction on `base`: every log
+    * write goes through here ([[Txn]] holds the snapshot, staging, CAS
+    * retry, re-base and cleanup rules). */
+  private[graft] def txn[T](spark: SparkSession, base: String,
+                            maxAttempts: Int = 5,
+                            onAttempt: Int => Unit = _ => ())(
+      body: Txn => T): T =
+    Txn.run(spark, base, maxAttempts, onAttempt)(body)
+
+  private[graft] def noVersion(base: String) =
+    new IllegalStateException(s"no committed version at $base")
+
+  /** The latest version of a table that must exist. */
+  private[graft] def requireLatest(spark: SparkSession, base: String): Long =
+    latestVersion(spark, base).getOrElse(throw noVersion(base))
 
   private[graft] def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private[graft] def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
@@ -589,13 +576,13 @@ object TxLog {
   private def defaultFsScheme: String =
     Option(new Path(defaultFsUri).toUri.getScheme).getOrElse("file")
   private def cacheKey(base: String): String = canonicalBase(base)
-  private def cacheGet(spark: SparkSession, base: String,
+  private[operators] def cacheGet(spark: SparkSession, base: String,
                        v: Long): Option[Seq[Entry]] =
     snapCache.synchronized(Option(snapCache.get((cacheKey(base), v))))
       .flatMap { case (mt, es) =>
         if (commitMtimeOpt(spark, base, v).contains(mt)) Some(es) else None
       }
-  private def cachePut(spark: SparkSession, base: String, v: Long,
+  private[operators] def cachePut(spark: SparkSession, base: String, v: Long,
                        es: Seq[Entry]): Unit =
     if (es.size <= SnapCacheMaxEntries)
       commitMtimeOpt(spark, base, v).foreach(mt =>
@@ -770,7 +757,7 @@ object TxLog {
   /** The version's per-commit CDF hint (`#cdfop`): Some("update") on
     * merge-on-read UPDATE commits — the explicit writer-stamped signal
     * the change feeds use to emit update images (never inferred from
-    * manifest shape; see publishEntries). */
+    * manifest shape; see Txn.publish). */
   private[graft] def cdfOpOf(spark: SparkSession, base: String,
                              v: Long): Option[String] =
     manifestLines(spark, base, v).find(_.startsWith("#cdfop\t"))
@@ -1048,23 +1035,19 @@ object TxLog {
     * first). Idempotent. */
   def enableRowTracking(spark: SparkSession, base: String,
                         maxAttempts: Int = 5): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      if (metaOf(spark, base, cur).rowIdHighWater.isDefined) cur
+    txn(spark, base, maxAttempts) { t =>
+      if (t.meta.rowIdHighWater.isDefined) t.cur
       else {
-        val (entries, txns) = manifest(spark, base, cur)
-        require(entries.forall(_.rows >= 0),
+        require(t.entries.forall(_.rows >= 0),
           "row tracking needs known per-file row counts — OPTIMIZE " +
             "the table once to record them, then enable")
         var hw = 0L
-        val backfilled = entries.map { e =>
+        val backfilled = t.entries.map { e =>
           val b = hw; hw += e.rows; e.copy(baseRowId = Some(b))
         }
-        publishEntries(spark, base, cur + 1L, backfilled, txns,
-          dataChange = false, operation = "ENABLE ROW TRACKING",
+        t.publish(backfilled, dataChange = false,
+          operation = "ENABLE ROW TRACKING",
           meta = _.copy(rowIdHighWater = Some(hw)))
-        cur + 1L
       }
     }
 
@@ -1074,8 +1057,7 @@ object TxLog {
     * to diff a row's life. Mapped tables serve logical names as
     * usual. */
   def readWithRowIds(spark: SparkSession, base: String): DataFrame =
-    readVersionWithRowIds(spark, base, latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base")))
+    readVersionWithRowIds(spark, base, requireLatest(spark, base))
 
   /** [[readWithRowIds]] of one published version — lineage time
     * travel: a row's id is stable across versions, so two snapshots
@@ -1120,8 +1102,7 @@ object TxLog {
     * Hive-style (`day=2024-01-01/region=ea`; NULL components as
     * `__HIVE_DEFAULT_PARTITION__`), under LOGICAL column names. */
   def showPartitions(spark: SparkSession, base: String): DataFrame = {
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val m = metaOf(spark, base, v)
     val pspec = m.partitions
     require(pspec.nonEmpty,
@@ -1209,11 +1190,9 @@ object TxLog {
                        newType: org.apache.spark.sql.types.DataType,
                        maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.types._
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val m = metaOf(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val cur = t.cur
+      val (entries, m) = (t.entries, t.meta)
       // the declared surface: the versioned #schema line, else the
       // current snapshot's logical schema synthesized once — from the
       // ALTER on, the declared schema IS the read surface. Because
@@ -1319,10 +1298,8 @@ object TxLog {
             e.stats.filterNot(_.column.equalsIgnoreCase(phys))))
         case _ => entries
       }
-      publishEntries(spark, base, cur + 1L, entriesAdj, txns,
-        dataChange = false, operation = "ALTER COLUMN",
+      t.publish(entriesAdj, dataChange = false, operation = "ALTER COLUMN",
         meta = _.copy(schema = Some(declared), widened = widen))
-      cur + 1L
     }
   }
 
@@ -1614,7 +1591,7 @@ object TxLog {
       if (!f.exists(dir)) Seq.empty
       else f.listStatus(dir).toSeq
         .flatMap(st => parseVersion(st.getPath.getName)).sorted
-    require(versions.nonEmpty, s"no committed version at $base")
+    require(versions.nonEmpty, noVersion(base).getMessage)
     // resolve by [[commitTimestamp]] — the in-commit stamp when the
     // version carries one (correct across table copies/migrations
     // that rewrite every mtime), the manifest mtime for pre-ICT
@@ -1661,8 +1638,7 @@ object TxLog {
     * commit. */
   def versionAtOrAfterTimestamp(spark: SparkSession, base: String,
                                 tsMillis: Long): Option[Long] = {
-    val latest = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val latest = requireLatest(spark, base)
     val floor =
       try Some(versionAtTimestamp(spark, base, tsMillis))
       catch { case _: IllegalArgumentException => None }
@@ -1697,8 +1673,7 @@ object TxLog {
 
   /** Snapshot read of the latest published version. */
   def read(spark: SparkSession, base: String): DataFrame = {
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     readVersion(spark, base, v)
   }
 
@@ -1711,8 +1686,7 @@ object TxLog {
     * `read`): at 10^5 files that is a driver-side metadata pass, the
     * same price Spark's own mergeSchema pays. */
   def readEvolved(spark: SparkSession, base: String): DataFrame = {
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val m = metaOf(spark, base, v)
     val df = readEntries(spark, base, manifest(spark, base, v)._1,
       requested = m.widenedPhysSchema
@@ -2013,22 +1987,18 @@ object TxLog {
     case other => other.toString
   }
 
-  private[graft] def landEntries(df: DataFrame, base: String,
-                                 statsCol: Option[String]): Seq[Entry] =
-    landEntriesMulti(df, base, statsCol.toSeq)
-
   /** Land `df` and collect per-file (rows, min, max) on each of
     * `statsCols` by reading back ONLY the just-landed txn dir — one
     * extra scan of the new data (never the table), the price of stats
     * on a writer we can't hook. A file that is all-NULL in a stats
     * column gets no stats FOR THAT COLUMN and is treated as
     * always-overlapping there. */
-  private[graft] def landEntriesMulti(df: DataFrame, base: String,
+  private[graft] def landEntriesMulti(t: Txn, df: DataFrame,
                                       statsCols: Seq[String],
                                       recomputeGenerated: Boolean = false,
                                       pendingDeclared: Set[String] = Set.empty)
       : Seq[Entry] =
-    landEntriesChecked(df, base, statsCols,
+    landEntriesChecked(t, df, statsCols,
       recomputeGenerated = recomputeGenerated,
       pendingDeclared = pendingDeclared)._1
 
@@ -2036,8 +2006,9 @@ object TxLog {
     * the landed batch was enforced under — the CAS retry loops compare
     * against it to detect concurrent constraint changes (including a
     * drop-then-re-add of the same name, which a before-land snapshot
-    * would miss). */
-  private[graft] def landEntriesChecked(df: DataFrame, base: String,
+    * would miss). The landed files are staged to `t` before the
+    * constraint scan, so a veto leaves nothing behind. */
+  private[graft] def landEntriesChecked(t: Txn, df: DataFrame,
                                         statsCols: Seq[String],
                                         guardIdentity: Boolean = false,
                                         recomputeGenerated: Boolean = false,
@@ -2045,6 +2016,7 @@ object TxLog {
                                           Set.empty)
       : (Seq[Entry], Map[String, String]) = {
     val spark = df.sparkSession
+    val base = t.base
     // ONE version resolution serves every meta check below
     val latest = latestVersion(spark, base)
     val m = latest.map(metaOf(spark, base, _)).getOrElse(TableMeta.empty)
@@ -2098,7 +2070,7 @@ object TxLog {
     }
     val cons = m.constraints
     val entries =
-      landEntriesRaw(df2, base, statsCols, m.partitions, m.varStats)
+      t.stage(landEntriesRaw(df2, base, statsCols, m.partitions, m.varStats))
     // the one choke point every data write passes through — CHECK
     // constraints veto the batch here, before any manifest publishes
     val genChecks = gens.map { case (c, ex) =>
@@ -2369,6 +2341,7 @@ object TxLog {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(rels.size,
         Runtime.getRuntime.availableProcessors)))
+    var harvested = false
     try {
       val futs = rels.map { rel =>
         pool.submit(new java.util.concurrent.Callable[Entry] {
@@ -2380,15 +2353,19 @@ object TxLog {
           }
         })
       }
-      try Some(futs.map(_.get()))
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          e.getCause match {
-            case Punt() => None
-            case other => throw other
-          }
-      }
-    } finally pool.shutdown()
+      val out = Some(futs.map(_.get()))
+      harvested = true
+      out
+    } catch {
+      case e: java.util.concurrent.ExecutionException =>
+        e.getCause match {
+          case Punt() => None
+          case other => throw other
+        }
+    } finally
+      // a punt or a failure: the queued footer reads are wasted work
+      // (the scan path takes over), so they must not keep running
+      if (harvested) pool.shutdown() else pool.shutdownNow()
   }
 
   private def entryFromStats(rel: String,
@@ -2420,40 +2397,38 @@ object TxLog {
     * and re-commit those once. Fails on a directory that already has
     * committed versions. Returns the published version (1). */
   def convertParquet(spark: SparkSession, base: String,
-                     statsCols: Seq[String] = Nil): Long = {
-    require(latestVersion(spark, base).isEmpty,
-      s"$base already has committed versions — convert targets a plain " +
-        "parquet directory")
-    val f = fs(base, spark)
-    val root = new Path(base)
-    require(f.exists(root), s"$base does not exist")
-    val rootFiles = f.listStatus(root).toSeq
-      .filter(st => st.isFile && isDataFileName(st.getPath.getName))
-      .map(_.getPath.getName).sorted
-    require(rootFiles.nonEmpty,
-      s"no parquet part files directly under $base (hive-partitioned " +
-        "subdirectory layouts are not convertible in place)")
-    val paths = rootFiles.map(n => s"$base/$n")
-    val schema = spark.read.parquet(paths: _*).schema
-    val dtypes = statsCols.map(c => c -> statsDtype(schema(c).dataType))
-    val byFile = statsByFile(spark.read.parquet(paths: _*),
-      dtypes.map { case (c, t) =>
-        (c, org.apache.spark.sql.functions.col(c), t) })
-    val entries = rootFiles.map(entryFromStats(_, byFile, dtypes))
-    publishEntries(spark, base, 1L, entries, Map.empty,
-      operation = "CONVERT")
-    1L
-  }
+                     statsCols: Seq[String] = Nil): Long =
+    txn(spark, base, maxAttempts = 1) { t =>
+      require(t.read.isEmpty,
+        s"$base already has committed versions — convert targets a plain " +
+          "parquet directory")
+      val f = fs(base, spark)
+      val root = new Path(base)
+      require(f.exists(root), s"$base does not exist")
+      val rootFiles = f.listStatus(root).toSeq
+        .filter(st => st.isFile && isDataFileName(st.getPath.getName))
+        .map(_.getPath.getName).sorted
+      require(rootFiles.nonEmpty,
+        s"no parquet part files directly under $base (hive-partitioned " +
+          "subdirectory layouts are not convertible in place)")
+      val paths = rootFiles.map(n => s"$base/$n")
+      val schema = spark.read.parquet(paths: _*).schema
+      val dtypes = statsCols.map(c => c -> statsDtype(schema(c).dataType))
+      val byFile = statsByFile(spark.read.parquet(paths: _*),
+        dtypes.map { case (c, dt) =>
+          (c, org.apache.spark.sql.functions.col(c), dt) })
+      val entries = rootFiles.map(entryFromStats(_, byFile, dtypes))
+      t.publish(entries, Map.empty, operation = "CONVERT")
+    }
 
   /** Verify every row of `newEntries`' just-landed files against the
     * GIVEN CHECK-constraint set (SQL semantics: a row fails only when
     * the expression is FALSE — NULL/unknown passes; a column the new
     * files lack — an older-schema producer after evolution — reads as
     * NULL and passes too). One aggregate scan over the NEW files
-    * only, and only when constraints exist. On ANY failure — a
-    * violation, or an error evaluating a constraint — the landed
-    * files are discarded before the exception propagates, so nothing
-    * publishes and nothing orphans. The caller supplies `cons` (one
+    * only, and only when constraints exist. A violation (or an error
+    * evaluating a constraint) throws; the caller's transaction deletes
+    * the staged files. The caller supplies `cons` (one
     * read it already did); recording WHICH set was enforced is what
     * lets the CAS retry loops detect a drop-then-re-add of the same
     * constraint between their read and the land (the ABA shape). */
@@ -2464,34 +2439,29 @@ object TxLog {
     if (newEntries.isEmpty) return
     val cons = cons0.toSeq.sortBy(_._1)
     if (cons.isEmpty) return
-    try {
-      // constraint expressions are stored in LOGICAL names; landed
-      // files carry physical ones — evaluate on the logical view
-      // (identity when the table has no mapping)
-      val raw = logicalView(spark, base,
-        spark.read.parquet(newEntries.map(e => resolve(base, e.path)): _*))
-      // columns a constraint references but the new files lack (an
-      // older-schema batch) evaluate as NULL — SQL CHECK passes
-      val present = raw.columns.map(_.toLowerCase).toSet
-      val missing = cons.flatMap { case (_, ex) =>
-        spark.sessionState.sqlParser.parseExpression(ex).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length == 1 => a.name
-        }
-      }.distinct.filterNot(c => present.contains(c.toLowerCase))
-      val df = missing.foldLeft(raw)((d, c) => d.withColumn(c, lit(null)))
-      val aggs = cons.zipWithIndex.map { case ((_, ex), i) =>
-        sum(when(!coalesce(expr(ex), lit(true)), 1L).otherwise(0L))
-          .as(s"__vio_$i")
+    // constraint expressions are stored in LOGICAL names; landed
+    // files carry physical ones — evaluate on the logical view
+    // (identity when the table has no mapping)
+    val raw = logicalView(spark, base,
+      spark.read.parquet(newEntries.map(e => resolve(base, e.path)): _*))
+    // columns a constraint references but the new files lack (an
+    // older-schema batch) evaluate as NULL — SQL CHECK passes
+    val present = raw.columns.map(_.toLowerCase).toSet
+    val missing = cons.flatMap { case (_, ex) =>
+      spark.sessionState.sqlParser.parseExpression(ex).collect {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          if a.nameParts.length == 1 => a.name
       }
-      val row = df.agg(aggs.head, aggs.tail: _*).head()
-      cons.zipWithIndex.foreach { case ((n, ex), i) =>
-        if (!row.isNullAt(i) && row.getLong(i) > 0)
-          throw new ConstraintViolationException(n, ex, row.getLong(i))
-      }
-    } catch {
-      case e: Throwable => // violation OR evaluation error: clean up
-        discard(spark, base, newEntries.map(_.path)); throw e
+    }.distinct.filterNot(c => present.contains(c.toLowerCase))
+    val df = missing.foldLeft(raw)((d, c) => d.withColumn(c, lit(null)))
+    val aggs = cons.zipWithIndex.map { case ((_, ex), i) =>
+      sum(when(!coalesce(expr(ex), lit(true)), 1L).otherwise(0L))
+        .as(s"__vio_$i")
+    }
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    cons.zipWithIndex.foreach { case ((n, ex), i) =>
+      if (!row.isNullAt(i) && row.getLong(i) > 0)
+        throw new ConstraintViolationException(n, ex, row.getLong(i))
     }
   }
 
@@ -2500,15 +2470,16 @@ object TxLog {
     * concurrent-ADD-CONSTRAINT race: a writer that landed and was
     * checked under the old set, lost the CAS to a constraint publish,
     * and is about to republish its data under the NEW set. Returns
-    * the set now in force, for the next retry. Mirrors Delta's
+    * the set in force at `t`'s snapshot — the version the data
+    * publishes on top of — for the next retry. Mirrors Delta's
     * metadata-conflict handling, but re-validates instead of
     * aborting. */
-  private[graft] def reEnforceIfChanged(spark: SparkSession, base: String,
-                                        entries: Seq[Entry],
+  private[graft] def reEnforceIfChanged(t: Txn, entries: Seq[Entry],
                                         checked: Map[String, String])
       : Map[String, String] = {
-    val now = latestMeta(spark, base).constraints
-    if (now != checked) enforceConstraints(spark, base, entries, now)
+    val now = t.meta.constraints
+    if (now != checked)
+      enforceConstraints(t.spark, t.base, entries, now)
     now
   }
 
@@ -2533,11 +2504,9 @@ object TxLog {
     expr(checkExpr) // parse up front: an unparseable expression must
                     // fail HERE, not poison every later write — the
                     // empty-table path below never evaluates it
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val m = metaOf(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
+      val m = t.meta
       require(!m.constraints.contains(name),
         s"constraint '$name' already exists")
       val bad =
@@ -2546,10 +2515,9 @@ object TxLog {
             mergeSchema = m.colMap.isDefined))
           .where(!coalesce(expr(checkExpr), lit(true))).count()
       if (bad > 0) throw new ConstraintViolationException(name, checkExpr, bad)
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         operation = "ADD CONSTRAINT",
         meta = _.copy(constraints = m.constraints + (name -> checkExpr)))
-      cur + 1L
     }
   }
 
@@ -2578,11 +2546,9 @@ object TxLog {
         "no value for it (Delta's identical restriction)"))
     require(cols.map(_.name.toLowerCase).distinct.size == cols.size,
       "duplicate names in the ADD COLUMNS list")
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val m = metaOf(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
+      val m = t.meta
       val cmOpt = m.colMap
       val existing = m.schema
         .orElse(baseSchema)
@@ -2605,11 +2571,10 @@ object TxLog {
       // later re-ADDed must scan as NULL, never as the dropped bytes.
       val cmExt = cmOpt.map(cm =>
         colMapWithAdded(spark, base, entries, cm, cols.fields.toSeq))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "ADD COLUMNS",
         meta = _.copy(schema = Some(org.apache.spark.sql.types.StructType(
           existing.fields ++ cols.fields)), colMap = cmExt))
-      cur + 1L
     }
   }
 
@@ -2811,10 +2776,8 @@ object TxLog {
       return renameNestedColumn(spark, base, from, to, maxAttempts)
     require(to.trim.nonEmpty && !to.contains(".") && !to.contains("\t") &&
       !to.contains("\n"), s"invalid column name '$to'")
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val cm = colMapOrSeed(spark, base, cur)
       require(cm.hasLogical(from), s"column '$from' does not exist " +
         s"(table columns: ${cm.logicalNames.mkString(", ")})")
@@ -2825,7 +2788,7 @@ object TxLog {
       val renamed = cm.copy(cols = cm.cols.map { case (l, p) =>
         if (l.equalsIgnoreCase(from)) (to, p) else (l, p)
       })
-      val m = metaOf(spark, base, cur)
+      val m = t.meta
       val newDeclared = m.schema.map(ds =>
         org.apache.spark.sql.types.StructType(ds.fields.map(f =>
           if (f.name.equalsIgnoreCase(from)) f.copy(name = to) else f)))
@@ -2836,11 +2799,10 @@ object TxLog {
         case (c, ex) if c.equalsIgnoreCase(from) => (to, ex)
         case other => other
       }
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "RENAME COLUMN",
         meta = _.copy(colMap = Some(renamed), schema = newDeclared,
           defaults = newDefaults))
-      cur + 1L
     }
   }
 
@@ -2855,16 +2817,14 @@ object TxLog {
                  maxAttempts: Int = 5): Long = {
     if (name.contains("."))
       return dropNestedColumn(spark, base, name, maxAttempts)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val cm = colMapOrSeed(spark, base, cur)
       require(cm.hasLogical(name), s"column '$name' does not exist " +
         s"(table columns: ${cm.logicalNames.mkString(", ")})")
       require(cm.cols.size > 1, "cannot drop the last column")
       requireNoDependents(spark, base, cur, name, cm.physical(name), "drop")
-      val m = metaOf(spark, base, cur)
+      val m = t.meta
       // partition columns are structural: every write splits and
       // stats-indexes on them — dropping one would orphan the layout
       require(!m.partitions.exists(_._1.equalsIgnoreCase(cm.physical(name))),
@@ -2877,14 +2837,13 @@ object TxLog {
       val newDeclared = m.schema.map(ds =>
         org.apache.spark.sql.types.StructType(
           ds.fields.filterNot(_.name.equalsIgnoreCase(name))))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "DROP COLUMN",
         // the column's DEFAULT binding dies with it — a dangling
         // #defaultcol line would re-materialize the dropped name on
         // the next write
         meta = _.copy(colMap = Some(dropped), schema = newDeclared,
           defaults = m.defaults.filterNot(_._1.equalsIgnoreCase(name))))
-      cur + 1L
     }
   }
 
@@ -2917,10 +2876,8 @@ object TxLog {
   private def renameNestedColumn(spark: SparkSession, base: String,
                                  from: String, to0: String,
                                  maxAttempts: Int): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val cm0 = colMapOrSeed(spark, base, cur)
       val (top, fromLeaf) = nestedParts(cm0, from)
       val to = if (to0.contains(".")) {
@@ -2944,14 +2901,13 @@ object TxLog {
         if (l.equalsIgnoreCase(fromPath)) (toPath, p) else (l, p)
       })
       val newDeclared = mapDeclaredStruct(
-        metaOf(spark, base, cur).schema, top)(s =>
+        t.meta.schema, top)(s =>
         org.apache.spark.sql.types.StructType(s.fields.map(fd =>
           if (fd.name.equalsIgnoreCase(fromLeaf)) fd.copy(name = to)
           else fd)))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "RENAME COLUMN",
         meta = _.copy(colMap = Some(renamed), schema = newDeclared))
-      cur + 1L
     }
 
   /** DROP COLUMN, tier-2 nested: removes the leaf's logical binding —
@@ -2961,10 +2917,8 @@ object TxLog {
     * the parent's last nested field (drop the parent column instead). */
   private def dropNestedColumn(spark: SparkSession, base: String,
                                name: String, maxAttempts: Int): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val cm0 = colMapOrSeed(spark, base, cur)
       val (top, leaf) = nestedParts(cm0, name)
       val cm = seedNested(spark, base, cur, cm0, top)
@@ -2978,7 +2932,7 @@ object TxLog {
       requireNoNestedDependents(spark, base, cur, path, "drop")
       // structural guard, mirroring top-level DROP: a clustered leaf
       // keys every write's tiling and the manifest's pruning index
-      val m = metaOf(spark, base, cur)
+      val m = t.meta
       require(!m.cluster.exists(_.equalsIgnoreCase(cm.physical(path))),
         s"cannot drop column '$path': it is a CLUSTER BY key — drop " +
           "clustering first (alterClusterBy(..., Seq.empty))")
@@ -2987,10 +2941,9 @@ object TxLog {
       val newDeclared = mapDeclaredStruct(m.schema, top)(s =>
         org.apache.spark.sql.types.StructType(
           s.fields.filterNot(_.name.equalsIgnoreCase(leaf))))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "DROP COLUMN",
         meta = _.copy(colMap = Some(dropped), schema = newDeclared))
-      cur + 1L
     }
 
   /** ADD COLUMNS inside a struct (tier-2 nested; Delta
@@ -3005,10 +2958,8 @@ object TxLog {
                             cols: org.apache.spark.sql.types.StructType,
                             maxAttempts: Int = 5): Long = {
     require(cols.fields.nonEmpty, "ADD COLUMNS needs at least one column")
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val cm0 = colMapOrSeed(spark, base, cur)
       val top = cm0.topCols.find(_._1.equalsIgnoreCase(parent))
         .getOrElse(throw new IllegalArgumentException(
@@ -3046,7 +2997,7 @@ object TxLog {
       // the declared schema is what types a just-added field's NULL
       // fill — derive the full logical surface when the table never
       // declared one
-      val declared0 = metaOf(spark, base, cur).schema.getOrElse {
+      val declared0 = t.meta.schema.getOrElse {
         require(entries.nonEmpty,
           s"cannot derive a schema for $base (no files, no declared " +
             "schema)")
@@ -3062,226 +3013,33 @@ object TxLog {
             case other => throw new IllegalArgumentException(
               s"'$parent' is not a struct column ($other)")
           } else fd))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "ADD COLUMNS",
         meta = _.copy(colMap = Some(cmExt), schema = Some(newDeclared)))
-      cur + 1L
     }
   }
 
   /** Drop a CHECK constraint by name. Returns the published version. */
   def dropConstraint(spark: SparkSession, base: String, name: String,
                      maxAttempts: Int = 5): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val cons = metaOf(spark, base, cur).constraints
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
+      val cons = t.meta.constraints
       require(cons.contains(name), s"no constraint named '$name'")
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         operation = "DROP CONSTRAINT",
         meta = _.copy(constraints = cons - name))
-      cur + 1L
     }
 
-  /** Atomically publish `files` as version `v`. Write-to-temp then
-    * rename-if-absent: the rename either installs the complete
-    * manifest or throws — no reader can observe a half-written one,
-    * and no two writers can both win the same version. */
+  /** Publish `files` (no stats) as version `v` — a test seam pairing
+    * with [[land]]: a reader interleaved between the two sees the
+    * previous complete version. */
   private[graft] def publish(spark: SparkSession, base: String,
                              v: Long, files: Seq[String]): Unit =
-    publishEntries(spark, base, v, files.map(Entry(_, -1L, Nil)), Map.empty)
-
-  /** Publish a manifest. The table metadata ([[TableMeta]]) is
-    * carried forward from the latest published version — every
-    * DML/maintenance verb republishes without knowing about it; a DDL
-    * verb passes `meta`, its edit of that carried value (applied here,
-    * inside the CAS, to the latest version's metadata).
-    * `dataChange=false` (compaction, DV purge — pure physical
-    * rewrites) stamps a `#nodatachange` line so the change feeds skip
-    * the version instead of emitting phantom delete+insert pairs for
-    * rows that never logically changed (Delta's dataChange flag). */
-  private[graft] def publishEntries(spark: SparkSession, base: String, v: Long,
-                                    entries: Seq[Entry],
-                                    txns: Map[String, Long],
-                                    dataChange: Boolean = true,
-                                    operation: String = "WRITE",
-                                    cdfOp: Option[String] = None,
-                                    deltaChange: Option[Seq[String]] =
-                                      None,
-                                    meta: TableMeta => TableMeta =
-                                      identity): Unit = {
-    // a concurrent vacuum can delete the version this commit diffs
-    // against (the committer's snapshot is stale by definition then —
-    // its CAS would lose anyway): surface the FileNotFound as a
-    // CONFLICT so the retry loop re-reads the winner's world and the
-    // in-loop landers run their normal discard path, instead of
-    // leaking a raw FNFE (and orphaned files) out of a writer
-    def staleAsConflict[T](body: => T): T =
-      try body
-      catch { case _: java.io.FileNotFoundException =>
-        throw new CommitConflictException(v) }
-    // ONE read of the latest manifest serves the carried metadata and
-    // the parent's in-commit timestamp
-    val latestLines: Seq[String] = staleAsConflict(
-      latestVersion(spark, base)
-        .map(manifestLines(spark, base, _)).getOrElse(Seq.empty))
-    val latest = TableMeta.parse(latestLines)
-    // writer gate: a table stamped by a newer engine with a higher
-    // required writer version must not be committed to by this one —
-    // the meta lines below are RECONSTRUCTED from the kinds this
-    // writer knows, so an ignorant commit would silently drop the
-    // newer table features (Delta's minWriterVersion exists for
-    // exactly this). Checked on the carried floor, before the edit.
-    if (latest.protocol._2 > WriterVersion) throw new IllegalStateException(
-      s"$base requires log writer version ${latest.protocol._2}; this " +
-        s"engine implements $WriterVersion — upgrade the engine before writing")
-    val edited = meta(latest)
-    // row tracking: the ONE assignment choke point — every commit to
-    // a tracked table gives each new known-count file a contiguous id
-    // span above the high-water and republishes the advanced water.
-    // Runs inside the CAS (a lost race re-reads the winner's water),
-    // so spans never collide across writers.
-    val (entriesR, next) = edited.rowIdHighWater match {
-      case None => (entries, edited)
-      case Some(hw0) =>
-        var hw = hw0
-        val es = entries.map { e =>
-          if (e.baseRowId.isDefined || e.rows < 0) e
-          else { val b = hw; hw += e.rows; e.copy(baseRowId = Some(b)) }
-        }
-        (es, edited.copy(rowIdHighWater = Some(hw)))
+    txn(spark, base, maxAttempts = 1) { t =>
+      if (t.read.getOrElse(0L) + 1L != v) throw new CommitConflictException(v)
+      t.publish(files.map(Entry(_, -1L, Nil)), Map.empty)
     }
-    // in-commit timestamp (Delta 4.0 ICT): every commit writes its own
-    // wall-clock millis, clamped STRICTLY above the parent's stamp —
-    // monotonic even across clock skew, and `TIMESTAMP AS OF` stays
-    // correct after a table copy/migration rewrites every mtime.
-    // Per-commit like #op, never carried; recomputed on CAS retry.
-    val ict = math.max(
-      parseIctLines(latestLines).getOrElse(0L) + 1L,
-      System.currentTimeMillis())
-    val metaLines =
-      (if (dataChange) Seq.empty else Seq("#nodatachange")) ++
-      // per-commit provenance (Delta history's `operation`): NOT
-      // carried forward — each version records what produced IT
-      Seq(s"#op\t${enc(operation)}", s"#ict\t$ict") ++
-      // per-commit CDF hint (also not carried): a merge-on-read
-      // UPDATE stamps `#cdfop update`, the EXPLICIT signal the change
-      // feeds read to emit update_preimage/update_postimage. The
-      // writer stamps its own semantics instead of readers inferring
-      // them from manifest shape — structural inference mislabels the
-      // fully-masked-drop case (no surviving mask transition) and
-      // would make stream labels depend on the consumer's pushdown.
-      cdfOp.toSeq.map(h => s"#cdfop\t${enc(h)}") ++
-      next.lines ++
-      txns.toSeq.sortBy(_._1).map { case (a, b) => s"#txn\t${enc(a)}\t$b" }
-    // O(change) delta commit: only the entries that differ from the
-    // v-1 snapshot are written — an append to a 10^5-file table
-    // writes its handful of new lines, not megabytes of carried paths,
-    // and a streaming sink's per-epoch commit cost stops growing with
-    // table size. Meta lines stay full (they are O(constraints+apps)).
-    // DECLARED-delta commits (deltaChange=Some(removedPaths):
-    // `entries` holds ONLY the added/replaced entries, landed under
-    // fresh txn dirs so paths can never collide) skip the v-1
-    // resolution entirely — a blind append (removed=Nil) or an
-    // OPTIMIZE that knows exactly which files it superseded never
-    // materializes the table's entry list on the driver; the diff
-    // below is what the prev snapshot was FOR.
-    val (removes, upserts) =
-      if (deltaChange.isDefined) (deltaChange.get, entriesR)
-      else {
-        val prev = if (v <= 1L) Seq.empty[Entry]
-                   else staleAsConflict(snapshotEntries(spark, base, v - 1))
-        val prevSer = prev.map(e => e.path -> serLine(e)).toMap
-        val newPaths = entriesR.map(_.path).toSet
-        (prev.map(_.path).filterNot(newPaths.contains),
-          entriesR.filter(e => !prevSer.get(e.path).contains(serLine(e))))
-      }
-    val lines = DeltaMarker +: (metaLines ++
-      removes.map(p => s"-\t$p") ++
-      upserts.map(e => s"+\t${serLine(e)}"))
-    val f = fs(base, spark)
-    f.mkdirs(new Path(s"$base/$LogDir"))
-    val tmp = new Path(
-      s"$base/$LogDir/.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = manifestPath(base, v)
-    // decide by the RESOLVED filesystem, not the raw path's scheme: a
-    // scheme-less path on a cluster resolves to fs.defaultFS (HDFS),
-    // where the rename branch is the correct — and atomic — one
-    val scheme = f.getUri.getScheme
-    if (scheme == "file") {
-      // Local FS: FileContext's rename-if-absent is check-then-act —
-      // the POSIX rename(2) underneath OVERWRITES an existing
-      // destination, so two racing writers can both believe they won
-      // (a lost update, plus a torn checksum sidecar for concurrent
-      // readers; caught by TxLogScaleSpec's 8-writer race). link(2)
-      // via Files.createLink is the kernel-atomic fail-if-exists
-      // primitive, the same trick Delta's local LogStore documents.
-      val rawTmp = java.nio.file.Paths.get(tmp.toUri.getPath)
-      val rawDst = java.nio.file.Paths.get(dst.toUri.getPath)
-      try java.nio.file.Files.createLink(rawDst, rawTmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false)
-          throw new CommitConflictException(v)
-      }
-      f.delete(tmp, false) // also removes tmp's .crc; dst carries none
-    } else {
-      // HDFS-like stores: rename-if-absent IS atomic server-side (the
-      // primitive Spark's streaming checkpoint manager relies on).
-      // Raw S3 has neither and needs a coordinating catalog — the
-      // identical caveat Delta documents.
-      try fc(base, spark).rename(tmp, dst, Options.Rename.NONE)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException =>
-          f.delete(tmp, false)
-          throw new CommitConflictException(v)
-        case _: java.io.IOException if f.exists(dst) =>
-          // some FileContext impls signal an existing destination as a
-          // bare IOException — same CAS outcome
-          f.delete(tmp, false)
-          throw new CommitConflictException(v)
-      }
-    }
-    // the commit is durable from here: cache the snapshot we just
-    // built, and checkpoint periodically. EVERYTHING below is
-    // best-effort — any failure AFTER a successful CAS must never
-    // propagate (callers would discard data a published manifest
-    // references; the DSv2 commit paths would delete live bloom
-    // sidecars) — hence NonFatal, not just IOException: a bad
-    // interval conf or cache hiccup must not fail a durable commit.
-    try {
-      // entriesR, not entries: the row-id assignment above is part of
-      // what the manifest durably says — caching the unassigned list
-      // would serve NULL ids until the first cold read. Declared-delta
-      // commits extend the cached v-1 snapshot when it is warm and
-      // stay out of the cache otherwise (never resolve just to cache).
-      deltaChange match {
-        case Some(removed) =>
-          cacheGet(spark, base, v - 1).foreach { prev =>
-            val gone = removed.toSet ++ entriesR.map(_.path)
-            cachePut(spark, base, v,
-              prev.filterNot(e => gone.contains(e.path)) ++ entriesR)
-          }
-        case None => cachePut(spark, base, v, entriesR)
-      }
-      if (v % checkpointInterval(spark) == 0) {
-        if (deltaChange.isDefined && TxLogPlan.parquetCheckpoints(spark))
-          // build the checkpoint FROM the log as a DataFrame — the
-          // driver-bounded path end to end
-          TxLogPlan.writeCheckpointParquetDF(spark, base, v, metaLines,
-            TxLogPlan.snapshotDF(spark, base, v).select("line"))
-        else writeCheckpoint(spark, base, v, metaLines,
-          if (deltaChange.isDefined) snapshotEntries(spark, base, v)
-          else entriesR)
-        advancePointer(spark, base, v)
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
 
   /** Write the full-snapshot checkpoint for version `v` (tmp +
     * rename-overwrite: v's CAS winner is the unique writer, the
@@ -3328,14 +3086,6 @@ object TxLog {
     }
   }
 
-  /** Discard a landed-but-unpublished txn's files (conflict loser). */
-  private def discard(spark: SparkSession, base: String,
-                      files: Seq[String]): Unit = {
-    val f = fs(base, spark)
-    files.map(rel => new Path(s"$base/$rel").getParent).distinct
-      .foreach(dir => f.delete(dir, true))
-  }
-
   /** One optimistic commit: land `df`, publish as `expected`+1 (or
     * version 1 of an empty store). Throws [[CommitConflictException]]
     * after cleaning up the landed files if another writer got there
@@ -3350,23 +3100,22 @@ object TxLog {
     * dimensions lets [[readRanges]] skip files for a 2-D box
     * predicate before any footer is opened. */
   def commitMulti(df: DataFrame, base: String, expected: Option[Long],
-                  statsCols: Seq[String]): Long = {
+                  statsCols: Seq[String]): Long =
+    Txn.run(df.sparkSession, base, maxAttempts = 1, onAttempt = _ => (),
+      pinned = Some(expected))(commitIn(_, df, statsCols))
+
+  /** Land `df` as the whole new table contents of `t`'s version. The
+    * txn high-water map of the version built on is carried: a
+    * maintenance rewrite (transact/commit) must never reset
+    * appendOnce's exactly-once state. */
+  private def commitIn(t: Txn, df: DataFrame, statsCols: Seq[String]): Long = {
     val spark = df.sparkSession
+    val base = t.base
     requireNoRowIdColumn(df)
-    val v = expected.getOrElse(0L) + 1L
-    // carry the txn high-water map of the version we build on: a
-    // maintenance rewrite (transact/commit) must never reset
-    // appendOnce's exactly-once state
-    val txns = expected.map(manifest(spark, base, _)._2).getOrElse(Map.empty)
     val (tiled, ckeys) =
       clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
-    val entries = landEntriesMulti(tiled, base,
-      (statsCols.map(physicalName(spark, base, _)) ++ ckeys).distinct)
-    try { publishEntries(spark, base, v, entries, txns); v }
-    catch {
-      case e: CommitConflictException =>
-        discard(spark, base, entries.map(_.path)); throw e
-    }
+    t.publish(landEntriesMulti(t, tiled,
+      (statsCols.map(physicalName(spark, base, _)) ++ ckeys).distinct))
   }
 
   /** Create an EMPTY table with declared metadata: `partitionCols`
@@ -3382,25 +3131,24 @@ object TxLog {
                   schema: org.apache.spark.sql.types.StructType,
                   partitionCols: Seq[String] = Seq.empty,
                   generated: Seq[(String, String)] = Seq.empty,
-                  clusterBy: Seq[String] = Seq.empty): Long = {
-    require(latestVersion(spark, base).isEmpty,
-      s"$base already has committed versions — table metadata is " +
-        "declared at birth")
-    def fieldOf(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
-      .getOrElse(throw new IllegalArgumentException(
-        s"column '$c' is not in the declared schema"))
-    val pspec = partitionCols.map { c =>
-      val f = fieldOf(c); f.name -> partitionDtype(f.dataType)
+                  clusterBy: Seq[String] = Seq.empty): Long =
+    txn(spark, base, maxAttempts = 1) { t =>
+      require(t.read.isEmpty,
+        s"$base already has committed versions — table metadata is " +
+          "declared at birth")
+      def fieldOf(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
+        .getOrElse(throw new IllegalArgumentException(
+          s"column '$c' is not in the declared schema"))
+      val pspec = partitionCols.map { c =>
+        val f = fieldOf(c); f.name -> partitionDtype(f.dataType)
+      }
+      val gens = generated.map { case (c, ex) => fieldOf(c).name -> ex }
+      validateGeneratedExprs(spark, schema, gens)
+      val ckeys = resolveClusterKeys(schema, clusterBy, pspec.map(_._1))
+      t.publish(Seq.empty, Map.empty, operation = "CREATE TABLE",
+        meta = _.copy(schema = Some(schema), partitions = pspec,
+          generated = gens, cluster = ckeys))
     }
-    val gens = generated.map { case (c, ex) => fieldOf(c).name -> ex }
-    validateGeneratedExprs(spark, schema, gens)
-    val ckeys = resolveClusterKeys(schema, clusterBy, pspec.map(_._1))
-    publishEntries(spark, base, 1L, Seq.empty, Map.empty,
-      operation = "CREATE TABLE",
-      meta = _.copy(schema = Some(schema), partitions = pspec,
-        generated = gens, cluster = ckeys))
-    1L
-  }
 
   /** Resolve + validate CLUSTER BY key names against a declared
     * schema (shared with the DSv2 catalog's CREATE): returns the
@@ -3464,12 +3212,10 @@ object TxLog {
   def alterClusterBy(spark: SparkSession, base: String,
                      clusterBy: Seq[String],
                      maxAttempts: Int = 5): Long = {
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val declared = undeclaredFallbackSchema(spark, base, cur)
-      val m = metaOf(spark, base, cur)
+      val m = t.meta
       val cm = m.colMap
       val varDecls = m.varStats
       // keys may be NESTED leaves ("s.ts" — the event-time-inside-a-
@@ -3519,10 +3265,9 @@ object TxLog {
       // keep the caller's key order — interleave order is meaningful
       val phys = clusterBy.map(k =>
         variantPhys.getOrElse(k, physByPlain(k)))
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false, operation = "CLUSTER BY",
         meta = _.copy(cluster = phys))
-      cur + 1L
     }
   }
 
@@ -3640,16 +3385,14 @@ object TxLog {
   def alterColumnDefault(spark: SparkSession, base: String,
                          column: String, sqlExpr: Option[String],
                          maxAttempts: Int = 5): Long = {
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries) = (t.cur, t.entries)
       val declared = undeclaredFallbackSchema(spark, base, cur)
       val field = declared.fields.find(_.name.equalsIgnoreCase(column))
         .getOrElse(throw new IllegalArgumentException(
           s"DEFAULT target '$column' is not in the table schema " +
             s"(${declared.fieldNames.mkString(", ")})"))
-      val m = metaOf(spark, base, cur)
+      val m = t.meta
       require(!m.generated.exists(_._1.equalsIgnoreCase(column)),
         s"column '$column' is GENERATED ALWAYS AS — it computes its " +
           "own value; a DEFAULT would never apply")
@@ -3666,11 +3409,10 @@ object TxLog {
       if (sqlExpr.isEmpty)
         require(kept.size != cur0.size,
           s"column '$column' has no DEFAULT to drop")
-      publishEntries(spark, base, cur + 1L, entries, txns,
+      t.publish(entries,
         dataChange = false,
         operation = if (sqlExpr.isDefined) "SET DEFAULT" else "DROP DEFAULT",
         meta = _.copy(defaults = next))
-      cur + 1L
     }
   }
 
@@ -3745,28 +3487,22 @@ object TxLog {
   def commitPartitioned(df: DataFrame, base: String,
                         partitionCols: Seq[String],
                         statsCols: Seq[String] = Seq.empty): Long = {
-    val spark = df.sparkSession
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-    require(latestVersion(spark, base).isEmpty,
-      s"$base already has committed versions — partitioning is declared " +
-        "at table birth (append/merge/overwrite keep the declared split)")
-    // same case-insensitive resolution as createPartitioned/the
-    // catalog; the schema field's own casing is what freezes
-    val pspec = partitionCols.map { c =>
-      val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
-        .getOrElse(throw new IllegalArgumentException(
-          s"partition column '$c' is not in the DataFrame's schema"))
-      f.name -> partitionDtype(f.dataType)
-    }
-    val entries = landEntriesRaw(df, base, statsCols, pspec)
-    try {
-      publishEntries(spark, base, 1L, entries, Map.empty,
-        operation = "CREATE TABLE AS SELECT",
+    txn(df.sparkSession, base, maxAttempts = 1) { t =>
+      require(t.read.isEmpty,
+        s"$base already has committed versions — partitioning is declared " +
+          "at table birth (append/merge/overwrite keep the declared split)")
+      // same case-insensitive resolution as createPartitioned/the
+      // catalog; the schema field's own casing is what freezes
+      val pspec = partitionCols.map { c =>
+        val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
+          .getOrElse(throw new IllegalArgumentException(
+            s"partition column '$c' is not in the DataFrame's schema"))
+        f.name -> partitionDtype(f.dataType)
+      }
+      t.publish(t.stage(landEntriesRaw(df, base, statsCols, pspec)),
+        Map.empty, operation = "CREATE TABLE AS SELECT",
         meta = _.copy(schema = Some(df.schema), partitions = pspec))
-      1L
-    } catch {
-      case e: CommitConflictException =>
-        discard(spark, base, entries.map(_.path)); throw e
     }
   }
 
@@ -3856,39 +3592,38 @@ object TxLog {
     (tiled, resolved.map(_._1).filter(variantKeySplit(_).isEmpty))
   }
 
+  /** The blind-append land ([[append]], [[appendOnce]], [[copyInto]]):
+    * the batch lands, is enforced and joins the table's bloom groups
+    * (incremental coverage: one O(batch) pass, no rebuild) once per
+    * transaction. Every attempt re-enforces it when its snapshot
+    * carries another constraint set than the one last enforced — a
+    * CAS loss to a concurrent ADD CONSTRAINT must not republish data
+    * checked only under the OLD set. */
+  private def appendLand(t: Txn, df: DataFrame,
+                         statsCols: Seq[String]): Seq[Entry] = {
+    val (entries, checked) = t.once {
+      val (es, cons) = landEntriesChecked(t, df, statsCols,
+        guardIdentity = true)
+      (indexNewEntries(t, es),
+        new java.util.concurrent.atomic.AtomicReference(cons))
+    }
+    checked.set(reEnforceIfChanged(t, entries, checked.get))
+    entries
+  }
+
   def append(df: DataFrame, base: String, statsCol: Option[String] = None,
              maxAttempts: Int = 5): Long = {
     val spark = df.sparkSession
     requireNoRowIdColumn(df)
     val (tiled, ckeys) =
       clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
-    val (entries0, checked0) =
-      landEntriesChecked(tiled, base,
-        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys)
-          .distinct,
-        guardIdentity = true)
-    // keep the bloom index's coverage incremental: new files join the
-    // existing groups at commit time (one O(batch) pass, no rebuild)
-    val (entries, bloomDirs) = indexNewEntries(spark, base, entries0)
-    var checkedCons = checked0 // the set the land was ENFORCED under
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base)
-      // a CAS loss to a concurrent ADD CONSTRAINT must not republish
-      // data that was only checked under the OLD constraint set
-      checkedCons = reEnforceIfChanged(spark, base, entries, checkedCons)
+    txn(spark, base, maxAttempts) { t =>
+      val entries = appendLand(t, tiled,
+        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys).distinct)
       // add-only: neither the txn map nor the publish needs the
       // table's entry list — an append stays O(new files) driver-side
       // no matter how many files the table holds
-      val txns = cur.map(txnsOf(spark, base, _)).getOrElse(Map.empty)
-      val v = cur.getOrElse(0L) + 1L
-      publishEntries(spark, base, v, entries, txns,
-        deltaChange = Some(Nil))
-      v
-    } catch {
-      case e: CommitConflictException =>
-        discard(spark, base, entries.map(_.path))
-        bloomDirs.foreach(discardDir(spark, base, _))
-        throw e
+      t.publish(entries, deltaChange = Some(Nil))
     }
   }
 
@@ -3983,48 +3718,25 @@ object TxLog {
     requireNoRowIdColumn(df)
     val (tiled, ckeys) = clusterTile(spark, base,
       toPhysicalIfMapped(spark, base, df))
-    val (entries0, checked0) =
-      landEntriesChecked(tiled, base, ckeys.distinct, guardIdentity = true)
-    val (entries, bloomDirs) = indexNewEntries(spark, base, entries0)
-    var checkedCons = checked0
-    val rows = entries.map(_.rows).filter(_ >= 0).sum
-    var result: (Long, Long, Long) = null
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base)
-      checkedCons = reEnforceIfChanged(spark, base, entries, checkedCons)
-      val txns = cur.map(txnsOf(spark, base, _))
-        .getOrElse(Map.empty[String, Long])
+    val result = txn(spark, base, maxAttempts) { t =>
+      val entries = appendLand(t, tiled, ckeys.distinct)
       // a RACING COPY INTO may have loaded (some of) our files while
       // we were landing; the landed batch mixes all files, so any
-      // overlap means this batch as a whole cannot publish — discard
-      // it, exactly-once preserved. TOTAL overlap is the genuine
-      // "already loaded" outcome; PARTIAL overlap leaves survivors
-      // unloaded, so signal the outer loop to re-land just them
-      // (reporting zero here would silently under-ingest).
-      val overlap = freshAll.exists(st =>
-        txns.contains(CopyTxnPrefix + st.getPath.toString))
-      if (overlap) {
-        discard(spark, base, entries.map(_.path))
-        bloomDirs.foreach(discardDir(spark, base, _))
-        val survivors = freshAll.filterNot(st =>
-          txns.contains(CopyTxnPrefix + st.getPath.toString))
-        result =
-          if (survivors.isEmpty) (cur.getOrElse(curV0), 0L, 0L)
-          else RetryNarrower
-      } else {
-        val v = cur.getOrElse(0L) + 1L
-        publishEntries(spark, base, v, entries,
-          txns ++ freshAll.map(st =>
+      // overlap means this batch as a whole cannot publish (exactly-
+      // once preserved; the transaction deletes it). TOTAL overlap is
+      // the genuine "already loaded" outcome; PARTIAL overlap leaves
+      // survivors unloaded, so signal the outer loop to re-land just
+      // them (reporting zero here would silently under-ingest).
+      val survivors = freshAll.filterNot(st =>
+        t.txns.contains(CopyTxnPrefix + st.getPath.toString))
+      if (survivors.isEmpty) (t.read.getOrElse(curV0), 0L, 0L)
+      else if (survivors.size < freshAll.size) RetryNarrower
+      else (t.publish(entries,
+          t.txns ++ freshAll.map(st =>
             (CopyTxnPrefix + st.getPath.toString) ->
               st.getModificationTime),
-          operation = "COPY INTO", deltaChange = Some(Nil))
-        result = (v, freshAll.size.toLong, rows)
-      }
-    } catch {
-      case e: CommitConflictException =>
-        discard(spark, base, entries.map(_.path))
-        bloomDirs.foreach(discardDir(spark, base, _))
-        throw e
+          operation = "COPY INTO", deltaChange = Some(Nil)),
+        freshAll.size.toLong, entries.map(_.rows).filter(_ >= 0).sum)
     }
     if (result eq RetryNarrower) null else result
   }
@@ -4046,18 +3758,12 @@ object TxLog {
     * commit; returns (version, markersDropped). */
   def vacuumCopyState(spark: SparkSession, base: String, cutoffMs: Long,
                       maxAttempts: Int = 5): (Long, Long) =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val (stale, keep) = txns.partition { case (k, mtime) =>
+    txn(spark, base, maxAttempts) { t =>
+      val (stale, keep) = t.txns.partition { case (k, mtime) =>
         k.startsWith(CopyTxnPrefix) && mtime < cutoffMs }
-      if (stale.isEmpty) (cur, 0L)
-      else {
-        publishEntries(spark, base, cur + 1L, entries, keep,
-          dataChange = false, operation = "VACUUM COPY STATE")
-        (cur + 1L, stale.size.toLong)
-      }
+      if (stale.isEmpty) (t.cur, 0L)
+      else (t.publish(t.entries, keep, dataChange = false,
+        operation = "VACUUM COPY STATE"), stale.size.toLong)
     }
 
   /** Exactly-once append for streaming foreachBatch sinks (Delta's
@@ -4075,34 +3781,13 @@ object TxLog {
     requireNoRowIdColumn(df)
     val (tiled, ckeys) =
       clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
-    val (entries0, checked0) =
-      landEntriesChecked(tiled, base,
-        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys)
-          .distinct,
-        guardIdentity = true)
-    val (entries, bloomDirs) = indexNewEntries(spark, base, entries0)
-    def dropAll(): Unit = {
-      discard(spark, base, entries.map(_.path))
-      bloomDirs.foreach(discardDir(spark, base, _))
-    }
-    var checkedCons = checked0
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base)
-      checkedCons = reEnforceIfChanged(spark, base, entries, checkedCons)
-      val txns = cur.map(txnsOf(spark, base, _)).getOrElse(Map.empty)
-      if (txns.getOrElse(appId, -1L) >= batchId) {
-        // a racing replica applied this batch between our check and now
-        dropAll()
-        cur.get
-      } else {
-        val v = cur.getOrElse(0L) + 1L
-        publishEntries(spark, base, v, entries,
-          txns + (appId -> batchId), operation = "STREAMING UPDATE",
-          deltaChange = Some(Nil))
-        v
-      }
-    } catch {
-      case e: CommitConflictException => dropAll(); throw e
+    txn(spark, base, maxAttempts) { t =>
+      val entries = appendLand(t, tiled,
+        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys).distinct)
+      // a racing replica applied this batch between our check and now
+      if (t.txns.getOrElse(appId, -1L) >= batchId) t.cur
+      else t.publish(entries, t.txns + (appId -> batchId),
+        operation = "STREAMING UPDATE", deltaChange = Some(Nil))
     }
   }
 
@@ -4131,8 +3816,7 @@ object TxLog {
   def pruneRanges(spark: SparkSession, base: String,
                   preds: Seq[(String, Any, Any)]): (Seq[Entry], Seq[Entry]) = {
     require(preds.nonEmpty, "pruneRanges needs at least one predicate")
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val (entries, _) = manifest(spark, base, v)
     // manifest stats are keyed on PHYSICAL names — translate each
     // predicate's (logical) column once before the entry sweep
@@ -4155,8 +3839,7 @@ object TxLog {
     // columnar-checkpoint tables prune EXECUTOR-side and collect only
     // the survivors (the kept working set); text tables (or a warm
     // snapshot cache) keep the driver sweep — cheaper than a job
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val predsPhys = preds.map { case (c, lo, hi) =>
       (physicalName(spark, base, c), reprOf(lo), reprOf(hi)) }
     val kept = TxLogPlan.pruneEntriesForScan(spark, base, v, predsPhys)
@@ -4177,9 +3860,9 @@ object TxLog {
     * the merge keys (that containment is what makes skipping sound:
     * a target row matching a source key can only live in a file whose
     * range covers that key). Files without stats are conservatively
-    * rewritten. CAS losses recompute against the winner, like
-    * [[transact]]. `onAttempt` is a test seam for deterministic race
-    * interleaving. */
+    * rewritten. A CAS loss re-bases onto a disjoint winner and
+    * recomputes against any other ([[Txn]] rule 4). `onAttempt` is a
+    * test seam for deterministic race interleaving. */
   def mergeCow(spark: SparkSession, base: String, source0: DataFrame,
                keys0: Seq[String], statsCol0: String, maxAttempts: Int = 5,
                onAttempt: Int => Unit = _ => ()): Long = {
@@ -4198,95 +3881,47 @@ object TxLog {
     val bounds = source
       .agg(min(col(statsCol).cast(castT)).cast("string"),
         max(col(statsCol).cast(castT)).cast("string")).head()
-    if (bounds.isNullAt(0)) { // empty / all-null source: nothing to merge
-      return latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-    }
+    if (bounds.isNullAt(0)) // empty / all-null source: nothing to merge
+      return requireLatest(spark, base)
     val (lo, hi) = (bounds.getString(0), bounds.getString(1))
     // GENERATED BY DEFAULT on merges: the high-water advances past any
     // explicit id the source carries (one agg, computed once)
     val idMaxes = sourceIdentityMaxes(spark, base, source)
-    // Conflict-granular optimistic concurrency (Delta's conflict
-    // checker): a CAS loss no longer always recomputes. The landed
-    // merge output survives the loss, and if the winner's changes are
-    // DISJOINT from this merge's inputs — it removed/replaced none of
-    // the touched files, added nothing overlapping the source key
-    // range, and left the metadata surface (schema, constraints,
-    // mapping, partitioning, widening, clustering, defaults, row
-    // tracking) untouched — the merge RE-BASES: republish the same
-    // output against the winner's entries, one manifest write, zero
-    // recompute. A daily MERGE racing a disjoint-partition DELETE on
-    // a 100 TB table costs one extra commit attempt, not a second
-    // pass over the band. Anything overlapping keeps the serialize-
-    // by-recompute behavior (TxLogSpec's sequential-equivalence law).
-    var rebase: Option[(Seq[Entry], Set[String], Map[String, String],
-      Option[TableMeta])] = None // (newEntries, touchedPaths, basePrev sig, metaSig)
-    def discardRebase(): Unit = rebase.foreach { case (es, _, _, _) =>
-      discard(spark, base, es.map(_.path)); rebase = None }
-    try withCasRetry(maxAttempts) { attempt =>
-      val cur = latestVersion(spark, base)
-      val (entries, txns) = cur.map(manifest(spark, base, _))
-        .getOrElse((Seq.empty[Entry], Map.empty[String, Long]))
-      onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = cur.map(metaOf(spark, base, _).rebaseKey)
-      val rebasable = rebase.filter { case (_, touchedP, baseBy, sig) =>
-        sig == metaSig && {
-          val curBy = entries.map(e => e.path -> serLine(e)).toMap
-          val removed = baseBy.keySet -- curBy.keySet
-          val addedOrReplaced = entries.filter(e =>
-            !baseBy.get(e.path).contains(serLine(e)))
-          removed.intersect(touchedP).isEmpty &&
-            addedOrReplaced.forall(e => !touchedP.contains(e.path) &&
-              !touchesRange(e, statsCol, lo, hi))
-        }
-      }
-      rebasable match {
-        case Some((newEntries, touchedP, _, _)) =>
-          // disjoint winner: carry ITS entries (minus our touched
-          // inputs, which our output replaces) and publish — the
-          // landed files are reused verbatim
-          val carried2 = entries.filterNot(e => touchedP.contains(e.path))
-          val v = cur.getOrElse(0L) + 1L
-          publishEntries(spark, base, v, carried2 ++ newEntries, txns,
-            operation = "MERGE",
-            meta = mergeIdentityAdvance(idMaxes))
-          v
-        case None =>
-          discardRebase() // overlapping winner: the land is stale
-          val (touched, carried) =
-            entries.partition(touchesRange(_, statsCol, lo, hi))
-          val merged =
-            if (touched.isEmpty) source
-            else {
-              val target = readEntriesCurrent(spark, base, touched,
-                withRowIds = true) // masks applied: deletes never resurrect
-              // tracked tables: matched source rows inherit their target
-              // row's stable id (Delta preserves ids through MERGE UPDATE)
-              val src =
-                if (target.columns.exists(_.equalsIgnoreCase(RowIdCol)))
-                  inheritMergeIds(source, target, keys)
-                else source
-              Upsert.merge(target, src, keys)
-            }
-          val newEntries = landEntriesMulti(merged, base,
-            preservedStatsCols(touched, Seq(statsCol), merged.schema),
-            recomputeGenerated = true)
-          val v = cur.getOrElse(0L) + 1L
-          // record the re-base state BEFORE the CAS: on a loss the
-          // landed files are kept for the next attempt's disjointness
-          // check instead of being discarded
-          rebase = Some((newEntries, touched.map(_.path).toSet,
-            entries.map(e => e.path -> serLine(e)).toMap, metaSig))
-          publishEntries(spark, base, v, carried ++ newEntries, txns,
-            operation = "MERGE",
-            meta = mergeIdentityAdvance(idMaxes))
-          v
-      }
-    } catch {
-      // exhausted retries (or anything fatal): the kept-for-re-base
-      // land must not leak as an orphan txn dir
-      case e: Throwable => discardRebase(); throw e
+    // a CAS loss to a winner disjoint from the source key range
+    // re-bases the landed output (Txn rule 4): a daily MERGE racing a
+    // disjoint-partition DELETE costs one extra commit attempt, not a
+    // second pass over the band
+    val overlaps: Entry => Boolean = touchesRange(_, statsCol, lo, hi)
+    txn(spark, base, maxAttempts, onAttempt) { t =>
+      val land = t.rebase(Some(overlaps)) {
+        val touched = t.entries.filter(overlaps)
+        val merged =
+          if (touched.isEmpty) source
+          else {
+            val target = readEntriesCurrent(spark, base, touched,
+              withRowIds = true) // masks applied: deletes never resurrect
+            // tracked tables: matched source rows inherit their target
+            // row's stable id (Delta preserves ids through MERGE UPDATE)
+            val src =
+              if (target.columns.exists(_.equalsIgnoreCase(RowIdCol)))
+                inheritMergeIds(source, target, keys)
+              else source
+            Upsert.merge(target, src, keys)
+          }
+        Some((landEntriesMulti(t, merged,
+          preservedStatsCols(touched, Seq(statsCol), merged.schema),
+          recomputeGenerated = true), touched))
+      }.get
+      t.publish(withoutInputs(t.entries, land) ++ land.value,
+        operation = "MERGE", meta = mergeIdentityAdvance(idMaxes))
     }
+  }
+
+  /** `entries` minus the inputs a land replaces. */
+  private def withoutInputs(entries: Seq[Entry],
+                            land: Txn.Land[_]): Seq[Entry] = {
+    val replaced = land.inputs.map(_.path).toSet
+    entries.filterNot(e => replaced.contains(e.path))
   }
 
   /** Copy-on-write DELETE (Delta `DELETE WHERE` analog): remove rows
@@ -4318,18 +3953,13 @@ object TxLog {
 
   /** Land a (file, position) sidecar dataset — deletion vector or
     * bloom index — under its own txn dir (same placement as data
-    * files, so vacuum/clone treat it uniformly) and return its
-    * base-relative dir. */
-  private def landDvDir(df: DataFrame, base: String): String = {
-    val txn = java.util.UUID.randomUUID().toString
-    val dir = s"$DataDir/$txn"
-    df.write.mode("error").parquet(s"$base/$dir")
+    * files, so vacuum/clone treat it uniformly), staged to `t` before
+    * the write, and return its base-relative dir. */
+  private def landDvDir(t: Txn, df: DataFrame): String = {
+    val dir = t.stageDir(s"$DataDir/${java.util.UUID.randomUUID()}")
+    df.write.mode("error").parquet(s"${t.base}/$dir")
     dir
   }
-
-  private[graft] def discardDir(spark: SparkSession, base: String,
-                         dir: String): Unit =
-    fs(base, spark).delete(new Path(s"$base/$dir"), true)
 
   /** Merge-on-read DELETE (Delta deletion-vectors analog): rows with
     * `column` in [lo, hi] satisfying `residual` are masked by writing
@@ -4374,73 +4004,36 @@ object TxLog {
                      touchedFilter: Entry => Boolean = _ => true,
                      maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    // conflict-granular OCC, the MOR-delete shape (see mergeCow): a
-    // CAS loss keeps the landed sidecar, and a DISJOINT winner — none
-    // of our touched files removed/replaced, nothing added that the
-    // touched predicate could match, metadata surface unchanged —
-    // re-bases with one manifest write instead of re-scanning the band
-    var rebase: Option[(String, Map[String, Long], Seq[Entry],
-      Map[String, String], TableMeta)] = None
-    def discardRebase(): Unit = rebase.foreach { case (dvDir, _, _, _, _) =>
-      discardDir(spark, base, dvDir); rebase = None }
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val metaSig = metaOf(spark, base, cur).rebaseKey
-      val rebasable = rebase.filter { case (_, _, touched0, baseBy, sig) =>
-        sig == metaSig && {
-          val touchedP = touched0.map(_.path).toSet
-          val curBy = entries.map(e => e.path -> serLine(e)).toMap
-          val removed = baseBy.keySet -- curBy.keySet
-          val addedOrReplaced = entries.filter(e =>
-            !baseBy.get(e.path).contains(serLine(e)))
-          removed.intersect(touchedP).isEmpty &&
-            addedOrReplaced.forall(e => !touchedP.contains(e.path) &&
-              !touchedFilter(e))
+    // a CAS loss to a winner the touched predicate cannot see re-bases
+    // the landed sidecar (Txn rule 4) instead of re-scanning the band
+    txn(spark, base, maxAttempts) { t =>
+      val land = t.rebase(Some(touchedFilter)) {
+        val touched = t.entries.filter(touchedFilter)
+        if (touched.isEmpty) None
+        else {
+          // positions are computed over the RAW files: already-masked
+          // rows re-match and the union+distinct below folds them into
+          // the merged sidecar — old deletions can never resurrect.
+          // `cond` references LOGICAL names — evaluate on the logical
+          // view with the DV coordinates carried through (mergeSchema on
+          // mapped tables: the projection must see the files' UNION of
+          // physical columns, not one footer's)
+          val raw = logicalView(spark, base,
+            taggedRead(spark, base, touched,
+              mergeSchema = t.meta.colMap.isDefined),
+            keep = Seq(DvFileCol, DvPosCol))
+          // None: no hits, no prior masks — nothing to publish
+          landMaskSidecar(t, touched, raw.where(coalesce(cond, lit(false))))
+            .map((_, touched))
         }
       }
-      rebasable match {
-        case Some((dvDir, counts, touched0, _, _)) =>
-          val touchedP = touched0.map(_.path).toSet
-          publishEntries(spark, base, cur + 1L,
-            entries.filterNot(e => touchedP.contains(e.path)) ++
-              remask(touched0, dvDir, counts), txns,
-            operation = "DELETE")
-          cur + 1L
-        case None =>
-          discardRebase()
-          val (touched, carried) = entries.partition(touchedFilter)
-          if (touched.isEmpty) cur
-          else {
-            // positions are computed over the RAW files: already-masked
-            // rows re-match and the union+distinct below folds them into
-            // the merged sidecar — old deletions can never resurrect.
-            // `cond` references LOGICAL names — evaluate on the logical
-            // view with the DV coordinates carried through (mergeSchema on
-            // mapped tables: the projection must see the files' UNION of
-            // physical columns, not one footer's)
-            val cmapped = latestMeta(spark, base).colMap.isDefined
-            val raw = logicalView(spark, base,
-              taggedRead(spark, base, touched, mergeSchema = cmapped),
-              keep = Seq(DvFileCol, DvPosCol))
-            val hits0 = raw.where(coalesce(cond, lit(false)))
-            landMaskSidecar(spark, base, touched, hits0) match {
-              case None => cur // no hits, no prior masks: nothing to publish
-              case Some((dvDir, counts)) =>
-                // keep the land across a CAS loss: the next attempt's
-                // disjointness check decides re-base vs recompute
-                rebase = Some((dvDir, counts, touched,
-                  entries.map(e => e.path -> serLine(e)).toMap, metaSig))
-                publishEntries(spark, base, cur + 1L,
-                  carried ++ remask(touched, dvDir, counts), txns,
-                  operation = "DELETE")
-                cur + 1L
-            }
-          }
+      land match {
+        case None => t.cur
+        case Some(l) =>
+          val (dvDir, counts) = l.value
+          t.publish(withoutInputs(t.entries, l) ++
+            remask(l.inputs, dvDir, counts), operation = "DELETE")
       }
-    } catch {
-      case e: Throwable => discardRebase(); throw e
     }
   }
 
@@ -4474,11 +4067,12 @@ object TxLog {
     * the entries' EXISTING masks, distinct. Returns the sidecar dir
     * and per-file mask sizes read back from the landed bytes (bounded
     * driver metadata — one row per touched file), or None when there
-    * is nothing to mask (the landed empty dir is discarded). */
-  private def landMaskSidecar(spark: SparkSession, base: String,
-                              touched: Seq[Entry], hits0: DataFrame)
+    * is nothing to mask (the landed empty dir stays staged to `t`,
+    * unreferenced, so the transaction deletes it). */
+  private def landMaskSidecar(t: Txn, touched: Seq[Entry], hits0: DataFrame)
       : Option[(String, Map[String, Long])] = {
     import org.apache.spark.sql.functions.col
+    val (spark, base) = (t.spark, t.base)
     val newHits = hits0.select(DvFileCol, DvPosCol)
     val allDv = (dvFrame(spark, base, touched) match {
       case Some(old) => newHits.unionByName(old).distinct()
@@ -4494,11 +4088,10 @@ object TxLog {
       var dvDir: String = null
       var counts: Map[String, Long] = Map.empty
       Par.all(
-        () => dvDir = landDvDir(allDv.repartition(col(DvFileCol)), base),
+        () => dvDir = landDvDir(t, allDv.repartition(col(DvFileCol))),
         () => counts = allDv.groupBy(DvFileCol).count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap)
-      if (counts.isEmpty) { discardDir(spark, base, dvDir); None }
-      else Some((dvDir, counts))
+      if (counts.isEmpty) None else Some((dvDir, counts))
     } finally allDv.unpersist(false)
   }
 
@@ -4553,12 +4146,9 @@ object TxLog {
     requireNoIdentityAssignment(spark, base, set.keys.toSeq)
     require(!set.keys.exists(_.equalsIgnoreCase(RowIdCol)),
       s"column name $RowIdCol is reserved for row tracking")
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val (touched, carried) = entries.partition(touchedFilter)
-      if (touched.isEmpty) cur
+    txn(spark, base, maxAttempts) { t =>
+      val (touched, carried) = t.entries.partition(touchedFilter)
+      if (touched.isEmpty) t.cur
       else {
         // `cond` and the SET expressions reference LOGICAL names —
         // the whole hit/update computation runs on the logical view
@@ -4566,7 +4156,7 @@ object TxLog {
         // tables so the projection sees every file's physical
         // columns); the updated images rename back to physical just
         // before landing
-        val m = latestMeta(spark, base)
+        val m = t.meta
         val raw0 = logicalView(spark, base,
           taggedRead(spark, base, touched, mergeSchema = m.colMap.isDefined),
           keep = Seq(DvFileCol, DvPosCol, RowIdCol))
@@ -4607,28 +4197,18 @@ object TxLog {
         var newEntries: Seq[Entry] = null
         var maskRes: Option[(String, Map[String, Long])] = None
         Par.all(
-          () => newEntries = landEntriesMulti(updatedP, base,
+          () => newEntries = landEntriesMulti(t, updatedP,
             preservedStatsCols(touched,
               primaryStats.map(physicalName(spark, base, _)),
               updatedP.schema),
             recomputeGenerated = true)
             .filter(_.rows != 0L),
-          () => maskRes = landMaskSidecar(spark, base, touched, hits0))
+          () => maskRes = landMaskSidecar(t, touched, hits0))
         maskRes match {
-          case None => // no hits anywhere: drop the (empty) append too
-            discard(spark, base, newEntries.map(_.path)); cur
+          case None => t.cur // no hits anywhere: the (empty) append goes too
           case Some((dvDir, counts)) =>
-            try {
-              publishEntries(spark, base, cur + 1L,
-                carried ++ remask(touched, dvDir, counts) ++ newEntries,
-                txns, operation = "UPDATE", cdfOp = Some("update"))
-              cur + 1L
-            } catch {
-              case e: CommitConflictException =>
-                discardDir(spark, base, dvDir)
-                discard(spark, base, newEntries.map(_.path))
-                throw e
-            }
+            t.publish(carried ++ remask(touched, dvDir, counts) ++ newEntries,
+              operation = "UPDATE", cdfOp = Some("update"))
         }
       }
     }
@@ -4666,10 +4246,8 @@ object TxLog {
     val bounds = source
       .agg(min(col(statsCol).cast(castT)).cast("string"),
         max(col(statsCol).cast(castT)).cast("string")).head()
-    if (bounds.isNullAt(0)) { // empty / all-null source: nothing to merge
-      return latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-    }
+    if (bounds.isNullAt(0)) // empty / all-null source: nothing to merge
+      return requireLatest(spark, base)
     val (lo, hi) = (bounds.getString(0), bounds.getString(1))
     mergeMorWhere(spark, base, source, keys,
       touchesRange(_, statsCol, lo, hi), Seq(statsCol), maxAttempts)
@@ -4682,8 +4260,7 @@ object TxLog {
     * file semi-join-checked, still zero files rewritten). */
   def mergeMorAuto(spark: SparkSession, base: String, source0: DataFrame,
                    keys0: Seq[String], maxAttempts: Int = 5): Long = {
-    val cur = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val cur = requireLatest(spark, base)
     val entries = manifest(spark, base, cur)._1
     val source = toPhysicalIfMapped(spark, base, source0)
     val keys = keys0.map(physicalName(spark, base, _))
@@ -4713,17 +4290,14 @@ object TxLog {
     // GENERATED BY DEFAULT on merges: advance the high-water past any
     // explicit id the source carries (one agg, computed once)
     val idMaxes = sourceIdentityMaxes(spark, base, source)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val (touched, carried) = entries.partition(touchedFilter)
+    txn(spark, base, maxAttempts) { t =>
+      t.cur // the target must exist
+      val (touched, carried) = t.entries.partition(touchedFilter)
       // tracked tables: matched source rows inherit their target
       // row's stable id (Delta preserves ids through MERGE UPDATE);
       // unmatched rows land NULL and take the file's fresh span
       val sourceW =
-        if (touched.isEmpty ||
-            latestMeta(spark, base).rowIdHighWater.isEmpty) source
+        if (touched.isEmpty || t.meta.rowIdHighWater.isEmpty) source
         else {
           val tagged = attachRowIds(spark, touched,
             taggedRead(spark, base, touched))
@@ -4735,39 +4309,29 @@ object TxLog {
           inheritMergeIds(source, live, keys)
         }
       var newEntries: Seq[Entry] = null
-      val doLand = () => newEntries = landEntriesMulti(sourceW, base,
+      val doLand = () => newEntries = landEntriesMulti(t, sourceW,
         preservedStatsCols(touched, primaryStats, sourceW.schema),
         recomputeGenerated = true)
         .filter(_.rows != 0L)
-      def publishWith(masked: Seq[Entry], dvDir: Option[String]): Long =
-        try {
-          publishEntries(spark, base, cur + 1L,
-            carried ++ masked ++ newEntries, txns, operation = "MERGE",
-            meta = mergeIdentityAdvance(idMaxes))
-          cur + 1L
-        } catch {
-          case e: CommitConflictException =>
-            dvDir.foreach(discardDir(spark, base, _))
-            discard(spark, base, newEntries.map(_.path))
-            throw e
+      val masked =
+        if (touched.isEmpty) { doLand(); Seq.empty }
+        else {
+          // matched = target rows whose key tuple appears in the source.
+          // The source land and the mask-sidecar build are independent
+          // actions — overlap them on driver threads (guide §2.6)
+          val hits0 = taggedRead(spark, base, touched)
+            .join(source.select(keys.map(col): _*).distinct(),
+              keys, "left_semi")
+          var maskRes: Option[(String, Map[String, Long])] = None
+          Par.all(doLand,
+            () => maskRes = landMaskSidecar(t, touched, hits0))
+          maskRes match {
+            case None => touched // insert-only batch
+            case Some((dvDir, counts)) => remask(touched, dvDir, counts)
+          }
         }
-      if (touched.isEmpty) { doLand(); publishWith(Seq.empty, None) }
-      else {
-        // matched = target rows whose key tuple appears in the source.
-        // The source land and the mask-sidecar build are independent
-        // actions — overlap them on driver threads (guide §2.6)
-        val hits0 = taggedRead(spark, base, touched)
-          .join(source.select(keys.map(col): _*).distinct(),
-            keys, "left_semi")
-        var maskRes: Option[(String, Map[String, Long])] = None
-        Par.all(doLand,
-          () => maskRes = landMaskSidecar(spark, base, touched, hits0))
-        maskRes match {
-          case None => publishWith(touched, None) // insert-only batch
-          case Some((dvDir, counts)) =>
-            publishWith(remask(touched, dvDir, counts), Some(dvDir))
-        }
-      }
+      t.publish(carried ++ masked ++ newEntries, operation = "MERGE",
+        meta = mergeIdentityAdvance(idMaxes))
     }
   }
 
@@ -4896,10 +4460,9 @@ object TxLog {
       case Seq(MergeDelete(None)) => true
       case _ => false
     }
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      t.cur // the target must exist
+      val entries = t.entries
       // an EMPTY target (file-less create, fully-deleted snapshot) is
       // a legitimate MERGE target for the NOT MATCHED half — its
       // schema comes from the declared #schema line when no file can
@@ -4909,7 +4472,7 @@ object TxLog {
       // unmapped table could miss file-evolved columns, and the image
       // projection below would then land their loss permanently
       val baseSchema = scala.util.Try(readEvolved(spark, base).schema)
-        .getOrElse(metaOf(spark, base, cur).schema.getOrElse(
+        .getOrElse(t.meta.schema.getOrElse(
           throw new IllegalStateException(
             s"MERGE into the empty table at $base with no declared " +
               "schema — declare one (createTable / CREATE TABLE) or " +
@@ -4992,7 +4555,7 @@ object TxLog {
       val carried =
         if (needAllForBySource) Seq.empty[Entry]
         else rest
-      val mCur = latestMeta(spark, base)
+      val mCur = t.meta
       val cmCur = mCur.colMap
       val cmapped = cmCur.isDefined
       // evolution on a MAPPED table assigns the new columns fresh
@@ -5113,7 +4676,7 @@ object TxLog {
           case None => Seq.empty[Entry]
           case Some(img) =>
             val phys = toPhysLocal(img)
-            landEntriesMulti(phys, base,
+            landEntriesMulti(t, phys,
               preservedStatsCols(touched,
                 statsKey.toSeq.map(physicalName(spark, base, _)),
                 phys.schema),
@@ -5125,32 +4688,17 @@ object TxLog {
           fired.map(_.select(DvFileCol, DvPosCol)).toSeq ++
             nmbsFired.map(_.select(DvFileCol, DvPosCol)).toSeq
         val maskHits = maskParts.reduceLeftOption(_.unionByName(_))
-        def publishWith(masked: Seq[Entry], dvDir: Option[String]): Long =
-          try {
-            publishEntries(spark, base, cur + 1L,
-              carried ++ masked ++ newEntries, txns, operation = "MERGE",
-              // schema evolution rides the SAME commit: the evolved
-              // #schema (and the extended mapping) become visible
-              // atomically with the files that carry the new columns
-              meta = mergeIdentityAdvance(idMaxes).andThen(m =>
-                if (extras.isEmpty) m
-                else m.copy(schema = Some(targetSchema), colMap = cmNew)))
-            cur + 1L
-          } catch {
-            case e: CommitConflictException =>
-              dvDir.foreach(discardDir(spark, base, _))
-              discard(spark, base, newEntries.map(_.path))
-              throw e
-          }
-        maskHits match {
-          case None => publishWith(touched, None)
-          case Some(hits) =>
-            landMaskSidecar(spark, base, touched, hits) match {
-              case None => publishWith(touched, None) // nothing fired
-              case Some((dvDir, counts)) =>
-                publishWith(remask(touched, dvDir, counts), Some(dvDir))
-            }
+        val masked = maskHits.flatMap(landMaskSidecar(t, touched, _)) match {
+          case None => touched // nothing fired
+          case Some((dvDir, counts)) => remask(touched, dvDir, counts)
         }
+        t.publish(carried ++ masked ++ newEntries, operation = "MERGE",
+          // schema evolution rides the SAME commit: the evolved
+          // #schema (and the extended mapping) become visible
+          // atomically with the files that carry the new columns
+          meta = mergeIdentityAdvance(idMaxes).andThen(m =>
+            if (extras.isEmpty) m
+            else m.copy(schema = Some(targetSchema), colMap = cmNew)))
       } finally fired.foreach(_.unpersist())
     }
   }
@@ -5188,13 +4736,9 @@ object TxLog {
     require(!df.columns.contains(idCol),
       s"IDENTITY column $idCol0 is system-assigned; the batch must not " +
         "provide it (GENERATED ALWAYS semantics)")
-    withCasRetry(maxAttempts) { attempt =>
-      val cur = latestVersion(spark, base)
-      val (prev, txns) = cur.map(manifest(spark, base, _))
-        .getOrElse((Seq.empty[Entry], Map.empty[String, Long]))
-      val ident = cur.map(metaOf(spark, base, _).identity).getOrElse(Map.empty)
+    txn(spark, base, maxAttempts, onAttempt) { t =>
+      val ident = t.meta.identity
       val water = ident.getOrElse(idCol, 0L)
-      onAttempt(attempt) // test seam: between snapshot read and land
       // DENSE allocation: per-partition cumulative offsets (one tiny
       // count aggregate — ≤ nPartitions rows to the driver) plus the
       // WITHIN-partition row index (the low 33 bits of Spark's
@@ -5235,7 +4779,7 @@ object TxLog {
             .join(org.apache.spark.sql.functions.broadcast(offDf), "__pid")
             .withColumn(idCol, lit(water) + lit(1L) + col("__off") + rowInPart)
             .drop("__pid", "__off")
-          landEntriesMulti(assigned, base, (Seq(idCol) ++ statsCol).distinct)
+          landEntriesMulti(t, assigned, (Seq(idCol) ++ statsCol).distinct)
         } finally withPid.unpersist()
       // the new high-water comes from the LANDED files' stats — the
       // same bytes any later reader or skip decision will trust. Every
@@ -5244,7 +4788,6 @@ object TxLog {
       // commit before anything publishes.
       val landedIds = entries.flatMap(_.statsFor(idCol))
       landedIds.find(_.min.toLong <= water).foreach { bad =>
-        discard(spark, base, entries.map(_.path))
         throw new IllegalStateException(
           s"identity overflow/misallocation: landed min ${bad.min} is " +
             s"not above the high-water $water")
@@ -5263,7 +4806,6 @@ object TxLog {
           else spark.read.parquet(entries.map(e => resolve(base, e.path)): _*)
             .select(idCol).distinct().count()
         if (distinctIds != totalRows) {
-          discard(spark, base, entries.map(_.path))
           throw new IllegalStateException(
             s"identity misallocation: $distinctIds distinct ids over " +
               s"$totalRows landed rows — duplicate ids vetoed before " +
@@ -5271,17 +4813,11 @@ object TxLog {
         }
       }
       val newWater = landedIds.map(_.max.toLong).foldLeft(water)(math.max)
-      val v = cur.getOrElse(0L) + 1L
-      try {
-        publishEntries(spark, base, v, prev ++ entries, txns,
-          meta = _.copy(identity = ident + (idCol -> newWater)))
-        v
-      } catch {
-        case e: CommitConflictException =>
-          // a racer may have consumed ids from the SAME water mark:
-          // discard and re-assign from the winner's high-water
-          discard(spark, base, entries.map(_.path)); throw e
-      }
+      // a CAS loss deletes this land: a racer may have consumed ids
+      // from the SAME water mark, so the retry re-assigns from the
+      // winner's high-water
+      t.publish(t.entries ++ entries,
+        meta = _.copy(identity = ident + (idCol -> newWater)))
     }
   }
 
@@ -5361,53 +4897,56 @@ object TxLog {
         .filter(inserts.schema.fieldNames.contains)
     }
     val castT = castType(statsDtype(deleteKeys.schema(statsCol).dataType))
-    // the inserts land and the delete/sync key-bound aggregates are
-    // independent actions on different inputs: overlap them on driver
-    // threads (guide §2.6) instead of paying land + bounds latencies
-    // back to back on every CDC batch
-    var landed: (Seq[Entry], Map[String, String]) = null
-    var bounds: org.apache.spark.sql.Row = null
-    var syncRange: Option[Option[(String, String)]] = None
-    Par.all(
-      () => landed = landEntriesChecked(inserts, base, statsCols,
-        guardIdentity = guardIdentity),
-      () => {
-        bounds = deleteKeys
-          .agg(min(col(statsCol).cast(castT)).cast("string"),
-            max(col(statsCol).cast(castT)).cast("string")).head()
-        // sync-delete span: a target file whose stats range is
-        // DISJOINT from it cannot hold any source key — every row
-        // vanished, the file drops metadata-only. Outer None = no sync
-        // clause; inner None = an EMPTY sync source (all vanishes).
-        syncRange = syncKeys.map { sk =>
-          val b = sk.agg(min(col(statsCol).cast(castT)).cast("string"),
-            max(col(statsCol).cast(castT)).cast("string")).head()
-          if (b.isNullAt(0)) None else Some((b.getString(0), b.getString(1)))
-        }
-      })
-    val (newEntries0, checked0) = landed
-    val newEntries = newEntries0.filter(_.rows != 0L)
-    var checkedCons = checked0
     // the unguarded (SQL MERGE) path runs GENERATED BY DEFAULT like
     // the merge verbs: re-landed images legitimately carry existing
     // ids, and the high-water must advance past any id in the batch
     val idMaxes =
       if (guardIdentity) Map.empty[String, Long]
       else sourceIdentityMaxes(spark, base, inserts)
-    val keyRange: Option[(String, String)] =
-      if (bounds.isNullAt(0)) None // no deletes in this batch
-      else Some((bounds.getString(0), bounds.getString(1)))
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base)
-      checkedCons = reEnforceIfChanged(spark, base, newEntries, checkedCons)
-      val (entries, txns) = cur.map(manifest(spark, base, _))
-        .getOrElse((Seq.empty[Entry], Map.empty[String, Long]))
+    var checkedCons = Map.empty[String, String]
+    var keyRange: Option[(String, String)] = None
+    var syncRange: Option[Option[(String, String)]] = None
+    TxLog.txn(spark, base, maxAttempts) { t =>
+      val newEntries = t.once {
+        // the inserts land and the delete/sync key-bound aggregates are
+        // independent actions on different inputs: overlap them on
+        // driver threads (guide §2.6) instead of paying land + bounds
+        // latencies back to back on every CDC batch
+        var landed: Seq[Entry] = null
+        Par.all(
+          () => {
+            val (es, checked) = landEntriesChecked(t, inserts, statsCols,
+              guardIdentity = guardIdentity)
+            landed = es.filter(_.rows != 0L)
+            checkedCons = checked
+          },
+          () => {
+            val bounds = deleteKeys
+              .agg(min(col(statsCol).cast(castT)).cast("string"),
+                max(col(statsCol).cast(castT)).cast("string")).head()
+            keyRange =
+              if (bounds.isNullAt(0)) None // no deletes in this batch
+              else Some((bounds.getString(0), bounds.getString(1)))
+            // sync-delete span: a target file whose stats range is
+            // DISJOINT from it cannot hold any source key — every row
+            // vanished, the file drops metadata-only. Outer None = no
+            // sync clause; inner None = an EMPTY sync source (all
+            // vanishes).
+            syncRange = syncKeys.map { sk =>
+              val b = sk.agg(min(col(statsCol).cast(castT)).cast("string"),
+                max(col(statsCol).cast(castT)).cast("string")).head()
+              if (b.isNullAt(0)) None
+              else Some((b.getString(0), b.getString(1)))
+            }
+          })
+        landed
+      }
+      checkedCons = reEnforceIfChanged(t, newEntries, checkedCons)
+      val (entries, txns) = (t.entries, t.txns)
+      // a racing replica applied this batch between check and now
       if (txn.exists { case (appId, batchId) =>
-          txns.getOrElse(appId, -1L) >= batchId }) {
-        // a racing replica applied this batch between check and now
-        discard(spark, base, newEntries.map(_.path))
-        cur.get
-      } else {
+          txns.getOrElse(appId, -1L) >= batchId }) t.cur
+      else {
         val semiTouched = keyRange match {
           case Some((lo, hi)) =>
             entries.filter(touchesRange(_, statsCol, lo, hi))
@@ -5428,8 +4967,8 @@ object TxLog {
         val touched = entries.filter(e => touchedPaths.contains(e.path))
         val carried = entries.filterNot(e =>
           touchedPaths.contains(e.path) || droppedPaths.contains(e.path))
-        val (masked, dvDirOpt) =
-          if (touched.isEmpty) (touched, None)
+        val masked =
+          if (touched.isEmpty) touched
           else {
             val read = taggedRead(spark, base, touched)
             val semiHits =
@@ -5445,26 +4984,14 @@ object TxLog {
                   .unionByName(a.select(DvFileCol, DvPosCol)).distinct()
               case (one, other) => one.orElse(other).get
             }
-            landMaskSidecar(spark, base, touched, hits) match {
-              case None => (touched, None) // no key actually present
-              case Some((dvDir, counts)) =>
-                (remask(touched, dvDir, counts), Some(dvDir))
+            landMaskSidecar(t, touched, hits) match {
+              case None => touched // no key actually present
+              case Some((dvDir, counts)) => remask(touched, dvDir, counts)
             }
           }
-        val v = cur.getOrElse(0L) + 1L
-        try {
-          publishEntries(spark, base, v, carried ++ masked ++ newEntries,
-            txn.fold(txns)(txns + _), operation = "APPLY CHANGES",
-            meta = mergeIdentityAdvance(idMaxes))
-          v
-        } catch {
-          case e: CommitConflictException => // this attempt's mask is dead
-            dvDirOpt.foreach(discardDir(spark, base, _)); throw e
-        }
+        t.publish(carried ++ masked ++ newEntries, txn.fold(txns)(txns + _),
+          operation = "APPLY CHANGES", meta = mergeIdentityAdvance(idMaxes))
       }
-    } catch {
-      case e: CommitConflictException =>
-        discard(spark, base, newEntries.map(_.path)); throw e
     }
   }
 
@@ -5476,39 +5003,29 @@ object TxLog {
     * (the current one when no file carries a mask). */
   def purgeDeletes(spark: SparkSession, base: String,
                    maxAttempts: Int = 5): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
+    txn(spark, base, maxAttempts) { t =>
       // columnar-checkpoint tables select the masked files EXECUTOR-
       // side (the purge's working set is the DV'd files, never the
       // table) and publish a declared delta
-      val (dved, carriedOpt, txns) =
-        TxLogPlan.pruneEntriesWith(spark, base, cur, _.dv.isDefined) match {
-          case Some(ds) => (ds, None, txnsOf(spark, base, cur))
+      val (dved, carriedOpt) =
+        TxLogPlan.pruneEntriesWith(spark, base, t.cur, _.dv.isDefined) match {
+          case Some(ds) => (ds, None)
           case None =>
-            val (entries, t) = manifest(spark, base, cur)
-            val (ds, ca) = entries.partition(_.dv.isDefined)
-            (ds, Some(ca), t)
+            val (ds, ca) = t.entries.partition(_.dv.isDefined)
+            (ds, Some(ca))
         }
-      if (dved.isEmpty) cur
+      if (dved.isEmpty) t.cur
       else {
         val cleaned = readEntriesCurrent(spark, base, dved,
           withRowIds = true)
-        val newEntries = landEntriesMulti(cleaned, base,
+        val newEntries = landEntriesMulti(t, cleaned,
           preservedStatsCols(dved, Seq.empty, cleaned.schema))
           .filter(_.rows != 0L)
-        try {
-          publishEntries(spark, base, cur + 1L,
-            carriedOpt.map(_ ++ newEntries).getOrElse(newEntries), txns,
-            dataChange = false, // mask materialization only: CDF skips
-            operation = "REORG PURGE",
-            deltaChange =
-              if (carriedOpt.isEmpty) Some(dved.map(_.path)) else None)
-          cur + 1L
-        } catch {
-          case e: CommitConflictException =>
-            discard(spark, base, newEntries.map(_.path)); throw e
-        }
+        t.publish(carriedOpt.map(_ ++ newEntries).getOrElse(newEntries),
+          dataChange = false, // mask materialization only: CDF skips
+          operation = "REORG PURGE",
+          deltaChange =
+            if (carriedOpt.isEmpty) Some(dved.map(_.path)) else None)
       }
     }
 
@@ -5576,12 +5093,9 @@ object TxLog {
     // bloom refs key on the PHYSICAL name (what the raw files carry) —
     // a later RENAME costs nothing, probes translate at lookup
     val column = physicalName(spark, base, column0)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val indexable = entries.filter(_.rows > 0L)
-      if (indexable.isEmpty) cur
+    txn(spark, base, maxAttempts) { t =>
+      val indexable = t.entries.filter(_.rows > 0L)
+      if (indexable.isEmpty) t.cur
       else {
         val m = math.max(64L, bitsPerRow.toLong * indexable.map(_.rows).max)
         // mergeSchema: on a schema-evolved table the column may be
@@ -5592,7 +5106,7 @@ object TxLog {
         // WIDENED table pins the read to the declared schema instead
         // (mergeSchema cannot merge a narrow/wide mix), so the bloom
         // positions hash the WIDENED dtype — the same one probes see.
-        val raw = (latestMeta(spark, base).widenedPhysSchema match {
+        val raw = (t.meta.widenedPhysSchema match {
           case Some(ws) => spark.read.schema(ws)
           case None => spark.read.option("mergeSchema", "true")
         }).parquet(indexable.map(e => resolve(base, e.path)): _*)
@@ -5603,18 +5117,12 @@ object TxLog {
             explode(array(bloomPosCols(col(column), m, k, dtype): _*))
               .as(DvPosCol))
           .distinct()
-        val dir = landDvDir(bits.repartition(col(DvFileCol)), base)
+        val dir = landDvDir(t, bits.repartition(col(DvFileCol)))
         val ref = BloomRef(dir, column, m, k, dtype)
-        val indexed = entries.map(e =>
+        t.publish(t.entries.map(e =>
           if (e.rows > 0L)
             e.copy(blooms = e.blooms.filterNot(_.column == column) :+ ref)
-          else e)
-        try { publishEntries(spark, base, cur + 1L, indexed, txns,
-          operation = "CREATE BLOOM INDEX"); cur + 1L }
-        catch {
-          case e: CommitConflictException =>
-            discardDir(spark, base, dir); throw e
-        }
+          else e), operation = "CREATE BLOOM INDEX")
       }
     }
   }
@@ -5629,8 +5137,8 @@ object TxLog {
     * new-dir) groups probe independently and correctly. A column
     * absent from the new files' schema (older-schema producer) is
     * skipped — those entries stay conservatively scanned, sound.
-    * Returns ref-carrying entries plus the landed sidecar dirs, which
-    * the CALLER must discard on terminal commit failure. */
+    * Returns the ref-carrying entries; the sidecars are staged to
+    * `t`. */
   private[graft] def variantStatsTarget(targetType: String): (String, String) =
     targetType.toLowerCase match {
       case "long" | "bigint" | "int" | "integer" => ("long", "bigint")
@@ -5714,18 +5222,10 @@ object TxLog {
       s"variant path must start with '$$' (got '$path')")
     val (dtype, sparkT) = variantStatsTarget(targetType)
     val phys = physicalName(spark, base, column0)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      if (entries.forall(_.rows == 0L)) cur
-      else {
-        val updated = mergeVariantPathStats(spark, base, entries, phys,
-          path, dtype, sparkT)
-        publishEntries(spark, base, cur + 1L, updated, txns,
-          dataChange = false, operation = "COLLECT STATS")
-        cur + 1L
-      }
+    txn(spark, base, maxAttempts) { t =>
+      if (t.entries.forall(_.rows == 0L)) t.cur
+      else t.publish(mergeVariantPathStats(spark, base, t.entries, phys,
+        path, dtype, sparkT), dataChange = false, operation = "COLLECT STATS")
     }
   }
 
@@ -5749,19 +5249,14 @@ object TxLog {
       s"variant path must start with '$$' (got '$path')")
     val (dtype, sparkT) = variantStatsTarget(targetType)
     val phys = physicalName(spark, base, column0)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val declared = metaOf(spark, base, cur).varStats
+    txn(spark, base, maxAttempts) { t =>
+      val declared = t.meta.varStats
       require(!declared.exists(d => d._1 == phys && d._2 == path),
         s"variant stats already declared for $phys$path")
-      val (entries, txns) = manifest(spark, base, cur)
-      val updated = mergeVariantPathStats(spark, base, entries, phys,
-        path, dtype, sparkT)
-      publishEntries(spark, base, cur + 1L, updated, txns,
+      t.publish(mergeVariantPathStats(spark, base, t.entries, phys,
+          path, dtype, sparkT),
         dataChange = false, operation = "DECLARE VARIANT STATS",
         meta = _.copy(varStats = declared :+ ((phys, path, dtype))))
-      cur + 1L
     }
   }
 
@@ -5774,10 +5269,8 @@ object TxLog {
                        column0: String, path: String,
                        maxAttempts: Int = 5): Long = {
     val phys = physicalName(spark, base, column0)
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val m = metaOf(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val m = t.meta
       val declared = m.varStats
       require(declared.exists(d => d._1 == phys && d._2 == path),
         s"no declared variant stats for $phys$path")
@@ -5788,12 +5281,10 @@ object TxLog {
         s"$phys$path is a registered CLUSTER BY key — " +
           "ALTER TABLE ... CLUSTER BY NONE (or re-cluster without " +
           "it) before dropping its stats declaration")
-      val (entries, txns) = manifest(spark, base, cur)
-      publishEntries(spark, base, cur + 1L, entries, txns,
-        dataChange = false, operation = "DROP VARIANT STATS",
+      t.publish(t.entries, dataChange = false,
+        operation = "DROP VARIANT STATS",
         meta = _.copy(varStats = declared.filterNot(d =>
           d._1 == phys && d._2 == path)))
-      cur + 1L
     }
   }
 
@@ -5808,8 +5299,7 @@ object TxLog {
                        path: String, targetType: String,
                        lo: Any, hi: Any): DataFrame = {
     import org.apache.spark.sql.functions._
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val key = s"${physicalName(spark, base, column0)}$path"
     val (l, h) = (reprOf(lo), reprOf(hi))
     val kept = TxLogPlan.pruneEntriesForScan(spark, base, v,
@@ -5822,22 +5312,21 @@ object TxLog {
         .between(lit(lo), lit(hi)))
   }
 
-  private[graft] def indexNewEntries(spark: SparkSession, base: String,
-                              entries: Seq[Entry])
-      : (Seq[Entry], Seq[String]) = {
+  private[graft] def indexNewEntries(t: Txn, entries: Seq[Entry])
+      : Seq[Entry] = {
     import org.apache.spark.sql.functions.{array, col, explode}
+    val (spark, base) = (t.spark, t.base)
     val indexable = entries.filter(_.rows > 0L)
-    if (indexable.isEmpty) return (entries, Nil)
+    if (indexable.isEmpty) return entries
     val existing = latestVersion(spark, base)
       .map(v => snapshotEntries(spark, base, v)).getOrElse(Seq.empty)
       .flatMap(_.blooms)
-    if (existing.isEmpty) return (entries, Nil)
+    if (existing.isEmpty) return entries
     val raw = spark.read.parquet(indexable.map(e => resolve(base, e.path)): _*)
     val byColumn = existing.groupBy(_.column).toSeq.sortBy(_._1)
       .filter { case (c, _) => raw.columns.contains(c) }
-    if (byColumn.isEmpty) return (entries, Nil)
+    if (byColumn.isEmpty) return entries
     var out = entries
-    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
     byColumn.foreach { case (column, refs) =>
       val proto = refs.maxBy(_.m) // densest group sets k and dtype
       // build-time bitsPerRow is not recorded; the default (16) keeps
@@ -5850,15 +5339,14 @@ object TxLog {
             bloomPosCols(col(column), m, proto.k, proto.dtype): _*))
             .as(DvPosCol))
         .distinct()
-      val dir = landDvDir(bits.repartition(col(DvFileCol)), base)
-      dirs += dir
+      val dir = landDvDir(t, bits.repartition(col(DvFileCol)))
       val ref = BloomRef(dir, column, m, proto.k, proto.dtype)
       out = out.map(e =>
         if (e.rows > 0L)
           e.copy(blooms = e.blooms.filterNot(_.column == column) :+ ref)
         else e)
     }
-    (out, dirs.toSeq)
+    out
   }
 
   /** Point-lookup pruning: entries of the latest version that can hold
@@ -5874,8 +5362,7 @@ object TxLog {
     import org.apache.spark.sql.functions.{col, countDistinct, lit}
     require(value != null, "point lookup value must be non-null")
     val column = physicalName(spark, base, column0)
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     val (entries, _) = manifest(spark, base, v)
     val repr = reprOf(value)
     val statsKept = entries.filter(touchesRange(_, column, repr, repr))
@@ -5975,30 +5462,31 @@ object TxLog {
     val df = toPhysicalIfMapped(spark, base, df0)
     val column = physicalName(spark, base, column0)
     val dtype = statsDtype(df.schema(column).dataType)
-    // land FIRST, validate from the landed files' own stats: one
-    // evaluation of df (a separate validation count would re-evaluate
-    // a non-deterministic plan, letting a misrouted row slip between
-    // the check and the land), and the landed min/max is exactly what
-    // later skipping will trust. A file without stats on the column
-    // holds all-NULL keys — NULL is not inside any range, reject too.
-    val newEntries0 = landEntriesMulti(df, base, Seq(column))
-    val misrouted = newEntries0.filter(_.rows != 0L).filterNot(e =>
-      e.statsFor(column).exists(st =>
-        cmp(dtype, st.min, l) >= 0 && cmp(dtype, st.max, h) <= 0))
-    if (misrouted.nonEmpty) {
-      discard(spark, base, newEntries0.map(_.path))
-      throw new IllegalArgumentException(
-        s"replaceRange: replacement rows must satisfy $column BETWEEN " +
-          s"$lo AND $hi (landed files ${misrouted.map(_.path).mkString(",")} " +
-          "fall outside — Delta's replaceWhere constraint, which keeps " +
-          "band skipping sound; nothing was published)")
-    }
-    val newEntries = newEntries0.filter(_.rows != 0L)
-    try withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val (touched, carried) = entries.partition(touchesRange(_, column, l, h))
+    txn(spark, base, maxAttempts) { t =>
+      // land FIRST, validate from the landed files' own stats: one
+      // evaluation of df (a separate validation count would re-evaluate
+      // a non-deterministic plan, letting a misrouted row slip between
+      // the check and the land), and the landed min/max is exactly what
+      // later skipping will trust. A file without stats on the column
+      // holds all-NULL keys — NULL is not inside any range, reject too.
+      // The batch is reused by every attempt; the survivor rewrite is
+      // per attempt.
+      val newEntries = t.once {
+        val landed = landEntriesMulti(t, df, Seq(column))
+          .filter(_.rows != 0L)
+        val misrouted = landed.filterNot(e =>
+          e.statsFor(column).exists(st =>
+            cmp(dtype, st.min, l) >= 0 && cmp(dtype, st.max, h) <= 0))
+        if (misrouted.nonEmpty) throw new IllegalArgumentException(
+          s"replaceRange: replacement rows must satisfy $column BETWEEN " +
+            s"$lo AND $hi (landed files ${misrouted.map(_.path).mkString(",")} " +
+            "fall outside — Delta's replaceWhere constraint, which keeps " +
+            "band skipping sound; nothing was published)")
+        landed
+      }
+      t.cur // the target must exist
+      val (touched, carried) =
+        t.entries.partition(touchesRange(_, column, l, h))
       val survivors =
         if (touched.isEmpty) Seq.empty
         else {
@@ -6006,24 +5494,12 @@ object TxLog {
               withRowIds = true)
             .where(!coalesce(
               col(column).between(lit(lo), lit(hi)), lit(false)))
-          landEntriesMulti(kept, base,
+          landEntriesMulti(t, kept,
             preservedStatsCols(touched, Seq(column), kept.schema))
             .filter(_.rows != 0L)
         }
-      try {
-        publishEntries(spark, base, cur + 1L,
-          carried ++ survivors ++ newEntries, txns,
-          operation = "REPLACE WHERE")
-        cur + 1L
-      } catch {
-        case e: CommitConflictException =>
-          // this attempt's survivor rewrite is dead; the replacement
-          // batch itself is kept for the retry
-          discard(spark, base, survivors.map(_.path)); throw e
-      }
-    } catch {
-      case e: CommitConflictException =>
-        discard(spark, base, newEntries.map(_.path)); throw e
+      t.publish(carried ++ survivors ++ newEntries,
+        operation = "REPLACE WHERE")
     }
   }
 
@@ -6078,69 +5554,30 @@ object TxLog {
     // entry stats are keyed physical; the caller's transform (and its
     // captured `column`/`residual` references) runs on the logical view
     val physCol = physicalName(spark, base, column)
-    // conflict-granular OCC, the COW-rewrite shape (see mergeCow): a
-    // CAS loss keeps the landed rewrite, and a DISJOINT winner — none
-    // of the touched files removed/replaced, nothing added whose
-    // stats overlap [lo, hi], metadata surface unchanged — re-bases
-    // with one manifest write instead of re-running the rewrite job.
-    // A COW DELETE of a cold band racing the streaming sink's appends
-    // on a 100 TB table costs one extra commit attempt, not a second
-    // pass over the band.
-    var rebase: Option[(Seq[Entry], Set[String], Map[String, String],
-      TableMeta)] = None // (newEntries, touchedPaths, base path→line, metaSig)
-    def discardRebase(): Unit = rebase.foreach { case (es, _, _, _) =>
-      discard(spark, base, es.map(_.path)); rebase = None }
-    try withCasRetry(maxAttempts) { attempt =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = metaOf(spark, base, cur).rebaseKey
-      val rebasable = rebase.filter { case (_, touchedP, baseBy, sig) =>
-        sig == metaSig && {
-          val curBy = entries.map(e => e.path -> serLine(e)).toMap
-          val removed = baseBy.keySet -- curBy.keySet
-          val addedOrReplaced = entries.filter(e =>
-            !baseBy.get(e.path).contains(serLine(e)))
-          removed.intersect(touchedP).isEmpty &&
-            addedOrReplaced.forall(e => !touchedP.contains(e.path) &&
-              !touchesRange(e, physCol, l, h))
+    // a CAS loss to a winner that added nothing overlapping [lo, hi]
+    // re-bases the landed rewrite (Txn rule 4): a COW DELETE of a cold
+    // band racing the streaming sink's appends costs one extra commit
+    // attempt, not a second rewrite job
+    val overlaps: Entry => Boolean = touchesRange(_, physCol, l, h)
+    txn(spark, base, maxAttempts, onAttempt) { t =>
+      t.rebase(Some(overlaps)) {
+        val touched = t.entries.filter(overlaps)
+        if (touched.isEmpty) None
+        else {
+          val rewritten = toPhysicalIfMapped(spark, base,
+            transform(logicalView(spark, base,
+              readEntriesCurrent(spark, base, touched,
+                withRowIds = true), keep = Seq(RowIdCol))))
+          Some((landEntriesMulti(t, rewritten,
+            preservedStatsCols(touched, Seq(physCol), rewritten.schema))
+            .filter(_.rows != 0L), touched))
         }
+      } match {
+        case None => t.cur
+        case Some(land) =>
+          t.publish(withoutInputs(t.entries, land) ++ land.value,
+            operation = op, cdfOp = cdfOp)
       }
-      rebasable match {
-        case Some((newEntries, touchedP, _, _)) =>
-          // disjoint winner: carry ITS entries (minus our touched
-          // inputs, replaced by the landed rewrite) — zero recompute
-          val carried2 = entries.filterNot(e => touchedP.contains(e.path))
-          publishEntries(spark, base, cur + 1L, carried2 ++ newEntries,
-            txns, operation = op, cdfOp = cdfOp)
-          cur + 1L
-        case None =>
-          discardRebase() // overlapping winner: the land is stale
-          val (touched, carried) =
-            entries.partition(touchesRange(_, physCol, l, h))
-          if (touched.isEmpty) cur
-          else {
-            val rewritten = toPhysicalIfMapped(spark, base,
-              transform(logicalView(spark, base,
-                readEntriesCurrent(spark, base, touched,
-                  withRowIds = true), keep = Seq(RowIdCol))))
-            val newEntries = landEntriesMulti(rewritten, base,
-              preservedStatsCols(touched, Seq(physCol), rewritten.schema))
-              .filter(_.rows != 0L)
-            // keep the land across a CAS loss: the next attempt's
-            // disjointness check decides re-base vs recompute
-            rebase = Some((newEntries, touched.map(_.path).toSet,
-              entries.map(e => e.path -> serLine(e)).toMap, metaSig))
-            publishEntries(spark, base, cur + 1L, carried ++ newEntries,
-              txns, operation = op, cdfOp = cdfOp)
-            cur + 1L
-          }
-      }
-    } catch {
-      // exhausted retries (or anything fatal): the kept-for-re-base
-      // land must not leak as an orphan txn dir
-      case e: Throwable => discardRebase(); throw e
     }
   }
 
@@ -6193,123 +5630,76 @@ object TxLog {
     def phys(c: String) = m.colMap.flatMap(_.physicalOf(c)).getOrElse(c)
     val statsCol = statsCol0.map(phys)
     val range = range0.map { case (c, lo, hi) => (phys(c), lo, hi) }
-    // conflict-granular OCC for maintenance (Delta's conflict checker
-    // allows OPTIMIZE to commit past a blind append): a CAS loss keeps
-    // the bin-packed output, and if every small INPUT file is still
-    // present unchanged in the winner's manifest — and the metadata
-    // surface didn't drift — the compaction RE-BASES: republish the
-    // same output as a declared delta, zero re-binning. The winner's
-    // own adds simply aren't compacted this round (the next OPTIMIZE
-    // sweeps them) — an OPTIMIZE racing a busy streaming sink on a
-    // 100 TB table costs one extra commit attempt, not a second
-    // rewrite job.
-    var rebase: Option[(Seq[Entry], Map[String, String], TableMeta)] =
-      None // (newEntries, small path→line, metaSig)
-    def discardRebase(): Unit = rebase.foreach { case (es, _, _) =>
-      discard(spark, base, es.map(_.path)); rebase = None }
-    try withCasRetry(maxAttempts) { attempt =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      onAttempt(attempt) // test seam: between snapshot read and publish
-      val rebasable = rebase.filter { case (_, smallBy, sig) =>
-        sig == metaOf(spark, base, cur).rebaseKey &&
-          currentLinesAt(spark, base, cur, smallBy.keySet)
-            .exists(curBy => smallBy.forall { case (p, l) =>
-              curBy.get(p).contains(l) })
-      }
-      rebasable match {
-        case Some((newEntries, smallBy, _)) =>
-          publishEntries(spark, base, cur + 1L, newEntries,
-            txnsOf(spark, base, cur), dataChange = false,
+    // a CAS loss to a winner that left every small INPUT unchanged
+    // re-bases the bin-packed output as a declared delta (Txn rule 4,
+    // no overlaps check — Delta's conflict checker lets OPTIMIZE commit
+    // past a blind append): the winner's own adds wait for the next
+    // OPTIMIZE, so racing a busy streaming sink costs one extra commit
+    // attempt, not a second rewrite job
+    txn(spark, base, maxAttempts, onAttempt) { t =>
+      var carriedOpt: Option[Seq[Entry]] = None
+      t.rebase(None) {
+        // LIVE rows drive the small-file test: a big file hollowed out
+        // by deletion vectors is exactly what compaction should fold in
+        // (the rewrite applies its mask and drops the sidecar ref).
+        // An OPTIMIZE ... WHERE range additionally scopes the candidate
+        // set to files whose stats overlap it — at 100 TB you compact
+        // the band the streaming sink is actively fragmenting, not the
+        // years of cold history behind it. Stats-less files
+        // conservatively stay in scope (they might overlap).
+        // Columnar-checkpoint tables select the candidates EXECUTOR-side
+        // and collect only them (the bin-packer's working set); the
+        // publish then declares its exact change set, so OPTIMIZE on a
+        // 10^6-file table never materializes the entry list either.
+        val rangeRepr = range.map { case (c, lo, hi) =>
+          (c, reprOf(lo), reprOf(hi)) }
+        val small = TxLogPlan.smallEntriesForCompact(spark, base, t.cur,
+            smallThresholdRows, rangeRepr).getOrElse {
+          val inScope: Entry => Boolean = rangeRepr match {
+            case Some((c, lo, hi)) => e => touchesRange(e, c, lo, hi)
+            case None => _ => true
+          }
+          val (sm, ca) = t.entries.partition(e =>
+            (e.rows < 0 || e.liveRows < smallThresholdRows) && inScope(e))
+          carriedOpt = Some(ca)
+          sm
+        }
+        if (small.size <= 1) None // nothing to bin-pack
+        else {
+          // unknown-row (v1) files are rewritten but can't be sized —
+          // budget one output file each so a whole unknown table never
+          // funnels into a single task; the rewrite records row counts,
+          // so a second compact() can then bin-pack them for real
+          val unknown = small.count(_.rows < 0)
+          val knownRows = small.filter(_.rows >= 0).map(_.liveRows).sum
+          val nOut = math.max(1L,
+            (knownRows + targetRows - 1) / targetRows + unknown).toInt
+          val smallDf = readEntriesCurrent(spark, base, small,
+            withRowIds = true)
+          // keep the cluster layout when the caller has one: range
+          // repartition re-establishes band-per-file so stats skipping
+          // stays sharp after compaction
+          val packed = statsCol match {
+            case Some(c) => smallDf.repartitionByRange(
+              nOut, org.apache.spark.sql.functions.col(c))
+            case None => smallDf.repartition(nOut)
+          }
+          Some((landEntriesMulti(t, packed,
+            preservedStatsCols(small, statsCol.toSeq, packed.schema)), small))
+        }
+      } match {
+        case None => t.cur
+        case Some(land) =>
+          // a re-base (or a columnar table) declares the change set; a
+          // fresh text-table pack republishes the carried entries
+          t.publish(carriedOpt.fold(land.value)(_ ++ land.value),
+            dataChange = false, // bin-pack moves bytes, not rows: CDF skips
             operation = "OPTIMIZE",
-            deltaChange = Some(smallBy.keySet.toSeq))
-          cur + 1L
-        case None =>
-          discardRebase() // an input changed: the bin-pack is stale
-      // LIVE rows drive the small-file test: a big file hollowed out
-      // by deletion vectors is exactly what compaction should fold in
-      // (the rewrite applies its mask and drops the sidecar ref).
-      // An OPTIMIZE ... WHERE range additionally scopes the candidate
-      // set to files whose stats overlap it — at 100 TB you compact
-      // the band the streaming sink is actively fragmenting, not the
-      // years of cold history behind it. Stats-less files conservatively
-      // stay in scope (they might overlap).
-      // Columnar-checkpoint tables select the candidates EXECUTOR-side
-      // and collect only them (the bin-packer's working set); the
-      // publish then declares its exact change set, so OPTIMIZE on a
-      // 10^6-file table never materializes the entry list either.
-      val rangeRepr = range.map { case (c, lo, hi) =>
-        (c, reprOf(lo), reprOf(hi)) }
-      val metaSig = metaOf(spark, base, cur).rebaseKey
-      val (small, carriedOpt, txns) =
-        TxLogPlan.smallEntriesForCompact(spark, base, cur,
-            smallThresholdRows, rangeRepr) match {
-          case Some(sm) => (sm, None, txnsOf(spark, base, cur))
-          case None =>
-            val (entries, t) = manifest(spark, base, cur)
-            val inScope: Entry => Boolean = rangeRepr match {
-              case Some((c, lo, hi)) => e => touchesRange(e, c, lo, hi)
-              case None => _ => true
-            }
-            val (sm, ca) = entries.partition(e =>
-              (e.rows < 0 || e.liveRows < smallThresholdRows) && inScope(e))
-            (sm, Some(ca), t)
-        }
-      if (small.size <= 1) cur // nothing to bin-pack
-      else {
-        // unknown-row (v1) files are rewritten but can't be sized —
-        // budget one output file each so a whole unknown table never
-        // funnels into a single task; the rewrite records row counts,
-        // so a second compact() can then bin-pack them for real
-        val unknown = small.count(_.rows < 0)
-        val knownRows = small.filter(_.rows >= 0).map(_.liveRows).sum
-        val nOut = math.max(1L,
-          (knownRows + targetRows - 1) / targetRows + unknown).toInt
-        val smallDf = readEntriesCurrent(spark, base, small,
-          withRowIds = true)
-        // keep the cluster layout when the caller has one: range
-        // repartition re-establishes band-per-file so stats skipping
-        // stays sharp after compaction
-        val packed = statsCol match {
-          case Some(c) => smallDf.repartitionByRange(
-            nOut, org.apache.spark.sql.functions.col(c))
-          case None => smallDf.repartition(nOut)
-        }
-        val newEntries = landEntriesMulti(packed, base,
-          preservedStatsCols(small, statsCol.toSeq, packed.schema))
-        // keep the land across a CAS loss: the next attempt's
-        // input-unchanged check decides re-base vs re-bin
-        rebase = Some((newEntries,
-          small.map(e => e.path -> serLine(e)).toMap, metaSig))
-        publishEntries(spark, base, cur + 1L,
-          carriedOpt.map(_ ++ newEntries).getOrElse(newEntries), txns,
-          dataChange = false, // bin-pack moves bytes, not rows: CDF skips
-          operation = "OPTIMIZE",
-          deltaChange =
-            if (carriedOpt.isEmpty) Some(small.map(_.path)) else None)
-        cur + 1L
+            deltaChange =
+              if (carriedOpt.isEmpty) Some(land.inputs.map(_.path)) else None)
       }
-      }
-    } catch {
-      // exhausted retries (or anything fatal): the kept-for-re-base
-      // land must not leak as an orphan txn dir
-      case e: Throwable => discardRebase(); throw e
     }
   }
-
-  /** The serialized lines of exactly `paths` at version `v` — the
-    * maintenance re-base check's point lookup. Distributed on
-    * columnar tables ([[TxLogPlan.entriesAtPaths]]); a driver
-    * manifest sweep otherwise. None never escapes: the fallback
-    * always answers. */
-  private def currentLinesAt(spark: SparkSession, base: String, v: Long,
-                             paths: Set[String])
-      : Option[Map[String, String]] = Some(
-    TxLogPlan.entriesAtPaths(spark, base, v, paths)
-      .getOrElse(manifest(spark, base, v)._1
-        .filter(e => paths.contains(e.path))
-        .map(e => e.path -> e).toMap)
-      .map { case (p, e) => p -> serLine(e) })
 
   /** Z-order maintenance (Delta `OPTIMIZE ... ZORDER BY (a, b)`
     * analog, unifying [[Layout.zorderCluster]] with the log): rewrite
@@ -6407,99 +5797,77 @@ object TxLog {
                                        maxAttempts: Int = 5,
                                        onAttempt: Int => Unit = _ => ())
       : Long = {
-    // maintenance re-base, the ZORDER shape (see compact): a CAS loss
-    // keeps the tiled output; unchanged inputs + unchanged metadata →
-    // republish as a declared delta, zero re-tiling. The winner's adds
-    // wait for the next sweep.
-    var rebase: Option[(Seq[Entry], Map[String, String], TableMeta)] = None
-    def discardRebase(): Unit = rebase.foreach { case (es, _, _) =>
-      discard(spark, base, es.map(_.path)); rebase = None }
-    try withCasRetry(maxAttempts) { attempt =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      onAttempt(attempt) // test seam: between snapshot read and publish
-      val metaSig = metaOf(spark, base, cur).rebaseKey
-      val rebasable = rebase.filter { case (_, tiledBy, sig) =>
-        sig == metaSig && {
-          val curBy = entries.map(e => e.path -> serLine(e)).toMap
-          tiledBy.forall { case (p, l) => curBy.get(p).contains(l) }
+    // a CAS loss to a winner that left every input tile unchanged
+    // re-bases the tiled output as a declared delta (Txn rule 4, no
+    // overlaps check, as compact): the winner's adds wait for the next
+    // sweep
+    txn(spark, base, maxAttempts, onAttempt) { t =>
+      t.rebase(None) {
+        val entries = t.entries
+        // rewrite candidates: WEAK files (small, unknown-row, or
+        // stat-less on any key) plus every well-tiled file whose
+        // stats box a weak file's box POLLUTES — those tiles would keep
+        // co-answering box probes with the straggler forever. Adjacent
+        // tiles of a healthy layout legitimately touch boxes, so
+        // big-vs-big overlap is deliberately NOT a trigger: a fully
+        // tiled table is a fixpoint and the verb converges.
+        val weak = entries.filter(e => e.rows < 0 ||
+          e.liveRows < smallThresholdRows ||
+          cols.exists(c => e.statsFor(c).isEmpty)).toSet
+        def boxOf(e: Entry): Option[Seq[ColStats]] = {
+          val ss = cols.flatMap(e.statsFor)
+          if (ss.size == cols.size) Some(ss) else None
         }
+        val weakBoxes = weak.toSeq.flatMap(boxOf)
+        val polluted = entries.filterNot(weak).filter { e =>
+          boxOf(e).exists(box => weakBoxes.exists(wb =>
+            box.zip(wb).forall { case (s, w) => s.overlaps(w.min, w.max) }))
+        }.map(_.path).toSet
+        val touched = entries.filter(e =>
+          weak.contains(e) || polluted.contains(e.path))
+        if (weak.isEmpty || touched.size <= 1) None
+        else {
+          val unknown = touched.count(_.rows < 0)
+          val knownRows = touched.filter(_.rows >= 0).map(_.liveRows).sum
+          // FLOOR sizing (unlike compact's ceil): an output tile may run
+          // up to ~2× targetRows, but never systematically UNDER the
+          // small threshold — undersized outputs would re-trigger the
+          // verb forever (convergence beats tile-size precision here)
+          val nOut = math.max(1L, knownRows / targetRows + unknown).toInt
+          val touchedDf = readEntriesCurrent(spark, base, touched,
+            withRowIds = true)
+          // variant keys re-tile on their declared extraction — the
+          // same expression the write path collects stats through
+          val varDecls = t.meta.varStats
+          def exprOf(k: String) =
+            if (variantKeySplit(k).isDefined) variantKeyExpr(k, varDecls)
+            else None
+          val tiled =
+            try {
+              if (cols.size == 1) { // single-variant-key cluster sweep
+                val ex = exprOf(cols.head).getOrElse(
+                  org.apache.spark.sql.functions.col(cols.head))
+                touchedDf.repartitionByRange(nOut, ex)
+                  .sortWithinPartitions(ex)
+              } else Layout.zorderClusterK(touchedDf, cols, nOut, exprOf)
+            } catch { // all-NULL keys: nothing to tile on, plain bin-pack
+              case _: IllegalArgumentException => touchedDf.repartition(nOut)
+            }
+          Some((landEntriesMulti(t, tiled,
+            preservedStatsCols(touched, cols, tiled.schema))
+            .filter(_.rows != 0L), touched))
+        }
+      } match {
+        case None => t.cur
+        case Some(land) if land.rebased =>
+          t.publish(land.value, dataChange = false,
+            operation = "OPTIMIZE ZORDER",
+            deltaChange = Some(land.inputs.map(_.path)))
+        case Some(land) =>
+          t.publish(withoutInputs(t.entries, land) ++ land.value,
+            dataChange = false, // physical re-tiling only: CDF skips
+            operation = "OPTIMIZE ZORDER")
       }
-      rebasable match {
-        case Some((newEntries, tiledBy, _)) =>
-          publishEntries(spark, base, cur + 1L, newEntries, txns,
-            dataChange = false, operation = "OPTIMIZE ZORDER",
-            deltaChange = Some(tiledBy.keySet.toSeq))
-          cur + 1L
-        case None =>
-          discardRebase()
-      // rewrite candidates: WEAK files (small, unknown-row, or
-      // stat-less on any key) plus every well-tiled file whose
-      // stats box a weak file's box POLLUTES — those tiles would keep
-      // co-answering box probes with the straggler forever. Adjacent
-      // tiles of a healthy layout legitimately touch boxes, so
-      // big-vs-big overlap is deliberately NOT a trigger: a fully
-      // tiled table is a fixpoint and the verb converges.
-      val weak = entries.filter(e => e.rows < 0 ||
-        e.liveRows < smallThresholdRows ||
-        cols.exists(c => e.statsFor(c).isEmpty)).toSet
-      def boxOf(e: Entry): Option[Seq[ColStats]] = {
-        val ss = cols.flatMap(e.statsFor)
-        if (ss.size == cols.size) Some(ss) else None
-      }
-      val weakBoxes = weak.toSeq.flatMap(boxOf)
-      val polluted = entries.filterNot(weak).filter { e =>
-        boxOf(e).exists(box => weakBoxes.exists(wb =>
-          box.zip(wb).forall { case (s, w) => s.overlaps(w.min, w.max) }))
-      }.map(_.path).toSet
-      val (touched, carried) = entries.partition(e =>
-        weak.contains(e) || polluted.contains(e.path))
-      if (weak.isEmpty || touched.size <= 1) cur
-      else {
-        val unknown = touched.count(_.rows < 0)
-        val knownRows = touched.filter(_.rows >= 0).map(_.liveRows).sum
-        // FLOOR sizing (unlike compact's ceil): an output tile may run
-        // up to ~2× targetRows, but never systematically UNDER the
-        // small threshold — undersized outputs would re-trigger the
-        // verb forever (convergence beats tile-size precision here)
-        val nOut = math.max(1L, knownRows / targetRows + unknown).toInt
-        val touchedDf = readEntriesCurrent(spark, base, touched,
-          withRowIds = true)
-        // variant keys re-tile on their declared extraction — the
-        // same expression the write path collects stats through
-        val varDecls = metaOf(spark, base, cur).varStats
-        def exprOf(k: String) =
-          if (variantKeySplit(k).isDefined) variantKeyExpr(k, varDecls)
-          else None
-        val tiled =
-          try {
-            if (cols.size == 1) { // single-variant-key cluster sweep
-              val ex = exprOf(cols.head).getOrElse(
-                org.apache.spark.sql.functions.col(cols.head))
-              touchedDf.repartitionByRange(nOut, ex)
-                .sortWithinPartitions(ex)
-            } else Layout.zorderClusterK(touchedDf, cols, nOut, exprOf)
-          } catch { // all-NULL keys: nothing to tile on, plain bin-pack
-            case _: IllegalArgumentException => touchedDf.repartition(nOut)
-          }
-        val newEntries = landEntriesMulti(tiled, base,
-          preservedStatsCols(touched, cols, tiled.schema))
-          .filter(_.rows != 0L)
-        // keep the land across a CAS loss: the next attempt's
-        // input-unchanged check decides re-base vs re-tile
-        rebase = Some((newEntries,
-          touched.map(e => e.path -> serLine(e)).toMap, metaSig))
-        publishEntries(spark, base, cur + 1L, carried ++ newEntries, txns,
-          dataChange = false, // physical re-tiling only: CDF skips
-          operation = "OPTIMIZE ZORDER")
-        cur + 1L
-      }
-      }
-    } catch {
-      // exhausted retries (or anything fatal): the kept-for-re-base
-      // land must not leak as an orphan txn dir
-      case e: Throwable => discardRebase(); throw e
     }
   }
 
@@ -6709,9 +6077,8 @@ object TxLog {
     * the version published. */
   def transact(spark: SparkSession, base: String, maxAttempts: Int = 5)
               (body: Option[DataFrame] => DataFrame): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base)
-      commit(body(cur.map(v => readVersion(spark, base, v))), base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      commitIn(t, body(t.read.map(readVersion(spark, base, _))), Seq.empty)
     }
 
   /** Version history (Delta DESCRIBE HISTORY analog): one row per
@@ -6768,8 +6135,7 @@ object TxLog {
     * file for byte sizes — a maintenance verb, not a query-path one
     * (Delta's own DESCRIBE DETAIL pays the same listing). */
   def describeDetail(spark: SparkSession, base: String): DataFrame = {
-    val v = latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = requireLatest(spark, base)
     // ONE read of the latest manifest serves entries (via the
     // snapshot cache), txn map, and table metadata — not a second
     // full-file round trip just for the meta lines
@@ -6826,9 +6192,8 @@ object TxLog {
     * files were already vacuumed. Returns the new version. */
   def restore(spark: SparkSession, base: String, v: Long,
               maxAttempts: Int = 5): Long =
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
+    txn(spark, base, maxAttempts) { t =>
+      val cur = t.cur
       require(v >= 1 && v <= cur,
         s"cannot restore version $v of a table at version $cur")
       // restore the TARGET version's constraint set too (table state =
@@ -6844,16 +6209,12 @@ object TxLog {
         _.copy(constraints = metaOf(spark, base, v).constraints)
       TxLogPlan.restoreDelta(spark, base, v, cur) match {
         case Some((upserts, removes)) =>
-          publishEntries(spark, base, cur + 1L, upserts,
-            txnsOf(spark, base, cur), operation = "RESTORE",
+          t.publish(upserts, operation = "RESTORE",
             deltaChange = Some(removes), meta = restored)
         case None =>
-          val (entries, _) = manifest(spark, base, v)
-          val (_, txns) = manifest(spark, base, cur)
-          publishEntries(spark, base, cur + 1L, entries, txns,
-            operation = "RESTORE", meta = restored)
+          t.publish(snapshotEntries(spark, base, v), operation = "RESTORE",
+            meta = restored)
       }
-      cur + 1L
     }
 
   /** The source snapshot a clone materializes: the latest version, or
@@ -6862,8 +6223,7 @@ object TxLog {
     * metadata: schema, constraints, widen lines, everything). */
   private def cloneSourceVersion(spark: SparkSession, srcBase: String,
                                  versionAsOf: Option[Long]): Long = {
-    val latest = latestVersion(spark, srcBase).getOrElse(
-      throw new IllegalStateException(s"no committed version at $srcBase"))
+    val latest = requireLatest(spark, srcBase)
     versionAsOf match {
       case Some(v) =>
         require(v >= 1 && v <= latest,
@@ -6895,33 +6255,33 @@ object TxLog {
     * live. The clone starts with an empty txn map (it is a new table
     * for exactly-once purposes). */
   def cloneShallow(spark: SparkSession, srcBase: String,
-                   dstBase: String, versionAsOf: Option[Long] = None): Long = {
-    require(latestVersion(spark, dstBase).isEmpty,
-      s"clone destination $dstBase already has committed versions")
-    val v = cloneSourceVersion(spark, srcBase, versionAsOf)
-    // qualify the source base so the clone's references stay valid
-    // from any working directory / filesystem resolution
-    val srcAbs = {
-      val p = new Path(srcBase)
-      if (p.toUri.getScheme == null)
-        fs(srcBase, spark).makeQualified(p).toUri.getPath
-      else p.toString
+                   dstBase: String, versionAsOf: Option[Long] = None): Long =
+    txn(spark, dstBase, maxAttempts = 1) { t =>
+      require(t.read.isEmpty,
+        s"clone destination $dstBase already has committed versions")
+      val v = cloneSourceVersion(spark, srcBase, versionAsOf)
+      // qualify the source base so the clone's references stay valid
+      // from any working directory / filesystem resolution
+      val srcAbs = {
+        val p = new Path(srcBase)
+        if (p.toUri.getScheme == null)
+          fs(srcBase, spark).makeQualified(p).toUri.getPath
+        else p.toString
+      }
+      val (entries, _) = manifest(spark, srcBase, v)
+      val cloned = entries.map(e => e.copy(
+        path = resolve(srcAbs, e.path),
+        dv = e.dv.map(d => d.copy(dir = resolve(srcAbs, d.dir))),
+        blooms = e.blooms.map(b => b.copy(dir = resolve(srcAbs, b.dir)))))
+      // the clone inherits the source version's table metadata (Delta
+      // clones carry it): a writable dev copy must neither accept rows
+      // the source would veto, nor restart identity allocation at 1 over
+      // cloned-in ids, nor serve a mapped source's PHYSICAL names, nor
+      // drop the partition/generated/widen/cluster declarations or the
+      // row-id high-water its entries' id spans depend on
+      t.publish(cloned, Map.empty, operation = "CLONE",
+        meta = cloneMeta(spark, srcBase, v))
     }
-    val (entries, _) = manifest(spark, srcBase, v)
-    val cloned = entries.map(e => e.copy(
-      path = resolve(srcAbs, e.path),
-      dv = e.dv.map(d => d.copy(dir = resolve(srcAbs, d.dir))),
-      blooms = e.blooms.map(b => b.copy(dir = resolve(srcAbs, b.dir)))))
-    // the clone inherits the source version's table metadata (Delta
-    // clones carry it): a writable dev copy must neither accept rows
-    // the source would veto, nor restart identity allocation at 1 over
-    // cloned-in ids, nor serve a mapped source's PHYSICAL names, nor
-    // drop the partition/generated/widen/cluster declarations or the
-    // row-id high-water its entries' id spans depend on
-    publishEntries(spark, dstBase, 1L, cloned, Map.empty,
-      operation = "CLONE", meta = cloneMeta(spark, srcBase, v))
-    1L
-  }
 
   /** Deep clone (Delta `CREATE TABLE ... DEEP CLONE`): materialize an
     * INDEPENDENT copy of the source's latest snapshot. Every live
@@ -6940,74 +6300,78 @@ object TxLog {
     * the copied rows ARE the same rows, so row lineage survives the
     * clone. */
   def cloneDeep(spark: SparkSession, srcBase: String,
-                dstBase: String, versionAsOf: Option[Long] = None): Long = {
-    require(latestVersion(spark, dstBase).isEmpty,
-      s"clone destination $dstBase already has committed versions")
-    val v = cloneSourceVersion(spark, srcBase, versionAsOf)
-    def qualify(b: String): String = {
-      val p = new Path(b)
-      if (p.toUri.getScheme == null)
-        fs(b, spark).makeQualified(p).toUri.getPath
-      else p.toString
-    }
-    val srcAbs = qualify(srcBase)
-    val dstAbs = qualify(dstBase)
-    val (entries, _) = manifest(spark, srcBase, v)
-    // Destination-relative home for each source path: relative source
-    // paths keep their shape (txn-dir grouping stays intact, so the
-    // clone's own vacuum liveness walk sees the same structure);
-    // absolute entries (the source was itself a shallow clone) are
-    // re-homed under synthetic txn dirs, indexed so names are unique
-    // by construction.
-    def rehome(path: String, i: Int): String =
-      if (!isAbsolute(path)) path
-      else s"$DataDir/deepclone-$i/${new Path(path).getName}"
-    val filePairs = entries.zipWithIndex.map { case (e, i) =>
-      (resolve(srcAbs, e.path), rehome(e.path, i)) }
-    // Sidecar dirs (DV masks, bloom indexes) copy at dir granularity:
-    // a handful per table, so the driver-side file listing is bounded
-    // metadata, never data.
-    val dirPairs = (entries.flatMap(_.dv.map(_.dir)) ++
-      entries.flatMap(_.blooms.map(_.dir))).distinct.zipWithIndex.map {
-      case (d, i) =>
-        val dRel = if (!isAbsolute(d)) d else s"$DataDir/deepclone-dv-$i"
-        (d, resolve(srcAbs, d), dRel)
-    }
-    val sidecarFiles = dirPairs.flatMap { case (_, sAbs, dRel) =>
-      // resolve the FS per DIR: an absolute (cloned-in) sidecar may
-      // live on a different filesystem than the source base
-      val sp = new Path(sAbs)
-      sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(sp).toSeq.filter(_.isFile).map(st =>
-          (st.getPath.toString, s"$dRel/${st.getPath.getName}"))
-    }
-    val dirMap = dirPairs.map { case (orig, _, dRel) => orig -> dRel }.toMap
-    val allPairs = (filePairs ++ sidecarFiles).map { case (s0, dRel) =>
-      (s0, s"$dstAbs/$dRel") }
-    if (allPairs.nonEmpty) {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)
-      val slices = math.max(1, math.min(allPairs.size,
-        spark.sparkContext.defaultParallelism * 2))
-      spark.sparkContext.parallelize(allPairs, slices).foreach {
-        case (srcP, dstP) =>
-          val sp = new Path(srcP)
-          val dp = new Path(dstP)
-          org.apache.hadoop.fs.FileUtil.copy(
-            sp.getFileSystem(conf.value), sp,
-            dp.getFileSystem(conf.value), dp,
-            false, true, conf.value)
+                dstBase: String, versionAsOf: Option[Long] = None): Long =
+    txn(spark, dstBase, maxAttempts = 1) { t =>
+      require(t.read.isEmpty,
+        s"clone destination $dstBase already has committed versions")
+      val v = cloneSourceVersion(spark, srcBase, versionAsOf)
+      def qualify(b: String): String = {
+        val p = new Path(b)
+        if (p.toUri.getScheme == null)
+          fs(b, spark).makeQualified(p).toUri.getPath
+        else p.toString
       }
+      val srcAbs = qualify(srcBase)
+      val dstAbs = qualify(dstBase)
+      val (entries, _) = manifest(spark, srcBase, v)
+      // Destination-relative home for each source path: relative source
+      // paths keep their shape (txn-dir grouping stays intact, so the
+      // clone's own vacuum liveness walk sees the same structure);
+      // absolute entries (the source was itself a shallow clone) are
+      // re-homed under synthetic txn dirs, indexed so names are unique
+      // by construction.
+      def rehome(path: String, i: Int): String =
+        if (!isAbsolute(path)) path
+        else s"$DataDir/deepclone-$i/${new Path(path).getName}"
+      val filePairs = entries.zipWithIndex.map { case (e, i) =>
+        (resolve(srcAbs, e.path), rehome(e.path, i)) }
+      // Sidecar dirs (DV masks, bloom indexes) copy at dir granularity:
+      // a handful per table, so the driver-side file listing is bounded
+      // metadata, never data.
+      val dirPairs = (entries.flatMap(_.dv.map(_.dir)) ++
+        entries.flatMap(_.blooms.map(_.dir))).distinct.zipWithIndex.map {
+        case (d, i) =>
+          val dRel = if (!isAbsolute(d)) d else s"$DataDir/deepclone-dv-$i"
+          (d, resolve(srcAbs, d), dRel)
+      }
+      val sidecarFiles = dirPairs.flatMap { case (_, sAbs, dRel) =>
+        // resolve the FS per DIR: an absolute (cloned-in) sidecar may
+        // live on a different filesystem than the source base
+        val sp = new Path(sAbs)
+        sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .listStatus(sp).toSeq.filter(_.isFile).map(st =>
+            (st.getPath.toString, s"$dRel/${st.getPath.getName}"))
+      }
+      val dirMap = dirPairs.map { case (orig, _, dRel) => orig -> dRel }.toMap
+      val allPairs = (filePairs ++ sidecarFiles).map { case (s0, dRel) =>
+        (s0, s"$dstAbs/$dRel") }
+      val cloned = entries.zipWithIndex.map { case (e, i) => e.copy(
+        path = rehome(e.path, i),
+        dv = e.dv.map(d => d.copy(dir = dirMap(d.dir))),
+        blooms = e.blooms.map(b => b.copy(dir = dirMap(b.dir))))
+      }
+      // the copies land in the clone's own txn dirs: staged, so a
+      // failed copy leaves no partial clone behind
+      t.stage(cloned)
+      dirPairs.foreach { case (_, _, dRel) => t.stageDir(dRel) }
+      if (allPairs.nonEmpty) {
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        val slices = math.max(1, math.min(allPairs.size,
+          spark.sparkContext.defaultParallelism * 2))
+        spark.sparkContext.parallelize(allPairs, slices).foreach {
+          case (srcP, dstP) =>
+            val sp = new Path(srcP)
+            val dp = new Path(dstP)
+            org.apache.hadoop.fs.FileUtil.copy(
+              sp.getFileSystem(conf.value), sp,
+              dp.getFileSystem(conf.value), dp,
+              false, true, conf.value)
+        }
+      }
+      t.publish(cloned, Map.empty, operation = "CLONE DEEP",
+        meta = cloneMeta(spark, srcBase, v))
     }
-    val cloned = entries.zipWithIndex.map { case (e, i) => e.copy(
-      path = rehome(e.path, i),
-      dv = e.dv.map(d => d.copy(dir = dirMap(d.dir))),
-      blooms = e.blooms.map(b => b.copy(dir = dirMap(b.dir))))
-    }
-    publishEntries(spark, dstBase, 1L, cloned, Map.empty,
-      operation = "CLONE DEEP", meta = cloneMeta(spark, srcBase, v))
-    1L
-  }
 
   /** `ALTER TABLE t DROP FEATURE <name>` (Delta 3.4's protocol
     * downgrade): remove a table feature AND lower the protocol floors
@@ -7041,11 +6405,8 @@ object TxLog {
       throw new IllegalArgumentException(
         s"unknown table feature '$feature0' — droppable features: " +
           supported.mkString(", ")))
-    withCasRetry(maxAttempts) { _ =>
-      val cur = latestVersion(spark, base).getOrElse(
-        throw new IllegalStateException(s"no committed version at $base"))
-      val (entries, txns) = manifest(spark, base, cur)
-      val m = metaOf(spark, base, cur)
+    txn(spark, base, maxAttempts) { t =>
+      val (cur, entries, m) = (t.cur, t.entries, t.meta)
       // DROP FEATURE is the one verb allowed to LOWER the protocol
       // floor: it resets it to (1, 1) and the publish re-derives the
       // stamp from the features still present (the writer gate has
@@ -7056,23 +6417,19 @@ object TxLog {
         case "rowTracking" =>
           require(m.rowIdHighWater.isDefined,
             s"$base does not have rowTracking enabled")
-          publishEntries(spark, base, cur + 1L,
-            entries.map(_.copy(baseRowId = None)), txns,
+          t.publish(entries.map(_.copy(baseRowId = None)),
             dataChange = false, operation = "DROP FEATURE rowTracking",
             meta = dropping(_.copy(rowIdHighWater = None)))
-          cur + 1L
         case "clustering" =>
           require(m.cluster.nonEmpty, s"$base has no clustering keys")
-          publishEntries(spark, base, cur + 1L, entries, txns,
-            dataChange = false, operation = "DROP FEATURE clustering",
+          t.publish(entries, dataChange = false,
+            operation = "DROP FEATURE clustering",
             meta = dropping(_.copy(cluster = Seq.empty)))
-          cur + 1L
         case "columnDefaults" =>
           require(m.defaults.nonEmpty, s"$base has no column defaults")
-          publishEntries(spark, base, cur + 1L, entries, txns,
-            dataChange = false, operation = "DROP FEATURE columnDefaults",
+          t.publish(entries, dataChange = false,
+            operation = "DROP FEATURE columnDefaults",
             meta = dropping(_.copy(defaults = Seq.empty)))
-          cur + 1L
         case "typeWidening" =>
           require(m.widened.nonEmpty, s"$base has no widened columns")
           // files that can still hold narrow bytes are exactly those
@@ -7095,20 +6452,13 @@ object TxLog {
             else {
               val df = readEntriesCurrent(spark, base, narrow,
                 withRowIds = true)
-              landEntriesMulti(df, base,
+              landEntriesMulti(t, df,
                 preservedStatsCols(narrow, Seq.empty, df.schema))
                 .filter(_.rows != 0L)
             }
-          try {
-            publishEntries(spark, base, cur + 1L, carried ++ rewritten,
-              txns, dataChange = false,
-              operation = "DROP FEATURE typeWidening",
-              meta = dropping(_.copy(widened = Seq.empty)))
-            cur + 1L
-          } catch {
-            case e: CommitConflictException =>
-              discard(spark, base, rewritten.map(_.path)); throw e
-          }
+          t.publish(carried ++ rewritten, dataChange = false,
+            operation = "DROP FEATURE typeWidening",
+            meta = dropping(_.copy(widened = Seq.empty)))
       }
     }
   }

@@ -184,7 +184,7 @@ object TxLogPlan {
       s"$PqMarkerPrefix${pqDirName(v)}"
 
   /** Write a columnar checkpoint from a driver entry list (the
-    * commit-path bridge: publishEntries already holds the list). The
+    * commit-path bridge: Txn.publish already holds the list). The
     * parquet job distributes the WRITE; [[writeCheckpointParquetDF]]
     * is the fully driver-bounded path for maintenance verbs. */
   private[graft] def writeCheckpointParquet(spark: SparkSession,
@@ -595,7 +595,7 @@ object TxLogPlan {
     import spark.implicits._
     // refs(drop) = snapshot(minDrop) ∪ delta-adds in (minDrop, maxDrop]
     // — full manifests inside the range contribute their whole entry
-    // list (legacy tables only; publishEntries always writes deltas)
+    // list (legacy tables only; Txn.publish always writes deltas)
     def refsOver(lo: Long, hi: Long): DataFrame = {
       var df = snapshotDF(spark, base, lo)
       val extra = scala.collection.mutable.ListBuffer.empty[String]
@@ -685,8 +685,7 @@ object TxLogPlan {
     * every snapshot resolution and planning verb goes distributed).
     * Returns the checkpointed version. */
   def checkpointParquet(spark: SparkSession, base: String): Long = {
-    val v = TxLog.latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val v = TxLog.requireLatest(spark, base)
     val meta = TxLog.manifestLines(spark, base, v)
       .filter(l => l.startsWith("#") && l != TxLog.DeltaMarker)
     writeCheckpointParquetDF(spark, base, v, meta,

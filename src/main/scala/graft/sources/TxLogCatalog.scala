@@ -393,11 +393,13 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
     // #generatedcol line the write verbs compute and every write path
     // validates. Pairs with PARTITIONED BY (day): the Delta-recommended
     // derived-partition pattern.
-    TxLog.publishEntries(spark, dir.toString, 1L, Seq.empty, Map.empty,
-      operation = "CREATE TABLE",
-      meta = _.copy(schema = Some(schema), partitions = pspec,
-        generated = gens, identity = identitySeeds, cluster = ckeys,
-        defaults = dflts))
+    graft.operators.Txn.run(spark, dir.toString, maxAttempts = 1,
+        onAttempt = _ => (), pinned = Some(None)) { t => // a fresh dir
+      t.publish(Seq.empty, Map.empty, operation = "CREATE TABLE",
+        meta = _.copy(schema = Some(schema), partitions = pspec,
+          generated = gens, identity = identitySeeds, cluster = ckeys,
+          defaults = dflts))
+    }
     new TxLogTable(schema, dir.toString)
   }
 
@@ -700,13 +702,14 @@ class StagedTxLogTable(base: String, ident: Identifier,
 
   override def commitStagedChanges(): Unit = {
     val spark = SparkSession.active
-    TxLog.withCasRetry(5) { _ =>
-      val cur = TxLog.latestVersion(spark, base)
+    TxLog.txn(spark, base) { t =>
+      // the landed CTAS/RTAS files are reused by every attempt
+      val entries = t.once(t.stage(staged))
       // a pure CTAS losing a creation race must FAIL, never silently
       // replace the winner's table
-      if (cur.isDefined && !allowReplace)
+      if (t.read.isDefined && !allowReplace)
         throw new TableAlreadyExistsException(Seq(ident.toString))
-      if (cur.isEmpty) {
+      if (t.read.isEmpty) {
         require(!mustExist,
           s"REPLACE TABLE $ident: the table vanished while staged")
         val f = new Path(base)
@@ -718,14 +721,12 @@ class StagedTxLogTable(base: String, ident: Identifier,
         // lines keep time travel seeing each version's own)
         catalog.writeSchemaSidecar(base, tableSchema)
       }
-      val txns = cur.map(v =>
-        TxLog.manifest(spark, base, v)._2).getOrElse(Map.empty)
       // the new definition's metadata replaces the old wholesale; only
-      // the protocol floor carries (requirements never regress)
-      TxLog.publishEntries(spark, base, cur.getOrElse(0L) + 1L, staged,
-        txns, // exactly-once sink cursors survive, like RESTORE
+      // the protocol floor carries (requirements never regress);
+      // exactly-once sink cursors survive, like RESTORE
+      t.publish(entries,
         operation =
-          if (cur.isEmpty) "CREATE TABLE AS SELECT" else "REPLACE TABLE",
+          if (t.read.isEmpty) "CREATE TABLE AS SELECT" else "REPLACE TABLE",
         meta = m => TableMeta(schema = Some(tableSchema), partitions = pspec,
           generated = gens, defaults = dflts, identity = identitySeeds,
           protocol = m.protocol))

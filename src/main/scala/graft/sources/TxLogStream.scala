@@ -100,8 +100,8 @@ class TxLogSource extends TableProvider {
     val spark = SparkSession.active
     val latestOpt = TxLog.latestVersion(spark, base)
     require(latestOpt.isDefined,
-      s"no committed version at $base — the txlog source needs at " +
-        "least one published manifest to infer a schema")
+      s"the txlog source at $base has no committed version — it needs " +
+        "at least one published manifest to infer a schema")
     val latest = latestOpt.get
     // time-travel reads infer from the TARGET version's files, so a
     // column added after versionAsOf does not leak into the past
@@ -518,7 +518,7 @@ object TxLogSource {
     * vacuumed history — raises a reset-the-checkpoint error instead
     * of a raw FileNotFound.
     *
-    * DRIVER-BOUNDED on delta commits (every commit publishEntries has
+    * DRIVER-BOUNDED on delta commits (every commit Txn.publish has
     * written since the delta protocol): the added set derives from the
     * commit's own `+` lines — O(changed files) — with one point
     * lookup against the PREVIOUS snapshot to drop replace-by-path
@@ -1387,8 +1387,7 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
       "maxFilesPerTrigger is a streaming-only option (admission " +
         "control has no meaning for a one-shot batch read)")
     val spark = SparkSession.active
-    val latest = TxLog.latestVersion(spark, base).getOrElse(
-      throw new IllegalStateException(s"no committed version at $base"))
+    val latest = TxLog.requireLatest(spark, base)
     versionAsOf.foreach(v => require(v <= latest,
       s"versionAsOf $v is beyond the latest committed version $latest"))
     val target = versionAsOf.getOrElse(latest)

@@ -589,8 +589,8 @@ object TxLogOverwriteSupport {
 }
 
 /** Driver-side commit logic shared by the batch and streaming writes:
-  * messages → manifest entries, CAS-retried publish (data reused on
-  * conflict, exactly like [[TxLog.append]]). */
+  * messages → manifest entries, one transaction ([[TxLog.txn]]) per
+  * commit (data reused on conflict, exactly like [[TxLog.append]]). */
 object TxLogWriteCommit {
   def toEntries(messages: Array[WriterCommitMessage]): Seq[TxLog.Entry] =
     messages.toSeq
@@ -618,138 +618,116 @@ object TxLogWriteCommit {
     TxLog.requireNoIdentityColumns(spark, base, schemaCols)
     // partition purity backstop (same plan-vs-commit drift class)
     TxLog.requirePartitionPure(spark, base, entries)
-    // CHECK constraints veto the write here (landed files discarded)
-    // before any manifest publishes — same contract as the API verbs.
     // `checked` records the set enforcement ACTUALLY ran under, so a
     // drop-then-re-add between reads cannot slip past the comparison
     var checked = TxLog.latestMeta(spark, base).constraints
-    // GENERATED ALWAYS AS: this path cannot compute (data is already
-    // landed executor-side) — require the columns supplied and
-    // validate them through the same constraint scan
-    TxLog.enforceConstraints(spark, base, entries,
-      checked ++ TxLog.generatedChecksFor(spark, base, schemaCols))
-    // partition-scoped overwrites resolve their matcher ONCE (the
-    // spec is immutable); replaceWhere additionally validates the NEW
-    // data up front — Delta's own rule: every written row must satisfy
-    // the overwrite predicate, or the statement is rejected whole
-    val pspec = TxLog.latestMeta(spark, base).partitions
-    val matcher: Option[TxLog.Entry => Boolean] = mode match {
-      case TxLogOverwriteWhere(filters) =>
-        val m = TxLogOverwriteSupport.partitionMatcher(spark, base,
-          pspec, filters)
-        entries.foreach(e => require(m(e),
-          s"INSERT OVERWRITE: written file ${e.path} does not satisfy " +
-            s"the partition filters ${filters.mkString(", ")} — rows " +
-            "outside the overwritten partitions are rejected whole"))
-        Some(m)
-      case TxLogDynamicOverwrite =>
-        require(pspec.nonEmpty,
-          "dynamic partition overwrite needs a partitioned table " +
-            "(unpartitioned tables: use plain overwrite)")
-        val newTuples = entries
-          .flatMap(e => TxLogOverwriteSupport.tupleOf(e, pspec)).toSet
-        Some(e => TxLogOverwriteSupport.tupleOf(e, pspec)
-          .exists(newTuples.contains))
-      case _ => None
-    }
-    // incremental bloom coverage, same as TxLog.append: new files join
-    // the table's existing bloom groups so point lookups stay sharp
-    val (indexed, bloomDirs) = TxLog.indexNewEntries(spark, base, entries)
-    try TxLog.withCasRetry(maxAttempts) { attempt =>
-      val cur = TxLog.latestVersion(spark, base)
-      onAttempt(attempt) // test seam: between snapshot read and publish
+    TxLog.txn(spark, base, maxAttempts, onAttempt) { t =>
+      val (matcher, indexed) = t.once {
+        // the executor-landed files are this commit's to delete if it
+        // never publishes (abort() drops the same txn dir)
+        t.stage(entries)
+        // CHECK constraints veto the write here, before any manifest
+        // publishes — same contract as the API verbs. GENERATED ALWAYS
+        // AS: this path cannot compute (data is already landed
+        // executor-side) — require the columns supplied and validate
+        // them through the same constraint scan
+        TxLog.enforceConstraints(spark, base, entries,
+          checked ++ TxLog.generatedChecksFor(spark, base, schemaCols))
+        // partition-scoped overwrites resolve their matcher ONCE (the
+        // spec is immutable); replaceWhere additionally validates the
+        // NEW data up front — Delta's own rule: every written row must
+        // satisfy the overwrite predicate, or the statement is rejected
+        // whole
+        val pspec = TxLog.latestMeta(spark, base).partitions
+        val matcher: Option[TxLog.Entry => Boolean] = mode match {
+          case TxLogOverwriteWhere(filters) =>
+            val m = TxLogOverwriteSupport.partitionMatcher(spark, base,
+              pspec, filters)
+            entries.foreach(e => require(m(e),
+              s"INSERT OVERWRITE: written file ${e.path} does not satisfy " +
+                s"the partition filters ${filters.mkString(", ")} — rows " +
+                "outside the overwritten partitions are rejected whole"))
+            Some(m)
+          case TxLogDynamicOverwrite =>
+            require(pspec.nonEmpty,
+              "dynamic partition overwrite needs a partitioned table " +
+                "(unpartitioned tables: use plain overwrite)")
+            val newTuples = entries
+              .flatMap(e => TxLogOverwriteSupport.tupleOf(e, pspec)).toSet
+            Some(e => TxLogOverwriteSupport.tupleOf(e, pspec)
+              .exists(newTuples.contains))
+          case _ => None
+        }
+        // incremental bloom coverage, same as TxLog.append: new files
+        // join the table's existing bloom groups so point lookups stay
+        // sharp
+        (matcher, TxLog.indexNewEntries(t, entries))
+      }
       // losing the CAS to a concurrent ADD CONSTRAINT re-validates the
       // landed data under the winner's constraint set
-      checked = TxLog.reEnforceIfChanged(spark, base, indexed, checked)
-      val (prev, txns) = cur.map(TxLog.manifest(spark, base, _))
-        .getOrElse((Seq.empty[TxLog.Entry], Map.empty[String, Long]))
-      val v = cur.getOrElse(0L) + 1L
+      checked = TxLog.reEnforceIfChanged(t, indexed, checked)
       // replaced files DROP from the manifest by reference — the
       // overwrite variants never read or rewrite a prior byte
       val all = mode match {
-        case TxLogAppendMode => prev ++ indexed
+        case TxLogAppendMode => t.entries ++ indexed
         case TxLogTruncateMode => indexed
-        case _ => prev.filterNot(matcher.get) ++ indexed
+        case _ => t.entries.filterNot(matcher.get) ++ indexed
       }
-      TxLog.publishEntries(spark, base, v, all, txns,
+      t.publish(all,
         operation = mode match {
           case TxLogAppendMode => "WRITE"
           case TxLogTruncateMode => "OVERWRITE"
           case _: TxLogOverwriteWhere => "REPLACE WHERE"
           case TxLogDynamicOverwrite => "OVERWRITE PARTITIONS"
         })
-      v
-    } catch {
-      case e: Throwable => // data-file cleanup is abort()'s job; the
-        // bloom sidecars live under their own txn dirs and are ours
-        bloomDirs.foreach(TxLog.discardDir(spark, base, _))
-        throw e
     }
   }
 
   /** Exactly-once epoch commit: the manifest's txn map carries the
-    * sink's (appId → epochId) high-water; a replayed epoch discards
-    * its re-landed files and publishes nothing. */
+    * sink's (appId → epochId) high-water; a replayed epoch publishes
+    * nothing, and its re-landed files are deleted. */
   def publishEpochWithRetry(spark: org.apache.spark.sql.SparkSession,
                             base: String, entries: Seq[TxLog.Entry],
                             appId: String, epochId: Long,
                             maxAttempts: Int = 5,
                             schemaCols: Seq[String] = Seq.empty,
                             logicalCols: Seq[String] = Seq.empty): Long = {
-    // enforcement is deferred until we KNOW the epoch is not a replay:
-    // a replayed epoch must stay a silent no-op even if the table
-    // gained a constraint its (already-committed, possibly since-
-    // deleted) rows would now violate — failing there would crash the
-    // stream on every restart and break exactly-once recovery. None =
-    // not yet validated; Some(set) = validated under that exact set.
+    // the constraint set the epoch was validated under; None until the
+    // epoch is KNOWN not to be a replay
     var checked: Option[Map[String, String]] = None
-    // built lazily, only once the epoch is KNOWN not to be a replay
-    // (a replayed epoch's sidecar work would be wasted and must be
-    // cleaned); refs are reused across CAS retries like the data files
-    var indexed: Option[(Seq[TxLog.Entry], Seq[String])] = None
-    def bloomDirs: Seq[String] = indexed.map(_._2).getOrElse(Nil)
-    try TxLog.withCasRetry(maxAttempts) { _ =>
-      val cur = TxLog.latestVersion(spark, base)
-      val (prev, txns) = cur.map(TxLog.manifest(spark, base, _))
-        .getOrElse((Seq.empty[TxLog.Entry], Map.empty[String, Long]))
-      if (txns.getOrElse(appId, -1L) >= epochId) {
+    TxLog.txn(spark, base, maxAttempts) { t =>
+      if (t.txns.getOrElse(appId, -1L) >= epochId) {
         // replay after restart: this epoch already landed
-        entries.map(_.path).map(p =>
-          new HPath(s"$base/$p").getParent).distinct.foreach { dir =>
-          dir.getFileSystem(TxLogSource.driverHadoopConf()).delete(dir, true)
-        }
-        bloomDirs.foreach(TxLog.discardDir(spark, base, _))
-        cur.get
+        t.stage(entries)
+        t.cur
       } else {
-        // a replayed epoch must stay a no-op even against identity or
-        // column-mapping metadata added later, so the GENERATED ALWAYS
-        // and mapped-column checks both wait until we KNOW this epoch
-        // is new (schemaCols are the as-landed physical names; the
-        // mapping check speaks the stream's logical names)
-        if (checked.isEmpty) {
+        // enforcement is deferred until we KNOW the epoch is not a
+        // replay: a replayed epoch must stay a silent no-op even if the
+        // table gained a constraint its (already-committed, possibly
+        // since-deleted) rows would now violate — failing there would
+        // crash the stream on every restart and break exactly-once
+        // recovery. The same holds for identity and column-mapping
+        // metadata added later, so the GENERATED ALWAYS and
+        // mapped-column checks wait too (schemaCols are the as-landed
+        // physical names; the mapping check speaks the stream's logical
+        // names). Reused by every later attempt, like the data files.
+        val firstTime = checked.isEmpty
+        val indexed = t.once {
+          t.stage(entries)
           TxLog.requireMappedColumns(spark, base, logicalCols)
           TxLog.requireNoIdentityColumns(spark, base, schemaCols)
           TxLog.requirePartitionPure(spark, base, entries)
+          val cons = TxLog.latestMeta(spark, base).constraints
+          TxLog.enforceConstraints(spark, base, entries,
+            cons ++ TxLog.generatedChecksFor(spark, base, schemaCols))
+          checked = Some(cons)
+          TxLog.indexNewEntries(t, entries)
         }
-        checked = Some(checked match {
-          case None =>
-            val cons = TxLog.latestMeta(spark, base).constraints
-            TxLog.enforceConstraints(spark, base, entries,
-              cons ++ TxLog.generatedChecksFor(spark, base, schemaCols))
-            cons
-          case Some(c) => TxLog.reEnforceIfChanged(spark, base, entries, c)
-        })
-        if (indexed.isEmpty)
-          indexed = Some(TxLog.indexNewEntries(spark, base, entries))
-        val v = cur.getOrElse(0L) + 1L
-        TxLog.publishEntries(spark, base, v, prev ++ indexed.get._1,
-          txns + (appId -> epochId), operation = "STREAMING UPDATE")
-        v
+        if (!firstTime)
+          checked = Some(TxLog.reEnforceIfChanged(t, entries, checked.get))
+        t.publish(t.entries ++ indexed, t.txns + (appId -> epochId),
+          operation = "STREAMING UPDATE")
       }
-    } catch {
-      case e: Throwable =>
-        bloomDirs.foreach(TxLog.discardDir(spark, base, _))
-        throw e
     }
   }
 }

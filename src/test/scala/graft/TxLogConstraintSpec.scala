@@ -76,11 +76,15 @@ class TxLogConstraintSpec extends AnyFunSuite {
     assert(TxLog.latestMeta(spark, base).constraints == Map("v_pos" -> "v > 0"))
     // a MOR update whose images violate must abort with no new version
     val before = TxLog.latestVersion(spark, base)
+    val dirsBefore = txnDirsOnDisk(base)
     intercept[TxLog.ConstraintViolationException] {
       TxLog.updateRangeMor(spark, base, "k", 30L, 40L,
         set = Map("v" -> lit(-1L)))
     }
     assert(TxLog.latestVersion(spark, base) == before)
+    assert(txnDirsOnDisk(base) == dirsBefore,
+      "a vetoed MOR update must leave no orphan dir — the DV sidecar " +
+        "its Par.all sibling landed included")
     // drop the gate: the same update now lands
     TxLog.dropConstraint(spark, base, "v_pos")
     TxLog.updateRangeMor(spark, base, "k", 30L, 40L,
@@ -96,7 +100,7 @@ class TxLogConstraintSpec extends AnyFunSuite {
     // land time, but violates the constraint a racer installs between
     // the writer's snapshot read and its publish
     val batch = df(Seq(500L -> java.lang.Long.valueOf(-9L)))
-    val entries = TxLog.landEntries(batch, base, Some("k"))
+    val entries = TxLog.landEntriesRaw(batch, base, Seq("k"))
     var raced = false
     val ex = intercept[TxLog.ConstraintViolationException] {
       graft.sources.TxLogWriteCommit.publishWithRetry(spark, base, entries,

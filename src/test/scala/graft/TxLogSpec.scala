@@ -16,6 +16,12 @@ class TxLogSpec extends AnyFunSuite {
   }
   private def contents(d: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
     d.collect().map(r => (r.getInt(0), r.getString(1))).toSet
+  private def dataDirs(base: String): Set[String] = {
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/data"))
+      .map(_.getPath.getName).toSet
+  }
 
   private val v1Rows = (1 to 100).map(i => i -> s"one-$i")
   private val v2Rows = (1 to 120).map(i => i -> s"two-$i")
@@ -138,30 +144,6 @@ class TxLogSpec extends AnyFunSuite {
     assert(onDisk == referenced)
   }
 
-  test("withCasRetry treats a raw FileNotFoundException as a stale-" +
-    "snapshot conflict: retried while attempts remain, surfaced as a " +
-    "CommitConflictException — never a raw FNFE — on the last one") {
-    // a vacuum racing a writer deletes manifests the writer's snapshot
-    // resolution is replaying; the conversion lives in the retry loop
-    // so EVERY verb (append, merge, transact, appendOnce...) gets the
-    // re-read-the-winner's-world behavior, and callers' landed-file
-    // cleanup paths — keyed on the conflict type — always fire
-    var calls = 0
-    val got = TxLog.withCasRetry(5) { _ =>
-      calls += 1
-      if (calls < 3) throw new java.io.FileNotFoundException("manifest gone")
-      42
-    }
-    assert(got == 42 && calls == 3)
-    val ex = intercept[TxLog.CommitConflictException] {
-      TxLog.withCasRetry(2) { _ =>
-        throw new java.io.FileNotFoundException("manifest gone")
-      }
-    }
-    assert(ex.getMessage.contains("vacuum"))
-    assert(ex.getCause.isInstanceOf[java.io.FileNotFoundException])
-  }
-
   test("protocol gate: a manifest requiring a newer READER version " +
     "fails loudly at read; a newer WRITER version still reads but " +
     "blocks commits (which would silently drop unknown meta kinds)") {
@@ -183,10 +165,19 @@ class TxLogSpec extends AnyFunSuite {
     writeManifest(2L, s"#protocol\t1\t99" +: files)
     assert(contents(TxLog.read(spark, base)) == v1Rows.toSet,
       "reader version 1 tables stay readable")
+    val dirsBefore = dataDirs(base)
     val w = intercept[IllegalStateException] {
       TxLog.append(df(Seq(999 -> "x")), base)
     }
     assert(w.getMessage.contains("writer version 99"), w.getMessage)
+    assert(dataDirs(base) == dirsBefore,
+      "a refused append must leave no orphan txn dir")
+    val m = intercept[IllegalStateException] {
+      TxLog.mergeMor(spark, base, df(Seq(1 -> "m")), Seq("k"), "k")
+    }
+    assert(m.getMessage.contains("writer version 99"), m.getMessage)
+    assert(dataDirs(base) == dirsBefore,
+      "a refused mergeMor must leave neither its land nor its DV sidecar")
     // v3 requires reader version 99 (far above this engine's
     // ReaderVersion ceiling): every read path must refuse
     writeManifest(3L, s"#protocol\t99\t99" +: files)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Atomic manifest-commit log over plain parquet — the ACID half of
   * the reference's Delta surface (`_delta_log` commit protocol,
@@ -607,6 +608,10 @@ object TxLog {
       val it = metaCache.keySet.iterator()
       while (it.hasNext) if (it.next()._1 == key) it.remove()
     }
+    footerSchemaCache.synchronized {
+      val it = footerSchemaCache.keySet.iterator()
+      while (it.hasNext) if (it.next().startsWith(s"$key/")) it.remove()
+    }
   }
 
   /** Apply one delta commit's data lines to the previous snapshot:
@@ -964,11 +969,7 @@ object TxLog {
       else org.apache.spark.sql.types.StructType(s.fields :+
         org.apache.spark.sql.types.StructField(RowIdCol,
           org.apache.spark.sql.types.LongType)))
-    val rd = reqExt match {
-      case Some(s) => spark.read.schema(s)
-      case None => spark.read.option("mergeSchema", "true")
-    }
-    val raw = rd.parquet(entries.map(e => resolve(base, e.path)): _*)
+    val raw = readFiles(spark, entries.map(e => resolve(base, e.path)), reqExt)
       .withColumn(DvFileCol, col("_metadata.file_name"))
       .withColumn(DvPosCol, col("_metadata.row_index"))
     import spark.implicits._
@@ -1541,8 +1542,7 @@ object TxLog {
     hit.getOrElse {
       physSchemaMisses.incrementAndGet()
       val files = manifest(spark, base, v)._1.map(e => resolve(base, e.path))
-      val s = spark.read.option("mergeSchema", "true")
-        .parquet(files: _*).schema
+      val s = readFiles(spark, files, None).schema
       physSchemaCache.synchronized(physSchemaCache.put(key, s))
       s
     }
@@ -1746,13 +1746,86 @@ object TxLog {
         // the name filter only trims positions of files NOT being read
         // (they can never match the anti-join) — an optimization, so
         // skip it rather than build a huge literal IN at scale
-        val dirDf = spark.read.parquet(resolve(base, dir))
+        val dirDf = readFiles(spark, Seq(resolve(base, dir)), None,
+          mergeSchema = false)
         val trimmed =
           if (es.size <= 256)
             dirDf.where(col(DvFileCol).isin(es.map(e => fileName(e.path)): _*))
           else dirDf
         trimmed.select(col(DvFileCol), col(DvPosCol))
     }.reduce(_.unionAll(_)))
+  }
+
+  /** Driver-side LRU of the Spark schema in each TxLog-written parquet
+    * path's footer (a sidecar dir: its files' one schema), keyed by
+    * canonical path. TxLog never rewrites a published path, so an
+    * entry holds until [[cachePurge]]. Only footers carrying Spark's
+    * row-metadata key are cached: inference returns that stored schema
+    * under any session conf. */
+  private val footerSchemaCache =
+    new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StructType]): Boolean = size() > 8192
+    }
+
+  /** The one schema-less read of TxLog-written parquet `paths` (data
+    * files or sidecar dirs). `requested` (widened tables) wins. Else,
+    * when every path's footer schema is known and identical, the read
+    * is pinned to it — exactly what Spark's one-footer or mergeSchema
+    * inference returns, without the Spark job inference starts. Else
+    * (a schema-evolved subset, a foreign footer, a failed footer read
+    * such as a vacuumed file) Spark infers as before, over every file
+    * when `mergeSchema`, so those reads serve and fail unchanged. */
+  private[graft] def readFiles(spark: SparkSession, paths: Seq[String],
+                               requested: Option[StructType],
+                               mergeSchema: Boolean = true): DataFrame =
+    (requested.orElse(footerSchema(spark, paths)) match {
+      case Some(s) => spark.read.schema(s)
+      case None if mergeSchema => spark.read.option("mergeSchema", "true")
+      case None => spark.read
+    }).parquet(paths: _*)
+
+  /** The one footer schema all `paths` share, if known; misses are read
+    * on the driver ([[readFooters]]). */
+  private def footerSchema(spark: SparkSession,
+                           paths: Seq[String]): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
+    def onlyOne(ss: Seq[Option[StructType]]) =
+      ss.distinct match { case Seq(one) => one; case _ => None }
+    lazy val conf = spark.sessionState.newHadoopConf()
+    lazy val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    // one path's footer schema as Spark's inference reads it; a dir's
+    // when all its data files share one. None without Spark's stored
+    // schema; a nested dir fails the footer read
+    def pathSchema(path: String): Option[StructType] = {
+      val p = new Path(path)
+      val f = p.getFileSystem(conf)
+      val st = f.getFileStatus(p)
+      val files = if (!st.isDirectory) Seq(st)
+        else f.listStatus(p).toSeq.filter(k => isDataFileName(k.getPath.getName))
+      onlyOne(files.map { fst =>
+        val meta = ParquetFileReader.readFooter(HadoopInputFile.fromStatus(
+          fst, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        if (!meta.getFileMetaData.getKeyValueMetaData
+            .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
+        else Some(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(fst.getPath, meta), converter))
+      })
+    }
+    val keys = paths.map(canonicalBase).distinct
+    val cached = footerSchemaCache.synchronized(
+      keys.flatMap(k => Option(footerSchemaCache.get(k)).map(k -> _))).toMap
+    val missing = keys.filterNot(cached.contains)
+    val found = scala.util.Try(readFooters(missing)(pathSchema))
+      .getOrElse(Seq.empty).zip(missing).collect { case (Some(s), k) => k -> s }
+    footerSchemaCache.synchronized(
+      found.foreach { case (k, s) => footerSchemaCache.put(k, s) })
+    val read = found.toMap
+    onlyOne(keys.map(k => cached.get(k).orElse(read.get(k))))
   }
 
   /** Read `entries`' files with deletion vectors applied: DV-free
@@ -1772,15 +1845,12 @@ object TxLog {
     // `requested` (widened tables) pins the read to an explicit
     // schema: Spark's parquet readers upcast each file to it, the
     // only shape that can serve a narrow-old/wide-new file mix
-    def rd = requested match {
-      case Some(s) => spark.read.schema(s)
-      case None if mergeSchema => spark.read.option("mergeSchema", "true")
-      case None => spark.read
-    }
+    def rd(es: Seq[Entry]) = readFiles(spark,
+      es.map(e => resolve(base, e.path)), requested, mergeSchema)
     val (dved, plain) = entries.partition(_.dv.isDefined)
     val plainDf =
       if (plain.isEmpty) None
-      else Some(rd.parquet(plain.map(e => resolve(base, e.path)): _*))
+      else Some(rd(plain))
     val dvedDf =
       if (dved.isEmpty) None
       else {
@@ -1789,7 +1859,7 @@ object TxLog {
           if (dved.map(_.dv.get.rows).sum <= DvBroadcastMaxRows)
             broadcast(mask0)
           else mask0
-        val raw = rd.parquet(dved.map(e => resolve(base, e.path)): _*)
+        val raw = rd(dved)
         require(!raw.columns.contains(DvFileCol) &&
           !raw.columns.contains(DvPosCol),
           s"table schema collides with DV helper columns $DvFileCol/$DvPosCol")
@@ -1814,29 +1884,24 @@ object TxLog {
     dropRowId(out)
   }
 
-  /** [[readEntries]] over the CURRENT snapshot, pinned to an explicit
-    * requested schema: the widened declared schema when the table
-    * carries `#widencol` lines, else the version's cached physical
-    * UNION. Every latest-snapshot rewrite/scan verb (compact, zorder,
-    * COW DML, purge, bloom, colmap seeding, constraint backfill
-    * scans) reads through this — a one-footer inferred read of a
-    * schema-evolved (mergeSchema-on-write) file subset would silently
-    * DROP the columns the un-inferred footers carry, and a REWRITE
-    * verb would then land the loss permanently. The union schema is
-    * cached per version (zero footer opens after the first), and the
-    * explicit request also skips per-query inference entirely.
-    * Time-travel callers use [[readEntries]] with the TARGET
-    * version's [[TableMeta.widenedPhysSchema]] — never this. */
+  /** [[readEntries]] over the CURRENT snapshot. A widened table
+    * (`#widencol` lines) reads through its declared schema. Any other
+    * table reads the union of `entries`' own footers, by the
+    * [[readFiles]] rule: when every file's cached footer schema is the
+    * same, that schema is passed explicitly (no inference job); when
+    * they differ, Spark's mergeSchema runs over this subset only —
+    * proportional to the files being read, never O(table files) for an
+    * O(band) rewrite. Every latest-snapshot rewrite/scan verb
+    * (compact, zorder, COW DML, purge, bloom, colmap seeding,
+    * constraint backfill scans) reads through this: a one-footer
+    * inferred read of a schema-evolved (mergeSchema-on-write) subset
+    * would silently DROP the columns the other footers carry, and a
+    * REWRITE verb would then land the loss permanently. Time-travel
+    * callers use [[readEntries]] with the TARGET version's
+    * [[TableMeta.widenedPhysSchema]] — never this. */
   private def readEntriesCurrent(spark: SparkSession, base: String,
                                  entries: Seq[Entry],
-                                 mergeSchema: Boolean = false,
                                  withRowIds: Boolean = false): DataFrame = {
-    // un-widened tables read the SUBSET's union (mergeSchema over the
-    // files at hand — they are being fully read anyway, so the footer
-    // pass is proportional to the work, never O(table files) for an
-    // O(band) rewrite); a one-footer inferred read would silently
-    // DROP the columns the un-inferred footers carry and a REWRITE
-    // would land that loss permanently
     val m = latestMeta(spark, base)
     val wide = m.widenedPhysSchema
     // REWRITE verbs (withRowIds) on a tracked table read each row's
@@ -2332,41 +2397,37 @@ object TxLog {
         Some((rows, perKey))
       } finally r.close()
     }
-    // the per-file footer reads are independent: harvest them on a
-    // bounded pool instead of a serial driver loop, so a commit
-    // landing 10⁴ files pays O(files/threads) open round-trips, not
-    // O(files). The punt contract stays all-or-nothing — any Punt
-    // (surfacing here as an ExecutionException cause) fails the whole
-    // batch over to the scan path, exactly like the serial loop did.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(rels.size,
-        Runtime.getRuntime.availableProcessors)))
-    var harvested = false
-    try {
-      val futs = rels.map { rel =>
-        pool.submit(new java.util.concurrent.Callable[Entry] {
-          override def call(): Entry = {
-            val (rows, perKey) = fileStats(rel).get
-            Entry(rel, rows, keys.zip(perKey).collect {
-              case ((c, t), Some((mn, mx))) => ColStats(c, t, mn, mx)
-            })
-          }
-        })
-      }
-      val out = Some(futs.map(_.get()))
-      harvested = true
-      out
-    } catch {
-      case e: java.util.concurrent.ExecutionException =>
-        e.getCause match {
-          case Punt() => None
-          case other => throw other
-        }
-    } finally
-      // a punt or a failure: the queued footer reads are wasted work
-      // (the scan path takes over), so they must not keep running
-      if (harvested) pool.shutdown() else pool.shutdownNow()
+    // the punt contract is all-or-nothing — any Punt fails the whole
+    // batch over to the scan path
+    try Some(readFooters(rels) { rel =>
+      val (rows, perKey) = fileStats(rel).get
+      Entry(rel, rows, keys.zip(perKey).collect {
+        case ((c, t), Some((mn, mx))) => ColStats(c, t, mn, mx)
+      })
+    })
+    catch { case Punt() => None }
   }
+
+  /** The one footer harvest ([[footerEntries]], [[readFiles]]): `f`
+    * over `paths` on a bounded driver pool, so 10⁴ files pay
+    * O(files/threads) open round-trips; one path runs inline. The
+    * first failure is rethrown unwrapped and cancels the queued reads. */
+  private def readFooters[T](paths: Seq[String])(f: String => T): Seq[T] =
+    if (paths.size <= 1) paths.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(paths.size, Runtime.getRuntime.availableProcessors))
+      var done = false
+      try {
+        val futs = paths.map(p => pool.submit(
+          new java.util.concurrent.Callable[T] { def call(): T = f(p) }))
+        val out = futs.map(_.get())
+        done = true
+        out
+      } catch {
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      } finally if (done) pool.shutdown() else pool.shutdownNow()
+    }
 
   private def entryFromStats(rel: String,
                              byFile: Map[String, org.apache.spark.sql.Row],
@@ -2443,7 +2504,8 @@ object TxLog {
     // files carry physical ones — evaluate on the logical view
     // (identity when the table has no mapping)
     val raw = logicalView(spark, base,
-      spark.read.parquet(newEntries.map(e => resolve(base, e.path)): _*))
+      readFiles(spark, newEntries.map(e => resolve(base, e.path)), None,
+        mergeSchema = false))
     // columns a constraint references but the new files lack (an
     // older-schema batch) evaluate as NULL — SQL CHECK passes
     val present = raw.columns.map(_.toLowerCase).toSet
@@ -2511,8 +2573,7 @@ object TxLog {
         s"constraint '$name' already exists")
       val bad =
         if (entries.isEmpty) 0L
-        else logicalView(spark, base, readEntriesCurrent(spark, base, entries,
-            mergeSchema = m.colMap.isDefined))
+        else logicalView(spark, base, readEntriesCurrent(spark, base, entries))
           .where(!coalesce(expr(checkExpr), lit(true))).count()
       if (bad > 0) throw new ConstraintViolationException(name, checkExpr, bad)
       t.publish(entries,
@@ -2556,7 +2617,7 @@ object TxLog {
           require(entries.nonEmpty,
             s"cannot ALTER an empty table at $base with no declared " +
               "schema — create it with one, or write data first")
-          val raw = readEntriesCurrent(spark, base, entries, mergeSchema = true)
+          val raw = readEntriesCurrent(spark, base, entries)
           // under a mapping the declared schema must carry LOGICAL
           // names — the raw file schema is physical
           cmOpt.map(cm => toLogicalDf(raw, cm, None)).getOrElse(raw).schema
@@ -2590,7 +2651,7 @@ object TxLog {
     val taken = scala.collection.mutable.Set[String](
       cm.cols.map(_._2.toLowerCase) ++
         (if (entries.isEmpty) Nil
-         else readEntriesCurrent(spark, base, entries, mergeSchema = true)
+         else readEntriesCurrent(spark, base, entries)
            .columns.map(_.toLowerCase).toSeq): _*)
     var next = cm.nextId
     val newCols = added.map { f =>
@@ -2716,7 +2777,7 @@ object TxLog {
     val entries = manifest(spark, base, cur)._1
     val fileFields: Seq[String] =
       if (entries.isEmpty) Seq.empty
-      else readEntriesCurrent(spark, base, entries, mergeSchema = true)
+      else readEntriesCurrent(spark, base, entries)
         .schema.fields.find(_.name.equalsIgnoreCase(p))
         .map(_.dataType).toSeq.flatMap {
           case s: org.apache.spark.sql.types.StructType =>
@@ -2747,7 +2808,7 @@ object TxLog {
       val entries = manifest(spark, base, cur)._1
       val fileFields: Seq[String] =
         if (entries.isEmpty) Seq.empty
-        else readEntriesCurrent(spark, base, entries, mergeSchema = true)
+        else readEntriesCurrent(spark, base, entries)
           .schema.fieldNames.toSeq
       val declaredOnly = m.schema
         .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
@@ -2969,7 +3030,7 @@ object TxLog {
       val p = cm.physical(top)
       val fileSub: Set[String] =
         if (entries.isEmpty) Set.empty
-        else readEntriesCurrent(spark, base, entries, mergeSchema = true)
+        else readEntriesCurrent(spark, base, entries)
           .schema.fields.find(_.name.equalsIgnoreCase(p))
           .map(_.dataType).toSeq.flatMap {
             case s: org.apache.spark.sql.types.StructType =>
@@ -3001,8 +3062,8 @@ object TxLog {
         require(entries.nonEmpty,
           s"cannot derive a schema for $base (no files, no declared " +
             "schema)")
-        toLogicalDf(readEntriesCurrent(spark, base, entries,
-          mergeSchema = true), cm, None).schema
+        toLogicalDf(readEntriesCurrent(spark, base, entries), cm, None)
+          .schema
       }
       val newDeclared = org.apache.spark.sql.types.StructType(
         declared0.fields.map(fd =>
@@ -4015,12 +4076,10 @@ object TxLog {
           // rows re-match and the union+distinct below folds them into
           // the merged sidecar — old deletions can never resurrect.
           // `cond` references LOGICAL names — evaluate on the logical
-          // view with the DV coordinates carried through (mergeSchema on
-          // mapped tables: the projection must see the files' UNION of
-          // physical columns, not one footer's)
+          // view with the DV coordinates carried through (the
+          // projection sees the files' UNION of physical columns)
           val raw = logicalView(spark, base,
-            taggedRead(spark, base, touched,
-              mergeSchema = t.meta.colMap.isDefined),
+            taggedRead(spark, base, touched),
             keep = Seq(DvFileCol, DvPosCol))
           // None: no hits, no prior masks — nothing to publish
           landMaskSidecar(t, touched, raw.where(coalesce(cond, lit(false))))
@@ -4041,8 +4100,7 @@ object TxLog {
     * table columns plus ([[DvFileCol]], [[DvPosCol]]) from parquet's
     * `_metadata` — the coordinates masks are expressed in. */
   private def taggedRead(spark: SparkSession, base: String,
-                         entries: Seq[Entry],
-                         mergeSchema: Boolean = false): DataFrame = {
+                         entries: Seq[Entry]): DataFrame = {
     import org.apache.spark.sql.functions.col
     // widened tables: every DML verb's raw read requests the declared
     // (widened) physical schema — the mixed-width file set reads no
@@ -4053,11 +4111,8 @@ object TxLog {
     // physical columns (absent columns NULL-fill per file) — one
     // footer's inference on a schema-evolved touched subset would
     // silently DROP the other footers' columns from the landed images.
-    val rd = latestMeta(spark, base).widenedPhysSchema match {
-      case Some(ws) => spark.read.schema(ws)
-      case None => spark.read.option("mergeSchema", "true")
-    }
-    rd.parquet(entries.map(e => resolve(base, e.path)): _*)
+    readFiles(spark, entries.map(e => resolve(base, e.path)),
+        latestMeta(spark, base).widenedPhysSchema)
       .withColumn(DvFileCol, col("_metadata.file_name"))
       .withColumn(DvPosCol, col("_metadata.row_index"))
   }
@@ -4152,13 +4207,12 @@ object TxLog {
       else {
         // `cond` and the SET expressions reference LOGICAL names —
         // the whole hit/update computation runs on the logical view
-        // (DV coordinates carried through; mergeSchema on mapped
-        // tables so the projection sees every file's physical
-        // columns); the updated images rename back to physical just
-        // before landing
+        // (DV coordinates carried through; the union read lets the
+        // projection see every file's physical columns); the updated
+        // images rename back to physical just before landing
         val m = t.meta
         val raw0 = logicalView(spark, base,
-          taggedRead(spark, base, touched, mergeSchema = m.colMap.isDefined),
+          taggedRead(spark, base, touched),
           keep = Seq(DvFileCol, DvPosCol, RowIdCol))
         // row tracking: an UPDATE logically keeps the row, so the
         // appended post-image MATERIALIZES each hit's stable id
@@ -4557,7 +4611,6 @@ object TxLog {
         else rest
       val mCur = t.meta
       val cmCur = mCur.colMap
-      val cmapped = cmCur.isDefined
       // evolution on a MAPPED table assigns the new columns fresh
       // physical names (the ADD COLUMNS rule — a re-ADD of a DROPped
       // name must scan as NULL, never as the dropped bytes)
@@ -4583,7 +4636,7 @@ object TxLog {
         if (touched.isEmpty) None
         else {
           val raw0 = logicalView(spark, base,
-            taggedRead(spark, base, touched, mergeSchema = cmapped),
+            taggedRead(spark, base, touched),
             keep = Seq(DvFileCol, DvPosCol, RowIdCol))
           val raw =
             if (tracked) attachRowIds(spark, touched, raw0)
@@ -4803,7 +4856,8 @@ object TxLog {
         val totalRows = entries.map(_.rows).sum
         val distinctIds =
           if (entries.isEmpty) 0L
-          else spark.read.parquet(entries.map(e => resolve(base, e.path)): _*)
+          else readFiles(spark, entries.map(e => resolve(base, e.path)),
+              None, mergeSchema = false)
             .select(idCol).distinct().count()
         if (distinctIds != totalRows) {
           throw new IllegalStateException(
@@ -5106,10 +5160,8 @@ object TxLog {
         // WIDENED table pins the read to the declared schema instead
         // (mergeSchema cannot merge a narrow/wide mix), so the bloom
         // positions hash the WIDENED dtype — the same one probes see.
-        val raw = (t.meta.widenedPhysSchema match {
-          case Some(ws) => spark.read.schema(ws)
-          case None => spark.read.option("mergeSchema", "true")
-        }).parquet(indexable.map(e => resolve(base, e.path)): _*)
+        val raw = readFiles(spark, indexable.map(e => resolve(base, e.path)),
+          t.meta.widenedPhysSchema)
         val dtype = raw.schema(column).dataType.catalogString
         val bits = raw
           .where(col(column).isNotNull)
@@ -5322,7 +5374,8 @@ object TxLog {
       .map(v => snapshotEntries(spark, base, v)).getOrElse(Seq.empty)
       .flatMap(_.blooms)
     if (existing.isEmpty) return entries
-    val raw = spark.read.parquet(indexable.map(e => resolve(base, e.path)): _*)
+    val raw = readFiles(spark, indexable.map(e => resolve(base, e.path)),
+      None, mergeSchema = false)
     val byColumn = existing.groupBy(_.column).toSeq.sortBy(_._1)
       .filter { case (c, _) => raw.columns.contains(c) }
     if (byColumn.isEmpty) return entries
@@ -5376,7 +5429,8 @@ object TxLog {
           if (es.size <= 256)
             col(DvFileCol).isin(es.map(e => fileName(e.path)): _*)
           else lit(true) // optimization only — extra names never match
-        val present = spark.read.parquet(resolve(base, ref.dir))
+        val present = readFiles(spark, Seq(resolve(base, ref.dir)), None,
+            mergeSchema = false)
           .where(col(DvPosCol).isin(positions.distinct: _*) && nameFilter)
           .groupBy(DvFileCol)
           .agg(countDistinct(col(DvPosCol)).as("__n"))
@@ -5966,10 +6020,7 @@ object TxLog {
         val delta =
           if (dead) maskOf(newEs).exceptAll(maskOf(oldEs))
           else maskOf(oldEs).exceptAll(maskOf(newEs))
-        val raw = (wide match {
-          case Some(ws) => spark.read.schema(ws)
-          case None => spark.read.option("mergeSchema", "true")
-        }).parquet(newEs.map(e => resolve(base, e.path)): _*)
+        val raw = readFiles(spark, newEs.map(e => resolve(base, e.path)), wide)
         Some(raw
           .withColumn(DvFileCol, col("_metadata.file_name"))
           .withColumn(DvPosCol, col("_metadata.row_index"))

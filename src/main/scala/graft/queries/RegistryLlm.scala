@@ -835,10 +835,10 @@ object RegistryLlm {
           .agg(count(lit(1)).as("tf"))
           .repartitionByRange(4, col("term")) // term-banded postings
         val ln = toks.groupBy("doc_id").agg(count(lit(1)).as("len"))
-        // `def`, not `val`: the embedded df.count() scalar is an
-        // eager action — evaluated inside the stats-commit thunk it
-        // overlaps the sibling commits instead of serializing first
-        def st = ln.agg(count(lit(1)).as("len_rows"),
+        // `lazy val`: the embedded df.count() is an eager action —
+        // first forced inside the stats-commit thunk it overlaps the
+        // sibling commits, and it runs once however often it is used
+        lazy val st = ln.agg(count(lit(1)).as("len_rows"),
             sum(col("len")).as("len_sum"))
           .select(lit(batchId).as("batch"), col("len_rows"),
             col("len_sum"), lit(df.count()).as("docs"))

@@ -109,11 +109,11 @@ class TxLogSource extends TableProvider {
     asOf.foreach(v => require(v >= 1 && v <= latest,
       s"versionAsOf $v is beyond the latest committed version $latest"))
     val target = asOf.getOrElse(latest)
-    // a version's union schema is immutable → cache it. Inference
-    // opens EVERY file's footer (mergeSchema — the price of read-side
-    // evolution), which would otherwise dominate every `load()` of a
-    // many-file table. The commit mtime guards against version-number
-    // reuse after drop-and-recreate at the same path.
+    // a version's union schema is immutable → cache it, so a `load()`
+    // of a many-file table does not re-derive it from every footer
+    // (TxLog.readFiles caches those per file). The commit mtime guards
+    // against version-number reuse after drop-and-recreate at the
+    // same path.
     val snap = TxLogSource.snapshotSchema(spark, base, target)
     var fields = snap.fields
     if (TxLogSource.changeFeed(options))
@@ -212,7 +212,7 @@ object TxLogSource {
         // scan would project it TWICE (the parquet-mr automaton
         // rejects the duplicate leaf)
         val inferred = StructType(
-          spark.read.option("mergeSchema", "true").parquet(files: _*)
+          TxLog.readFiles(spark, files, None)
             .schema.fields.filterNot(
               _.name.equalsIgnoreCase(TxLog.RowIdCol)))
         cmap match {

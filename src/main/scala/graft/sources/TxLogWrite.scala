@@ -602,10 +602,16 @@ object TxLogWriteCommit {
           })
       }
 
+  /** Delete an aborted write's txn dir — unless the latest version
+    * references it: an abort can follow a `commit()` whose CAS already
+    * won. A log that cannot be read leaves the dir to vacuum. */
   def dropTxn(base: String, txnRel: String): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val live = scala.util.Try(TxLog.latestVersion(spark, base).exists(v =>
+      TxLog.snapshotEntries(spark, base, v)
+        .exists(_.path.startsWith(s"$txnRel/")))).getOrElse(true)
     val p = new HPath(s"$base/$txnRel")
-    val fs = p.getFileSystem(TxLogSource.driverHadoopConf())
-    fs.delete(p, true)
+    if (!live) p.getFileSystem(TxLogSource.driverHadoopConf()).delete(p, true)
   }
 
   def publishWithRetry(spark: org.apache.spark.sql.SparkSession,

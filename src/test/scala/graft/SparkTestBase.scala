@@ -17,4 +17,31 @@ object SparkTestBase {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Run `body` and count the Spark jobs it starts from this thread
+    * (tagged, so a stream another suite left running is not counted).
+    * The listener bus is drained before the count is read, so no
+    * late event is missed. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"jobsDuring-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag))) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      org.apache.spark.GraftTestAccess.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(l)
+    }
+  }
 }

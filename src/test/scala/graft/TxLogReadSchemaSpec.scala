@@ -1,0 +1,167 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.TxLog
+
+/** Laws for planning TxLog reads from cached footer schemas
+  * ([[TxLog.readFiles]]): building a read DataFrame on a warm table
+  * starts no Spark job, and every verb serves the schema Spark's own
+  * inference gives for the same files — on schema-evolved, mapped and
+  * widened tables, with deletion vectors in play. The expected
+  * schemas are the ones inference-planned reads serve. */
+class TxLogReadSchemaSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestBase.spark
+  import SparkTestBase.jobsDuring
+
+  private val root = "/tmp/graft_txreadschema"
+
+  /** 4 range-clustered (k, s) files with stats on k, then a MOR
+    * delete that masks rows of the first file only. */
+  private def seedMasked(base: String): Unit = {
+    import spark.implicits._
+    TxLog.drop(spark, base)
+    TxLog.commit((1L to 400L).map(i => (i, s"s-$i")).toDF("k", "s")
+      .repartitionByRange(4, col("k")), base, None, Some("k"))
+    TxLog.deleteRangeMor(spark, base, "k", 10L, 20L)
+  }
+
+  /** The verbs a reader plans, by name. */
+  private def verbs(base: String, point: Long, lo: Long, hi: Long)
+      : Seq[(String, () => DataFrame)] = Seq(
+    "read" -> (() => TxLog.read(spark, base)),
+    "readVersion(1)" -> (() => TxLog.readVersion(spark, base, 1L)),
+    "readPoint" -> (() => TxLog.readPoint(spark, base, "k", point)),
+    "readRange" -> (() => TxLog.readRange(spark, base, "k", lo, hi)),
+    "readEvolved" -> (() => TxLog.readEvolved(spark, base)),
+    "source" -> (() =>
+      spark.read.format("graft.sources.TxLogSource").load(base)))
+
+  test("building a TxLog read DataFrame on a warm table starts no " +
+    "Spark job") {
+    val base = s"$root/warm"
+    seedMasked(base)
+    val es = TxLog.manifest(spark, base, 2L)._1
+    assert(es.count(_.dv.isDefined) == 1 && es.count(_.dv.isEmpty) == 3)
+    val all = Seq(
+      "readPoint(masked file)" -> (() => TxLog.readPoint(spark, base, "k", 5L)),
+      "readPoint(plain file)" -> (() => TxLog.readPoint(spark, base, "k", 390L)),
+      "readRange" -> (() => TxLog.readRange(spark, base, "k", 1L, 300L)),
+      "readVersion(1)" -> (() => TxLog.readVersion(spark, base, 1L)),
+      "readVersion(2)" -> (() => TxLog.readVersion(spark, base, 2L)),
+      "read" -> (() => TxLog.read(spark, base)))
+    all.foreach { case (_, f) => f().collect() } // warm
+    all.foreach { case (name, f) =>
+      val (df, jobs) = jobsDuring(f())
+      assert(jobs == 0, s"$name started $jobs Spark job(s) while planning")
+      assert(df.columns.toSeq == Seq("k", "s"), name)
+    }
+    assert(TxLog.read(spark, base).count() == 389L)
+    assert(TxLog.readPoint(spark, base, "k", 15L).count() == 0L)
+    assert(TxLog.readPoint(spark, base, "k", 390L).count() == 1L)
+  }
+
+  test("analysing a catalog table at a new version starts no Spark job") {
+    val s = SparkTestBase.spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.TxLogCatalog")
+    s.conf.set("spark.sql.catalog.graft.warehouse", s"$root/wh")
+    val base = s"$root/wh/ns/t"
+    seedMasked(base)
+    assert(s.table("graft.ns.t").count() == 389L) // warm
+    import s.implicits._
+    TxLog.append(Seq((401L, "s-401")).toDF("k", "s"), base, Some("k"))
+    val (df, jobs) = jobsDuring(s.table("graft.ns.t"))
+    assert(jobs == 0, s"analysis at a new version started $jobs Spark job(s)")
+    assert(df.schema.toDDL == "k BIGINT,s STRING")
+    assert(df.count() == 390L)
+  }
+
+  test("a schema-evolved table serves inference's schema per verb") {
+    import spark.implicits._
+    val base = s"$root/evolved"
+    seedMasked(base)
+    // mergeSchema-on-write: the new file carries an extra column
+    TxLog.append((401L to 460L).map(i => (i, s"s-$i", i.toInt))
+      .toDF("k", "s", "x").coalesce(1), base, Some("k"))
+    val got = verbs(base, point = 430L, lo = 350L, hi = 450L)
+      .map { case (n, f) => n -> f().schema.toDDL }.toMap
+    val narrow = "k BIGINT,s STRING"
+    val wide = "k BIGINT,s STRING,x INT"
+    assert(got("readVersion(1)") == narrow)
+    // only the new file: its own footer
+    assert(got("readPoint") == wide)
+    // an old and the new file: the union
+    assert(got("readRange") == wide)
+    assert(got("readEvolved") == wide)
+    assert(got("source") == wide)
+    // `read` infers each mask subset from its own footers
+    assert(got("read") == expectedEvolvedRead(base))
+    assert(TxLog.readPoint(spark, base, "k", 430L)
+      .select("x").as[Int].collect().toSeq == Seq(430))
+  }
+
+  /** `read` of the evolved table: the masked subset (old files) unions
+    * by name with the plain subset, whose one-footer inference is
+    * whatever Spark picks among its files. */
+  private def expectedEvolvedRead(base: String): String = {
+    val v = TxLog.latestVersion(spark, base).get
+    val plain = TxLog.manifest(spark, base, v)._1.filter(_.dv.isEmpty)
+      .map(e => TxLog.resolve(base, e.path))
+    val plainSchema = spark.read.parquet(plain: _*).schema
+    if (plainSchema.fieldNames.contains("x")) "k BIGINT,s STRING,x INT"
+    else "k BIGINT,s STRING"
+  }
+
+  test("a mapped table serves inference's schema per verb") {
+    import spark.implicits._
+    val base = s"$root/mapped"
+    seedMasked(base)
+    TxLog.renameColumn(spark, base, "s", "label")
+    TxLog.append(Seq((401L, "s-401")).toDF("k", "label"), base, Some("k"))
+    val got = verbs(base, point = 401L, lo = 1L, hi = 401L)
+      .map { case (n, f) => n -> f().schema.toDDL }.toMap
+    assert(got("readVersion(1)") == "k BIGINT,s STRING")
+    Seq("read", "readPoint", "readRange", "readEvolved", "source")
+      .foreach(n => assert(got(n) == "k BIGINT,label STRING", n))
+    assert(TxLog.readRange(spark, base, "k", 1L, 401L).count() == 390L)
+  }
+
+  test("a widened table serves its declared schema; time travel below " +
+    "the ALTER serves the narrow footers") {
+    import spark.implicits._
+    val base = s"$root/widened"
+    TxLog.drop(spark, base)
+    TxLog.commit((1 to 200).map(i => (i, s"s-$i")).toDF("k", "s")
+      .repartitionByRange(2, col("k")), base, None, Some("k"))
+    TxLog.deleteRangeMor(spark, base, "k", 10, 20)
+    TxLog.alterWidenColumn(spark, base, "k", LongType)
+    TxLog.append(Seq((5000000000L, "big")).toDF("k", "s"), base, Some("k"))
+    val got = verbs(base, point = 5000000000L, lo = 1L, hi = 5000000000L)
+      .map { case (n, f) => n -> f().schema.toDDL }.toMap
+    assert(got("readVersion(1)") == "k INT,s STRING")
+    Seq("read", "readPoint", "readRange", "readEvolved", "source")
+      .foreach(n => assert(got(n) == "k BIGINT,s STRING", n))
+    assert(TxLog.read(spark, base).count() == 190L)
+  }
+
+  test("reading a vacuumed version, or its vacuumed files through a " +
+    "warm cache, fails as an inference-planned read does") {
+    import spark.implicits._
+    val base = s"$root/vacuumed"
+    TxLog.drop(spark, base)
+    TxLog.commit((1L to 100L).map(i => (i, s"s-$i")).toDF("k", "s")
+      .coalesce(2), base, None, Some("k"))
+    val v1 = TxLog.manifest(spark, base, 1L)._1
+    TxLog.readVersion(spark, base, 1L).collect() // warm v1's footers
+    TxLog.commit(Seq((1L, "only")).toDF("k", "s"), base, Some(1L), Some("k"))
+    TxLog.vacuum(spark, base, keepLast = 1, graceMs = 0L)
+    intercept[java.io.FileNotFoundException](
+      TxLog.readVersion(spark, base, 1L))
+    intercept[org.apache.spark.sql.AnalysisException](
+      TxLog.readEntries(spark, base, v1))
+    assert(TxLog.read(spark, base).count() == 1L)
+  }
+}

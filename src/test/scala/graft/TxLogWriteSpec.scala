@@ -66,6 +66,33 @@ class TxLogWriteSpec extends AnyFunSuite {
     assert(TxLog.readVersion(spark, base, 1L).count() == 50)
   }
 
+  test("an abort after the commit's CAS won keeps the published txn " +
+    "dir; an unreferenced one still goes") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.TxLogCatalog")
+    s.conf.set("spark.sql.catalog.graft.warehouse", "/tmp/graft_txwrite/wh")
+    val base = "/tmp/graft_txwrite/wh/ns/aborted"
+    TxLog.drop(s, base)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.ns")
+    s.sql("CREATE TABLE graft.ns.aborted (k BIGINT, s STRING) " +
+      "USING graft.sources.TxLogSource")
+    s.range(0, 50)
+      .select(col("id").as("k"), concat(lit("w-"), col("id")).as("s"))
+      .writeTo("graft.ns.aborted").append()
+    val v = TxLog.latestVersion(s, base).get
+    val dirs = TxLog.manifest(s, base, v)._1
+      .map(_.path.split('/').dropRight(1).mkString("/")).distinct
+    assert(dirs.size == 1, s"one write, one txn dir: $dirs")
+    // what both abort()s call, as if commit() threw after publishing
+    graft.sources.TxLogWriteCommit.dropTxn(base, dirs.head)
+    assert(contents(TxLog.read(s, base)) == contents(clustered(0, 50, "w", 1)))
+    val orphan = new org.apache.hadoop.fs.Path(s"$base/data/orphan")
+    val fs = TxLog.fs(base, s)
+    fs.mkdirs(orphan)
+    graft.sources.TxLogWriteCommit.dropTxn(base, "data/orphan")
+    assert(!fs.exists(orphan))
+  }
+
   test("SQL INSERT INTO writes through the catalog table, including " +
     "the DDL-first bootstrap of an EMPTY store") {
     val base = "/tmp/graft_txwrite/sql"

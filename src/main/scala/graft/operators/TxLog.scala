@@ -398,7 +398,7 @@ object TxLog {
       name.stripPrefix("v").stripSuffix(".ckpt.txt").toLongOption
     else None
 
-  private def readPointer(spark: SparkSession, base: String): Option[Long] = {
+  private[graft] def readPointer(spark: SparkSession, base: String): Option[Long] = {
     val f = fs(base, spark)
     val p = pointerPath(base)
     try {
@@ -415,14 +415,44 @@ object TxLog {
 
   /** Point `_last_checkpoint` at `v` — monotone (never regress a
     * fresher writer's pointer) and best-effort: the pointer is a hint,
-    * so an IO failure here must never fail a committed write. */
+    * so an IO failure here must never fail a committed write. The
+    * pointer is written to a uniquely named temp file (not a version
+    * name: [[parseVersion]] ignores it) and renamed over the old one,
+    * so a concurrent [[latestVersion]] reads the old pointer or the
+    * new one, never a truncated file. */
   private[graft] def advancePointer(spark: SparkSession, base: String,
                              v: Long): Unit =
     try {
       if (readPointer(spark, base).forall(_ < v)) {
         val f = fs(base, spark)
-        val out = f.create(pointerPath(base), true)
-        try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
+        val dst = pointerPath(base)
+        val tmp = new Path(
+          s"$base/$LogDir/.pointer-tmp-${java.util.UUID.randomUUID()}")
+        val bytes = s"$v\n".getBytes("UTF-8")
+        if (f.getUri.getScheme == "file") {
+          // Local FS: FileContext's overwrite deletes the destination
+          // before it renames, and the checksum FS renames the .crc
+          // sidecar separately — both leave a window with no pointer or
+          // a mismatched checksum. rename(2) replaces in one step; the
+          // pointer then carries no sidecar (a stale one goes first).
+          val raw = (p: Path) => java.nio.file.Paths.get(p.toUri.getPath)
+          val rawTmp = raw(tmp)
+          try {
+            java.nio.file.Files.write(rawTmp, bytes)
+            java.nio.file.Files.deleteIfExists(raw(
+              new Path(dst.getParent, s".${dst.getName}.crc")))
+            java.nio.file.Files.move(rawTmp, raw(dst),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+          } finally java.nio.file.Files.deleteIfExists(rawTmp)
+        } else {
+          try {
+            val out = f.create(tmp, true)
+            try out.write(bytes) finally out.close()
+            fc(base, spark).rename(tmp, dst, Options.Rename.OVERWRITE)
+          } catch {
+            case e: java.io.IOException => f.delete(tmp, false); throw e
+          }
+        }
       }
     } catch { case _: java.io.IOException => () }
 
@@ -1770,7 +1800,8 @@ object TxLog {
 
   /** The one schema-less read of TxLog-written parquet `paths` (data
     * files or sidecar dirs). `requested` (widened tables) wins. Else,
-    * when every path's footer schema is known and identical, the read
+    * when every path's footer schema is known and identical up to
+    * nullability (a file read makes every column nullable), the read
     * is pinned to it — exactly what Spark's one-footer or mergeSchema
     * inference returns, without the Spark job inference starts. Else
     * (a schema-evolved subset, a foreign footer, a failed footer read
@@ -1792,10 +1823,15 @@ object TxLog {
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
     import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
     import org.apache.spark.sql.execution.datasources.parquet.{
       ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
-    def onlyOne(ss: Seq[Option[StructType]]) =
-      ss.distinct match { case Seq(one) => one; case _ => None }
+    def onlyOne(ss: Seq[Option[StructType]]): Option[StructType] =
+      ss.distinct match {
+        case Some(one) +: rest if rest.forall(_.exists(s =>
+            DataTypeUtils.equalsIgnoreNullability(one, s))) => Some(one)
+        case _ => None
+      }
     lazy val conf = spark.sessionState.newHadoopConf()
     lazy val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
     // one path's footer schema as Spark's inference reads it; a dir's
@@ -1921,7 +1957,7 @@ object TxLog {
     * a set/restore on the SHARED session conf, and two concurrent
     * variant lands interleaving (A sets false, B saves A's false as
     * its "previous", A restores the original true, B writes SHREDDED)
-    * would publish a file the row decoder paths reject. The lock makes
+    * would publish a file against the unshredded rule below. The lock makes
     * set→write→restore atomic across lands; a concurrent USER write in
     * the same session can at worst observe false and land unshredded —
     * a scan-speed nit, never a correctness loss. */
@@ -1929,13 +1965,13 @@ object TxLog {
 
   private[graft] def land(df: DataFrame, base: String,
                           pcols: Seq[String] = Seq.empty): Seq[String] = {
-    // VARIANT columns land UNSHREDDED: the engine's row decoder (DV
-    // masks, CDF slices, row-id synthesis) reassembles VariantVal
-    // from the two-binary group; Spark 4's default per-field
-    // shredding is a scan-speed optimization the columnar path
-    // doesn't need here and the row path cannot rebuild. Scoped to
-    // this write and restored after (shredding stays on for user
-    // writes outside the log).
+    // VARIANT columns land UNSHREDDED, the two-binary layout every
+    // landed variant file has carried so far. It is a layout choice,
+    // not a reader limit: Spark's parquet reader, which every TxLog
+    // and DSv2 read decodes through, rebuilds shredded files too
+    // (CONVERT TO TXLOG adopts them). Scoped to this write and
+    // restored after (shredding stays on for user writes outside the
+    // log).
     val hasVariant = df.schema.exists(
       _.dataType == org.apache.spark.sql.types.VariantType)
     if (hasVariant) variantLandLock.synchronized(landUnlocked(df, base, pcols))

@@ -258,9 +258,9 @@ object RegistryTx {
     // writes VARIANT with per-field typed_value columns
     // (writeShredding=true is its default) — the layout every
     // directory some OTHER job wrote arrives in. CONVERT TO TXLOG
-    // adopts it in place, and the row decoder (which DV-masked files
-    // force) REBUILDS each VariantVal from typed_value + residual
-    // value via Spark's own shredding schema — byte-compatible with
+    // adopts it in place, and Spark's parquet reader (which serves
+    // DV-masked files' rows too) REBUILDS each VariantVal from
+    // typed_value + residual value — byte-compatible with
     // the writer, so variant_get extraction is identical to the
     // unshredded twin (TxLogVariantSpec pins the equality law; this
     // witness pins the adoption → MOR delete → typed-silver chain

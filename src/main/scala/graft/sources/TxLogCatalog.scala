@@ -688,9 +688,7 @@ class StagedTxLogTable(base: String, ident: Identifier,
             val pIdx = pspec.map { case (c, _) =>
               tableSchema.fieldNames.indexWhere(_.equalsIgnoreCase(c)) }
             new TxLogWriterFactory(base, s"data/$txn", tableSchema,
-              pspec.map(_._1),
-              new org.apache.spark.util.SerializableConfiguration(
-                TxLogSource.driverHadoopConf()), pIdx)
+              pspec.map(_._1), TxLogParquetOut(tableSchema), pIdx)
           }
           override def commit(messages: Array[WriterCommitMessage]): Unit =
             staged = TxLogWriteCommit.toEntries(messages) // defer publish

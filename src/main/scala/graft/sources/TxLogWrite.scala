@@ -2,14 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,10 +19,11 @@ import graft.operators.TxLog
   *
   * Protocol, mapped onto DSv2's two-phase commit:
   *  - executors write parquet files under a fresh per-write txn dir
-  *    (`data/<uuid>[-e<epoch>]/part-<partition>-<task>.parquet`) via
-  *    the public parquet-mr Group writer, tracking rows + per-column
-  *    min/max INLINE — stats ride the commit messages, so no
-  *    read-back scan is needed (cheaper than [[TxLog.landEntries]]);
+  *    (`data/<uuid>[-e<epoch>]/part-<partition>-<task>.parquet`)
+  *    through Spark's own parquet writer ([[TxLogParquetOut]]),
+  *    tracking rows + per-column min/max INLINE — stats ride the
+  *    commit messages, so no read-back scan is needed (cheaper than
+  *    [[TxLog.landEntries]]);
   *  - `BatchWrite.commit` publishes one manifest from the collected
   *    messages under the same CAS retry as [[TxLog.append]]: a
   *    conflict re-reads ONE manifest, the landed data is reused;
@@ -263,139 +260,40 @@ case class TxLogFileResult(path: String, rows: Long,
 case class TxLogWriterMessage(files: Seq[TxLogFileResult])
     extends WriterCommitMessage
 
+/** Spark's parquet writer for one write's physical schema, prepared
+  * ONCE on the driver with the session SQLConf — compression, timestamp
+  * type and the footer's row-metadata key are the ones [[TxLog.land]]
+  * writes. Each task opens its files through [[open]] with the job
+  * conf prepared here. */
+final class TxLogParquetOut private (
+    schema: StructType, factory: OutputWriterFactory,
+    jobConf: org.apache.spark.util.SerializableConfiguration)
+    extends Serializable {
+  def conf: Configuration = jobConf.value
+
+  @transient private lazy val context =
+    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
+
+  def open(path: String): OutputWriter =
+    factory.newInstance(path, schema, context)
+}
+
+object TxLogParquetOut {
+  def apply(schema: StructType): TxLogParquetOut = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+    val spark = org.apache.spark.sql.SparkSession.active
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val sqlConf = spark.sessionState.conf
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    new TxLogParquetOut(schema, factory,
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+  }
+}
+
 object TxLogWriteSupport {
-  /** parquet schema for the supported types (same set the read side
-    * decodes) — nested struct/array/map build recursively in the
-    * STANDARD layouts (3-level LIST, MAP key_value) that both Spark's
-    * vectorized reader and the txlog row decoder consume. */
-  def messageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach(f => b.addField(parquetType(f.dataType, f.name)))
-    b.named("graft_txlog_row")
-  }
-
-  private def parquetType(dt: org.apache.spark.sql.types.DataType,
-                          name: String,
-                          required: Boolean = false)
-      : org.apache.parquet.schema.Type = {
-    def prim(t: PrimitiveTypeName) =
-      if (required) Types.required(t) else Types.optional(t)
-    dt match {
-      case LongType => prim(PrimitiveTypeName.INT64).named(name)
-      case IntegerType => prim(PrimitiveTypeName.INT32).named(name)
-      case ShortType => prim(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(16, true)).named(name)
-      case ByteType => prim(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(8, true)).named(name)
-      case DoubleType => prim(PrimitiveTypeName.DOUBLE).named(name)
-      case FloatType => prim(PrimitiveTypeName.FLOAT).named(name)
-      case BooleanType => prim(PrimitiveTypeName.BOOLEAN).named(name)
-      case StringType => prim(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case BinaryType => prim(PrimitiveTypeName.BINARY).named(name)
-      case DateType => prim(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.dateType()).named(name)
-      case TimestampType => prim(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(true,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      case TimestampNTZType => prim(PrimitiveTypeName.INT64)
-        .as(LogicalTypeAnnotation.timestampType(false,
-          LogicalTypeAnnotation.TimeUnit.MICROS)).named(name)
-      // decimals: unscaled INT64 up to 18 digits (Spark's own
-      // compact layout), variable BINARY above — both physical
-      // encodings Spark's readers take natively
-      case d: DecimalType if d.precision <= 18 =>
-        prim(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-      case d: DecimalType =>
-        prim(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(name)
-      case st: org.apache.spark.sql.types.StructType =>
-        val gb = Types.optionalGroup()
-        st.fields.foreach(f => gb.addField(parquetType(f.dataType, f.name)))
-        gb.named(name)
-      case at: org.apache.spark.sql.types.ArrayType =>
-        Types.optionalGroup().as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetType(at.elementType, "element"))
-            .named("list"))
-          .named(name)
-      case mt: org.apache.spark.sql.types.MapType =>
-        Types.optionalGroup().as(LogicalTypeAnnotation.mapType())
-          .addField(Types.repeatedGroup()
-            .addField(parquetType(mt.keyType, "key", required = true))
-            .addField(parquetType(mt.valueType, "value"))
-            .named("key_value"))
-          .named(name)
-      case other => throw new IllegalArgumentException(
-        s"txlog sink does not support column type $other " +
-          "(numeric/string/bool/date/timestamp/decimal/struct/array/" +
-          "map schemas only)")
-    }
-  }
-
-  /** Fill group field `i` of `g` from `src` at `ord` — one writer for
-    * rows, array elements and map entries (InternalRow/ArrayData both
-    * speak SpecializedGetters), recursing through nested shapes in
-    * exactly the layouts [[parquetType]] declared. Callers null-check
-    * before calling (a parquet optional field is expressed by absence). */
-  private[sources] def addTo(
-      g: org.apache.parquet.example.data.Group, i: Int,
-      dt: org.apache.spark.sql.types.DataType,
-      src: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-      ord: Int): Unit = dt match {
-    case LongType => g.add(i, src.getLong(ord))
-    case IntegerType | DateType => g.add(i, src.getInt(ord))
-    case ShortType => g.add(i, src.getShort(ord).toInt)
-    case ByteType => g.add(i, src.getByte(ord).toInt)
-    case DoubleType => g.add(i, src.getDouble(ord))
-    case FloatType => g.add(i, src.getFloat(ord))
-    case BooleanType => g.add(i, src.getBoolean(ord))
-    case StringType => g.add(i, src.getUTF8String(ord).toString)
-    case BinaryType => g.add(i,
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(
-        src.getBinary(ord)))
-    case TimestampType | TimestampNTZType => g.add(i, src.getLong(ord))
-    case d: DecimalType =>
-      val dec = src.getDecimal(ord, d.precision, d.scale)
-      if (d.precision <= 18) g.add(i, dec.toUnscaledLong)
-      else g.add(i,
-        org.apache.parquet.io.api.Binary.fromConstantByteArray(
-          dec.toJavaBigDecimal.unscaledValue().toByteArray))
-    case st: org.apache.spark.sql.types.StructType =>
-      val child = g.addGroup(i)
-      val row = src.getStruct(ord, st.length)
-      var j = 0
-      while (j < st.length) {
-        if (!row.isNullAt(j)) addTo(child, j, st.fields(j).dataType, row, j)
-        j += 1
-      }
-    case at: org.apache.spark.sql.types.ArrayType =>
-      val listG = g.addGroup(i)
-      val arr = src.getArray(ord)
-      var j = 0
-      while (j < arr.numElements()) {
-        val entry = listG.addGroup(0)
-        if (!arr.isNullAt(j)) addTo(entry, 0, at.elementType, arr, j)
-        j += 1
-      }
-    case mt: org.apache.spark.sql.types.MapType =>
-      val mapG = g.addGroup(i)
-      val m = src.getMap(ord)
-      val ks = m.keyArray(); val vs = m.valueArray()
-      var j = 0
-      while (j < m.numElements()) {
-        val entry = mapG.addGroup(0)
-        addTo(entry, 0, mt.keyType, ks, j)
-        if (!vs.isNullAt(j)) addTo(entry, 1, mt.valueType, vs, j)
-        j += 1
-      }
-    case other => throw new IllegalArgumentException(
-      s"unsupported type $other")
-  }
-
   /** TxLog's stats dtype of a Spark type (one comparator for both
     * write paths — drift between the write-side tracker and the
     * read-side overlap check would make pruning unsound). */
@@ -466,8 +364,7 @@ class TxLogBatchWrite(base: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new TxLogWriterFactory(base, s"data/$txn", schema, statsCols,
-      new org.apache.spark.util.SerializableConfiguration(
-        TxLogSource.driverHadoopConf()), pIdx)
+      TxLogParquetOut(schema), pIdx)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
@@ -490,8 +387,7 @@ class TxLogStreamingWrite(base: String, schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new TxLogStreamingWriterFactory(base, s"data/$writeId", schema, statsCols,
-      new org.apache.spark.util.SerializableConfiguration(
-        TxLogSource.driverHadoopConf()), pIdx)
+      TxLogParquetOut(schema), pIdx)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
@@ -797,29 +693,28 @@ class StatsTracker(idx: Int, name: String, dt: DataType)
 }
 
 class TxLogWriterFactory(base: String, txnRel: String, schema: StructType,
-                         statsCols: Seq[String],
-                         conf: org.apache.spark.util.SerializableConfiguration,
+                         statsCols: Seq[String], out: TxLogParquetOut,
                          pIdx: Seq[Int] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new TxLogDataWriter(base, txnRel, f"part-$partitionId%05d-$taskId",
-      schema, statsCols, conf.value, pIdx)
+      schema, statsCols, out, pIdx)
 }
 
 class TxLogStreamingWriterFactory(base: String, txnRelPrefix: String,
                                   schema: StructType, statsCols: Seq[String],
-                                  conf: org.apache.spark.util.SerializableConfiguration,
+                                  out: TxLogParquetOut,
                                   pIdx: Seq[Int] = Seq.empty)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new TxLogDataWriter(base, s"$txnRelPrefix-e$epochId",
-      f"part-$partitionId%05d-$taskId", schema, statsCols, conf.value, pIdx)
+      f"part-$partitionId%05d-$taskId", schema, statsCols, out, pIdx)
 }
 
-/** One task's parquet output, written through the public parquet-mr
-  * Group writer, with rows + per-stats-column min/max tracked INLINE
-  * (Catalyst-internal comparisons on the fly; reprs match the
+/** One task's parquet output, written through Spark's parquet writer
+  * ([[TxLogParquetOut]]), with rows + per-stats-column min/max tracked
+  * INLINE (Catalyst-internal comparisons on the fly; reprs match the
   * landEntries cast path so both write routes prune identically).
   * Files are created lazily on the first row — an empty task commits
   * an empty message, never an empty file.
@@ -832,13 +727,10 @@ class TxLogStreamingWriterFactory(base: String, txnRelPrefix: String,
   * files, never a mixed one. */
 class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
                       schema: StructType, statsCols: Seq[String],
-                      conf: Configuration, pIdx: Seq[Int] = Seq.empty)
+                      out: TxLogParquetOut, pIdx: Seq[Int] = Seq.empty)
     extends DataWriter[InternalRow] {
-  private val mt = TxLogWriteSupport.messageType(schema)
-  private val factory = new SimpleGroupFactory(mt)
   private var rel: String = _
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[
-    org.apache.parquet.example.data.Group] = _
+  private var writer: OutputWriter = _
   private var rows = 0L
   private var tracked: Seq[StatsTracker] = Seq.empty
   private var fileSeq = 0
@@ -876,13 +768,7 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
       require(i >= 0, s"stats column '$c' is not in the write schema")
       new StatsTracker(i, c, schema.fields(i).dataType)
     }
-    writer = ExampleParquetWriter.builder(
-        org.apache.parquet.hadoop.util.HadoopOutputFile
-          .fromPath(new HPath(s"$base/$rel"), conf))
-      .withType(mt)
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    writer = out.open(s"$base/$rel")
   }
 
   override def write(row: InternalRow): Unit = {
@@ -892,14 +778,7 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
         finishFile(); openFile(); curKey = k
       }
     } else if (writer == null) openFile()
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i))
-        TxLogWriteSupport.addTo(g, i, schema.fields(i).dataType, row, i)
-      i += 1
-    }
-    writer.write(g)
+    writer.write(row)
     rows += 1L
     tracked.foreach(_.update(row))
   }
@@ -914,7 +793,7 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
     val open = Option(rel).toSeq
     (done.map(_.path) ++ open).distinct.foreach { r =>
       val p = new HPath(s"$base/$r")
-      p.getFileSystem(conf).delete(p, false)
+      p.getFileSystem(out.conf).delete(p, false)
     }
   }
 

@@ -184,4 +184,34 @@ class TxLogDeltaLogSpec extends AnyFunSuite {
       assert(TxLog.read(spark, base).count() == 3)
     } finally spark.conf.unset("spark.graft.txlog.checkpointInterval")
   }
+
+  test("_last_checkpoint is replaced whole: a reader racing the " +
+    "pointer's advances always reads a version") {
+    val base = "/tmp/graft_txdelta/pointer"
+    TxLog.drop(spark, base)
+    val fs = TxLog.fs(base, spark)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$base/_log"))
+    TxLog.advancePointer(spark, base, 1L)
+    val n = 1500L
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val misses = new java.util.concurrent.atomic.AtomicLong(0L)
+    val reader = new Thread(() =>
+      while (!done.get) {
+        if (TxLog.readPointer(spark, base).isEmpty) misses.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.start()
+    try (2L to n).foreach(v => TxLog.advancePointer(spark, base, v))
+    finally { done.set(true); reader.join() }
+    assert(reads.get > 0L)
+    assert(misses.get == 0L,
+      s"${misses.get} of ${reads.get} racing reads found no pointer")
+    assert(TxLog.readPointer(spark, base).contains(n))
+    assert(TxLog.latestVersion(spark, base).isEmpty,
+      "the pointer's temp files are not versions")
+    val left = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/_log"))
+      .map(_.getPath.getName).filterNot(_.startsWith("._last_checkpoint"))
+    assert(left.toSeq == Seq("_last_checkpoint"), left.mkString(", "))
+  }
 }

@@ -64,6 +64,26 @@ class TxLogReadSchemaSpec extends AnyFunSuite {
     assert(TxLog.readPoint(spark, base, "k", 390L).count() == 1L)
   }
 
+  test("a catalog table seeded by SQL INSERT INTO analyses at a new " +
+    "version without a Spark job") {
+    val s = SparkTestBase.spark.newSession()
+    s.conf.set("spark.sql.catalog.graft", "graft.sources.TxLogCatalog")
+    s.conf.set("spark.sql.catalog.graft.warehouse", s"$root/wh")
+    val base = s"$root/wh/ns/inserted"
+    TxLog.drop(s, base)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.ns")
+    s.sql("CREATE TABLE graft.ns.inserted (k BIGINT, s STRING) " +
+      "USING graft.sources.TxLogSource")
+    s.sql("INSERT INTO graft.ns.inserted VALUES (1, 's-1'), (2, 's-2')")
+    assert(s.table("graft.ns.inserted").count() == 2L) // warm
+    import s.implicits._
+    TxLog.append(Seq((3L, "s-3")).toDF("k", "s"), base, Some("k"))
+    val (df, jobs) = jobsDuring(s.table("graft.ns.inserted"))
+    assert(jobs == 0, s"analysis at a new version started $jobs Spark job(s)")
+    assert(df.schema.toDDL == "k BIGINT,s STRING")
+    assert(df.count() == 3L)
+  }
+
   test("analysing a catalog table at a new version starts no Spark job") {
     val s = SparkTestBase.spark.newSession()
     s.conf.set("spark.sql.catalog.graft", "graft.sources.TxLogCatalog")

@@ -7,8 +7,8 @@ import graft.operators.TxLog
 /** Measures the two write routes into the log at 20M rows / 32 tasks:
   *   (a) TxLog.commit — Spark's vectorized parquet writer + one
   *       read-back stats scan of the landed txn dir;
-  *   (b) df.write via the DSv2 sink — row-oriented parquet-mr Group
-  *       writer, stats tracked inline (no read-back).
+  *   (b) df.write via the DSv2 sink — Spark's parquet writer fed row
+  *       by row, stats tracked inline (no read-back).
   * Run: sbt -batch "Test/runMain graft.TxWriteProbeMain"
   * Numbers go to BENCH_NOTES.md. */
 object TxWriteProbeMain {

@@ -415,46 +415,55 @@ object TxLog {
 
   /** Point `_last_checkpoint` at `v` — monotone (never regress a
     * fresher writer's pointer) and best-effort: the pointer is a hint,
-    * so an IO failure here must never fail a committed write. The
-    * pointer is written to a uniquely named temp file (not a version
-    * name: [[parseVersion]] ignores it) and renamed over the old one,
-    * so a concurrent [[latestVersion]] reads the old pointer or the
-    * new one, never a truncated file. */
+    * so an IO failure here must never fail a committed write. Written
+    * by [[replaceFile]], so a concurrent [[latestVersion]] reads the
+    * old pointer or the new one, never a truncated or missing file. */
   private[graft] def advancePointer(spark: SparkSession, base: String,
                              v: Long): Unit =
     try {
-      if (readPointer(spark, base).forall(_ < v)) {
-        val f = fs(base, spark)
-        val dst = pointerPath(base)
-        val tmp = new Path(
-          s"$base/$LogDir/.pointer-tmp-${java.util.UUID.randomUUID()}")
-        val bytes = s"$v\n".getBytes("UTF-8")
-        if (f.getUri.getScheme == "file") {
-          // Local FS: FileContext's overwrite deletes the destination
-          // before it renames, and the checksum FS renames the .crc
-          // sidecar separately — both leave a window with no pointer or
-          // a mismatched checksum. rename(2) replaces in one step; the
-          // pointer then carries no sidecar (a stale one goes first).
-          val raw = (p: Path) => java.nio.file.Paths.get(p.toUri.getPath)
-          val rawTmp = raw(tmp)
-          try {
-            java.nio.file.Files.write(rawTmp, bytes)
-            java.nio.file.Files.deleteIfExists(raw(
-              new Path(dst.getParent, s".${dst.getName}.crc")))
-            java.nio.file.Files.move(rawTmp, raw(dst),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          } finally java.nio.file.Files.deleteIfExists(rawTmp)
-        } else {
-          try {
-            val out = f.create(tmp, true)
-            try out.write(bytes) finally out.close()
-            fc(base, spark).rename(tmp, dst, Options.Rename.OVERWRITE)
-          } catch {
-            case e: java.io.IOException => f.delete(tmp, false); throw e
-          }
-        }
-      }
+      if (readPointer(spark, base).forall(_ < v))
+        replaceFile(spark, base, pointerPath(base), ".pointer-tmp",
+          s"$v\n".getBytes("UTF-8"))
     } catch { case _: java.io.IOException => () }
+
+  /** Install `bytes` as the `_log` file `dst`, replacing it whole: they
+    * go to a uniquely named temp file (`tmpPrefix` + a uuid — not a
+    * version name, [[parseVersion]] ignores it), which is renamed over
+    * `dst` and deleted on failure. A concurrent reader sees the old
+    * file or the new one, never neither. On the local FS the rename is
+    * a raw rename(2) (`ATOMIC_MOVE`): Hadoop's local `FileContext`
+    * overwrite deletes the destination before it renames and renames
+    * the `.crc` sidecar separately (`AbstractFileSystem.renameInternal`,
+    * `ChecksumFs`), so `dst` carries no sidecar there (the temp file is
+    * written through the raw local FS, and a stale sidecar goes first).
+    * Other stores rename with `FileContext`'s `OVERWRITE`. */
+  private def replaceFile(spark: SparkSession, base: String, dst: Path,
+                          tmpPrefix: String, bytes: Array[Byte]): Unit = {
+    val f = fs(base, spark)
+    val tmp = new Path(
+      s"$base/$LogDir/$tmpPrefix-${java.util.UUID.randomUUID()}")
+    if (f.getUri.getScheme == "file") {
+      val raw = (p: Path) => java.nio.file.Paths.get(p.toUri.getPath)
+      try {
+        val out = (f match {
+          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+          case other => other
+        }).create(tmp, true)
+        try out.write(bytes) finally out.close()
+        java.nio.file.Files.deleteIfExists(raw(
+          new Path(dst.getParent, s".${dst.getName}.crc")))
+        java.nio.file.Files.move(raw(tmp), raw(dst),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      } finally java.nio.file.Files.deleteIfExists(raw(tmp))
+    } else
+      try {
+        val out = f.create(tmp, true)
+        try out.write(bytes) finally out.close()
+        fc(base, spark).rename(tmp, dst, Options.Rename.OVERWRITE)
+      } catch {
+        case e: java.io.IOException => f.delete(tmp, false); throw e
+      }
+  }
 
   /** Highest published version, or None for an empty store. With a
     * `_last_checkpoint` pointer the resolution is O(commits since the
@@ -922,10 +931,11 @@ object TxLog {
     * without a mapping). */
   private[graft] def physicalName(spark: SparkSession, base: String,
                                   column: String): String =
-    latestMeta(spark, base).colMap match {
-      case Some(cm) => cm.physical(column)
-      case None => column
-    }
+    physicalIn(latestMeta(spark, base), column)
+
+  /** [[physicalName]] under one version's metadata. */
+  private def physicalIn(m: TableMeta, column: String): String =
+    m.colMap.map(_.physical(column)).getOrElse(column)
 
   /** Rename a user DataFrame to physical names iff the table is
     * mapped (the verb-entry choke point — identity otherwise, so
@@ -1816,6 +1826,16 @@ object TxLog {
       case None => spark.read
     }).parquet(paths: _*)
 
+  /** The schema [[readFiles]]`(spark, paths, None)` serves, without
+    * building that read when every path's footer schema is known: the
+    * read's file listing starts a Spark job past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths. */
+  private[graft] def filesSchema(spark: SparkSession,
+                                 paths: Seq[String]): StructType =
+    footerSchema(spark, paths)
+      .map(org.apache.spark.sql.graftbridge.ColumnBridge.asNullable)
+      .getOrElse(readFiles(spark, paths, None).schema)
+
   /** The one footer schema all `paths` share, if known; misses are read
     * on the driver ([[readFooters]]). */
   private def footerSchema(spark: SparkSession,
@@ -1869,7 +1889,11 @@ object TxLog {
     * mask on parquet's `_metadata` row index — no data file is ever
     * rewritten to serve a read. The mask is broadcast when its total
     * row count (known from the manifest) is small, so at scale the
-    * common case adds a map-side filter, not a shuffle. */
+    * common case adds a map-side filter, not a shuffle. Serves [[read]],
+    * [[readVersion]] and the rewrite verbs, and [[readPoint]]/
+    * [[readRanges]] only when their survivors' masks exceed the DSv2
+    * driver-side limit ([[readKept]]); the mask costs its own Spark job
+    * and a join-and-union plan, which the pinned DSv2 scan avoids. */
   private[graft] def readEntries(spark: SparkSession, base: String,
                                  entries: Seq[Entry],
                                  mergeSchema: Boolean = false,
@@ -3160,28 +3184,22 @@ object TxLog {
                                   entries: Seq[Entry]): Unit =
     writeCkptTextLines(spark, base, v, metaLines ++ entries.map(serLine))
 
-  /** Install the text half of a checkpoint (tmp + rename-overwrite:
-    * v's CAS winner is the unique writer, the rename only shields
-    * readers from a torn file). */
+  /** Install the text half of a checkpoint through [[replaceFile]]:
+    * v's CAS winner is the unique writer, and a vacuum that re-installs
+    * a kept version's checkpoint replaces it whole, so a racing reader
+    * never finds it missing or torn. */
   private[graft] def writeCkptTextLines(spark: SparkSession, base: String,
-                                        v: Long, lines: Seq[String]): Unit = {
-    val f = fs(base, spark)
-    val tmp = new Path(s"$base/$LogDir/.ckpt-tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    try fc(base, spark).rename(tmp, ckptPath(base, v), Options.Rename.OVERWRITE)
+                                        v: Long, lines: Seq[String]): Unit =
+    try replaceFile(spark, base, ckptPath(base, v), ".ckpt-tmp",
+      (lines.mkString("\n") + "\n").getBytes("UTF-8"))
     catch {
       case e: java.io.IOException =>
-        f.delete(tmp, false)
         // checkpoint content for a version is DETERMINISTIC (derived
         // from the immutable commit chain), so a concurrent writer —
         // two racing vacuums both re-basing the same oldest-kept
-        // version (local ChecksumFs surfaces this as a .crc-sidecar
-        // rename collision) — already installed the same bytes: done
-        if (!f.exists(ckptPath(base, v))) throw e
+        // version — already installed the same bytes: done
+        if (!fs(base, spark).exists(ckptPath(base, v))) throw e
     }
-  }
 
   /** One optimistic commit: land `df`, publish as `expected`+1 (or
     * version 1 of an empty store). Throws [[CommitConflictException]]
@@ -3914,13 +3932,23 @@ object TxLog {
                   preds: Seq[(String, Any, Any)]): (Seq[Entry], Seq[Entry]) = {
     require(preds.nonEmpty, "pruneRanges needs at least one predicate")
     val v = requireLatest(spark, base)
-    val (entries, _) = manifest(spark, base, v)
-    // manifest stats are keyed on PHYSICAL names — translate each
-    // predicate's (logical) column once before the entry sweep
-    val kept = entries.filter(e => preds.forall { case (c, lo, hi) =>
-      touchesRange(e, physicalName(spark, base, c), reprOf(lo), reprOf(hi))
-    })
-    (kept, entries)
+    pruneRangesAt(spark, base, v, physicalPreds(metaOf(spark, base, v), preds))
+  }
+
+  /** Range predicates as manifest stats see them: each (logical)
+    * column translated once to its PHYSICAL name under `m`, each bound
+    * to its stats representation. */
+  private def physicalPreds(m: TableMeta, preds: Seq[(String, Any, Any)])
+      : Seq[(String, String, String)] =
+    preds.map { case (c, lo, hi) => (physicalIn(m, c), reprOf(lo), reprOf(hi)) }
+
+  /** [[pruneRanges]] at version `v`, over [[physicalPreds]]. */
+  private def pruneRangesAt(spark: SparkSession, base: String, v: Long,
+                            preds: Seq[(String, String, String)])
+      : (Seq[Entry], Seq[Entry]) = {
+    val entries = snapshotEntries(spark, base, v)
+    (entries.filter(e => preds.forall { case (c, lo, hi) =>
+      touchesRange(e, c, lo, hi) }), entries)
   }
 
   /** Box read with 2-D (or n-D) data skipping: prune files by ALL the
@@ -3929,27 +3957,43 @@ object TxLog {
     * table ([[Layout.zorderCluster]] + [[commitMulti]]) a box that
     * covers a sliver of the key plane opens a handful of the table's
     * files — pruned on BOTH dimensions, which a single-column sort
-    * can never give. */
+    * can never give. The latest version `v` is resolved once; the
+    * survivors are served by [[readKept]] (the DSv2 scan pinned to
+    * them at `v`, deletion vectors masked inside the scan) with the
+    * residual as a `where` that pushes into the scan. The schema is
+    * the table's at `v` ([[graft.sources.TxLogSource]]'s): survivors
+    * that all predate a mergeSchema append serve its columns as NULL. */
   def readRanges(spark: SparkSession, base: String,
                  preds: Seq[(String, Any, Any)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
+    require(preds.nonEmpty, "readRanges needs at least one predicate")
+    val v = requireLatest(spark, base)
+    val phys = physicalPreds(metaOf(spark, base, v), preds)
     // columnar-checkpoint tables prune EXECUTOR-side and collect only
     // the survivors (the kept working set); text tables (or a warm
     // snapshot cache) keep the driver sweep — cheaper than a job
-    val v = requireLatest(spark, base)
-    val predsPhys = preds.map { case (c, lo, hi) =>
-      (physicalName(spark, base, c), reprOf(lo), reprOf(hi)) }
-    val kept = TxLogPlan.pruneEntriesForScan(spark, base, v, predsPhys)
-      .getOrElse(pruneRanges(spark, base, preds)._1)
-    val residual = preds.map { case (c, lo, hi) =>
+    val kept = TxLogPlan.pruneEntriesForScan(spark, base, v, phys)
+      .getOrElse(pruneRangesAt(spark, base, v, phys)._1)
+    // the residual references LOGICAL names, like the served schema
+    readKept(spark, base, v, kept).where(preds.map { case (c, lo, hi) =>
       col(c).between(lit(lo), lit(hi))
-    }.reduce(_ && _)
-    if (kept.isEmpty) read(spark, base).where(lit(false))
-    // the residual references LOGICAL names — filter on the logical
-    // view (identity when the table has no mapping)
-    else logicalView(spark, base, readEntriesCurrent(spark, base, kept))
-      .where(residual)
+    }.reduce(_ && _))
   }
+
+  /** `kept`, entries already pruned at version `v`, as a logical
+    * DataFrame: the DSv2 scan pinned to them
+    * ([[graft.sources.TxLogSource.pinnedRead]] — one partition per
+    * entry, masks applied inside the scan, no second resolution of the
+    * log). When their deletion vectors carry more positions than the
+    * DSv2 driver-side limit (`spark.graft.txlog.dsv2MaxMaskRows`,
+    * checked from the manifest's `dv.rows` before any sidecar is
+    * read), [[readEntries]]' distributed anti-join serves them. */
+  private def readKept(spark: SparkSession, base: String, v: Long,
+                       kept: Seq[Entry]): DataFrame =
+    if (kept.flatMap(_.dv).map(_.rows).sum <=
+        graft.sources.TxLogSource.maxMaskRows(spark))
+      graft.sources.TxLogSource.pinnedRead(spark, base, v, kept)
+    else logicalView(spark, base, readEntriesCurrent(spark, base, kept))
 
   /** Copy-on-write MERGE: rewrite ONLY the files whose `statsCol`
     * range overlaps the source's key range; carry every other file
@@ -5447,12 +5491,17 @@ object TxLog {
     * Entries without a bloom on the column pass conservatively.
     * Returns (kept, all). */
   def prunePoint(spark: SparkSession, base: String, column0: String,
-                 value: Any): (Seq[Entry], Seq[Entry]) = {
+                 value: Any): (Seq[Entry], Seq[Entry]) =
+    prunePointAt(spark, base, requireLatest(spark, base), column0, value)
+
+  /** [[prunePoint]] at version `v`. */
+  private def prunePointAt(spark: SparkSession, base: String, v: Long,
+                           column0: String,
+                           value: Any): (Seq[Entry], Seq[Entry]) = {
     import org.apache.spark.sql.functions.{col, countDistinct, lit}
     require(value != null, "point lookup value must be non-null")
-    val column = physicalName(spark, base, column0)
-    val v = requireLatest(spark, base)
-    val (entries, _) = manifest(spark, base, v)
+    val column = physicalIn(metaOf(spark, base, v), column0)
+    val entries = snapshotEntries(spark, base, v)
     val repr = reprOf(value)
     val statsKept = entries.filter(touchesRange(_, column, repr, repr))
     val (bloomable, rest) = statsKept.partition(_.bloomFor(column).isDefined)
@@ -5477,15 +5526,22 @@ object TxLog {
     (kept ++ rest, entries)
   }
 
-  /** Bloom-indexed point read: prune by stats + bloom, scan only the
-    * survivors with the equality predicate residual. */
+  /** Bloom-indexed point read: prune by stats + bloom at the latest
+    * version `v` (resolved once), then scan only the survivors with the
+    * equality predicate residual. The survivors are served by
+    * [[readKept]]: the DSv2 scan pinned to them at `v`, deletion
+    * vectors masked inside the scan, so the read is one Spark job
+    * whether or not its files are masked, and no survivor means zero
+    * partitions. The residual is a `where` that pushes into the scan.
+    * The schema is the table's at `v` ([[graft.sources.TxLogSource]]'s):
+    * a key whose files all predate a mergeSchema append serves that
+    * append's columns as NULL. */
   def readPoint(spark: SparkSession, base: String, column: String,
                 value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _) = prunePoint(spark, base, column, value)
-    if (kept.isEmpty) read(spark, base).where(lit(false))
-    else logicalView(spark, base, readEntriesCurrent(spark, base, kept)
-      .where(col(physicalName(spark, base, column)) === lit(value)))
+    val v = requireLatest(spark, base)
+    readKept(spark, base, v, prunePointAt(spark, base, v, column, value)._1)
+      .where(col(column) === lit(value))
   }
 
   /** Copy-on-write UPDATE (Delta `UPDATE SET` analog): for rows with

@@ -206,8 +206,8 @@ object TxLogSource {
         // scan would request it TWICE (as a data column and as the
         // materialized id)
         val inferred = StructType(
-          TxLog.readFiles(spark, files, None)
-            .schema.fields.filterNot(
+          TxLog.filesSchema(spark, files)
+            .fields.filterNot(
               _.name.equalsIgnoreCase(TxLog.RowIdCol)))
         cmap match {
           case Some(cm) =>
@@ -551,14 +551,24 @@ object TxLogSource {
     StructField(TxLog.DvFileCol, StringType),
     StructField(TxLog.DvPosCol, LongType)))
 
+  /** The DSv2 driver-side mask limit in effect
+    * (`spark.graft.txlog.dsv2MaxMaskRows`, else [[DefaultMaxMaskRows]]). */
+  private[graft] def maxMaskRows(spark: SparkSession): Long =
+    scala.util.Try(spark.conf.get("spark.graft.txlog.dsv2MaxMaskRows").toLong)
+      .getOrElse(DefaultMaxMaskRows)
+
   /** Sorted deleted-row positions of every masked entry, keyed by the
     * entry's manifest path — loaded driver-side at planning with the
-    * same reader the partitions decode through ([[openParquet]]). Each
-    * DISTINCT sidecar dir is scanned ONCE (positions bucketed by file
-    * name as they stream past), so a snapshot whose single MOR commit
-    * masked F files costs one O(sidecar rows) pass, not F of them.
-    * Bulk analytics over heavily-masked snapshots still belong on
-    * [[TxLog.read]], whose anti-join applies masks distributed. */
+    * same reader the partitions decode through ([[openParquet]]), so
+    * masking starts no Spark job. Each DISTINCT sidecar dir is scanned
+    * ONCE (positions bucketed by file name as they stream past), so a
+    * snapshot whose single MOR commit masked F files costs one
+    * O(sidecar rows) pass, not F of them. Serves every DSv2 batch and
+    * change-feed scan, and with them [[TxLog.readPoint]]/
+    * [[TxLog.readRanges]] ([[pinnedRead]]), which keep
+    * [[TxLog.readEntries]]' distributed anti-join for masks over
+    * [[maxMaskRows]]; bulk analytics over heavily-masked snapshots
+    * belong on [[TxLog.read]], which always masks that way. */
   private[sources] def dvPositionsByFile(base: String,
                                          entries: Seq[TxLog.Entry])
       : Map[String, Array[Long]] = {
@@ -569,9 +579,7 @@ object TxLogSource {
     // driver and bloat task serialization here — refuse from manifest
     // metadata alone and point at the scale-safe paths instead
     val totalMask = dved.map(_.dv.get.rows).sum
-    val maxMask = scala.util.Try(SparkSession.active.conf
-      .get("spark.graft.txlog.dsv2MaxMaskRows").toLong)
-      .getOrElse(DefaultMaxMaskRows)
+    val maxMask = maxMaskRows(SparkSession.active)
     require(totalMask <= maxMask,
       s"snapshot carries $totalMask deletion-vector positions, above " +
         s"the DSv2 driver-side limit $maxMask " +
@@ -611,6 +619,24 @@ object TxLogSource {
         path -> arr
       }
     }.toMap
+  }
+
+  /** A batch read of `base` pinned to version `v` and to `kept`, the
+    * entries a TxLog verb already pruned at `v`: a `Dataset` over a
+    * `DataSourceV2Relation` of a [[TxLogTable]] whose scan plans one
+    * partition per kept entry (none for an empty list), masks from
+    * [[dvPositionsByFile]], and never resolves the latest version or
+    * reads the manifest again. The schema is the table's at `v`
+    * ([[snapshotSchema]], what `format("graft.sources.TxLogSource")`
+    * serves); filters added with `where` push into the scan. */
+  private[graft] def pinnedRead(spark: SparkSession, base: String, v: Long,
+                                kept: Seq[TxLog.Entry])
+      : org.apache.spark.sql.DataFrame = {
+    val table = new TxLogTable(snapshotSchema(spark, base, v), base,
+      asOf = Some(v), pinned = Some(kept))
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(table, None, None, CaseInsensitiveStringMap.empty()))
   }
 
   /** The (column, lo?, hi?) range constraints a DSv2 filter implies —
@@ -743,8 +769,11 @@ object TxLogSource {
     }
 }
 
+/** `pinned`: the entries a [[TxLogSource.pinnedRead]] scan plans at
+  * version `asOf`, instead of the version's manifest. */
 class TxLogTable(tableSchema: StructType, base: String,
-                 asOf: Option[Long] = None)
+                 asOf: Option[Long] = None,
+                 pinned: Option[Seq[TxLog.Entry]] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
@@ -841,7 +870,7 @@ class TxLogTable(tableSchema: StructType, base: String,
         new CaseInsensitiveStringMap(m)
       case _ => options
     }
-    new TxLogScanBuilder(tableSchema, base, effective)
+    new TxLogScanBuilder(tableSchema, base, effective, pinned)
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -881,7 +910,8 @@ class TxLogTable(tableSchema: StructType, base: String,
 }
 
 class TxLogScanBuilder(full: StructType, base: String,
-                       options: CaseInsensitiveStringMap)
+                       options: CaseInsensitiveStringMap,
+                       pinned: Option[Seq[TxLog.Entry]] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with SupportsPushDownAggregates {
@@ -898,12 +928,12 @@ class TxLogScanBuilder(full: StructType, base: String,
     * frozen PHYSICAL names. */
   private lazy val physMap: Map[String, String] = {
     val spark = SparkSession.active
-    TxLog.latestVersion(spark, base) match {
-      case Some(latest) =>
-        TxLogSource.physMapOf(spark, base,
-          asOf.filter(_ <= latest).getOrElse(latest))
-      case None => Map.empty
-    }
+    // a pinned scan's version is already resolved
+    val target =
+      if (pinned.isDefined) asOf
+      else TxLog.latestVersion(spark, base)
+        .map(latest => asOf.filter(_ <= latest).getOrElse(latest))
+    target.map(TxLogSource.physMapOf(spark, base, _)).getOrElse(Map.empty)
   }
   override def pruneColumns(requiredSchema: StructType): Unit =
     // strip field metadata: the relation's attributes may carry
@@ -950,7 +980,9 @@ class TxLogScanBuilder(full: StructType, base: String,
       dryRun: Boolean): Boolean = {
     import org.apache.spark.sql.connector.expressions.aggregate._
     import org.apache.spark.sql.connector.expressions.NamedReference
-    if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty ||
+    // a pinned scan serves its kept entries, not the version's manifest
+    if (pinned.isDefined || pushed.nonEmpty ||
+      agg.groupByExpressions.nonEmpty ||
       TxLogSource.changeFeed(options) || TxLogSource.rowIds(options) ||
       Option(options.get("startingVersion")).exists(_.toLong > 0)) return false
     val spark = SparkSession.active
@@ -1119,7 +1151,8 @@ class TxLogScanBuilder(full: StructType, base: String,
       TxLogSource.changeTypes(options), physMap, maxFiles,
       rowIds = TxLogSource.rowIds(options),
       allowSchemaChange =
-        Option(options.get("allowSchemaChange")).exists(_.toBoolean))
+        Option(options.get("allowSchemaChange")).exists(_.toBoolean),
+      pinned = pinned)
   }
 }
 
@@ -1131,7 +1164,8 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
                 physMap: Map[String, String] = Map.empty,
                 maxFilesPerTrigger: Option[Long] = None,
                 private[sources] val rowIds: Boolean = false,
-                private[sources] val allowSchemaChange: Boolean = false)
+                private[sources] val allowSchemaChange: Boolean = false,
+                pinned: Option[Seq[TxLog.Entry]] = None)
     extends Scan with Batch {
 
   /** Enablement-backfill map (path → base row id), resolved lazily
@@ -1180,7 +1214,9 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
     * never a planning error. */
   private def pruneSummary(): String =
     try {
-      if (changeFeed || changeTypes || pushed.isEmpty) ""
+      if (pinned.isDefined)
+        s", pinnedFiles=${pinned.get.size} pruned at version ${versionAsOf.get}"
+      else if (changeFeed || changeTypes || pushed.isEmpty) ""
       else {
         val spark = SparkSession.active
         TxLog.latestVersion(spark, base).map { latest =>
@@ -1338,17 +1374,20 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
     require(maxFilesPerTrigger.isEmpty,
       "maxFilesPerTrigger is a streaming-only option (admission " +
         "control has no meaning for a one-shot batch read)")
-    val spark = SparkSession.active
-    val latest = TxLog.requireLatest(spark, base)
-    versionAsOf.foreach(v => require(v <= latest,
-      s"versionAsOf $v is beyond the latest committed version $latest"))
-    val target = versionAsOf.getOrElse(latest)
     def parts(es: Seq[TxLog.Entry], v: Long): Seq[InputPartition] = {
       val masks = TxLogSource.dvPositionsByFile(base, es)
       es.map(e => TxLogInputPartition(TxLog.resolve(base, e.path), v,
         masks.getOrElse(e.path, Array.emptyLongArray),
         baseRowId = ridOf(e)): InputPartition)
     }
+    // pinned: exactly the entries the TxLog verb kept at its version
+    if (pinned.isDefined)
+      return TxLogInputPartition.uniform(parts(pinned.get, versionAsOf.get))
+    val spark = SparkSession.active
+    val latest = TxLog.requireLatest(spark, base)
+    versionAsOf.foreach(v => require(v <= latest,
+      s"versionAsOf $v is beyond the latest committed version $latest"))
+    val target = versionAsOf.getOrElse(latest)
     TxLogInputPartition.uniform(
       if (changeTypes)
         (1L to target).flatMap(v => transitionPartitions(spark, v))
@@ -1381,10 +1420,15 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
       })
   }
 
+  /** The reader conf is broadcast, as Spark's own file scans do: a
+    * conf serialized into the factory is deserialized by every task
+    * (about 10 ms a task, measured on a 4-vCPU local run), a broadcast
+    * once per executor. */
   private[sources] def readerFactory(): PartitionReaderFactory =
     new TxLogReaderFactory(required,
-      new org.apache.spark.util.SerializableConfiguration(
-        TxLogSource.readerHadoopConf()), physMap)
+      SparkSession.active.sparkContext.broadcast(
+        new org.apache.spark.util.SerializableConfiguration(
+          TxLogSource.readerHadoopConf())), physMap)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory()
 
   override def toMicroBatchStream(checkpointLocation: String)
@@ -1471,7 +1515,8 @@ case class TxLogAggPartition(values: Seq[Any]) extends InputPartition
   * batches, skipping or keeping each row ordinal. */
 class TxLogReaderFactory(
     required: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration],
     physMap: Map[String, String] = Map.empty)
     extends PartitionReaderFactory {
 
@@ -1552,7 +1597,7 @@ class TxLogReaderFactory(
     * filled per batch. `start` is the file row ordinal of the batch's
     * first row. */
   private final class FileBatches(p: TxLogInputPartition) {
-    private val reader = TxLogSource.openParquet(p.file, conf.value,
+    private val reader = TxLogSource.openParquet(p.file, conf.value.value,
       requestedSchema, constSchema,
       new GenericInternalRow(constSchema.fields.map { f =>
         if (f.name == TxLogSource.CommitVersionCol) p.commitVersion: Any

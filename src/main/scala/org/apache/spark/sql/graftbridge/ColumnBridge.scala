@@ -19,6 +19,12 @@ object ColumnBridge {
       : org.apache.spark.sql.connector.expressions.Literal[Any] =
     org.apache.spark.sql.connector.expressions.LiteralValue(value, dt)
 
+  /** `schema` with every field, element and value nullable
+    * (`StructType.asNullable` is `private[spark]`): the data schema a
+    * file-source read serves. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 

@@ -18,6 +18,21 @@ object SparkTestBase {
   }
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Collect `df` and return the data files its TxLog DSv2 scan
+    * planned (adaptive plans included), or None when `df` read through
+    * no such scan. */
+  def plannedFiles(df: org.apache.spark.sql.DataFrame): Option[Set[String]] = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    object Plans
+        extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    Plans.collect(df.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.inputPartitions
+    }.headOption.map(_.map {
+      case p: graft.sources.TxLogInputPartition => p.file
+    }.toSet)
+  }
+
   /** Run `body` and count the Spark jobs it starts from this thread
     * (tagged, so a stream another suite left running is not counted).
     * The listener bus is drained before the count is read, so no

@@ -53,6 +53,22 @@ class TxLogBloomSpec extends AnyFunSuite {
     assert(TxLog.readPoint(spark, base, "sk", "key-99999").count() == 0)
   }
 
+  test("the point read's DSv2 scan plans exactly the files the bloom " +
+    "keeps") {
+    val base = "/tmp/graft_txbloom/planned"
+    seed(base)
+    TxLog.deleteRangeMor(spark, base, "k", 100L, 110L)
+    Seq("key-123", "key-105", "key-700").foreach { key =>
+      val kept = TxLog.prunePoint(spark, base, "sk", key)._1
+      assert(kept.nonEmpty && kept.size < 9, key)
+      assert(SparkTestBase.plannedFiles(TxLog.readPoint(spark, base, "sk", key))
+        .contains(kept.map(e => TxLog.resolve(base, e.path)).toSet), key)
+    }
+    assert(TxLog.readPoint(spark, base, "sk", "key-105").count() == 0L)
+    assert(SparkTestBase.plannedFiles(
+      TxLog.readPoint(spark, base, "sk", "key-99999")).contains(Set.empty[String]))
+  }
+
   test("append indexes the new files at commit time (incremental " +
     "coverage): point lookups keep pruning with NO rebuild") {
     val base = "/tmp/graft_txbloom/append"

@@ -185,6 +185,35 @@ class TxLogDeltaLogSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.txlog.checkpointInterval")
   }
 
+  test("a kept version's checkpoint is replaced whole: a reader racing " +
+    "its re-installs always finds it") {
+    val base = "/tmp/graft_txdelta/ckpt-race"
+    TxLog.drop(spark, base)
+    TxLog.commit(df((1 to 20).map(i => i -> s"a-$i")), base, None)
+    val lines = TxLog.manifestLines(spark, base, 1L)
+    TxLog.writeCkptTextLines(spark, base, 1L, lines)
+    val ckpt = TxLog.ckptPath(base, 1L)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val misses = new java.util.concurrent.atomic.AtomicLong(0L)
+    val reader = new Thread(() =>
+      while (!done.get) {
+        val whole = try TxLog.linesOf(spark, base, ckpt) == lines
+          catch { case _: java.io.IOException => false }
+        if (!whole) misses.incrementAndGet()
+        reads.incrementAndGet()
+      })
+    reader.start()
+    // what a vacuum re-basing the oldest kept version installs
+    try (1 to 1500).foreach(_ => TxLog.writeCkptTextLines(spark, base, 1L, lines))
+    finally { done.set(true); reader.join() }
+    assert(reads.get > 0L)
+    assert(misses.get == 0L,
+      s"${misses.get} of ${reads.get} racing reads found no whole checkpoint")
+    assert(!logNames(base).exists(_.startsWith(".ckpt-tmp")),
+      "the checkpoint's temp files are left behind")
+  }
+
   test("_last_checkpoint is replaced whole: a reader racing the " +
     "pointer's advances always reads a version") {
     val base = "/tmp/graft_txdelta/pointer"

@@ -12,10 +12,13 @@ import graft.operators.TxLog
   * starts no Spark job, and every verb serves the schema Spark's own
   * inference gives for the same files — on schema-evolved, mapped and
   * widened tables, with deletion vectors in play. The expected
-  * schemas are the ones inference-planned reads serve. */
+  * schemas are the ones inference-planned reads serve; `readPoint`
+  * and `readRange` serve the DSv2 source's schema of the version.
+  * Those two read through a DSv2 scan pinned to their pruned files,
+  * with the masks applied inside it. */
 class TxLogReadSchemaSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-  import SparkTestBase.jobsDuring
+  import SparkTestBase.{jobsDuring, plannedFiles}
 
   private val root = "/tmp/graft_txreadschema"
 
@@ -62,6 +65,127 @@ class TxLogReadSchemaSpec extends AnyFunSuite {
     assert(TxLog.read(spark, base).count() == 389L)
     assert(TxLog.readPoint(spark, base, "k", 15L).count() == 0L)
     assert(TxLog.readPoint(spark, base, "k", 390L).count() == 1L)
+  }
+
+  test("a point read on a masked file and a range read each run one " +
+    "Spark job: the masks apply inside the scan") {
+    val base = s"$root/onejob"
+    seedMasked(base)
+    val reads = Seq(
+      "readPoint(masked file)" -> (() => TxLog.readPoint(spark, base, "k", 5L)),
+      "readRange(1, 300)" -> (() => TxLog.readRange(spark, base, "k", 1L, 300L)))
+    reads.foreach { case (_, f) => f().collect() } // warm
+    reads.foreach { case (name, f) =>
+      val (_, jobs) = jobsDuring(f().collect())
+      assert(jobs == 1, s"$name started $jobs Spark job(s)")
+    }
+    assert(TxLog.readPoint(spark, base, "k", 5L).count() == 1L)
+    assert(TxLog.readRange(spark, base, "k", 1L, 300L).count() == 289L)
+  }
+
+  test("a point read on a table of more files than Spark lists on the " +
+    "driver plans at a new version without a Spark job") {
+    import spark.implicits._
+    val base = s"$root/wide"
+    TxLog.drop(spark, base)
+    TxLog.commit((1L to 400L).map(i => (i, s"s-$i")).toDF("k", "s")
+      .repartitionByRange(40, col("k")), base, None, Some("k"))
+    assert(TxLog.manifestFiles(spark, base, 1L).size > spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    TxLog.readPoint(spark, base, "k", 5L).collect() // warm
+    TxLog.append(Seq((401L, "s-401")).toDF("k", "s"), base, Some("k"))
+    val (df, jobs) = jobsDuring(TxLog.readPoint(spark, base, "k", 5L))
+    assert(jobs == 0, s"planning at a new version started $jobs Spark job(s)")
+    assert(df.collect().map(_.getString(1)).toSeq == Seq("s-5"))
+  }
+
+  private def files(base: String, es: Seq[TxLog.Entry]): Set[String] =
+    es.map(e => TxLog.resolve(base, e.path)).toSet
+
+  test("the pinned scan plans exactly the files the pruning keeps; an " +
+    "empty kept list plans none and opens no file") {
+    val base = s"$root/pinned"
+    seedMasked(base)
+    assert(plannedFiles(TxLog.readPoint(spark, base, "k", 5L)).contains(
+      files(base, TxLog.prunePoint(spark, base, "k", 5L)._1)))
+    val kept = TxLog.pruneRange(spark, base, "k", 150L, 250L)._1
+    assert(kept.size == 2)
+    assert(plannedFiles(TxLog.readRange(spark, base, "k", 150L, 250L))
+      .contains(files(base, kept)))
+    val boxKept = TxLog.pruneRanges(spark, base,
+      Seq(("k", 1L, 300L), ("s", "s-1", "s-9")))._1
+    assert(plannedFiles(TxLog.readRanges(spark, base,
+      Seq(("k", 1L, 300L), ("s", "s-1", "s-9")))).contains(files(base, boxKept)))
+    assert(TxLog.prunePoint(spark, base, "k", 999L)._1.isEmpty)
+    val miss = TxLog.readPoint(spark, base, "k", 999L)
+    val fs = TxLog.fs(base, spark)
+    TxLog.manifestFiles(spark, base, TxLog.latestVersion(spark, base).get)
+      .foreach(rel => fs.delete(new org.apache.hadoop.fs.Path(
+        TxLog.resolve(base, rel)), false))
+    assert(plannedFiles(miss).contains(Set.empty[String]))
+    assert(miss.count() == 0L)
+  }
+
+  test("masks above spark.graft.txlog.dsv2MaxMaskRows fall back to the " +
+    "anti-join read and serve the same rows") {
+    val base = s"$root/maskcap"
+    seedMasked(base)
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val point = rows(TxLog.readPoint(spark, base, "k", 5L))
+    val range = rows(TxLog.readRange(spark, base, "k", 1L, 150L))
+    assert(point == Set((5L, "s-5")) && range.size == 139)
+    spark.conf.set("spark.graft.txlog.dsv2MaxMaskRows", "10") // mask: 11
+    try {
+      val p = TxLog.readPoint(spark, base, "k", 5L)
+      assert(plannedFiles(p).isEmpty, "an over-limit mask read through DSv2")
+      assert(rows(p) == point)
+      val r = TxLog.readRange(spark, base, "k", 1L, 150L)
+      assert(plannedFiles(r).isEmpty, "an over-limit mask read through DSv2")
+      assert(rows(r) == range)
+      // a read of plain files only stays on the pinned scan
+      assert(plannedFiles(TxLog.readPoint(spark, base, "k", 390L)).isDefined)
+    } finally spark.conf.unset("spark.graft.txlog.dsv2MaxMaskRows")
+  }
+
+  test("point and range reads serve read(...).where(pred)'s rows on " +
+    "masked, mapped, widened and partitioned tables") {
+    import spark.implicits._
+    val masked = s"$root/rows-masked"
+    seedMasked(masked)
+    val mapped = s"$root/rows-mapped"
+    seedMasked(mapped)
+    TxLog.renameColumn(spark, mapped, "s", "label")
+    TxLog.append(Seq((401L, "s-401")).toDF("k", "label"), mapped, Some("k"))
+    TxLog.deleteRangeMor(spark, mapped, "k", 150L, 160L)
+    val widened = s"$root/rows-widened"
+    TxLog.drop(spark, widened)
+    TxLog.commit((1 to 400).map(i => (i, s"s-$i")).toDF("k", "s")
+      .repartitionByRange(4, col("k")), widened, None, Some("k"))
+    TxLog.deleteRangeMor(spark, widened, "k", 10, 20)
+    TxLog.alterWidenColumn(spark, widened, "k", LongType)
+    TxLog.append(Seq((5000000000L, "big")).toDF("k", "s"), widened, Some("k"))
+    val parted = s"$root/rows-parted"
+    TxLog.drop(spark, parted)
+    TxLog.commitPartitioned((1L to 400L).map(i => (i, s"s-$i", s"r${i % 3}"))
+      .toDF("k", "s", "region"), parted, Seq("region"), Seq("k"))
+    TxLog.deleteRangeMor(spark, parted, "k", 10L, 20L)
+    def rows(df: DataFrame, cols: Array[String]) =
+      df.select(cols.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSet
+    Seq(masked, mapped, widened, parted).foreach { base =>
+      val all = TxLog.read(spark, base)
+      Seq(1L, 5L, 15L, 150L, 155L, 390L, 401L, 5000000000L).foreach { k =>
+        val got = TxLog.readPoint(spark, base, "k", k)
+        assert(got.columns.toSeq == all.columns.toSeq, base)
+        assert(rows(got, all.columns) ==
+          rows(all.where(col("k") === lit(k)), all.columns), s"$base k=$k")
+      }
+      Seq((1L, 300L), (5L, 25L), (140L, 170L), (350L, 5000000000L)).foreach {
+        case (lo, hi) =>
+          assert(rows(TxLog.readRange(spark, base, "k", lo, hi), all.columns) ==
+            rows(all.where(col("k").between(lo, hi)), all.columns),
+            s"$base [$lo, $hi]")
+      }
+    }
   }
 
   test("a catalog table seeded by SQL INSERT INTO analyses at a new " +
@@ -111,9 +235,8 @@ class TxLogReadSchemaSpec extends AnyFunSuite {
     val narrow = "k BIGINT,s STRING"
     val wide = "k BIGINT,s STRING,x INT"
     assert(got("readVersion(1)") == narrow)
-    // only the new file: its own footer
+    // the version's schema, as the DSv2 source serves it
     assert(got("readPoint") == wide)
-    // an old and the new file: the union
     assert(got("readRange") == wide)
     assert(got("readEvolved") == wide)
     assert(got("source") == wide)
@@ -121,6 +244,12 @@ class TxLogReadSchemaSpec extends AnyFunSuite {
     assert(got("read") == expectedEvolvedRead(base))
     assert(TxLog.readPoint(spark, base, "k", 430L)
       .select("x").as[Int].collect().toSeq == Seq(430))
+    // a key whose file predates the evolution: the version's schema,
+    // the new column NULL
+    val old = TxLog.readPoint(spark, base, "k", 390L)
+    assert(old.schema.toDDL == wide)
+    assert(old.collect().map(r => (r.getLong(0), r.getString(1),
+      r.isNullAt(2))).toSeq == Seq((390L, "s-390", true)))
   }
 
   /** `read` of the evolved table: the masked subset (old files) unions

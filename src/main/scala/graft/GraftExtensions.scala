@@ -114,7 +114,7 @@ object GraftExtensions {
       val name = String.valueOf(evalLit(args(0), "the table name"))
       val base = graft.sources.TxLogSqlParser.resolveBase(spark,
         graft.sources.TxLogSqlParser.parts(name))
-      val latest = graft.operators.TxLog.requireLatest(spark, base)
+      val latest = graft.operators.TxLog.snapshot(spark, base).cur
       // Delta's contract: each bound is a version number OR a
       // timestamp literal, disambiguated by TYPE (an epoch-millis
       // STRING is a timestamp). Timestamp resolution differs per

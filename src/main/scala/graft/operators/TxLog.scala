@@ -285,10 +285,6 @@ object TxLog {
   private[graft] def noVersion(base: String) =
     new IllegalStateException(s"no committed version at $base")
 
-  /** The latest version of a table that must exist. */
-  private[graft] def requireLatest(spark: SparkSession, base: String): Long =
-    latestVersion(spark, base).getOrElse(throw noVersion(base))
-
   private[graft] def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
   private[graft] def dec(s: String) = java.net.URLDecoder.decode(s, "UTF-8")
 
@@ -486,6 +482,13 @@ object TxLog {
           .maxOption
     }
   }
+
+  /** The [[Snapshot]] a read or a write attempt works on: version
+    * `asOf`, or the latest one — the one place a read resolves the
+    * latest version ([[latestVersion]]). */
+  def snapshot(spark: SparkSession, base: String,
+               asOf: Option[Long] = None): Snapshot =
+    Snapshot(spark, base, asOf.orElse(latestVersion(spark, base)))
 
   /** Protocol versions THIS engine implements (Delta's protocol
     * action, minReaderVersion/minWriterVersion): a manifest stamped
@@ -770,13 +773,6 @@ object TxLog {
     }
   }
 
-  /** [[metaOf]] the latest version ([[TableMeta.empty]] for an empty
-    * store). */
-  private[graft] def latestMeta(spark: SparkSession,
-                                base: String): TableMeta =
-    latestVersion(spark, base).map(metaOf(spark, base, _))
-      .getOrElse(TableMeta.empty)
-
   private val metaCache =
     new java.util.LinkedHashMap[(String, Long, Long), TableMeta](
       32, 0.75f, true) {
@@ -914,38 +910,6 @@ object TxLog {
     df.select(mapped ++ keep.flatMap(k =>
       present.get(k.toLowerCase).map(col)): _*)
   }
-
-  /** [[toLogicalDf]] against the LATEST version's mapping — the view
-    * user predicates/assignments evaluate on inside the DML verbs.
-    * Identity when the table has no mapping. */
-  private def logicalView(spark: SparkSession, base: String, df: DataFrame,
-                          keep: Seq[String] = Nil): DataFrame = {
-    val m = latestMeta(spark, base)
-    m.colMap match {
-      case Some(cm) => toLogicalDf(df, cm, m.schema, keep)
-      case None => df
-    }
-  }
-
-  /** Translate one user-facing column name to physical (identity
-    * without a mapping). */
-  private[graft] def physicalName(spark: SparkSession, base: String,
-                                  column: String): String =
-    physicalIn(latestMeta(spark, base), column)
-
-  /** [[physicalName]] under one version's metadata. */
-  private def physicalIn(m: TableMeta, column: String): String =
-    m.colMap.map(_.physical(column)).getOrElse(column)
-
-  /** Rename a user DataFrame to physical names iff the table is
-    * mapped (the verb-entry choke point — identity otherwise, so
-    * unmapped tables keep their exact current plans). */
-  private def toPhysicalIfMapped(spark: SparkSession, base: String,
-                                 df: DataFrame): DataFrame =
-    latestMeta(spark, base).colMap match {
-      case Some(cm) => toPhysicalDf(df, cm)
-      case None => df
-    }
 
   /** In-commit timestamp of one manifest (Delta 4.0 ICT): the commit
     * WROTE its own wall-clock millis as a `#ict` line, clamped
@@ -1098,21 +1062,23 @@ object TxLog {
     * to diff a row's life. Mapped tables serve logical names as
     * usual. */
   def readWithRowIds(spark: SparkSession, base: String): DataFrame =
-    readVersionWithRowIds(spark, base, requireLatest(spark, base))
+    rowIdsRead(snapshot(spark, base))
 
   /** [[readWithRowIds]] of one published version — lineage time
     * travel: a row's id is stable across versions, so two snapshots
     * join on `_row_id` to diff its life. */
   def readVersionWithRowIds(spark: SparkSession, base: String,
-                            v: Long): DataFrame = {
-    val m = metaOf(spark, base, v)
+                            v: Long): DataFrame =
+    rowIdsRead(Snapshot(spark, base, Some(v)))
+
+  private def rowIdsRead(s: Snapshot): DataFrame = {
+    val (spark, base, v, m) = (s.spark, s.base, s.cur, s.meta)
     require(m.rowIdHighWater.isDefined,
       s"row tracking is not enabled on $base at version $v " +
         "(enableRowTracking first)")
-    val (entries, _) = manifest(spark, base, v)
     val requested = m.widenedPhysSchema
       .orElse(Some(cachedPhysUnionSchema(spark, base, v)))
-    val df = rowIdReadRaw(spark, base, entries, requested)
+    val df = rowIdReadRaw(spark, base, s.entries, requested)
     val out = m.colMap match {
       case Some(cm) => toLogicalDf(df, cm, m.schema, keep = Seq(RowIdCol))
       case None => df
@@ -1143,15 +1109,16 @@ object TxLog {
     * Hive-style (`day=2024-01-01/region=ea`; NULL components as
     * `__HIVE_DEFAULT_PARTITION__`), under LOGICAL column names. */
   def showPartitions(spark: SparkSession, base: String): DataFrame = {
-    val v = requireLatest(spark, base)
-    val m = metaOf(spark, base, v)
+    val s = snapshot(spark, base)
+    s.cur // a table that must exist
+    val m = s.meta
     val pspec = m.partitions
     require(pspec.nonEmpty,
       s"SHOW PARTITIONS: txlog($base) is not a partitioned table")
     val cm = m.colMap
     val names = pspec.map { case (p, _) =>
       cm.map(_.logicalOf(p)).getOrElse(p) }
-    val entries = snapshotEntries(spark, base, v)
+    val entries = s.entries
     val rows = entries.groupBy(entryTuple(_, pspec)).toSeq
       .map { case (tuple, es) =>
         val rendered = tuple match {
@@ -1205,9 +1172,9 @@ object TxLog {
     * writer planned before the table took this shape (exotic
     * drop-and-recreate races); stats absent on a column passes — that
     * is the all-NULL tuple, pure by construction. */
-  private[graft] def requirePartitionPure(spark: SparkSession, base: String,
+  private[graft] def requirePartitionPure(s: Snapshot,
                                           entries: Seq[Entry]): Unit = {
-    val ps = latestMeta(spark, base).partitions
+    val ps = s.meta.partitions
     if (ps.isEmpty) return
     for { (c, _) <- ps; e <- entries; st <- e.statsFor(c) }
       require(st.min == st.max,
@@ -1300,7 +1267,7 @@ object TxLog {
           "date->timestamp_ntz, decimal precision growth losing no " +
           "integral digits) — narrowing, long->double, or " +
           "date->timestamp-with-TZ would lie about the bytes on disk")
-      val phys = physicalName(spark, base, f.name)
+      val phys = t.snapshot.physical(f.name)
       // partition tuple identity and generated-column validation are
       // typed at declaration; widening under them would need re-stamped
       // metadata this verb does not rewrite — loud veto, not drift
@@ -1353,10 +1320,9 @@ object TxLog {
   /** Synthetic constraint entries validating every generated column
     * PRESENT in `cols`; errors on one that is ABSENT (the DSv2/SQL
     * write shape, where compute is impossible). */
-  private[graft] def generatedChecksFor(spark: SparkSession, base: String,
-                                        cols: Seq[String])
+  private[graft] def generatedChecksFor(s: Snapshot, cols: Seq[String])
       : Map[String, String] = {
-    val m = latestMeta(spark, base)
+    val m = s.meta
     val gens = m.generated
     if (gens.isEmpty) return Map.empty
     val cm = m.colMap
@@ -1454,10 +1420,9 @@ object TxLog {
     * GENERATED-BY-DEFAULT instead — the id column is legitimately
     * present (it can BE the merge key), and the high-water ADVANCES
     * past any id the source carries ([[mergeIdentityAdvance]]). */
-  private[graft] def requireNoIdentityColumns(
-      spark: SparkSession, base: String,
-      columns: Seq[String]): Unit =
-    failOnIdentityClash(latestMeta(spark, base).identity.keySet, columns)
+  private[graft] def requireNoIdentityColumns(s: Snapshot,
+                                              columns: Seq[String]): Unit =
+    failOnIdentityClash(s.meta.identity.keySet, columns)
 
   /** Write-side column-mapping gate for the DSv2 sink's COMMIT phase:
     * on a mapped table every incoming (logical) column must be bound
@@ -1466,9 +1431,9 @@ object TxLog {
     * carry a name no reader would ever serve. Checked at commit, not
     * plan, so a restarted stream replaying an already-committed epoch
     * against a since-mapped table stays a silent no-op. */
-  private[graft] def requireMappedColumns(spark: SparkSession, base: String,
+  private[graft] def requireMappedColumns(s: Snapshot,
                                           columns: Seq[String]): Unit =
-    latestMeta(spark, base).colMap.foreach { cm =>
+    s.meta.colMap.foreach { cm =>
       val unknown = columns.filterNot(cm.hasLogical)
       require(unknown.isEmpty,
         s"column(s) ${unknown.mkString(", ")} are not in this table's " +
@@ -1480,9 +1445,9 @@ object TxLog {
     * assigning an identity column would mint ids the high-water never
     * covered, so later [[appendIdentity]] calls could silently
     * re-issue them. Case-insensitive, like the insert guard. */
-  private def requireNoIdentityAssignment(spark: SparkSession, base: String,
+  private def requireNoIdentityAssignment(s: Snapshot,
                                           cols: Seq[String]): Unit = {
-    val lower = latestMeta(spark, base).identity.keySet.map(_.toLowerCase)
+    val lower = s.meta.identity.keySet.map(_.toLowerCase)
     val clash = cols.filter(c => lower.contains(c.toLowerCase))
     require(clash.isEmpty,
       s"UPDATE may not assign IDENTITY column(s) ${clash.mkString(", ")} " +
@@ -1510,13 +1475,13 @@ object TxLog {
     * with an explicit id must never be re-issued by a later
     * [[appendIdentity]]. Empty when the table has no identity column
     * in the source's schema. */
-  private def sourceIdentityMaxes(spark: SparkSession, base: String,
+  private def sourceIdentityMaxes(s: Snapshot,
                                   source: DataFrame): Map[String, Long] = {
     import org.apache.spark.sql.functions.{col, max}
     // case-insensitive match (Spark's default column resolution): the
     // high-water must advance even when the source spells the identity
     // column ROW_ID — but the map key stays the table's canonical name
-    val byLower = latestMeta(spark, base).identity.keySet
+    val byLower = s.meta.identity.keySet
       .map(c => c.toLowerCase -> c).toMap
     val present = source.columns.toSeq
       .flatMap(sc => byLower.get(sc.toLowerCase).map(canon => (sc, canon)))
@@ -1592,10 +1557,14 @@ object TxLog {
     * each file's deletion vector (if any) applied, projected onto the
     * version's OWN logical column names (its `#colmap` line — time
     * travel below a RENAME shows the old names). */
-  def readVersion(spark: SparkSession, base: String, v: Long): DataFrame = {
+  def readVersion(spark: SparkSession, base: String, v: Long): DataFrame =
+    readAt(Snapshot(spark, base, Some(v)))
+
+  /** [[readVersion]] of one snapshot. */
+  private def readAt(s: Snapshot): DataFrame = {
+    val (spark, base, v, m) = (s.spark, s.base, s.cur, s.meta)
     // widened tables read through the declared schema explicitly
     // (narrow old files upcast per file); see TableMeta.widenedPhysSchema
-    val m = metaOf(spark, base, v)
     val wide = m.widenedPhysSchema
     m.colMap match {
       // the logical projection must see the UNION of the files'
@@ -1606,12 +1575,11 @@ object TxLog {
       // not once per query); unmapped tables keep the plain read
       // byte-for-byte.
       case Some(cm) => toLogicalDf(
-        readEntries(spark, base, manifest(spark, base, v)._1,
+        readEntries(spark, base, s.entries,
           requested = wide.orElse(
             Some(cachedPhysUnionSchema(spark, base, v)))),
         cm, m.schema)
-      case None => readEntries(spark, base, manifest(spark, base, v)._1,
-        requested = wide)
+      case None => readEntries(spark, base, s.entries, requested = wide)
     }
   }
 
@@ -1678,7 +1646,7 @@ object TxLog {
     * commit. */
   def versionAtOrAfterTimestamp(spark: SparkSession, base: String,
                                 tsMillis: Long): Option[Long] = {
-    val latest = requireLatest(spark, base)
+    val latest = snapshot(spark, base).cur
     val floor =
       try Some(versionAtTimestamp(spark, base, tsMillis))
       catch { case _: IllegalArgumentException => None }
@@ -1712,10 +1680,8 @@ object TxLog {
   }
 
   /** Snapshot read of the latest published version. */
-  def read(spark: SparkSession, base: String): DataFrame = {
-    val v = requireLatest(spark, base)
-    readVersion(spark, base, v)
-  }
+  def read(spark: SparkSession, base: String): DataFrame =
+    readAt(snapshot(spark, base))
 
   /** Schema-evolving snapshot read (Delta `mergeSchema` on the read
     * side): the snapshot's schema is the UNION of every live file's
@@ -1726,9 +1692,9 @@ object TxLog {
     * `read`): at 10^5 files that is a driver-side metadata pass, the
     * same price Spark's own mergeSchema pays. */
   def readEvolved(spark: SparkSession, base: String): DataFrame = {
-    val v = requireLatest(spark, base)
-    val m = metaOf(spark, base, v)
-    val df = readEntries(spark, base, manifest(spark, base, v)._1,
+    val s = snapshot(spark, base)
+    val (v, m) = (s.cur, s.meta)
+    val df = readEntries(spark, base, s.entries,
       requested = m.widenedPhysSchema
         .orElse(Some(cachedPhysUnionSchema(spark, base, v))))
     m.colMap match {
@@ -1944,25 +1910,23 @@ object TxLog {
     dropRowId(out)
   }
 
-  /** [[readEntries]] over the CURRENT snapshot. A widened table
+  /** [[readEntries]] under snapshot `s`'s metadata. A widened table
     * (`#widencol` lines) reads through its declared schema. Any other
     * table reads the union of `entries`' own footers, by the
     * [[readFiles]] rule: when every file's cached footer schema is the
     * same, that schema is passed explicitly (no inference job); when
     * they differ, Spark's mergeSchema runs over this subset only —
     * proportional to the files being read, never O(table files) for an
-    * O(band) rewrite. Every latest-snapshot rewrite/scan verb
-    * (compact, zorder, COW DML, purge, bloom, colmap seeding,
-    * constraint backfill scans) reads through this: a one-footer
-    * inferred read of a schema-evolved (mergeSchema-on-write) subset
-    * would silently DROP the columns the other footers carry, and a
-    * REWRITE verb would then land the loss permanently. Time-travel
-    * callers use [[readEntries]] with the TARGET version's
-    * [[TableMeta.widenedPhysSchema]] — never this. */
-  private def readEntriesCurrent(spark: SparkSession, base: String,
-                                 entries: Seq[Entry],
+    * O(band) rewrite. Every rewrite/scan verb (compact, zorder, COW
+    * DML, purge, bloom, colmap seeding, constraint backfill scans)
+    * reads through this with its attempt's snapshot, and
+    * [[readKept]]'s fallback with its read's: a one-footer inferred
+    * read of a schema-evolved (mergeSchema-on-write) subset would
+    * silently DROP the columns the other footers carry, and a REWRITE
+    * verb would then land the loss permanently. */
+  private def readEntriesCurrent(s: Snapshot, entries: Seq[Entry],
                                  withRowIds: Boolean = false): DataFrame = {
-    val m = latestMeta(spark, base)
+    val (spark, base, m) = (s.spark, s.base, s.meta)
     val wide = m.widenedPhysSchema
     // REWRITE verbs (withRowIds) on a tracked table read each row's
     // stable id attached, so their landed output MATERIALIZES it —
@@ -2142,9 +2106,8 @@ object TxLog {
       : (Seq[Entry], Map[String, String]) = {
     val spark = df.sparkSession
     val base = t.base
-    // ONE version resolution serves every meta check below
-    val latest = latestVersion(spark, base)
-    val m = latest.map(metaOf(spark, base, _)).getOrElse(TableMeta.empty)
+    // the attempt's snapshot serves every meta check below
+    val m = t.meta
     if (guardIdentity)
       failOnIdentityClash(m.identity.keySet, df.columns.toSeq)
     // GENERATED ALWAYS AS: compute every declared column the batch
@@ -2170,7 +2133,7 @@ object TxLog {
     // compute (a generated column never takes a default — the ALTER
     // vetoes the combination, so order is only about clarity)
     val df2 = applyDefaultColumns(spark, df2x, m.defaults, cmapParsed,
-      m.schema, latest.flatMap(v =>
+      m.schema, t.read.flatMap(v =>
         scala.util.Try(cachedPhysUnionSchema(spark, base, v)).toOption))
     // widened tables pin every read to the DECLARED schema — a batch
     // carrying a column outside it would land bytes no read can ever
@@ -2200,7 +2163,7 @@ object TxLog {
     // constraints veto the batch here, before any manifest publishes
     val genChecks = gens.map { case (c, ex) =>
       s"_generated_$c" -> generatedCheckExpr(c, ex) }.toMap
-    enforceConstraints(spark, base, entries.filter(_.rows != 0L),
+    enforceConstraints(t.snapshot, entries.filter(_.rows != 0L),
       cons ++ genChecks)
     (entries, cons)
   }
@@ -2553,8 +2516,7 @@ object TxLog {
     * read it already did); recording WHICH set was enforced is what
     * lets the CAS retry loops detect a drop-then-re-add of the same
     * constraint between their read and the land (the ABA shape). */
-  private[graft] def enforceConstraints(spark: SparkSession, base: String,
-                                        newEntries: Seq[Entry],
+  private[graft] def enforceConstraints(s: Snapshot, newEntries: Seq[Entry],
                                         cons0: Map[String, String]): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, sum, when}
     if (newEntries.isEmpty) return
@@ -2563,7 +2525,8 @@ object TxLog {
     // constraint expressions are stored in LOGICAL names; landed
     // files carry physical ones — evaluate on the logical view
     // (identity when the table has no mapping)
-    val raw = logicalView(spark, base,
+    val (spark, base) = (s.spark, s.base)
+    val raw = s.logical(
       readFiles(spark, newEntries.map(e => resolve(base, e.path)), None,
         mergeSchema = false))
     // columns a constraint references but the new files lack (an
@@ -2601,7 +2564,7 @@ object TxLog {
       : Map[String, String] = {
     val now = t.meta.constraints
     if (now != checked)
-      enforceConstraints(t.spark, t.base, entries, now)
+      enforceConstraints(t.snapshot, entries, now)
     now
   }
 
@@ -2633,7 +2596,7 @@ object TxLog {
         s"constraint '$name' already exists")
       val bad =
         if (entries.isEmpty) 0L
-        else logicalView(spark, base, readEntriesCurrent(spark, base, entries))
+        else t.snapshot.logical(readEntriesCurrent(t.snapshot, entries))
           .where(!coalesce(expr(checkExpr), lit(true))).count()
       if (bad > 0) throw new ConstraintViolationException(name, checkExpr, bad)
       t.publish(entries,
@@ -2677,7 +2640,7 @@ object TxLog {
           require(entries.nonEmpty,
             s"cannot ALTER an empty table at $base with no declared " +
               "schema — create it with one, or write data first")
-          val raw = readEntriesCurrent(spark, base, entries)
+          val raw = readEntriesCurrent(t.snapshot, entries)
           // under a mapping the declared schema must carry LOGICAL
           // names — the raw file schema is physical
           cmOpt.map(cm => toLogicalDf(raw, cm, None)).getOrElse(raw).schema
@@ -2691,7 +2654,7 @@ object TxLog {
       // FRESH physical name (`c<id>_<name>`): a column DROPped and
       // later re-ADDed must scan as NULL, never as the dropped bytes.
       val cmExt = cmOpt.map(cm =>
-        colMapWithAdded(spark, base, entries, cm, cols.fields.toSeq))
+        colMapWithAdded(t.snapshot, entries, cm, cols.fields.toSeq))
       t.publish(entries,
         dataChange = false, operation = "ADD COLUMNS",
         meta = _.copy(schema = Some(org.apache.spark.sql.types.StructType(
@@ -2704,14 +2667,13 @@ object TxLog {
     * `c<id>_<name>`, collision-probed against both current physicals
     * and any column a live file carries — a column DROPped and later
     * re-ADDed must scan as NULL, never as the dropped bytes. */
-  private def colMapWithAdded(spark: SparkSession, base: String,
-                              entries: Seq[Entry], cm: ColMap,
+  private def colMapWithAdded(s: Snapshot, entries: Seq[Entry], cm: ColMap,
                               added: Seq[org.apache.spark.sql.types.StructField])
       : ColMap = {
     val taken = scala.collection.mutable.Set[String](
       cm.cols.map(_._2.toLowerCase) ++
         (if (entries.isEmpty) Nil
-         else readEntriesCurrent(spark, base, entries)
+         else readEntriesCurrent(s, entries)
            .columns.map(_.toLowerCase).toSeq): _*)
     var next = cm.nextId
     val newCols = added.map { f =>
@@ -2743,10 +2705,9 @@ object TxLog {
     * constraint (its stored expression would silently stop matching —
     * Delta blocks dependent constraints identically) and must not be
     * an IDENTITY column (the high-water line is keyed on it). */
-  private def requireNoDependents(spark: SparkSession, base: String,
-                                  cur: Long, logical: String,
+  private def requireNoDependents(s: Snapshot, logical: String,
                                   physical: String, verb: String): Unit = {
-    val m = metaOf(spark, base, cur)
+    val (spark, m) = (s.spark, s.meta)
     val dependents = m.constraints.filter {
       case (_, ex) => constraintRefLowers(spark, ex)
         .contains(logical.toLowerCase)
@@ -2784,16 +2745,16 @@ object TxLog {
 
   /** Nested RENAME/DROP guard: veto when a CHECK constraint or
     * generated column references the exact path OR its parent struct. */
-  private def requireNoNestedDependents(spark: SparkSession, base: String,
-                                        cur: Long, path: String,
+  private def requireNoNestedDependents(s: Snapshot, path: String,
                                         verb: String): Unit = {
+    val spark = s.spark
     val lower = path.toLowerCase
     val top = lower.takeWhile(_ != '.')
     def hits(ex: String): Boolean = {
       val refs = constraintRefPaths(spark, ex)
       refs.contains(lower) || refs.contains(top)
     }
-    val m = metaOf(spark, base, cur)
+    val m = s.meta
     val dependents = m.constraints
       .filter { case (_, ex) => hits(ex) }.keys.toSeq.sorted
     require(dependents.isEmpty,
@@ -2827,29 +2788,27 @@ object TxLog {
     * upgrade, zero data moves): one (`top.f` → `phys.f`) entry per
     * subfield the files or the declared schema carry. No-op when the
     * struct already has nested bindings. */
-  private def seedNested(spark: SparkSession, base: String, cur: Long,
-                         cm: ColMap, top: String): ColMap = {
+  private def seedNested(s: Snapshot, cm: ColMap, top: String): ColMap = {
     if (cm.nestedUnder(top).nonEmpty) return cm
-    val m = metaOf(spark, base, cur)
+    val m = s.meta
     require(m.widened.isEmpty,
       "nested column mapping on a type-widened table is not supported")
     val p = cm.physical(top)
-    val entries = manifest(spark, base, cur)._1
     val fileFields: Seq[String] =
-      if (entries.isEmpty) Seq.empty
-      else readEntriesCurrent(spark, base, entries)
+      if (s.entries.isEmpty) Seq.empty
+      else readEntriesCurrent(s, s.entries)
         .schema.fields.find(_.name.equalsIgnoreCase(p))
         .map(_.dataType).toSeq.flatMap {
-          case s: org.apache.spark.sql.types.StructType =>
-            s.fieldNames.toSeq
+          case st: org.apache.spark.sql.types.StructType =>
+            st.fieldNames.toSeq
           case other => throw new IllegalArgumentException(
             s"'$top' is not a struct column (files store $other)")
         }
     val declOnly = m.schema
       .flatMap(_.fields.find(_.name.equalsIgnoreCase(top)))
       .map(_.dataType).toSeq.flatMap {
-        case s: org.apache.spark.sql.types.StructType =>
-          s.fieldNames.toSeq
+        case st: org.apache.spark.sql.types.StructType =>
+          st.fieldNames.toSeq
         case _ => Seq.empty
       }.filterNot(n => fileFields.exists(_.equalsIgnoreCase(n)))
     val all = fileFields ++ declOnly
@@ -2861,21 +2820,19 @@ object TxLog {
     * its current schema — the lazy upgrade a first RENAME/DROP COLUMN
     * performs (existing physical names are frozen as-is; zero data
     * moves). */
-  private def colMapOrSeed(spark: SparkSession, base: String,
-                           cur: Long): ColMap = {
-    val m = metaOf(spark, base, cur)
+  private def colMapOrSeed(s: Snapshot): ColMap = {
+    val m = s.meta
     m.colMap.getOrElse {
-      val entries = manifest(spark, base, cur)._1
       val fileFields: Seq[String] =
-        if (entries.isEmpty) Seq.empty
-        else readEntriesCurrent(spark, base, entries)
+        if (s.entries.isEmpty) Seq.empty
+        else readEntriesCurrent(s, s.entries)
           .schema.fieldNames.toSeq
       val declaredOnly = m.schema
         .map(_.fieldNames.toSeq).getOrElse(Seq.empty)
         .filterNot(d => fileFields.exists(_.equalsIgnoreCase(d)))
       val all = fileFields ++ declaredOnly
       require(all.nonEmpty,
-        s"cannot derive a schema for $base (no files, no declared schema)")
+        s"cannot derive a schema for ${s.base} (no files, no declared schema)")
       ColMap(all.map(n => n -> n), 1)
     }
   }
@@ -2899,12 +2856,12 @@ object TxLog {
       !to.contains("\n"), s"invalid column name '$to'")
     txn(spark, base, maxAttempts) { t =>
       val (cur, entries) = (t.cur, t.entries)
-      val cm = colMapOrSeed(spark, base, cur)
+      val cm = colMapOrSeed(t.snapshot)
       require(cm.hasLogical(from), s"column '$from' does not exist " +
         s"(table columns: ${cm.logicalNames.mkString(", ")})")
       require(from.equalsIgnoreCase(to) || !cm.hasLogical(to),
         s"column '$to' already exists (resolution is case-insensitive)")
-      requireNoDependents(spark, base, cur, from, cm.physical(from),
+      requireNoDependents(t.snapshot, from, cm.physical(from),
         "rename")
       val renamed = cm.copy(cols = cm.cols.map { case (l, p) =>
         if (l.equalsIgnoreCase(from)) (to, p) else (l, p)
@@ -2940,11 +2897,11 @@ object TxLog {
       return dropNestedColumn(spark, base, name, maxAttempts)
     txn(spark, base, maxAttempts) { t =>
       val (cur, entries) = (t.cur, t.entries)
-      val cm = colMapOrSeed(spark, base, cur)
+      val cm = colMapOrSeed(t.snapshot)
       require(cm.hasLogical(name), s"column '$name' does not exist " +
         s"(table columns: ${cm.logicalNames.mkString(", ")})")
       require(cm.cols.size > 1, "cannot drop the last column")
-      requireNoDependents(spark, base, cur, name, cm.physical(name), "drop")
+      requireNoDependents(t.snapshot, name, cm.physical(name), "drop")
       val m = t.meta
       // partition columns are structural: every write splits and
       // stats-indexes on them — dropping one would orphan the layout
@@ -2999,7 +2956,7 @@ object TxLog {
                                  maxAttempts: Int): Long =
     txn(spark, base, maxAttempts) { t =>
       val (cur, entries) = (t.cur, t.entries)
-      val cm0 = colMapOrSeed(spark, base, cur)
+      val cm0 = colMapOrSeed(t.snapshot)
       val (top, fromLeaf) = nestedParts(cm0, from)
       val to = if (to0.contains(".")) {
         val p = to0.split('.')
@@ -3009,7 +2966,7 @@ object TxLog {
       } else to0
       require(to.trim.nonEmpty && !to.contains(".") && !to.contains("\t") &&
         !to.contains("\n"), s"invalid column name '$to'")
-      val cm = seedNested(spark, base, cur, cm0, top)
+      val cm = seedNested(t.snapshot, cm0, top)
       val fromPath = s"$top.$fromLeaf"
       require(cm.hasLogical(fromPath),
         s"column '$fromPath' does not exist (nested columns of $top: " +
@@ -3017,7 +2974,7 @@ object TxLog {
       val toPath = s"$top.$to"
       require(fromPath.equalsIgnoreCase(toPath) || !cm.hasLogical(toPath),
         s"column '$toPath' already exists (resolution is case-insensitive)")
-      requireNoNestedDependents(spark, base, cur, fromPath, "rename")
+      requireNoNestedDependents(t.snapshot, fromPath, "rename")
       val renamed = cm.copy(cols = cm.cols.map { case (l, p) =>
         if (l.equalsIgnoreCase(fromPath)) (toPath, p) else (l, p)
       })
@@ -3040,9 +2997,9 @@ object TxLog {
                                name: String, maxAttempts: Int): Long =
     txn(spark, base, maxAttempts) { t =>
       val (cur, entries) = (t.cur, t.entries)
-      val cm0 = colMapOrSeed(spark, base, cur)
+      val cm0 = colMapOrSeed(t.snapshot)
       val (top, leaf) = nestedParts(cm0, name)
-      val cm = seedNested(spark, base, cur, cm0, top)
+      val cm = seedNested(t.snapshot, cm0, top)
       val path = s"$top.$leaf"
       require(cm.hasLogical(path),
         s"column '$path' does not exist (nested columns of $top: " +
@@ -3050,7 +3007,7 @@ object TxLog {
       require(cm.nestedUnder(top).size > 1,
         s"cannot drop the last nested column of '$top' — drop the " +
           "parent column instead")
-      requireNoNestedDependents(spark, base, cur, path, "drop")
+      requireNoNestedDependents(t.snapshot, path, "drop")
       // structural guard, mirroring top-level DROP: a clustered leaf
       // keys every write's tiling and the manifest's pruning index
       val m = t.meta
@@ -3081,16 +3038,16 @@ object TxLog {
     require(cols.fields.nonEmpty, "ADD COLUMNS needs at least one column")
     txn(spark, base, maxAttempts) { t =>
       val (cur, entries) = (t.cur, t.entries)
-      val cm0 = colMapOrSeed(spark, base, cur)
+      val cm0 = colMapOrSeed(t.snapshot)
       val top = cm0.topCols.find(_._1.equalsIgnoreCase(parent))
         .getOrElse(throw new IllegalArgumentException(
           s"column '$parent' does not exist (table columns: " +
             s"${cm0.topCols.map(_._1).mkString(", ")})"))._1
-      val cm = seedNested(spark, base, cur, cm0, top)
+      val cm = seedNested(t.snapshot, cm0, top)
       val p = cm.physical(top)
       val fileSub: Set[String] =
         if (entries.isEmpty) Set.empty
-        else readEntriesCurrent(spark, base, entries)
+        else readEntriesCurrent(t.snapshot, entries)
           .schema.fields.find(_.name.equalsIgnoreCase(p))
           .map(_.dataType).toSeq.flatMap {
             case s: org.apache.spark.sql.types.StructType =>
@@ -3122,7 +3079,7 @@ object TxLog {
         require(entries.nonEmpty,
           s"cannot derive a schema for $base (no files, no declared " +
             "schema)")
-        toLogicalDf(readEntriesCurrent(spark, base, entries), cm, None)
+        toLogicalDf(readEntriesCurrent(t.snapshot, entries), cm, None)
           .schema
       }
       val newDeclared = org.apache.spark.sql.types.StructType(
@@ -3224,13 +3181,10 @@ object TxLog {
     * maintenance rewrite (transact/commit) must never reset
     * appendOnce's exactly-once state. */
   private def commitIn(t: Txn, df: DataFrame, statsCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val base = t.base
     requireNoRowIdColumn(df)
-    val (tiled, ckeys) =
-      clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
+    val (tiled, ckeys) = clusterTile(t.snapshot, t.snapshot.toPhysical(df))
     t.publish(landEntriesMulti(t, tiled,
-      (statsCols.map(physicalName(spark, base, _)) ++ ckeys).distinct))
+      (statsCols.map(t.snapshot.physical) ++ ckeys).distinct))
   }
 
   /** Create an EMPTY table with declared metadata: `partitionCols`
@@ -3666,9 +3620,9 @@ object TxLog {
       }
     }
 
-  private def clusterTile(spark: SparkSession, base: String,
+  private def clusterTile(s: Snapshot,
                           df: DataFrame): (DataFrame, Seq[String]) = {
-    val m = latestMeta(spark, base)
+    val m = s.meta
     val keys = m.cluster
     if (keys.isEmpty) return (df, Seq.empty)
     val varDecls = m.varStats
@@ -3708,17 +3662,22 @@ object TxLog {
   }
 
   /** The blind-append land ([[append]], [[appendOnce]], [[copyInto]]):
-    * the batch lands, is enforced and joins the table's bloom groups
-    * (incremental coverage: one O(batch) pass, no rebuild) once per
-    * transaction. Every attempt re-enforces it when its snapshot
+    * the user batch is renamed to physical names and tiled on the
+    * clustering keys under the attempt's snapshot, lands, is enforced
+    * and joins the table's bloom groups (incremental coverage: one
+    * O(batch) pass, no rebuild) once per transaction. `statsCols` are
+    * logical names. Every attempt re-enforces it when its snapshot
     * carries another constraint set than the one last enforced — a
     * CAS loss to a concurrent ADD CONSTRAINT must not republish data
     * checked only under the OLD set. */
   private def appendLand(t: Txn, df: DataFrame,
                          statsCols: Seq[String]): Seq[Entry] = {
+    requireNoRowIdColumn(df)
     val (entries, checked) = t.once {
-      val (es, cons) = landEntriesChecked(t, df, statsCols,
-        guardIdentity = true)
+      val s = t.snapshot
+      val (tiled, ckeys) = clusterTile(s, s.toPhysical(df))
+      val (es, cons) = landEntriesChecked(t, tiled,
+        (statsCols.map(s.physical) ++ ckeys).distinct, guardIdentity = true)
       (indexNewEntries(t, es),
         new java.util.concurrent.atomic.AtomicReference(cons))
     }
@@ -3728,13 +3687,8 @@ object TxLog {
 
   def append(df: DataFrame, base: String, statsCol: Option[String] = None,
              maxAttempts: Int = 5): Long = {
-    val spark = df.sparkSession
-    requireNoRowIdColumn(df)
-    val (tiled, ckeys) =
-      clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
-    txn(spark, base, maxAttempts) { t =>
-      val entries = appendLand(t, tiled,
-        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys).distinct)
+    txn(df.sparkSession, base, maxAttempts) { t =>
+      val entries = appendLand(t, df, statsCol.toSeq)
       // add-only: neither the txn map nor the publish needs the
       // table's entry list — an append stays O(new files) driver-side
       // no matter how many files the table holds
@@ -3798,7 +3752,8 @@ object TxLog {
                            format: String, options: Map[String, String],
                            pattern: Option[String],
                            maxAttempts: Int): (Long, Long, Long) = {
-    val curV0 = latestVersion(spark, base).getOrElse(
+    val s0 = snapshot(spark, base)
+    val curV0 = s0.version.getOrElse(
       throw new IllegalStateException(
         s"COPY INTO target $base does not exist — CREATE TABLE first"))
     val f = fs(srcDir, spark)
@@ -3806,13 +3761,13 @@ object TxLog {
     val all = Option(f.globStatus(glob)).map(_.toSeq).getOrElse(Seq.empty)
       .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
         !st.getPath.getName.startsWith("."))
-    val loadedAt = txnsOf(spark, base, curV0)
+    val loadedAt = s0.txns
     val freshAll = all.filterNot(st =>
       loadedAt.contains(CopyTxnPrefix + st.getPath.toString))
     if (freshAll.isEmpty) return (curV0, 0L, 0L)
     val df0 = spark.read.format(format).options(options)
       .load(freshAll.map(_.getPath.toString): _*)
-    val df = metaOf(spark, base, curV0).schema match {
+    val df = s0.meta.schema match {
       case Some(ds) =>
         import org.apache.spark.sql.functions.col
         val unknown = df0.columns.filterNot(c =>
@@ -3829,12 +3784,10 @@ object TxLog {
     }
     // the ordinary append choke point, plus the per-file txn markers
     // in the SAME commit — the load and its idempotency state are one
-    // atomic publish
-    requireNoRowIdColumn(df)
-    val (tiled, ckeys) = clusterTile(spark, base,
-      toPhysicalIfMapped(spark, base, df))
-    val result = txn(spark, base, maxAttempts) { t =>
-      val entries = appendLand(t, tiled, ckeys.distinct)
+    // atomic publish. The first attempt builds on `s0`'s version.
+    val result = Txn.run(spark, base, maxAttempts, _ => (),
+        pinned = Some(s0.version)) { t =>
+      val entries = appendLand(t, df, Nil)
       // a RACING COPY INTO may have loaded (some of) our files while
       // we were landing; the landed batch mixes all files, so any
       // overlap means this batch as a whole cannot publish (exactly-
@@ -3889,19 +3842,11 @@ object TxLog {
     * current latest version when the batch was already applied. */
   def appendOnce(df: DataFrame, base: String, appId: String, batchId: Long,
                  statsCol: Option[String] = None, maxAttempts: Int = 5): Long = {
-    val spark = df.sparkSession
-    val already = latestVersion(spark, base).filter(v =>
-      txnsOf(spark, base, v).getOrElse(appId, -1L) >= batchId)
-    if (already.isDefined) return already.get
-    requireNoRowIdColumn(df)
-    val (tiled, ckeys) =
-      clusterTile(spark, base, toPhysicalIfMapped(spark, base, df))
-    txn(spark, base, maxAttempts) { t =>
-      val entries = appendLand(t, tiled,
-        (statsCol.toSeq.map(physicalName(spark, base, _)) ++ ckeys).distinct)
-      // a racing replica applied this batch between our check and now
+    txn(df.sparkSession, base, maxAttempts) { t =>
+      // already applied (a re-delivery, or a racing replica): no land
       if (t.txns.getOrElse(appId, -1L) >= batchId) t.cur
-      else t.publish(entries, t.txns + (appId -> batchId),
+      else t.publish(appendLand(t, df, statsCol.toSeq),
+        t.txns + (appId -> batchId),
         operation = "STREAMING UPDATE", deltaChange = Some(Nil))
     }
   }
@@ -3931,25 +3876,23 @@ object TxLog {
   def pruneRanges(spark: SparkSession, base: String,
                   preds: Seq[(String, Any, Any)]): (Seq[Entry], Seq[Entry]) = {
     require(preds.nonEmpty, "pruneRanges needs at least one predicate")
-    val v = requireLatest(spark, base)
-    pruneRangesAt(spark, base, v, physicalPreds(metaOf(spark, base, v), preds))
+    val s = snapshot(spark, base)
+    s.cur // a table that must exist
+    (inRanges(s.entries, physicalPreds(s, preds)), s.entries)
   }
 
   /** Range predicates as manifest stats see them: each (logical)
-    * column translated once to its PHYSICAL name under `m`, each bound
+    * column translated once to its PHYSICAL name under `s`, each bound
     * to its stats representation. */
-  private def physicalPreds(m: TableMeta, preds: Seq[(String, Any, Any)])
+  private def physicalPreds(s: Snapshot, preds: Seq[(String, Any, Any)])
       : Seq[(String, String, String)] =
-    preds.map { case (c, lo, hi) => (physicalIn(m, c), reprOf(lo), reprOf(hi)) }
+    preds.map { case (c, lo, hi) => (s.physical(c), reprOf(lo), reprOf(hi)) }
 
-  /** [[pruneRanges]] at version `v`, over [[physicalPreds]]. */
-  private def pruneRangesAt(spark: SparkSession, base: String, v: Long,
-                            preds: Seq[(String, String, String)])
-      : (Seq[Entry], Seq[Entry]) = {
-    val entries = snapshotEntries(spark, base, v)
-    (entries.filter(e => preds.forall { case (c, lo, hi) =>
-      touchesRange(e, c, lo, hi) }), entries)
-  }
+  /** The `entries` whose stats overlap every [[physicalPreds]] range. */
+  private def inRanges(entries: Seq[Entry],
+                       preds: Seq[(String, String, String)]): Seq[Entry] =
+    entries.filter(e => preds.forall { case (c, lo, hi) =>
+      touchesRange(e, c, lo, hi) })
 
   /** Box read with 2-D (or n-D) data skipping: prune files by ALL the
     * range predicates' manifest stats, then scan only the survivors
@@ -3964,36 +3907,43 @@ object TxLog {
     * the table's at `v` ([[graft.sources.TxLogSource]]'s): survivors
     * that all predate a mergeSchema append serve its columns as NULL. */
   def readRanges(spark: SparkSession, base: String,
-                 preds: Seq[(String, Any, Any)]): DataFrame = {
+                 preds: Seq[(String, Any, Any)]): DataFrame =
+    readRanges(snapshot(spark, base), preds)
+
+  /** [[readRanges]] on snapshot `s`. */
+  private[graft] def readRanges(s: Snapshot,
+                                preds: Seq[(String, Any, Any)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(preds.nonEmpty, "readRanges needs at least one predicate")
-    val v = requireLatest(spark, base)
-    val phys = physicalPreds(metaOf(spark, base, v), preds)
-    // columnar-checkpoint tables prune EXECUTOR-side and collect only
-    // the survivors (the kept working set); text tables (or a warm
-    // snapshot cache) keep the driver sweep — cheaper than a job
-    val kept = TxLogPlan.pruneEntriesForScan(spark, base, v, phys)
-      .getOrElse(pruneRangesAt(spark, base, v, phys)._1)
     // the residual references LOGICAL names, like the served schema
-    readKept(spark, base, v, kept).where(preds.map { case (c, lo, hi) =>
-      col(c).between(lit(lo), lit(hi))
-    }.reduce(_ && _))
+    readKept(s, keptInRanges(s, physicalPreds(s, preds)))
+      .where(preds.map { case (c, lo, hi) =>
+        col(c).between(lit(lo), lit(hi))
+      }.reduce(_ && _))
   }
 
-  /** `kept`, entries already pruned at version `v`, as a logical
-    * DataFrame: the DSv2 scan pinned to them
+  /** The entries of `s` whose stats overlap every range. Columnar-
+    * checkpoint tables prune EXECUTOR-side and collect only the
+    * survivors (the kept working set); text tables (or a warm snapshot
+    * cache) keep the driver sweep — cheaper than a job. */
+  private def keptInRanges(s: Snapshot,
+                           phys: Seq[(String, String, String)]): Seq[Entry] =
+    TxLogPlan.pruneEntriesForScan(s.spark, s.base, s.cur, phys)
+      .getOrElse(inRanges(s.entries, phys))
+
+  /** `kept`, entries of `s` already pruned, as a logical DataFrame
+    * under `s`'s schema and names: the DSv2 scan pinned to them
     * ([[graft.sources.TxLogSource.pinnedRead]] — one partition per
     * entry, masks applied inside the scan, no second resolution of the
     * log). When their deletion vectors carry more positions than the
     * DSv2 driver-side limit (`spark.graft.txlog.dsv2MaxMaskRows`,
     * checked from the manifest's `dv.rows` before any sidecar is
     * read), [[readEntries]]' distributed anti-join serves them. */
-  private def readKept(spark: SparkSession, base: String, v: Long,
-                       kept: Seq[Entry]): DataFrame =
+  private[graft] def readKept(s: Snapshot, kept: Seq[Entry]): DataFrame =
     if (kept.flatMap(_.dv).map(_.rows).sum <=
-        graft.sources.TxLogSource.maxMaskRows(spark))
-      graft.sources.TxLogSource.pinnedRead(spark, base, v, kept)
-    else logicalView(spark, base, readEntriesCurrent(spark, base, kept))
+        graft.sources.TxLogSource.maxMaskRows(s.spark))
+      graft.sources.TxLogSource.pinnedRead(s, kept)
+    else s.logical(readEntriesCurrent(s, kept))
 
   /** Copy-on-write MERGE: rewrite ONLY the files whose `statsCol`
     * range overlaps the source's key range; carry every other file
@@ -4010,36 +3960,32 @@ object TxLog {
     require(keys0.contains(statsCol0),
       s"statsCol $statsCol0 must be a merge key (got $keys0) — range " +
         "skipping is only sound when pruning on the match key")
-    // mapped tables: the merge runs entirely in PHYSICAL namespace —
-    // source renamed once here, keys/statsCol translated, target files
-    // already physical (readEntries below is the raw read)
     requireNoRowIdColumn(source0)
-    val source = toPhysicalIfMapped(spark, base, source0)
-    val keys = keys0.map(physicalName(spark, base, _))
-    val statsCol = physicalName(spark, base, statsCol0)
-    import org.apache.spark.sql.functions._
-    val castT = castType(statsDtype(source.schema(statsCol).dataType))
-    val bounds = source
-      .agg(min(col(statsCol).cast(castT)).cast("string"),
-        max(col(statsCol).cast(castT)).cast("string")).head()
-    if (bounds.isNullAt(0)) // empty / all-null source: nothing to merge
-      return requireLatest(spark, base)
-    val (lo, hi) = (bounds.getString(0), bounds.getString(1))
-    // GENERATED BY DEFAULT on merges: the high-water advances past any
-    // explicit id the source carries (one agg, computed once)
-    val idMaxes = sourceIdentityMaxes(spark, base, source)
-    // a CAS loss to a winner disjoint from the source key range
-    // re-bases the landed output (Txn rule 4): a daily MERGE racing a
-    // disjoint-partition DELETE costs one extra commit attempt, not a
-    // second pass over the band
-    val overlaps: Entry => Boolean = touchesRange(_, statsCol, lo, hi)
+    val (lo, hi) = keySpan(source0, statsCol0).getOrElse(
+      // empty / all-null source: nothing to merge
+      return snapshot(spark, base).cur)
     txn(spark, base, maxAttempts, onAttempt) { t =>
+      // mapped tables: the merge runs entirely in PHYSICAL namespace —
+      // source renamed, keys/statsCol translated, target files already
+      // physical (readEntries below is the raw read)
+      val s = t.snapshot
+      val source = s.toPhysical(source0)
+      val keys = keys0.map(s.physical)
+      val statsCol = s.physical(statsCol0)
+      // GENERATED BY DEFAULT on merges: the high-water advances past
+      // any explicit id the source carries
+      val idMaxes = sourceIdentityMaxes(s, source)
+      // a CAS loss to a winner disjoint from the source key range
+      // re-bases the landed output (Txn rule 4): a daily MERGE racing a
+      // disjoint-partition DELETE costs one extra commit attempt, not a
+      // second pass over the band
+      val overlaps: Entry => Boolean = touchesRange(_, statsCol, lo, hi)
       val land = t.rebase(Some(overlaps)) {
         val touched = t.entries.filter(overlaps)
         val merged =
           if (touched.isEmpty) source
           else {
-            val target = readEntriesCurrent(spark, base, touched,
+            val target = readEntriesCurrent(s, touched,
               withRowIds = true) // masks applied: deletes never resurrect
             // tracked tables: matched source rows inherit their target
             // row's stable id (Delta preserves ids through MERGE UPDATE)
@@ -4056,6 +4002,18 @@ object TxLog {
       t.publish(withoutInputs(t.entries, land) ++ land.value,
         operation = "MERGE", meta = mergeIdentityAdvance(idMaxes))
     }
+  }
+
+  /** The (min, max) of `source`'s `column` as stats reprs — the key
+    * span a merge prunes the target by; None when `source` is empty or
+    * the column all-NULL. */
+  private def keySpan(source: DataFrame,
+                      column: String): Option[(String, String)] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val castT = castType(statsDtype(source.select(column).schema.head.dataType))
+    val b = source.agg(min(col(column).cast(castT)).cast("string"),
+      max(col(column).cast(castT)).cast("string")).head()
+    if (b.isNullAt(0)) None else Some((b.getString(0), b.getString(1)))
   }
 
   /** `entries` minus the inputs a land replaces. */
@@ -4124,10 +4082,8 @@ object TxLog {
                      maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val (l, h) = (reprOf(lo), reprOf(hi))
-    val physCol = physicalName(spark, base, column)
-    deleteWhereMor(spark, base,
-      col(column).between(lit(lo), lit(hi)) && residual,
-      touchesRange(_, physCol, l, h), maxAttempts)
+    deleteMor(spark, base, col(column).between(lit(lo), lit(hi)) && residual,
+      s => touchesRange(_, s.physical(column), l, h), maxAttempts)
   }
 
   /** Merge-on-read DELETE with an ARBITRARY predicate — the SQL
@@ -4143,11 +4099,20 @@ object TxLog {
   def deleteWhereMor(spark: SparkSession, base: String,
                      cond: org.apache.spark.sql.Column,
                      touchedFilter: Entry => Boolean = _ => true,
-                     maxAttempts: Int = 5): Long = {
+                     maxAttempts: Int = 5): Long =
+    deleteMor(spark, base, cond, _ => touchedFilter, maxAttempts)
+
+  /** [[deleteWhereMor]], its stats pre-selection built from the
+    * attempt's snapshot (`touchedAt`). */
+  private[graft] def deleteMor(spark: SparkSession, base: String,
+                        cond: org.apache.spark.sql.Column,
+                        touchedAt: Snapshot => Entry => Boolean,
+                        maxAttempts: Int): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit}
     // a CAS loss to a winner the touched predicate cannot see re-bases
     // the landed sidecar (Txn rule 4) instead of re-scanning the band
     txn(spark, base, maxAttempts) { t =>
+      val touchedFilter = touchedAt(t.snapshot)
       val land = t.rebase(Some(touchedFilter)) {
         val touched = t.entries.filter(touchedFilter)
         if (touched.isEmpty) None
@@ -4158,9 +4123,8 @@ object TxLog {
           // `cond` references LOGICAL names — evaluate on the logical
           // view with the DV coordinates carried through (the
           // projection sees the files' UNION of physical columns)
-          val raw = logicalView(spark, base,
-            taggedRead(spark, base, touched),
-            keep = Seq(DvFileCol, DvPosCol))
+          val raw = t.snapshot.logical(taggedRead(t.snapshot, touched),
+            Seq(DvFileCol, DvPosCol))
           // None: no hits, no prior masks — nothing to publish
           landMaskSidecar(t, touched, raw.where(coalesce(cond, lit(false))))
             .map((_, touched))
@@ -4179,8 +4143,7 @@ object TxLog {
   /** The raw (mask-ignoring) tagged read of `entries`' files: all
     * table columns plus ([[DvFileCol]], [[DvPosCol]]) from parquet's
     * `_metadata` — the coordinates masks are expressed in. */
-  private def taggedRead(spark: SparkSession, base: String,
-                         entries: Seq[Entry]): DataFrame = {
+  private def taggedRead(s: Snapshot, entries: Seq[Entry]): DataFrame = {
     import org.apache.spark.sql.functions.col
     // widened tables: every DML verb's raw read requests the declared
     // (widened) physical schema — the mixed-width file set reads no
@@ -4191,8 +4154,8 @@ object TxLog {
     // physical columns (absent columns NULL-fill per file) — one
     // footer's inference on a schema-evolved touched subset would
     // silently DROP the other footers' columns from the landed images.
-    readFiles(spark, entries.map(e => resolve(base, e.path)),
-        latestMeta(spark, base).widenedPhysSchema)
+    readFiles(s.spark, entries.map(e => resolve(s.base, e.path)),
+        s.meta.widenedPhysSchema)
       .withColumn(DvFileCol, col("_metadata.file_name"))
       .withColumn(DvPosCol, col("_metadata.row_index"))
   }
@@ -4261,10 +4224,9 @@ object TxLog {
                      maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{col, lit}
     val (l, h) = (reprOf(lo), reprOf(hi))
-    val physCol = physicalName(spark, base, column)
-    updateWhereMor(spark, base,
-      col(column).between(lit(lo), lit(hi)) && residual, set,
-      touchesRange(_, physCol, l, h), Seq(column), maxAttempts)
+    updateMor(spark, base, col(column).between(lit(lo), lit(hi)) && residual,
+      set, s => touchesRange(_, s.physical(column), l, h), Seq(column),
+      maxAttempts)
   }
 
   /** Merge-on-read UPDATE with an ARBITRARY predicate — the SQL
@@ -4276,13 +4238,25 @@ object TxLog {
                      set: Map[String, org.apache.spark.sql.Column],
                      touchedFilter: Entry => Boolean = _ => true,
                      primaryStats: Seq[String] = Seq.empty,
-                     maxAttempts: Int = 5): Long = {
+                     maxAttempts: Int = 5): Long =
+    updateMor(spark, base, cond, set, _ => touchedFilter, primaryStats,
+      maxAttempts)
+
+  /** [[updateWhereMor]], its stats pre-selection built from the
+    * attempt's snapshot (`touchedAt`). */
+  private def updateMor(spark: SparkSession, base: String,
+                        cond: org.apache.spark.sql.Column,
+                        set: Map[String, org.apache.spark.sql.Column],
+                        touchedAt: Snapshot => Entry => Boolean,
+                        primaryStats: Seq[String],
+                        maxAttempts: Int): Long = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    requireNoIdentityAssignment(spark, base, set.keys.toSeq)
     require(!set.keys.exists(_.equalsIgnoreCase(RowIdCol)),
       s"column name $RowIdCol is reserved for row tracking")
     txn(spark, base, maxAttempts) { t =>
-      val (touched, carried) = t.entries.partition(touchedFilter)
+      val s = t.snapshot
+      requireNoIdentityAssignment(s, set.keys.toSeq)
+      val (touched, carried) = t.entries.partition(touchedAt(s))
       if (touched.isEmpty) t.cur
       else {
         // `cond` and the SET expressions reference LOGICAL names —
@@ -4291,9 +4265,8 @@ object TxLog {
         // projection see every file's physical columns); the updated
         // images rename back to physical just before landing
         val m = t.meta
-        val raw0 = logicalView(spark, base,
-          taggedRead(spark, base, touched),
-          keep = Seq(DvFileCol, DvPosCol, RowIdCol))
+        val raw0 = s.logical(taggedRead(s, touched),
+          Seq(DvFileCol, DvPosCol, RowIdCol))
         // row tracking: an UPDATE logically keeps the row, so the
         // appended post-image MATERIALIZES each hit's stable id
         // (materialized column wins, else file base + row ordinal) —
@@ -4325,15 +4298,14 @@ object TxLog {
               .map { case (_, e) => e.as(c) }.getOrElse(col(c))) ++
             appended.map(k => set(k).as(k)): _*)
         }
-        val updatedP = toPhysicalIfMapped(spark, base, updated)
+        val updatedP = s.toPhysical(updated)
         // the post-image land and the mask-sidecar build are
         // independent actions — overlap them (guide §2.6)
         var newEntries: Seq[Entry] = null
         var maskRes: Option[(String, Map[String, Long])] = None
         Par.all(
           () => newEntries = landEntriesMulti(t, updatedP,
-            preservedStatsCols(touched,
-              primaryStats.map(physicalName(spark, base, _)),
+            preservedStatsCols(touched, primaryStats.map(s.physical),
               updatedP.schema),
             recomputeGenerated = true)
             .filter(_.rows != 0L),
@@ -4364,77 +4336,69 @@ object TxLog {
     require(keys.contains(statsCol),
       s"statsCol $statsCol must be a merge key (got $keys) — range " +
         "skipping is only sound when pruning on the match key")
-    mergeMorPhys(spark, base, toPhysicalIfMapped(spark, base, source),
-      keys.map(physicalName(spark, base, _)),
-      physicalName(spark, base, statsCol), maxAttempts)
-  }
-
-  /** [[mergeMor]] body in PHYSICAL namespace (source already renamed,
-    * keys/statsCol already translated) — the shared core [[mergeMorAuto]]
-    * also lands on, so nothing translates twice. */
-  private def mergeMorPhys(spark: SparkSession, base: String,
-                           source: DataFrame, keys: Seq[String],
-                           statsCol: String, maxAttempts: Int): Long = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val castT = castType(statsDtype(source.schema(statsCol).dataType))
-    val bounds = source
-      .agg(min(col(statsCol).cast(castT)).cast("string"),
-        max(col(statsCol).cast(castT)).cast("string")).head()
-    if (bounds.isNullAt(0)) // empty / all-null source: nothing to merge
-      return requireLatest(spark, base)
-    val (lo, hi) = (bounds.getString(0), bounds.getString(1))
+    val (lo, hi) = keySpan(source, statsCol).getOrElse(
+      // empty / all-null source: nothing to merge
+      return snapshot(spark, base).cur)
     mergeMorWhere(spark, base, source, keys,
-      touchesRange(_, statsCol, lo, hi), Seq(statsCol), maxAttempts)
+      s => touchesRange(_, s.physical(statsCol), lo, hi), Seq(statsCol),
+      maxAttempts)
   }
 
   /** [[mergeMor]] that picks its own pruning column — the SQL
     * `MERGE INTO` surface, where the caller supplies only the ON
-    * keys: the first key carrying manifest stats prunes the touched
-    * set; a table with no stats on any key merges un-pruned (every
-    * file semi-join-checked, still zero files rewritten). */
+    * keys: the first key carrying manifest stats (on the snapshot the
+    * call starts from) prunes the touched set; a table with no stats
+    * on any key merges un-pruned (every file semi-join-checked, still
+    * zero files rewritten). */
   def mergeMorAuto(spark: SparkSession, base: String, source0: DataFrame,
                    keys0: Seq[String], maxAttempts: Int = 5): Long = {
-    val cur = requireLatest(spark, base)
-    val entries = manifest(spark, base, cur)._1
-    val source = toPhysicalIfMapped(spark, base, source0)
-    val keys = keys0.map(physicalName(spark, base, _))
-    val statsCol = keys.find(k =>
+    val s = snapshot(spark, base)
+    val cur = s.cur
+    val source = s.toPhysical(source0)
+    val statsKey = keys0.find { k0 =>
+      val k = s.physical(k0)
       source.columns.contains(k) &&
         scala.util.Try(statsDtype(source.schema(k).dataType)).isSuccess &&
-        entries.exists(_.statsFor(k).isDefined))
-    statsCol match {
-      case Some(c) => mergeMorPhys(spark, base, source, keys, c, maxAttempts)
+        s.entries.exists(_.statsFor(k).isDefined)
+    }
+    statsKey match {
+      case Some(k) => mergeMor(spark, base, source0, keys0, k, maxAttempts)
       case None =>
-        if (source.isEmpty) cur
-        else mergeMorWhere(spark, base, source, keys, _ => true,
+        if (source0.isEmpty) cur
+        else mergeMorWhere(spark, base, source0, keys0, _ => _ => true,
           Seq.empty, maxAttempts)
     }
   }
 
   /** Shared MOR-merge core: mask target rows whose `keys` appear in
-    * `source` (within `touchedFilter`'s candidate entries), land the
-    * whole source as new files, publish in one commit. */
+    * `source` (within the candidate entries `touchedAt` selects on the
+    * attempt's snapshot), land the whole source as new files, publish
+    * in one commit. The source, `keys` and `primaryStats` speak
+    * logical names; each attempt translates them under its snapshot. */
   private def mergeMorWhere(spark: SparkSession, base: String,
-                            source: DataFrame, keys: Seq[String],
-                            touchedFilter: Entry => Boolean,
-                            primaryStats: Seq[String],
+                            source0: DataFrame, keys0: Seq[String],
+                            touchedAt: Snapshot => Entry => Boolean,
+                            primaryStats0: Seq[String],
                             maxAttempts: Int): Long = {
     import org.apache.spark.sql.functions.col
-    requireNoRowIdColumn(source)
-    // GENERATED BY DEFAULT on merges: advance the high-water past any
-    // explicit id the source carries (one agg, computed once)
-    val idMaxes = sourceIdentityMaxes(spark, base, source)
+    requireNoRowIdColumn(source0)
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
-      val (touched, carried) = t.entries.partition(touchedFilter)
+      val s = t.snapshot
+      val source = s.toPhysical(source0)
+      val keys = keys0.map(s.physical)
+      val primaryStats = primaryStats0.map(s.physical)
+      // GENERATED BY DEFAULT on merges: advance the high-water past any
+      // explicit id the source carries
+      val idMaxes = sourceIdentityMaxes(s, source)
+      val (touched, carried) = t.entries.partition(touchedAt(s))
       // tracked tables: matched source rows inherit their target
       // row's stable id (Delta preserves ids through MERGE UPDATE);
       // unmatched rows land NULL and take the file's fresh span
       val sourceW =
         if (touched.isEmpty || t.meta.rowIdHighWater.isEmpty) source
         else {
-          val tagged = attachRowIds(spark, touched,
-            taggedRead(spark, base, touched))
+          val tagged = attachRowIds(spark, touched, taggedRead(s, touched))
           val live = dvFrame(spark, base, touched) match {
             case Some(m) => tagged.join(m, Seq(DvFileCol, DvPosCol),
               "left_anti")
@@ -4453,7 +4417,7 @@ object TxLog {
           // matched = target rows whose key tuple appears in the source.
           // The source land and the mask-sidecar build are independent
           // actions — overlap them on driver threads (guide §2.6)
-          val hits0 = taggedRead(spark, base, touched)
+          val hits0 = taggedRead(s, touched)
             .join(source.select(keys.map(col): _*).distinct(),
               keys, "left_semi")
           var maskRes: Option[(String, Map[String, Long])] = None
@@ -4586,8 +4550,6 @@ object TxLog {
           when(cl.condition.map(c => coalesce(c, lit(false)))
             .getOrElse(lit(true)), lit(i)).otherwise(els)
       }
-    // GENERATED BY DEFAULT advance (computed once, like mergeMorWhere)
-    val idMaxes = sourceIdentityMaxes(spark, base, source)
     // unconditional by-source DELETE is the one by-source shape where
     // span-disjoint files can drop metadata-only
     val uncondSyncDelete = notMatchedBySource match {
@@ -4597,6 +4559,8 @@ object TxLog {
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
       val entries = t.entries
+      // GENERATED BY DEFAULT advance (like mergeMorWhere)
+      val idMaxes = sourceIdentityMaxes(t.snapshot, source)
       // an EMPTY target (file-less create, fully-deleted snapshot) is
       // a legitimate MERGE target for the NOT MATCHED half — its
       // schema comes from the declared #schema line when no file can
@@ -4655,22 +4619,15 @@ object TxLog {
       // span pruning on the first ON key carrying stats in BOTH the
       // source and some manifest entry (mergeMorAuto's rule)
       val statsKey = keys.find { k0 =>
-        val k = physicalName(spark, base, k0)
+        val k = t.snapshot.physical(k0)
         source.columns.find(_.equalsIgnoreCase(k0)).exists(n =>
           scala.util.Try(statsDtype(source.schema(n).dataType)).isSuccess) &&
           entries.exists(_.statsFor(k).isDefined)
       }
-      val span: Option[(String, String)] = statsKey.flatMap { k0 =>
-        import org.apache.spark.sql.functions.{max, min}
-        val castT = castType(statsDtype(source.schema(
-          source.columns.find(_.equalsIgnoreCase(k0)).get).dataType))
-        val b = source.agg(min(col(k0).cast(castT)).cast("string"),
-          max(col(k0).cast(castT)).cast("string")).head()
-        if (b.isNullAt(0)) None else Some((b.getString(0), b.getString(1)))
-      }
+      val span = statsKey.flatMap(keySpan(source, _))
       val inSpan: Entry => Boolean = span match {
         case Some((lo, hi)) =>
-          val phys = physicalName(spark, base, statsKey.get)
+          val phys = t.snapshot.physical(statsKey.get)
           e => touchesRange(e, phys, lo, hi)
         case None =>
           // no usable stats key, or an EMPTY source: with an empty
@@ -4696,7 +4653,7 @@ object TxLog {
       // name must scan as NULL, never as the dropped bytes)
       val cmNew: Option[ColMap] =
         if (extras.isEmpty) cmCur
-        else cmCur.map(cm => colMapWithAdded(spark, base, entries, cm,
+        else cmCur.map(cm => colMapWithAdded(t.snapshot, entries, cm,
           extras))
       def toPhysLocal(df: DataFrame): DataFrame =
         cmNew.map(toPhysicalDf(df, _)).getOrElse(df)
@@ -4715,9 +4672,8 @@ object TxLog {
       val live: Option[DataFrame] =
         if (touched.isEmpty) None
         else {
-          val raw0 = logicalView(spark, base,
-            taggedRead(spark, base, touched),
-            keep = Seq(DvFileCol, DvPosCol, RowIdCol))
+          val raw0 = t.snapshot.logical(taggedRead(t.snapshot, touched),
+            Seq(DvFileCol, DvPosCol, RowIdCol))
           val raw =
             if (tracked) attachRowIds(spark, touched, raw0)
             else dropRowId(raw0)
@@ -4811,8 +4767,7 @@ object TxLog {
             val phys = toPhysLocal(img)
             landEntriesMulti(t, phys,
               preservedStatsCols(touched,
-                statsKey.toSeq.map(physicalName(spark, base, _)),
-                phys.schema),
+                statsKey.toSeq.map(t.snapshot.physical), phys.schema),
               recomputeGenerated = true,
               pendingDeclared = pendingPhys).filter(_.rows != 0L)
         }
@@ -4860,16 +4815,16 @@ object TxLog {
     import org.apache.spark.sql.functions.{col, count, lit,
       monotonically_increasing_id, row_number, spark_partition_id}
     val spark = df0.sparkSession
-    // mapped tables: ids assign and land under the identity column's
-    // PHYSICAL name (on a mapped table the column must be declared
-    // with ALTER ADD COLUMNS first — same birth rule as every column)
-    val df = toPhysicalIfMapped(spark, base, df0)
-    val idCol = physicalName(spark, base, idCol0)
-    val statsCol = statsCol0.map(physicalName(spark, base, _))
-    require(!df.columns.contains(idCol),
-      s"IDENTITY column $idCol0 is system-assigned; the batch must not " +
-        "provide it (GENERATED ALWAYS semantics)")
     txn(spark, base, maxAttempts, onAttempt) { t =>
+      // mapped tables: ids assign and land under the identity column's
+      // PHYSICAL name (on a mapped table the column must be declared
+      // with ALTER ADD COLUMNS first — same birth rule as every column)
+      val df = t.snapshot.toPhysical(df0)
+      val idCol = t.snapshot.physical(idCol0)
+      val statsCol = statsCol0.map(t.snapshot.physical)
+      require(!df.columns.contains(idCol),
+        s"IDENTITY column $idCol0 is system-assigned; the batch must not " +
+          "provide it (GENERATED ALWAYS semantics)")
       val ident = t.meta.identity
       val water = ident.getOrElse(idCol, 0L)
       // DENSE allocation: per-partition cumulative offsets (one tiny
@@ -5007,80 +4962,62 @@ object TxLog {
                              syncKeys0: Option[DataFrame] = None): Long = {
     require(keys0.contains(statsCol0),
       s"statsCol $statsCol0 must be a key (got $keys0)")
-    // mapped tables: both CDC halves run in PHYSICAL namespace (same
-    // verb-entry translation as the merge verbs)
-    val deleteKeys = toPhysicalIfMapped(spark, base, deleteKeys0)
-    val inserts = toPhysicalIfMapped(spark, base, inserts0)
-    val syncKeys = syncKeys0.map(toPhysicalIfMapped(spark, base, _))
-    val keys = keys0.map(physicalName(spark, base, _))
-    val statsCol = physicalName(spark, base, statsCol0)
-    import org.apache.spark.sql.functions.{col, max, min}
-    val already = txn.flatMap { case (appId, batchId) =>
-      latestVersion(spark, base).filter(v =>
-        manifest(spark, base, v)._2.getOrElse(appId, -1L) >= batchId)
-    }
-    if (already.isDefined) return already.get
-    // appended replica files keep every stats dimension the current
-    // snapshot's entries carry (same contract as the other MOR/merge
-    // verbs' preservedStatsCols) — a Z-ordered source's 2-D skipping
-    // must survive replication, not decay one batch at a time
-    val statsCols = {
-      val existing = latestVersion(spark, base)
-        .map(v => manifest(spark, base, v)._1).getOrElse(Seq.empty)
-      (Seq(statsCol) ++ existing.flatMap(_.stats.map(_.column))).distinct
-        .filter(inserts.schema.fieldNames.contains)
-    }
-    val castT = castType(statsDtype(deleteKeys.schema(statsCol).dataType))
-    // the unguarded (SQL MERGE) path runs GENERATED BY DEFAULT like
-    // the merge verbs: re-landed images legitimately carry existing
-    // ids, and the high-water must advance past any id in the batch
-    val idMaxes =
-      if (guardIdentity) Map.empty[String, Long]
-      else sourceIdentityMaxes(spark, base, inserts)
+    import org.apache.spark.sql.functions.col
     var checkedCons = Map.empty[String, String]
     var keyRange: Option[(String, String)] = None
     var syncRange: Option[Option[(String, String)]] = None
     TxLog.txn(spark, base, maxAttempts) { t =>
-      val newEntries = t.once {
-        // the inserts land and the delete/sync key-bound aggregates are
-        // independent actions on different inputs: overlap them on
-        // driver threads (guide §2.6) instead of paying land + bounds
-        // latencies back to back on every CDC batch
-        var landed: Seq[Entry] = null
-        Par.all(
-          () => {
-            val (es, checked) = landEntriesChecked(t, inserts, statsCols,
-              guardIdentity = guardIdentity)
-            landed = es.filter(_.rows != 0L)
-            checkedCons = checked
-          },
-          () => {
-            val bounds = deleteKeys
-              .agg(min(col(statsCol).cast(castT)).cast("string"),
-                max(col(statsCol).cast(castT)).cast("string")).head()
-            keyRange =
-              if (bounds.isNullAt(0)) None // no deletes in this batch
-              else Some((bounds.getString(0), bounds.getString(1)))
-            // sync-delete span: a target file whose stats range is
-            // DISJOINT from it cannot hold any source key — every row
-            // vanished, the file drops metadata-only. Outer None = no
-            // sync clause; inner None = an EMPTY sync source (all
-            // vanishes).
-            syncRange = syncKeys.map { sk =>
-              val b = sk.agg(min(col(statsCol).cast(castT)).cast("string"),
-                max(col(statsCol).cast(castT)).cast("string")).head()
-              if (b.isNullAt(0)) None
-              else Some((b.getString(0), b.getString(1)))
-            }
-          })
-        landed
-      }
-      checkedCons = reEnforceIfChanged(t, newEntries, checkedCons)
       val (entries, txns) = (t.entries, t.txns)
-      // a racing replica applied this batch between check and now
+      // already applied: a replay after a restart, or a racing replica
       if (txn.exists { case (appId, batchId) =>
           txns.getOrElse(appId, -1L) >= batchId }) t.cur
       else {
+        // mapped tables: both CDC halves run in PHYSICAL namespace
+        // (same translation as the merge verbs)
+        val s = t.snapshot
+        val deleteKeys = s.toPhysical(deleteKeys0)
+        val inserts = s.toPhysical(inserts0)
+        val syncKeys = syncKeys0.map(s.toPhysical)
+        val keys = keys0.map(s.physical)
+        val statsCol = s.physical(statsCol0)
+        val newEntries = t.once {
+          // appended replica files keep every stats dimension the
+          // snapshot's entries carry (same contract as the other
+          // MOR/merge verbs' preservedStatsCols) — a Z-ordered source's
+          // 2-D skipping must survive replication, not decay one batch
+          // at a time
+          val statsCols = (Seq(statsCol) ++ entries.flatMap(_.stats.map(_.column)))
+            .distinct.filter(inserts.schema.fieldNames.contains)
+          // the inserts land and the delete/sync key-bound aggregates
+          // are independent actions on different inputs: overlap them
+          // on driver threads (guide §2.6) instead of paying land +
+          // bounds latencies back to back on every CDC batch
+          var landed: Seq[Entry] = null
+          Par.all(
+            () => {
+              val (es, checked) = landEntriesChecked(t, inserts, statsCols,
+                guardIdentity = guardIdentity)
+              landed = es.filter(_.rows != 0L)
+              checkedCons = checked
+            },
+            () => {
+              keyRange = keySpan(deleteKeys, statsCol) // None: no deletes
+              // sync-delete span: a target file whose stats range is
+              // DISJOINT from it cannot hold any source key — every row
+              // vanished, the file drops metadata-only. Outer None = no
+              // sync clause; inner None = an EMPTY sync source (all
+              // vanishes).
+              syncRange = syncKeys.map(keySpan(_, statsCol))
+            })
+          landed
+        }
+        checkedCons = reEnforceIfChanged(t, newEntries, checkedCons)
+        // the unguarded (SQL MERGE) path runs GENERATED BY DEFAULT like
+        // the merge verbs: re-landed images legitimately carry existing
+        // ids, and the high-water must advance past any id in the batch
+        val idMaxes =
+          if (guardIdentity) Map.empty[String, Long]
+          else sourceIdentityMaxes(s, inserts)
         val semiTouched = keyRange match {
           case Some((lo, hi)) =>
             entries.filter(touchesRange(_, statsCol, lo, hi))
@@ -5104,7 +5041,7 @@ object TxLog {
         val masked =
           if (touched.isEmpty) touched
           else {
-            val read = taggedRead(spark, base, touched)
+            val read = taggedRead(s, touched)
             val semiHits =
               if (keyRange.isEmpty) None
               else Some(read.join(
@@ -5113,9 +5050,9 @@ object TxLog {
             val antiHits = syncKeys.map(sk => read.join(
               sk.select(keys.map(col): _*).distinct(), keys, "left_anti"))
             val hits = (semiHits, antiHits) match {
-              case (Some(s), Some(a)) => // a row can satisfy both masks
-                s.select(DvFileCol, DvPosCol)
-                  .unionByName(a.select(DvFileCol, DvPosCol)).distinct()
+              case (Some(semi), Some(anti)) => // a row can satisfy both masks
+                semi.select(DvFileCol, DvPosCol)
+                  .unionByName(anti.select(DvFileCol, DvPosCol)).distinct()
               case (one, other) => one.orElse(other).get
             }
             landMaskSidecar(t, touched, hits) match {
@@ -5150,7 +5087,7 @@ object TxLog {
         }
       if (dved.isEmpty) t.cur
       else {
-        val cleaned = readEntriesCurrent(spark, base, dved,
+        val cleaned = readEntriesCurrent(t.snapshot, dved,
           withRowIds = true)
         val newEntries = landEntriesMulti(t, cleaned,
           preservedStatsCols(dved, Seq.empty, cleaned.schema))
@@ -5224,10 +5161,10 @@ object TxLog {
                       maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{col, explode, array}
     require(bitsPerRow >= 2 && k >= 1, s"degenerate bloom: $bitsPerRow/$k")
-    // bloom refs key on the PHYSICAL name (what the raw files carry) —
-    // a later RENAME costs nothing, probes translate at lookup
-    val column = physicalName(spark, base, column0)
     txn(spark, base, maxAttempts) { t =>
+      // bloom refs key on the PHYSICAL name (what the raw files carry) —
+      // a later RENAME costs nothing, probes translate at lookup
+      val column = t.snapshot.physical(column0)
       val indexable = t.entries.filter(_.rows > 0L)
       if (indexable.isEmpty) t.cur
       else {
@@ -5353,8 +5290,8 @@ object TxLog {
     require(path.startsWith("$"),
       s"variant path must start with '$$' (got '$path')")
     val (dtype, sparkT) = variantStatsTarget(targetType)
-    val phys = physicalName(spark, base, column0)
     txn(spark, base, maxAttempts) { t =>
+      val phys = t.snapshot.physical(column0)
       if (t.entries.forall(_.rows == 0L)) t.cur
       else t.publish(mergeVariantPathStats(spark, base, t.entries, phys,
         path, dtype, sparkT), dataChange = false, operation = "COLLECT STATS")
@@ -5380,8 +5317,8 @@ object TxLog {
     require(path.startsWith("$"),
       s"variant path must start with '$$' (got '$path')")
     val (dtype, sparkT) = variantStatsTarget(targetType)
-    val phys = physicalName(spark, base, column0)
     txn(spark, base, maxAttempts) { t =>
+      val phys = t.snapshot.physical(column0)
       val declared = t.meta.varStats
       require(!declared.exists(d => d._1 == phys && d._2 == path),
         s"variant stats already declared for $phys$path")
@@ -5400,8 +5337,8 @@ object TxLog {
   def dropVariantStats(spark: SparkSession, base: String,
                        column0: String, path: String,
                        maxAttempts: Int = 5): Long = {
-    val phys = physicalName(spark, base, column0)
     txn(spark, base, maxAttempts) { t =>
+      val phys = t.snapshot.physical(column0)
       val m = t.meta
       val declared = m.varStats
       require(declared.exists(d => d._1 == phys && d._2 == path),
@@ -5426,20 +5363,16 @@ object TxLog {
     * only the survivors with the row-level `variant_get` residual.
     * At 100 TB this turns a typed query over semi-structured bronze
     * ("$.price between …") into a band scan, exactly what Delta's
-    * shredded-leaf stats buy. */
+    * shredded-leaf stats buy. Like [[readRanges]], the latest version
+    * is resolved once and the survivors are served by [[readKept]]
+    * under the table's schema at that version. */
   def readVariantRange(spark: SparkSession, base: String, column0: String,
                        path: String, targetType: String,
                        lo: Any, hi: Any): DataFrame = {
     import org.apache.spark.sql.functions._
-    val v = requireLatest(spark, base)
-    val key = s"${physicalName(spark, base, column0)}$path"
-    val (l, h) = (reprOf(lo), reprOf(hi))
-    val kept = TxLogPlan.pruneEntriesForScan(spark, base, v,
-        Seq((key, l, h)))
-      .getOrElse(manifest(spark, base, v)._1
-        .filter(touchesRange(_, key, l, h)))
-    if (kept.isEmpty) read(spark, base).where(lit(false))
-    else logicalView(spark, base, readEntriesCurrent(spark, base, kept))
+    val s = snapshot(spark, base)
+    readKept(s, keptInRanges(s,
+        Seq((s"${s.physical(column0)}$path", reprOf(lo), reprOf(hi)))))
       .where(try_variant_get(col(column0), path, targetType)
         .between(lit(lo), lit(hi)))
   }
@@ -5450,9 +5383,7 @@ object TxLog {
     val (spark, base) = (t.spark, t.base)
     val indexable = entries.filter(_.rows > 0L)
     if (indexable.isEmpty) return entries
-    val existing = latestVersion(spark, base)
-      .map(v => snapshotEntries(spark, base, v)).getOrElse(Seq.empty)
-      .flatMap(_.blooms)
+    val existing = t.entries.flatMap(_.blooms)
     if (existing.isEmpty) return entries
     val raw = readFiles(spark, indexable.map(e => resolve(base, e.path)),
       None, mergeSchema = false)
@@ -5492,16 +5423,17 @@ object TxLog {
     * Returns (kept, all). */
   def prunePoint(spark: SparkSession, base: String, column0: String,
                  value: Any): (Seq[Entry], Seq[Entry]) =
-    prunePointAt(spark, base, requireLatest(spark, base), column0, value)
+    prunePoint(snapshot(spark, base), column0, value)
 
-  /** [[prunePoint]] at version `v`. */
-  private def prunePointAt(spark: SparkSession, base: String, v: Long,
-                           column0: String,
-                           value: Any): (Seq[Entry], Seq[Entry]) = {
+  /** [[prunePoint]] on snapshot `s`. */
+  private def prunePoint(s: Snapshot, column0: String,
+                         value: Any): (Seq[Entry], Seq[Entry]) = {
     import org.apache.spark.sql.functions.{col, countDistinct, lit}
+    val (spark, base) = (s.spark, s.base)
+    s.cur // a table that must exist
     require(value != null, "point lookup value must be non-null")
-    val column = physicalIn(metaOf(spark, base, v), column0)
-    val entries = snapshotEntries(spark, base, v)
+    val column = s.physical(column0)
+    val entries = s.entries
     val repr = reprOf(value)
     val statsKept = entries.filter(touchesRange(_, column, repr, repr))
     val (bloomable, rest) = statsKept.partition(_.bloomFor(column).isDefined)
@@ -5537,10 +5469,14 @@ object TxLog {
     * a key whose files all predate a mergeSchema append serves that
     * append's columns as NULL. */
   def readPoint(spark: SparkSession, base: String, column: String,
-                value: Any): DataFrame = {
+                value: Any): DataFrame =
+    readPoint(snapshot(spark, base), column, value)
+
+  /** [[readPoint]] on snapshot `s`. */
+  private[graft] def readPoint(s: Snapshot, column: String,
+                               value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = requireLatest(spark, base)
-    readKept(spark, base, v, prunePointAt(spark, base, v, column, value)._1)
+    readKept(s, prunePoint(s, column, value)._1)
       .where(col(column) === lit(value))
   }
 
@@ -5563,15 +5499,8 @@ object TxLog {
     require(!set.contains(column),
       s"UPDATE may not assign the clustering column $column — " +
         "rewriting the band key would break manifest-stats skipping")
-    requireNoIdentityAssignment(spark, base, set.keys.toSeq)
-    // a row-tracked COW UPDATE stamps the same writer hint the MOR
-    // update does: with stable ids materialized, the change feed can
-    // pair each rewritten row's pre/post images by id
     rewriteRange(spark, base, column, lo, hi, maxAttempts,
-      "UPDATE",
-      cdfOp = if (latestMeta(spark, base).rowIdHighWater.isDefined)
-        Some("update_cow") else None,
-      onAttempt = onAttempt) {
+      "UPDATE", assigned = Some(set.keys.toSeq), onAttempt = onAttempt) {
       touched =>
       import org.apache.spark.sql.functions.{coalesce, col, lit, when}
       val hit = coalesce(
@@ -5602,13 +5531,13 @@ object TxLog {
                    maxAttempts: Int = 5): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val (l, h) = (reprOf(lo), reprOf(hi))
-    // the whole verb runs in PHYSICAL namespace: batch renamed once,
-    // range column translated once (survivor filter + stats + landed
-    // validation all use the same name)
-    val df = toPhysicalIfMapped(spark, base, df0)
-    val column = physicalName(spark, base, column0)
-    val dtype = statsDtype(df.schema(column).dataType)
     txn(spark, base, maxAttempts) { t =>
+      // the whole verb runs in PHYSICAL namespace: batch renamed, range
+      // column translated (survivor filter + stats + landed validation
+      // all use the same name)
+      val df = t.snapshot.toPhysical(df0)
+      val column = t.snapshot.physical(column0)
+      val dtype = statsDtype(df.schema(column).dataType)
       // land FIRST, validate from the landed files' own stats: one
       // evaluation of df (a separate validation count would re-evaluate
       // a non-deterministic plan, letting a misrouted row slip between
@@ -5636,7 +5565,7 @@ object TxLog {
       val survivors =
         if (touched.isEmpty) Seq.empty
         else {
-          val kept = readEntriesCurrent(spark, base, touched,
+          val kept = readEntriesCurrent(t.snapshot, touched,
               withRowIds = true)
             .where(!coalesce(
               col(column).between(lit(lo), lit(hi)), lit(false)))
@@ -5690,30 +5619,33 @@ object TxLog {
     * entries carried (2-D skipping survives DML), and publish
     * carried ++ new under CAS retry. Zero-row outputs land no files
     * (parquet still writes an empty part; its rows==0 entry is
-    * dropped). */
+    * dropped). `assigned` is an UPDATE's SET columns (None for a
+    * DELETE). */
   private def rewriteRange(spark: SparkSession, base: String, column: String,
                            lo: Any, hi: Any, maxAttempts: Int,
-                           op: String, cdfOp: Option[String] = None,
+                           op: String, assigned: Option[Seq[String]] = None,
                            onAttempt: Int => Unit = _ => ())
                           (transform: DataFrame => DataFrame): Long = {
     val (l, h) = (reprOf(lo), reprOf(hi))
-    // entry stats are keyed physical; the caller's transform (and its
-    // captured `column`/`residual` references) runs on the logical view
-    val physCol = physicalName(spark, base, column)
-    // a CAS loss to a winner that added nothing overlapping [lo, hi]
-    // re-bases the landed rewrite (Txn rule 4): a COW DELETE of a cold
-    // band racing the streaming sink's appends costs one extra commit
-    // attempt, not a second rewrite job
-    val overlaps: Entry => Boolean = touchesRange(_, physCol, l, h)
     txn(spark, base, maxAttempts, onAttempt) { t =>
+      val s = t.snapshot
+      // an UPDATE (`assigned` columns) may not assign IDENTITY columns
+      assigned.foreach(requireNoIdentityAssignment(s, _))
+      // entry stats are keyed physical; the caller's transform (and its
+      // captured `column`/`residual` references) runs on the logical view
+      val physCol = s.physical(column)
+      // a CAS loss to a winner that added nothing overlapping [lo, hi]
+      // re-bases the landed rewrite (Txn rule 4): a COW DELETE of a cold
+      // band racing the streaming sink's appends costs one extra commit
+      // attempt, not a second rewrite job
+      val overlaps: Entry => Boolean = touchesRange(_, physCol, l, h)
       t.rebase(Some(overlaps)) {
         val touched = t.entries.filter(overlaps)
         if (touched.isEmpty) None
         else {
-          val rewritten = toPhysicalIfMapped(spark, base,
-            transform(logicalView(spark, base,
-              readEntriesCurrent(spark, base, touched,
-                withRowIds = true), keep = Seq(RowIdCol))))
+          val rewritten = s.toPhysical(transform(s.logical(
+            readEntriesCurrent(s, touched, withRowIds = true),
+            Seq(RowIdCol))))
           Some((landEntriesMulti(t, rewritten,
             preservedStatsCols(touched, Seq(physCol), rewritten.schema))
             .filter(_.rows != 0L), touched))
@@ -5721,8 +5653,13 @@ object TxLog {
       } match {
         case None => t.cur
         case Some(land) =>
+          // a row-tracked COW UPDATE stamps the same writer hint the MOR
+          // update does: with stable ids materialized, the change feed
+          // can pair each rewritten row's pre/post images by id
           t.publish(withoutInputs(t.entries, land) ++ land.value,
-            operation = op, cdfOp = cdfOp)
+            operation = op, cdfOp =
+              if (assigned.isDefined && t.meta.rowIdHighWater.isDefined)
+                Some("update_cow") else None)
       }
     }
   }
@@ -5752,7 +5689,7 @@ object TxLog {
     // shape. (The sweep subsumes OPTIMIZE ... WHERE scoping: cold
     // well-tiled history is never touched regardless.) A single
     // registered key degenerates to band-per-file compaction on it.
-    val m = latestMeta(spark, base)
+    val m = snapshot(spark, base).meta
     m.cluster match {
       case ck if ck.size >= 2 =>
         return compactZorderPhys(spark, base, ck, smallThresholdRows,
@@ -5770,12 +5707,6 @@ object TxLog {
           maxAttempts, range0, onAttempt)
       case _ => ()
     }
-    // the rewrite runs on raw (physical) reads; stats/range columns
-    // translate once here — passthrough when the name is already
-    // physical (the DSv2 sink's auto-compaction passes those)
-    def phys(c: String) = m.colMap.flatMap(_.physicalOf(c)).getOrElse(c)
-    val statsCol = statsCol0.map(phys)
-    val range = range0.map { case (c, lo, hi) => (phys(c), lo, hi) }
     // a CAS loss to a winner that left every small INPUT unchanged
     // re-bases the bin-packed output as a declared delta (Txn rule 4,
     // no overlaps check — Delta's conflict checker lets OPTIMIZE commit
@@ -5783,6 +5714,12 @@ object TxLog {
     // OPTIMIZE, so racing a busy streaming sink costs one extra commit
     // attempt, not a second rewrite job
     txn(spark, base, maxAttempts, onAttempt) { t =>
+      // the rewrite runs on raw (physical) reads; stats/range columns
+      // translate here — passthrough when the name is already physical
+      // (the DSv2 sink's auto-compaction passes those)
+      def phys(c: String) = t.meta.colMap.flatMap(_.physicalOf(c)).getOrElse(c)
+      val statsCol = statsCol0.map(phys)
+      val range = range0.map { case (c, lo, hi) => (phys(c), lo, hi) }
       var carriedOpt: Option[Seq[Entry]] = None
       t.rebase(None) {
         // LIVE rows drive the small-file test: a big file hollowed out
@@ -5820,7 +5757,7 @@ object TxLog {
           val knownRows = small.filter(_.rows >= 0).map(_.liveRows).sum
           val nOut = math.max(1L,
             (knownRows + targetRows - 1) / targetRows + unknown).toInt
-          val smallDf = readEntriesCurrent(spark, base, small,
+          val smallDf = readEntriesCurrent(t.snapshot, small,
             withRowIds = true)
           // keep the cluster layout when the caller has one: range
           // repartition re-establishes band-per-file so stats skipping
@@ -5892,7 +5829,8 @@ object TxLog {
     // resolve and no-ops below — its resolution failure must not
     // masquerade as a veto), but a resolved non-numeric key always
     // errors.
-    scala.util.Try(read(spark, base).schema).toOption.foreach { sch =>
+    val s = snapshot(spark, base)
+    scala.util.Try(readAt(s).schema).toOption.foreach { sch =>
       cols0.filter(variantKeySplit(_).isEmpty).foreach { c0 =>
         sch.fields.find(_.name.equalsIgnoreCase(c0)).foreach { f =>
           require(
@@ -5910,11 +5848,11 @@ object TxLog {
     // the declaration to type its extraction (and to keep the new
     // tiles' stats fresh) — a one-shot collectVariantStats sweep is
     // not enough, its keys die with the first rewrite
-    val varDecls = latestMeta(spark, base).varStats
+    val varDecls = s.meta.varStats
     val phys = cols0.map { c =>
       variantKeySplit(c) match {
         case Some((vc, p)) =>
-          val physC = physicalName(spark, base, vc)
+          val physC = s.physical(vc)
           val d = varDecls.find(d =>
             d._1.equalsIgnoreCase(physC) && d._2 == p).getOrElse(
             throw new IllegalArgumentException(
@@ -5925,7 +5863,7 @@ object TxLog {
             s"ZORDER BY variant key '$c' is declared ${d._3} — the " +
               "bit-interleave normalizes numeric keys")
           s"$physC$p"
-        case None => physicalName(spark, base, c)
+        case None => s.physical(c)
       }
     }
     compactZorderPhys(spark, base, phys,
@@ -5980,7 +5918,7 @@ object TxLog {
           // small threshold — undersized outputs would re-trigger the
           // verb forever (convergence beats tile-size precision here)
           val nOut = math.max(1L, knownRows / targetRows + unknown).toInt
-          val touchedDf = readEntriesCurrent(spark, base, touched,
+          val touchedDf = readEntriesCurrent(t.snapshot, touched,
             withRowIds = true)
           // variant keys re-tile on their declared extraction — the
           // same expression the write path collects stats through
@@ -6278,14 +6216,9 @@ object TxLog {
     * file for byte sizes — a maintenance verb, not a query-path one
     * (Delta's own DESCRIBE DETAIL pays the same listing). */
   def describeDetail(spark: SparkSession, base: String): DataFrame = {
-    val v = requireLatest(spark, base)
-    // ONE read of the latest manifest serves entries (via the
-    // snapshot cache), txn map, and table metadata — not a second
-    // full-file round trip just for the meta lines
-    val lines = manifestLines(spark, base, v)
-    val m = TableMeta.parse(lines)
-    val entries = snapshotEntries(spark, base, v)
-    val txns = parseTxnLines(lines)
+    val s = snapshot(spark, base)
+    val v = s.cur
+    val (m, entries, txns) = (s.meta, s.entries, s.txns)
     val f = fs(base, spark)
     val sizeBytes = entries.map { e =>
       scala.util.Try(
@@ -6366,7 +6299,7 @@ object TxLog {
     * metadata: schema, constraints, widen lines, everything). */
   private def cloneSourceVersion(spark: SparkSession, srcBase: String,
                                  versionAsOf: Option[Long]): Long = {
-    val latest = requireLatest(spark, srcBase)
+    val latest = snapshot(spark, srcBase).cur
     versionAsOf match {
       case Some(v) =>
         require(v >= 1 && v <= latest,
@@ -6593,7 +6526,7 @@ object TxLog {
           val rewritten =
             if (narrow.isEmpty) Seq.empty
             else {
-              val df = readEntriesCurrent(spark, base, narrow,
+              val df = readEntriesCurrent(t.snapshot, narrow,
                 withRowIds = true)
               landEntriesMulti(t, df,
                 preservedStatsCols(narrow, Seq.empty, df.schema))
@@ -6791,10 +6724,10 @@ object TxLog {
     // closing all but a vanishing commit-after-this-stat window
     // (which the full vacuum's grace window covers; LITE documents
     // the same restriction: don't race RESTORE against it).
-    val reRef: Set[String] = latestVersion(spark, base)
-      .map { lv =>
-        val es = scala.util.Try(manifest(spark, base, lv)._1)
-          .getOrElse(Seq.empty)
+    val latest = snapshot(spark, base)
+    val reRef: Set[String] = latest.version
+      .map { _ =>
+        val es = scala.util.Try(latest.entries).getOrElse(Seq.empty)
         (es.map(_.path) ++ es.flatMap(_.dv.map(_.dir)) ++
           es.flatMap(_.blooms.map(_.dir)))
           .filterNot(isAbsolute).map(p => resolve(base, p)).toSet

@@ -637,7 +637,7 @@ object TxLogPlan {
     // last-instant re-reference guard (mirrors the driver-side LITE):
     // a RESTORE that committed since our listing re-references old
     // files — subtract the CURRENT latest snapshot's refs
-    val deadUnits = TxLog.latestVersion(spark, base) match {
+    val deadUnits = TxLog.snapshot(spark, base).version match {
       case Some(lv) if lv > keep.last =>
         deadUnits0.join(refUnits(snapshotDF(spark, base, lv)), Seq("ref"),
           "left_anti")
@@ -685,7 +685,7 @@ object TxLogPlan {
     * every snapshot resolution and planning verb goes distributed).
     * Returns the checkpointed version. */
   def checkpointParquet(spark: SparkSession, base: String): Long = {
-    val v = TxLog.requireLatest(spark, base)
+    val v = TxLog.snapshot(spark, base).cur
     val meta = TxLog.manifestLines(spark, base, v)
       .filter(l => l.startsWith("#") && l != TxLog.DeltaMarker)
     writeCheckpointParquetDF(spark, base, v, meta,

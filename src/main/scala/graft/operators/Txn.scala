@@ -9,8 +9,9 @@ import TxLog.{CommitConflictException, Entry}
   * Delta's `OptimisticTransaction`, and the only way anything writes
   * the log: every TxLog verb, the DSv2 sink commits and the catalog's
   * create/replace run their body through [[TxLog.txn]]. An attempt
-  * reads one snapshot (`read`, resolved on first use — the verb's
-  * `onAttempt` test seam fires right after), stages the dirs it lands
+  * reads one [[Snapshot]] (`snapshot`, resolved on first use — the
+  * verb's `onAttempt` test seam fires right after; `read`, `entries`,
+  * `txns` and `meta` are its fields), stages the dirs it lands
   * (`stage`, `stageDir`, `once`, `rebase`) and publishes at most once,
   * as `read + 1` (`publish`).
   *
@@ -50,22 +51,20 @@ final class Txn private (val spark: SparkSession, val base: String,
                          pinned: Option[Option[Long]], run: Txn.Run) {
   import TxLog._
 
-  /** The version this attempt builds on; None for an empty store. */
-  lazy val read: Option[Long] = {
-    val r = pinned.getOrElse(latestVersion(spark, base))
+  /** The [[Snapshot]] this attempt builds on, resolved on first use
+    * (the latest version, or the pinned one); `onAttempt` fires right
+    * after. Every read the attempt makes goes through it. */
+  lazy val snapshot: Snapshot = {
+    val s = pinned.fold(TxLog.snapshot(spark, base))(Snapshot(spark, base, _))
     onAttempt(attempt)
-    r
+    s
   }
 
-  /** [[read]] of a table that must exist. */
-  def cur: Long = read.getOrElse(throw noVersion(base))
-
-  lazy val entries: Seq[Entry] =
-    read.map(snapshotEntries(spark, base, _)).getOrElse(Seq.empty)
-  lazy val txns: Map[String, Long] =
-    read.map(txnsOf(spark, base, _)).getOrElse(Map.empty)
-  lazy val meta: TableMeta =
-    read.map(metaOf(spark, base, _)).getOrElse(TableMeta.empty)
+  def read: Option[Long] = snapshot.version
+  def cur: Long = snapshot.cur
+  def entries: Seq[Entry] = snapshot.entries
+  def txns: Map[String, Long] = snapshot.txns
+  def meta: TableMeta = snapshot.meta
 
   /** Stage the txn dirs of just-landed `es` (base-relative paths; a
     * file directly under the table root has no dir of its own). */
@@ -145,10 +144,11 @@ final class Txn private (val spark: SparkSession, val base: String,
   }
 
   /** Publish a manifest. The table metadata ([[TableMeta]]) is
-    * carried forward from the latest published version — every
+    * carried forward from the attempt's snapshot — every
     * DML/maintenance verb republishes without knowing about it; a DDL
-    * verb passes `meta`, its edit of that carried value (applied here,
-    * inside the CAS, to the latest version's metadata).
+    * verb passes `meta`, its edit of that carried value. The CAS at
+    * `read + 1` wins only when the snapshot is still the latest
+    * version, so its manifest is the parent's.
     * `dataChange=false` (compaction, DV purge — pure physical
     * rewrites) stamps a `#nodatachange` line so the change feeds skip
     * the version instead of emitting phantom delete+insert pairs for
@@ -158,21 +158,17 @@ final class Txn private (val spark: SparkSession, val base: String,
                              operation: String, cdfOp: Option[String],
                              deltaChange: Option[Seq[String]],
                              meta: TableMeta => TableMeta): Unit = {
-    // ONE read of the latest manifest serves the carried metadata and
-    // the parent's in-commit timestamp
-    val latestLines: Seq[String] = latestVersion(spark, base)
-      .map(manifestLines(spark, base, _)).getOrElse(Seq.empty)
-    val latest = TableMeta.parse(latestLines)
+    val carried = snapshot.meta
     // writer gate: a table stamped by a newer engine with a higher
     // required writer version must not be committed to by this one —
     // the meta lines below are RECONSTRUCTED from the kinds this
     // writer knows, so an ignorant commit would silently drop the
     // newer table features (Delta's minWriterVersion exists for
     // exactly this). Checked on the carried floor, before the edit.
-    if (latest.protocol._2 > WriterVersion) throw new IllegalStateException(
-      s"$base requires log writer version ${latest.protocol._2}; this " +
+    if (carried.protocol._2 > WriterVersion) throw new IllegalStateException(
+      s"$base requires log writer version ${carried.protocol._2}; this " +
         s"engine implements $WriterVersion — upgrade the engine before writing")
-    val edited = meta(latest)
+    val edited = meta(carried)
     // row tracking: the ONE assignment choke point — every commit to
     // a tracked table gives each new known-count file a contiguous id
     // span above the high-water and republishes the advanced water.
@@ -194,7 +190,7 @@ final class Txn private (val spark: SparkSession, val base: String,
     // correct after a table copy/migration rewrites every mtime.
     // Per-commit like #op, never carried; recomputed on CAS retry.
     val ict = math.max(
-      parseIctLines(latestLines).getOrElse(0L) + 1L,
+      read.flatMap(ictOf(spark, base, _)).getOrElse(0L) + 1L,
       System.currentTimeMillis())
     val metaLines =
       (if (dataChange) Seq.empty else Seq("#nodatachange")) ++

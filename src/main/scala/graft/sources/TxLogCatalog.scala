@@ -467,7 +467,7 @@ class TxLogCatalog extends TableCatalog with SupportsNamespaces
             s"(UNIQUE/PRIMARY KEY/FOREIGN KEY are not): ${other.toDDL}")
       }
       case dc: TableChange.DropConstraint =>
-        if (TxLog.latestMeta(spark, base).constraints.contains(dc.name()))
+        if (TxLog.snapshot(spark, base).meta.constraints.contains(dc.name()))
           TxLog.dropConstraint(spark, base, dc.name())
         else if (!dc.ifExists()) throw new IllegalArgumentException(
           s"constraint '${dc.name()}' does not exist on " +

@@ -379,7 +379,7 @@ case class TxLogMergeClausesCommand(base: String, keys: Seq[String],
     // verb's own fallback to the declared #schema rather than crash
     // on the read (the empty-table incremental-bootstrap shape)
     val baseSchema = scala.util.Try(TxLog.read(spark, base).schema)
-      .getOrElse(TxLog.latestMeta(spark, base).schema
+      .getOrElse(TxLog.snapshot(spark, base).meta.schema
         .getOrElse(throw new IllegalArgumentException(
           s"MERGE INTO txlog($base): the table is empty and declares " +
             "no schema — declare one (CREATE TABLE) or write data " +

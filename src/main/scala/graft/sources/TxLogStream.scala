@@ -260,9 +260,9 @@ object TxLogSource {
     * keys; empty = identity — the table has no column mapping). The
     * scan stack resolves this ONCE at plan time and threads it through
     * stats pruning and both partition readers. */
-  private[sources] def physMapOf(spark: SparkSession, base: String,
-                                 target: Long): Map[String, String] =
-    TxLog.metaOf(spark, base, target).colMap
+  private[sources] def physMapOf(m: graft.operators.TableMeta)
+      : Map[String, String] =
+    m.colMap
       .map(_.cols.map { case (l, p) => l.toLowerCase -> p }.toMap)
       .getOrElse(Map.empty)
 
@@ -629,12 +629,12 @@ object TxLogSource {
     * reads the manifest again. The schema is the table's at `v`
     * ([[snapshotSchema]], what `format("graft.sources.TxLogSource")`
     * serves); filters added with `where` push into the scan. */
-  private[graft] def pinnedRead(spark: SparkSession, base: String, v: Long,
+  private[graft] def pinnedRead(s: graft.operators.Snapshot,
                                 kept: Seq[TxLog.Entry])
       : org.apache.spark.sql.DataFrame = {
-    val table = new TxLogTable(snapshotSchema(spark, base, v), base,
-      asOf = Some(v), pinned = Some(kept))
-    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(spark,
+    val table = new TxLogTable(snapshotSchema(s.spark, s.base, s.cur), s.base,
+      asOf = Some(s.cur), pinned = Some(kept))
+    org.apache.spark.sql.graftbridge.ColumnBridge.ofRows(s.spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(table, None, None, CaseInsensitiveStringMap.empty()))
   }
@@ -796,9 +796,7 @@ class TxLogTable(tableSchema: StructType, base: String,
     import org.apache.spark.sql.connector.catalog.{Column => V2Column, ColumnDefaultValue}
     import org.apache.spark.sql.connector.expressions.LiteralValue
     val spark = SparkSession.active
-    val dflts = scala.util.Try(
-      asOf.orElse(TxLog.latestVersion(spark, base))
-        .map(TxLog.metaOf(spark, base, _).defaults).getOrElse(Seq.empty))
+    val dflts = scala.util.Try(TxLog.snapshot(spark, base, asOf).meta.defaults)
       .getOrElse(Seq.empty)
     tableSchema.fields.map { f =>
       dflts.find(_._1.equalsIgnoreCase(f.name)) match {
@@ -824,8 +822,7 @@ class TxLogTable(tableSchema: StructType, base: String,
       : Array[org.apache.spark.sql.connector.catalog.constraints.Constraint] = {
     import org.apache.spark.sql.connector.catalog.constraints.Constraint
     val spark = SparkSession.active
-    val cons = asOf.map(TxLog.metaOf(spark, base, _))
-      .getOrElse(TxLog.latestMeta(spark, base)).constraints
+    val cons = TxLog.snapshot(spark, base, asOf).meta.constraints
     cons.toSeq.sortBy(_._1).map { case (n, ex) =>
       Constraint.check(n).predicateSql(ex).enforced(true)
         .validationStatus(Constraint.ValidationStatus.VALID)
@@ -840,9 +837,7 @@ class TxLogTable(tableSchema: StructType, base: String,
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
     import org.apache.spark.sql.connector.expressions.Expressions
     val spark = SparkSession.active
-    val v = asOf.orElse(TxLog.latestVersion(spark, base))
-      .getOrElse(return Array.empty)
-    val m = TxLog.metaOf(spark, base, v)
+    val m = TxLog.snapshot(spark, base, asOf).meta
     m.partitions.map { case (phys, _) =>
       Expressions.identity(m.colMap.map(_.logicalOf(phys)).getOrElse(phys))
     }.toArray
@@ -900,12 +895,13 @@ class TxLogTable(tableSchema: StructType, base: String,
     val spark = SparkSession.active
     val cond = filters.toSeq.flatMap(TxLogSource.filterToColumn)
       .reduceOption(_ && _).getOrElse(lit(true))
-    // the predicate itself evaluates on the logical view inside
-    // deleteWhereMor; only the stats pre-prune needs physical names
-    val phys = TxLog.latestVersion(spark, base)
-      .map(TxLogSource.physMapOf(spark, base, _)).getOrElse(Map.empty)
-    TxLog.deleteWhereMor(spark, base, cond,
-      e => TxLogSource.entrySurvives(e, filters.toIndexedSeq, phys))
+    // the predicate itself evaluates on the logical view inside the
+    // MOR delete; only the stats pre-prune needs physical names, taken
+    // from each attempt's snapshot
+    TxLog.deleteMor(spark, base, cond, { s =>
+      val phys = TxLogSource.physMapOf(s.meta)
+      e => TxLogSource.entrySurvives(e, filters.toIndexedSeq, phys)
+    }, maxAttempts = 5)
   }
 }
 
@@ -922,19 +918,21 @@ class TxLogScanBuilder(full: StructType, base: String,
     * timestamp→version resolution here, not one per planning phase. */
   private lazy val asOf: Option[Long] =
     TxLogSource.asOfVersion(SparkSession.active, base, options)
-  /** Logical→physical column map of the scan's target version (empty
-    * = identity) — pushed filters and required columns arrive in
+  /** The one snapshot every part of the scan reads — the
+    * `versionAsOf`/`timestampAsOf` target (a pinned read's version),
+    * else the latest — resolved when the optimizer builds the scan, so
+    * a query's version is fixed then, as Delta's `PrepareDeltaScan`
+    * fixes it. Mapping, aggregate pushdown, EXPLAIN and partition
+    * planning all read it; a commit landing after it serves the next
+    * query. */
+  private lazy val snapshot: graft.operators.Snapshot =
+    TxLog.snapshot(SparkSession.active, base, asOf)
+  /** Logical→physical column map of the scan's snapshot (empty =
+    * identity) — pushed filters and required columns arrive in
     * LOGICAL names; manifest stats and file columns are keyed on the
     * frozen PHYSICAL names. */
-  private lazy val physMap: Map[String, String] = {
-    val spark = SparkSession.active
-    // a pinned scan's version is already resolved
-    val target =
-      if (pinned.isDefined) asOf
-      else TxLog.latestVersion(spark, base)
-        .map(latest => asOf.filter(_ <= latest).getOrElse(latest))
-    target.map(TxLogSource.physMapOf(spark, base, _)).getOrElse(Map.empty)
-  }
+  private lazy val physMap: Map[String, String] =
+    TxLogSource.physMapOf(snapshot.meta)
   override def pruneColumns(requiredSchema: StructType): Unit =
     // strip field metadata: the relation's attributes may carry
     // CURRENT_DEFAULT/EXISTS_DEFAULT (from TxLogTable.columns()'s
@@ -986,10 +984,7 @@ class TxLogScanBuilder(full: StructType, base: String,
       TxLogSource.changeFeed(options) || TxLogSource.rowIds(options) ||
       Option(options.get("startingVersion")).exists(_.toLong > 0)) return false
     val spark = SparkSession.active
-    val latestOpt = TxLog.latestVersion(spark, base)
-    if (latestOpt.isEmpty) return false
-    val target = asOf.getOrElse(latestOpt.get)
-    if (target > latestOpt.get) return false
+    val target = snapshot.version.getOrElse(return false)
     // COUNT(*)-only aggregations on a columnar-checkpoint table run
     // as ONE DataFrame aggregate (Σ live rows over the checkpoint) —
     // a metadata count on a 10^6-file table never materializes the
@@ -1011,7 +1006,7 @@ class TxLogScanBuilder(full: StructType, base: String,
         case None => return false // unknown-count entries: scan
       }
     }
-    val entries = TxLog.manifest(spark, base, target)._1
+    val entries = snapshot.entries
     if (entries.exists(_.rows < 0)) return false // v1 entries: count unknown
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
@@ -1148,7 +1143,7 @@ class TxLogScanBuilder(full: StructType, base: String,
       s"versionAsOf must be >= 1, got $v"))
     new TxLogScan(required, base, TxLogSource.changeFeed(options),
       maxVersions, startingVersion, versionAsOf, pushed,
-      TxLogSource.changeTypes(options), physMap, maxFiles,
+      TxLogSource.changeTypes(options), Some(snapshot), maxFiles,
       rowIds = TxLogSource.rowIds(options),
       allowSchemaChange =
         Option(options.get("allowSchemaChange")).exists(_.toBoolean),
@@ -1161,12 +1156,18 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
                 versionAsOf: Option[Long] = None,
                 pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
                 changeTypes: Boolean = false,
-                physMap: Map[String, String] = Map.empty,
+                snapshot: Option[graft.operators.Snapshot] = None,
                 maxFilesPerTrigger: Option[Long] = None,
                 private[sources] val rowIds: Boolean = false,
                 private[sources] val allowSchemaChange: Boolean = false,
                 pinned: Option[Seq[TxLog.Entry]] = None)
     extends Scan with Batch {
+
+  /** Logical→physical column map of the builder's snapshot (identity
+    * for a scan made without one: only a micro-batch stream, which
+    * resolves per trigger, runs without one). */
+  private val physMap: Map[String, String] =
+    snapshot.map(s => TxLogSource.physMapOf(s.meta)).getOrElse(Map.empty)
 
   /** Enablement-backfill map (path → base row id), resolved lazily
     * and only when a PRE-enablement version must serve ids: enable
@@ -1207,25 +1208,19 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
-  /** kept/total after manifest-stats pruning — shown in EXPLAIN so a
-    * SQL/JDBC user can SEE the file skipping their predicate bought
-    * (VERDICT r10 #7). Snapshot resolution is cached, so the plan-time
-    * cost is one map lookup; any failure degrades to no annotation,
-    * never a planning error. */
+  /** kept/total after manifest-stats pruning of the scan's snapshot —
+    * shown in EXPLAIN so a SQL/JDBC user can SEE the file skipping
+    * their predicate bought (VERDICT r10 #7). Any failure degrades to
+    * no annotation, never a planning error. */
   private def pruneSummary(): String =
     try {
       if (pinned.isDefined)
         s", pinnedFiles=${pinned.get.size} pruned at version ${versionAsOf.get}"
       else if (changeFeed || changeTypes || pushed.isEmpty) ""
-      else {
-        val spark = SparkSession.active
-        TxLog.latestVersion(spark, base).map { latest =>
-          val target = versionAsOf.getOrElse(latest)
-          val entries = TxLog.manifest(spark, base, target)._1
-          s", prunedFiles=${survivors(entries).size}/${entries.size} " +
-            "kept by manifest stats"
-        }.getOrElse("")
-      }
+      else snapshot.filter(_.version.isDefined).map { s =>
+        s", prunedFiles=${survivors(s.entries).size}/${s.entries.size} " +
+          "kept by manifest stats"
+      }.getOrElse("")
     } catch { case _: Exception => "" }
 
   override def description(): String =
@@ -1380,14 +1375,12 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
         masks.getOrElse(e.path, Array.emptyLongArray),
         baseRowId = ridOf(e)): InputPartition)
     }
+    val s = snapshot.get // the builder's; a batch scan always has one
     // pinned: exactly the entries the TxLog verb kept at its version
     if (pinned.isDefined)
-      return TxLogInputPartition.uniform(parts(pinned.get, versionAsOf.get))
+      return TxLogInputPartition.uniform(parts(pinned.get, s.cur))
     val spark = SparkSession.active
-    val latest = TxLog.requireLatest(spark, base)
-    versionAsOf.foreach(v => require(v <= latest,
-      s"versionAsOf $v is beyond the latest committed version $latest"))
-    val target = versionAsOf.getOrElse(latest)
+    val target = s.cur
     TxLogInputPartition.uniform(
       if (changeTypes)
         (1L to target).flatMap(v => transitionPartitions(spark, v))
@@ -1415,7 +1408,7 @@ class TxLogScan(required: StructType, base: String, changeFeed: Boolean,
               target, rangePreds,
               e => TxLogSource.entrySurvives(e, ps, pm))
           else None)
-            .getOrElse(survivors(TxLog.manifest(spark, base, target)._1))
+            .getOrElse(survivors(s.entries))
         parts(es, target)
       })
   }

@@ -105,7 +105,7 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     * restart sees the identical answer (no replay hazard). */
   private val logicalPartitionCols: Seq[String] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val m = TxLog.latestMeta(spark, base)
+    val m = TxLog.snapshot(spark, base).meta
     m.partitions.map { case (phys, _) =>
       m.colMap.map(_.logicalOf(phys)).getOrElse(phys)
     }
@@ -118,7 +118,7 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     * interleave, and the incremental OPTIMIZE sweep perfects both). */
   private val logicalClusterCols: Seq[String] = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val m = TxLog.latestMeta(spark, base)
+    val m = TxLog.snapshot(spark, base).meta
     m.cluster.map(p => m.colMap.map(_.logicalOf(p)).getOrElse(p))
       .filter(c => info.schema().fieldNames
         .exists(_.equalsIgnoreCase(c)))
@@ -159,7 +159,7 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
   private def partitionPlan(pSchema: StructType, pStats: Seq[String])
       : (Seq[Int], Seq[String]) = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val m = TxLog.latestMeta(spark, base)
+    val m = TxLog.snapshot(spark, base).meta
     val pPhys = m.partitions.map(_._1)
     val idx = pPhys.map { p =>
       val i = pSchema.fieldNames.indexWhere(_.equalsIgnoreCase(p))
@@ -197,7 +197,8 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
     // already-committed epoch must stay a silent no-op even if the
     // table gained a matching identity column since — failing at plan
     // time would break exactly-once restart recovery.
-    TxLog.requireNoIdentityColumns(spark, base, pSchema.fieldNames.toSeq)
+    TxLog.requireNoIdentityColumns(TxLog.snapshot(spark, base),
+      pSchema.fieldNames.toSeq)
     val (pIdx, allStats) = partitionPlan(pSchema, pStats)
     new TxLogBatchWrite(base, pSchema, allStats, mode, pIdx)
   }
@@ -309,7 +310,7 @@ object TxLogWriteSupport {
   def toPhysical(spark: org.apache.spark.sql.SparkSession, base: String,
                  schema: StructType, statsCols: Seq[String],
                  strict: Boolean): (StructType, Seq[String]) =
-    TxLog.latestMeta(spark, base).colMap match {
+    TxLog.snapshot(spark, base).meta.colMap match {
       case Some(cm) =>
         if (strict) {
           val unknown = schema.fieldNames.filterNot(cm.hasLogical)
@@ -447,7 +448,7 @@ object TxLogOverwriteSupport {
       "INSERT OVERWRITE with a predicate needs a PARTITIONED txlog " +
         "table; row-level replacement on unpartitioned tables is " +
         "REPLACE WHERE (TxLog.replaceRange) or DELETE + INSERT")
-    val cm = TxLog.latestMeta(spark, base).colMap
+    val cm = TxLog.snapshot(spark, base).meta.colMap
     def phys(name: String): (String, String) = {
       val p = cm.flatMap(_.physicalOf(name)).getOrElse(name)
       pspec.find(_._1.equalsIgnoreCase(p)).getOrElse(
@@ -517,12 +518,13 @@ object TxLogWriteCommit {
                        schemaCols: Seq[String] = Seq.empty): Long = {
     // GENERATED ALWAYS at COMMIT time (the plan-time check alone would
     // let an identity column established after planning slip through)
-    TxLog.requireNoIdentityColumns(spark, base, schemaCols)
+    val s0 = TxLog.snapshot(spark, base)
+    TxLog.requireNoIdentityColumns(s0, schemaCols)
     // partition purity backstop (same plan-vs-commit drift class)
-    TxLog.requirePartitionPure(spark, base, entries)
+    TxLog.requirePartitionPure(s0, entries)
     // `checked` records the set enforcement ACTUALLY ran under, so a
     // drop-then-re-add between reads cannot slip past the comparison
-    var checked = TxLog.latestMeta(spark, base).constraints
+    var checked = s0.meta.constraints
     TxLog.txn(spark, base, maxAttempts, onAttempt) { t =>
       val (matcher, indexed) = t.once {
         // the executor-landed files are this commit's to delete if it
@@ -533,14 +535,15 @@ object TxLogWriteCommit {
         // AS: this path cannot compute (data is already landed
         // executor-side) — require the columns supplied and validate
         // them through the same constraint scan
-        TxLog.enforceConstraints(spark, base, entries,
-          checked ++ TxLog.generatedChecksFor(spark, base, schemaCols))
+        val s = TxLog.snapshot(spark, base)
+        TxLog.enforceConstraints(s, entries,
+          checked ++ TxLog.generatedChecksFor(s, schemaCols))
         // partition-scoped overwrites resolve their matcher ONCE (the
         // spec is immutable); replaceWhere additionally validates the
         // NEW data up front — Delta's own rule: every written row must
         // satisfy the overwrite predicate, or the statement is rejected
         // whole
-        val pspec = TxLog.latestMeta(spark, base).partitions
+        val pspec = s.meta.partitions
         val matcher: Option[TxLog.Entry => Boolean] = mode match {
           case TxLogOverwriteWhere(filters) =>
             val m = TxLogOverwriteSupport.partitionMatcher(spark, base,
@@ -616,12 +619,13 @@ object TxLogWriteCommit {
         val firstTime = checked.isEmpty
         val indexed = t.once {
           t.stage(entries)
-          TxLog.requireMappedColumns(spark, base, logicalCols)
-          TxLog.requireNoIdentityColumns(spark, base, schemaCols)
-          TxLog.requirePartitionPure(spark, base, entries)
-          val cons = TxLog.latestMeta(spark, base).constraints
-          TxLog.enforceConstraints(spark, base, entries,
-            cons ++ TxLog.generatedChecksFor(spark, base, schemaCols))
+          val s = TxLog.snapshot(spark, base)
+          TxLog.requireMappedColumns(s, logicalCols)
+          TxLog.requireNoIdentityColumns(s, schemaCols)
+          TxLog.requirePartitionPure(s, entries)
+          val cons = s.meta.constraints
+          TxLog.enforceConstraints(s, entries,
+            cons ++ TxLog.generatedChecksFor(s, schemaCols))
           checked = Some(cons)
           TxLog.indexNewEntries(t, entries)
         }

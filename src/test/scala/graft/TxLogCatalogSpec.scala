@@ -239,7 +239,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     sql("INSERT INTO graft.lake.cons " +
       "SELECT cast(id AS INT) AS k, id * 1.0 AS v FROM range(1, 21)")
     sql("ALTER TABLE graft.lake.cons ADD CONSTRAINT v_pos CHECK (v > 0)")
-    assert(TxLog.latestMeta(spark, base).constraints == Map("v_pos" -> "v > 0"))
+    assert(TxLog.snapshot(spark, base).meta.constraints == Map("v_pos" -> "v > 0"))
     // a violating INSERT aborts cleanly: no version, no rows
     val bad = intercept[Exception] {
       sql("INSERT INTO graft.lake.cons VALUES (99, -1.0)")
@@ -250,7 +250,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(sql("SELECT count(*) AS n FROM graft.lake.cons")
       .head.getLong(0) == 20)
     sql("ALTER TABLE graft.lake.cons DROP CONSTRAINT v_pos")
-    assert(TxLog.latestMeta(spark, base).constraints.isEmpty)
+    assert(TxLog.snapshot(spark, base).meta.constraints.isEmpty)
     sql("INSERT INTO graft.lake.cons VALUES (99, -1.0)")
     assert(sql("SELECT count(*) AS n FROM graft.lake.cons")
       .head.getLong(0) == 21)

@@ -127,7 +127,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     }.getMessage.contains("partition"))
     // drop clustering → widen passes, compact is plain again
     TxLog.alterClusterBy(spark, base, Seq.empty)
-    assert(TxLog.latestMeta(spark, base).cluster.isEmpty)
+    assert(TxLog.snapshot(spark, base).meta.cluster.isEmpty)
     TxLog.alterWidenColumn(spark, base, "x", LongType)
     assert(TxLog.read(spark, base).schema("x").dataType == LongType)
   }
@@ -145,7 +145,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     s.sql("CREATE TABLE gcb.lake.ev (x INT, y INT, payload STRING) " +
       "USING graft.sources.TxLogSource CLUSTER BY (x, y)")
     val base = "/tmp/graft_txcb/wh/lake/ev"
-    assert(TxLog.latestMeta(spark, base).cluster == Seq("x", "y"))
+    assert(TxLog.snapshot(spark, base).meta.cluster == Seq("x", "y"))
     s.sql("INSERT INTO gcb.lake.ev SELECT cast(id * 7 % 100 AS INT), " +
       "cast(id * 13 % 100 AS INT), concat('p-', id) FROM range(20000)")
     assert(s.sql("SELECT count(*) FROM gcb.lake.ev").head.getLong(0)
@@ -164,9 +164,9 @@ class TxLogClusterBySpec extends AnyFunSuite {
       == 20001)
     // native ALTER TABLE ... CLUSTER BY re-registers / drops keys
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY (y, x)")
-    assert(TxLog.latestMeta(spark, base).cluster == Seq("y", "x"))
+    assert(TxLog.snapshot(spark, base).meta.cluster == Seq("y", "x"))
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY NONE")
-    assert(TxLog.latestMeta(spark, base).cluster.isEmpty)
+    assert(TxLog.snapshot(spark, base).meta.cluster.isEmpty)
     // DESCRIBE DETAIL surfaces the registration
     graft.sources.TxLogSqlDml.ensureInjected(s0)
     s.sql("ALTER TABLE gcb.lake.ev CLUSTER BY (x, y)")
@@ -180,7 +180,7 @@ class TxLogClusterBySpec extends AnyFunSuite {
     val vbase = "/tmp/graft_txcb/wh/lake/vb"
     TxLog.declareVariantStats(spark, vbase, "v", "$.price", "long")
     s.sql("ALTER TABLE gcb.lake.vb CLUSTER BY (`v$.price`)")
-    assert(TxLog.latestMeta(spark, vbase).cluster == Seq("v$.price"))
+    assert(TxLog.snapshot(spark, vbase).meta.cluster == Seq("v$.price"))
     s.sql("DROP TABLE gcb.lake.vb")
   }
 

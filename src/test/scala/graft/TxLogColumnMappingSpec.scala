@@ -269,7 +269,7 @@ class TxLogColumnMappingSpec extends AnyFunSuite {
     (1L to 12L).foreach { i =>
       TxLog.append(Seq((1000L + i, i)).toDF("k", "amount"), base, Some("k"))
     }
-    assert(TxLog.latestMeta(spark, base).colMap.isDefined)
+    assert(TxLog.snapshot(spark, base).meta.colMap.isDefined)
     assert(TxLog.read(spark, base).columns.toSeq == Seq("k", "amount"))
     assert(TxLog.read(spark, base).count() == 22L)
     // identity on a mapped table: declare first (physical-name birth),

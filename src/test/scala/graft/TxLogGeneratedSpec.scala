@@ -96,9 +96,9 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     s.sql("CREATE TABLE gg.lake.gt (id INT, etime TIMESTAMP, " +
       "day DATE GENERATED ALWAYS AS (CAST(etime AS DATE))) " +
       "USING graft.sources.TxLogSource PARTITIONED BY (day)")
-    assert(TxLog.latestMeta(s, base).generated ==
+    assert(TxLog.snapshot(s, base).meta.generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
-    assert(TxLog.latestMeta(s, base).partitions.map(_._1) == Seq("day"))
+    assert(TxLog.snapshot(s, base).meta.partitions.map(_._1) == Seq("day"))
     // the API append derives + splits
     TxLog.append(events(Seq((1, "2024-03-01 10:00:00"),
       (2, "2024-03-02 10:00:00"))), base)
@@ -253,10 +253,10 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     TxLog.deleteRangeMor(spark, base, "id", 1, 5)
     TxLog.compact(spark, base, smallThresholdRows = 1000L,
       targetRows = 1000L)
-    assert(TxLog.latestMeta(spark, base).generated ==
+    assert(TxLog.snapshot(spark, base).meta.generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
     TxLog.cloneShallow(spark, base, clone)
-    assert(TxLog.latestMeta(spark, clone).generated ==
+    assert(TxLog.snapshot(spark, clone).meta.generated ==
       Seq("day" -> "CAST(etime AS DATE)"))
     // the clone derives on append like the source
     TxLog.append(events(Seq((99, "2024-04-01 00:00:00"))), clone)

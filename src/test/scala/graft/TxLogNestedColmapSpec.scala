@@ -182,7 +182,7 @@ class TxLogNestedColmapSpec extends AnyFunSuite {
       "named_struct('x', id * 2, 'y', concat('y', id)) AS s, " +
       "'a' AS tag FROM range(0, 30)")
     s.sql("ALTER TABLE graft.nst.t1 RENAME COLUMN s.x TO ex")
-    assert(TxLog.latestMeta(s, base).colMap.exists(_.hasNested),
+    assert(TxLog.snapshot(s, base).meta.colMap.exists(_.hasNested),
       "the catalog ALTER must publish the nested mapping to the log")
     val got = s.sql("SELECT k, s.ex, s.y FROM graft.nst.t1 " +
       "WHERE k BETWEEN 5 AND 7 ORDER BY k").collect()

@@ -51,7 +51,7 @@ class TxLogPartitionSpec extends AnyFunSuite {
     assert(got.columns.toSet == Set("id", "region", "payload"),
       "partition columns live physically in the files")
     // the declaration is durable and carried
-    assert(TxLog.latestMeta(spark, base).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(spark, base).meta.partitions.map(_._1) == Seq("region"))
   }
 
   test("append keeps the declared split and carries the #partition " +
@@ -126,7 +126,7 @@ class TxLogPartitionSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("id", IntegerType),
       StructField("region", StringType), StructField("payload", StringType)))
     TxLog.createPartitioned(spark, base, schema, Seq("region"))
-    assert(TxLog.latestMeta(spark, base).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(spark, base).meta.partitions.map(_._1) == Seq("region"))
     import spark.implicits._
     val withNull = Seq((1, "a", "x"), (2, null, "y"))
       .toDF("id", "region", "payload")
@@ -177,7 +177,7 @@ class TxLogPartitionSpec extends AnyFunSuite {
     s.sql("CREATE NAMESPACE IF NOT EXISTS gp.lake")
     s.sql("CREATE TABLE gp.lake.pt (k INT, region STRING, v DOUBLE) " +
       "USING graft.sources.TxLogSource PARTITIONED BY (region)")
-    assert(TxLog.latestMeta(s, base).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(s, base).meta.partitions.map(_._1) == Seq("region"))
     s.sql("INSERT INTO gp.lake.pt " +
       "SELECT id AS k, CASE WHEN id % 2 = 0 THEN 'ea' ELSE 'we' END " +
       "AS region, id * 1.5 AS v FROM range(0, 100)")
@@ -309,10 +309,10 @@ class TxLogPartitionSpec extends AnyFunSuite {
     TxLog.drop(spark, base); TxLog.drop(spark, clone)
     // case-insensitive declaration (freezes the schema field's casing)
     TxLog.commitPartitioned(df(Seq((1, "a", "x"))), base, Seq("REGION"))
-    assert(TxLog.latestMeta(spark, base).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(spark, base).meta.partitions.map(_._1) == Seq("region"))
     // a shallow clone keeps the declaration — its writes still split
     TxLog.cloneShallow(spark, base, clone)
-    assert(TxLog.latestMeta(spark, clone).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(spark, clone).meta.partitions.map(_._1) == Seq("region"))
     TxLog.append(df(Seq((2, "b", "y"), (3, "c", "z"))), clone)
     assertPure(clone, "region")
     assert(entriesOf(clone).size == 3)

@@ -47,7 +47,7 @@ class TxLogReplaceSpec extends AnyFunSuite {
     // the old constraint is gone: a k >= 100 row now lands fine
     sql("INSERT INTO grep2.lake.r1 VALUES (500, 1.0)")
     assert(sql("SELECT count(*) FROM grep2.lake.r1").head.getLong(0) == 11)
-    assert(TxLog.latestMeta(spark, base("r1")).constraints.isEmpty)
+    assert(TxLog.snapshot(spark, base("r1")).meta.constraints.isEmpty)
     sql("DROP TABLE grep2.lake.r1")
   }
 
@@ -74,7 +74,7 @@ class TxLogReplaceSpec extends AnyFunSuite {
       "USING graft.sources.TxLogSource PARTITIONED BY (region) " +
       "AS SELECT id AS k, CASE WHEN id % 2 = 0 THEN 'ea' ELSE 'we' END " +
       "AS region FROM range(0, 30)")
-    assert(TxLog.latestMeta(spark, base("r2")).partitions.map(_._1) == Seq("region"))
+    assert(TxLog.snapshot(spark, base("r2")).meta.partitions.map(_._1) == Seq("region"))
     val es = TxLog.manifest(spark, base("r2"),
       TxLog.latestVersion(spark, base("r2")).get)._1
     assert(es.size == 2, s"2 regions -> 2 files: ${es.map(_.path)}")

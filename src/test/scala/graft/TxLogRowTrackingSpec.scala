@@ -80,7 +80,7 @@ class TxLogRowTrackingSpec extends AnyFunSuite {
     s.sql("ALTER TABLE grt.lake.t " +
       "SET TBLPROPERTIES ('graft.rowTracking'='true')")
     val base = "/tmp/graft_txrid/wh/lake/t"
-    assert(TxLog.latestMeta(spark, base).rowIdHighWater.isDefined)
+    assert(TxLog.snapshot(spark, base).meta.rowIdHighWater.isDefined)
     assert(TxLog.readWithRowIds(spark, base)
       .select("_row_id").distinct().count() == 50)
     val det = s.sql("DESCRIBE DETAIL grt.lake.t").head()

@@ -1767,12 +1767,28 @@ object TxLog {
     * canonical path. TxLog never rewrites a published path, so an
     * entry holds until [[cachePurge]]. Only footers carrying Spark's
     * row-metadata key are cached: inference returns that stored schema
-    * under any session conf. */
+    * under any session conf. Lands seed it ([[seedFooterSchemas]]). */
   private val footerSchemaCache =
     new java.util.LinkedHashMap[String, StructType](64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, StructType]): Boolean = size() > 8192
     }
+
+  /** Cache `schema` — what Spark's parquet writer stores in a footer's
+    * row-metadata key — for each just-landed base-relative file in
+    * `rels` and for their dirs, whose files all share it: a sidecar
+    * dir is read whole. */
+  private[graft] def seedFooterSchemas(base: String, rels: Seq[String],
+                                       schema: StructType): Unit = {
+    val paths = rels ++ rels.map(r => r.substring(0, r.lastIndexOf('/')))
+    footerSchemaCache.synchronized(paths.distinct.foreach(r =>
+      footerSchemaCache.put(canonicalBase(resolve(base, r)), schema)))
+  }
+
+  /** The cached footer schema of `path`, if any. */
+  private[graft] def cachedFooterSchema(path: String): Option[StructType] =
+    footerSchemaCache.synchronized(
+      Option(footerSchemaCache.get(canonicalBase(path))))
 
   /** The one schema-less read of TxLog-written parquet `paths` (data
     * files or sidecar dirs). `requested` (widened tables) wins. Else,
@@ -1938,111 +1954,92 @@ object TxLog {
       mergeSchema = wide.isEmpty, requested = wide))
   }
 
-  /** Land `df`'s files under a fresh txn dir. They reference no
-    * manifest yet, so concurrent readers cannot see them. Returns the
-    * base-relative paths, for [[publish]]. */
-  /** Serializes VARIANT lands JVM-wide: the shredding toggle below is
-    * a set/restore on the SHARED session conf, and two concurrent
-    * variant lands interleaving (A sets false, B saves A's false as
-    * its "previous", A restores the original true, B writes SHREDDED)
-    * would publish a file against the unshredded rule below. The lock makes
-    * set→write→restore atomic across lands; a concurrent USER write in
-    * the same session can at worst observe false and land unshredded —
-    * a scan-speed nit, never a correctness loss. */
-  private val variantLandLock = new Object
+  /** A fresh base-relative txn dir for one land. */
+  private def newTxnDir(): String = s"$DataDir/${java.util.UUID.randomUUID()}"
 
-  private[graft] def land(df: DataFrame, base: String,
-                          pcols: Seq[String] = Seq.empty): Seq[String] = {
-    // VARIANT columns land UNSHREDDED, the two-binary layout every
-    // landed variant file has carried so far. It is a layout choice,
-    // not a reader limit: Spark's parquet reader, which every TxLog
-    // and DSv2 read decodes through, rebuilds shredded files too
-    // (CONVERT TO TXLOG adopts them). Scoped to this write and
-    // restored after (shredding stays on for user writes outside the
-    // log).
-    val hasVariant = df.schema.exists(
-      _.dataType == org.apache.spark.sql.types.VariantType)
-    if (hasVariant) variantLandLock.synchronized(landUnlocked(df, base, pcols))
-    else landUnlocked(df, base, pcols)
+  /** The one land routine: every file TxLog writes outside the DSv2
+    * sink — data files and (file, position) sidecars — lands here, in
+    * ONE Spark job over `df`'s `queryExecution.toRdd` whose tasks write
+    * through [[graft.sources.TxLogDataWriter]] into the base-relative
+    * txn `dir` and return one [[graft.sources.TxLogFileResult]] per
+    * file: path, rows and the inline stats on the top-level
+    * `statsCols`. The parquet writer ([[graft.sources.TxLogParquetOut]])
+    * reaches the tasks as a broadcast, destroyed after the job. There
+    * is no commit protocol: names are unique per task attempt, a failed
+    * attempt deletes its own files, and one listing after the job
+    * deletes any file no result names. The files reference no manifest
+    * yet, so readers cannot see them; a transaction stages `dir` before
+    * calling, so a failed land is its cleanup's to delete. `pIdx` (the
+    * partition columns' indices) rolls a file per tuple, so callers
+    * cluster and sort the input by them first. Each file's footer
+    * schema seeds [[readFiles]]' cache, so the first read of a fresh
+    * file opens no footer. */
+  private[graft] def landFiles(df: DataFrame, base: String, dir: String,
+                               statsCols: Seq[String] = Seq.empty,
+                               pIdx: Seq[Int] = Seq.empty)
+      : Seq[graft.sources.TxLogFileResult] = {
+    import graft.sources.{TxLogDataWriter, TxLogParquetOut}
+    val spark = df.sparkSession
+    val qe = df.queryExecution
+    // the optimized plan's schema, as `df.write` writes: the optimizer
+    // may prove a column non-null that the analyzed plan could not
+    val schema = qe.optimizedPlan.schema
+    val out = spark.sparkContext.broadcast(TxLogParquetOut(schema, spark))
+    val files = try {
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+          qe, Some(s"txlog land $dir")) {
+        val rdd = qe.toRdd
+        // an unpartitioned land always leaves a file (partition 0's,
+        // empty when the batch is), as Spark's own writer does: it
+        // carries the batch's schema for readers of an empty version
+        val parts = if (rdd.partitions.nonEmpty) rdd
+          else spark.sparkContext.parallelize(
+            Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
+        parts.mapPartitionsWithIndex { (pid, rows) =>
+          val w = new TxLogDataWriter(base, dir, TxLogDataWriter.stem(dir,
+              pid, org.apache.spark.TaskContext.get().taskAttemptId()),
+            schema, statsCols, out.value, pIdx,
+            eager = pid == 0 && pIdx.isEmpty)
+          try {
+            rows.foreach(w.write)
+            Iterator.single(w.commit()
+              .asInstanceOf[graft.sources.TxLogWriterMessage].files)
+          } catch { case e: Throwable => w.abort(); throw e }
+        }.collect().toSeq.flatten
+      }
+    } finally out.destroy()
+    val f = fs(base, spark)
+    val named = files.map(r => fileName(r.path)).toSet
+    val root = new Path(s"$base/$dir")
+    if (f.exists(root)) f.listStatus(root).foreach(st =>
+      if (!named.contains(st.getPath.getName)) f.delete(st.getPath, true))
+    seedFooterSchemas(base, files.map(_.path), schema)
+    files
   }
 
-  private def landUnlocked(df: DataFrame, base: String,
-                           pcols: Seq[String]): Seq[String] = {
-    val txn = java.util.UUID.randomUUID().toString
-    val dir = s"$base/$DataDir/$txn"
-    val f = fs(base, df.sparkSession)
-    val hasVariant = df.schema.exists(
-      _.dataType == org.apache.spark.sql.types.VariantType)
-    val shredKey = "spark.sql.variant.writeShredding.enabled"
-    val prevShred =
-      if (hasVariant) df.sparkSession.conf.getOption(shredKey) else None
-    if (hasVariant) df.sparkSession.conf.set(shredKey, "false")
-    try {
-    if (pcols.isEmpty) df.write.mode("error").parquet(dir)
+  /** [[landFiles]] of `df` split by the partition columns `pcols` (none:
+    * as it comes): a hash shuffle on the tuple, sorted within each
+    * task, so each tuple lands as one file per commit (more only past
+    * `spark.sql.files.maxRecordsPerFile` — every piece carries the same
+    * exact stats). */
+  private def landSplit(df: DataFrame, base: String, dir: String,
+                        pcols: Seq[String], statsCols: Seq[String])
+      : Seq[graft.sources.TxLogFileResult] =
+    if (pcols.isEmpty) landFiles(df, base, dir, statsCols)
     else {
-      // one file per partition tuple, Spark's dynamic-partition write
-      // doing the split: partitionBy on DUPLICATED helper columns (the
-      // originals stay physically in the files — every reader opens
-      // files directly, no dir-name parsing), then FLATTEN the k=v
-      // layout into the txn root under a per-leaf-dir unique prefix.
-      // The flatten restores the global file-name uniqueness the
-      // DV/bloom sidecars key on (partitionBy reuses part names across
-      // leaf dirs) and keeps vacuum's txn-dir liveness walk
-      // layout-free. Renames are one metadata op per NEW file —
-      // O(batch), never O(table).
       import org.apache.spark.sql.functions.col
-      val helpers = pcols.indices.map(i => s"__gp_p$i")
-      // withColumn resolves case-insensitively, so the guard must too
-      require(!df.columns.exists(c =>
-          helpers.exists(_.equalsIgnoreCase(c))),
-        "table schema collides with partition helper columns " +
-          helpers.mkString(", "))
-      val withHelpers = pcols.zip(helpers).foldLeft(df) {
-        case (d, (c, h)) => d.withColumn(h, col(c))
-      }
-      // cluster by tuple first: without it every input task writes its
-      // own file per value it holds (tasks × values files, the classic
-      // dynamic-partition small-file explosion). One hash shuffle →
-      // one file per tuple per commit; a genuinely huge single tuple
-      // splits via spark.sql.files.maxRecordsPerFile (purity survives
-      // a split — all pieces carry the same exact stats).
-      withHelpers.repartition(helpers.map(col): _*)
-        .write.mode("error").partitionBy(helpers: _*).parquet(dir)
-      flattenPartitionedTxn(f, new Path(dir))
+      val keys = pcols.map(col)
+      landFiles(df.repartition(keys: _*).sortWithinPartitions(keys: _*),
+        base, dir, statsCols,
+        pcols.map(c => df.schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))))
     }
-    } finally if (hasVariant) prevShred match {
-      case Some(v) => df.sparkSession.conf.set(shredKey, v)
-      case None => df.sparkSession.conf.unset(shredKey)
-    }
-    f.listStatus(new Path(dir)).toSeq
-      .filter(st => st.isFile && isDataFileName(st.getPath.getName))
-      .map(st => s"$DataDir/$txn/${st.getPath.getName}")
-  }
 
-  /** Move every part file of a just-written dynamic-partition layout
-    * up into the txn root as `p<n>-<name>` (n unique per leaf dir),
-    * then drop the emptied `k=v` dirs. Runs before the txn is
-    * referenced anywhere, so a crash mid-flatten leaves only an
-    * unreferenced dir for vacuum's grace-window GC. */
-  private def flattenPartitionedTxn(f: org.apache.hadoop.fs.FileSystem,
-                                    root: Path): Unit = {
-    def leafDirs(d: Path): Seq[Path] = {
-      val dirs = f.listStatus(d).toSeq.filter(_.isDirectory)
-      if (dirs.isEmpty) Seq(d) else dirs.flatMap(st => leafDirs(st.getPath))
-    }
-    leafDirs(root).filterNot(_ == root).sortBy(_.toString)
-      .zipWithIndex.foreach { case (leaf, i) =>
-        f.listStatus(leaf).toSeq
-          .filter(st => st.isFile && isDataFileName(st.getPath.getName))
-          .foreach { st =>
-            val dst = new Path(root, s"p$i-${st.getPath.getName}")
-            if (!f.rename(st.getPath, dst)) throw new java.io.IOException(
-              s"failed to flatten ${st.getPath} to $dst")
-          }
-      }
-    f.listStatus(root).toSeq.filter(_.isDirectory)
-      .foreach(st => f.delete(st.getPath, true))
-  }
+  /** Land `df`'s files under a fresh txn dir, no stats collected
+    * ([[landFiles]]), and return their base-relative paths, for
+    * [[publish]]. */
+  private[graft] def land(df: DataFrame, base: String,
+                          pcols: Seq[String] = Seq.empty): Seq[String] =
+    landSplit(df, base, newTxnDir(), pcols, Seq.empty).map(_.path)
 
   private[graft] def statsDtype(dt: org.apache.spark.sql.types.DataType): String = {
     import org.apache.spark.sql.types._
@@ -2076,12 +2073,8 @@ object TxLog {
     case other => other.toString
   }
 
-  /** Land `df` and collect per-file (rows, min, max) on each of
-    * `statsCols` by reading back ONLY the just-landed txn dir — one
-    * extra scan of the new data (never the table), the price of stats
-    * on a writer we can't hook. A file that is all-NULL in a stats
-    * column gets no stats FOR THAT COLUMN and is treated as
-    * always-overlapping there. */
+  /** Land `df` with per-file (rows, min, max) on each of `statsCols`
+    * ([[landEntriesChecked]]). */
   private[graft] def landEntriesMulti(t: Txn, df: DataFrame,
                                       statsCols: Seq[String],
                                       recomputeGenerated: Boolean = false,
@@ -2157,8 +2150,8 @@ object TxLog {
           "first, then write")
     }
     val cons = m.constraints
-    val entries =
-      t.stage(landEntriesRaw(df2, base, statsCols, m.partitions, m.varStats))
+    val entries = landEntriesRaw(df2, base, statsCols, m.partitions,
+      m.varStats, t.stageDir(newTxnDir()))
     // the one choke point every data write passes through — CHECK
     // constraints veto the batch here, before any manifest publishes
     val genChecks = gens.map { case (c, ex) =>
@@ -2168,15 +2161,25 @@ object TxLog {
     (entries, cons)
   }
 
-  /** Land WITHOUT constraint enforcement — the DSv2 sink's shape
-    * (executors land, the driver commit enforces); tests use it to
-    * mimic that path. API verbs go through [[landEntriesChecked]]. */
+  /** Land `df` into the base-relative txn `dir` ([[landFiles]], split by
+    * the partition columns `pcols`) and return its manifest entries:
+    * per-file row counts (always — metadata COUNT(*), live-row
+    * compaction sizing and full-mask entry drops run on them) and
+    * min/max on the partition columns plus `statsCols`, plus the
+    * declared variant-path stats `varStats` whose column the batch
+    * carries. The writer tracks the stats inline; [[landedEntries]]
+    * re-collects them by scan when it cannot render them exactly. No
+    * constraint enforcement — the DSv2 sink's shape (executors land,
+    * the driver commit enforces); tests use it to mimic that path. API
+    * verbs go through [[landEntriesChecked]]. */
   private[graft] def landEntriesRaw(df: DataFrame, base: String,
                                     statsCols: Seq[String],
                                     pcols: Seq[(String, String)] = Seq.empty,
                                     varStats: Seq[(String, String, String)] =
-                                      Seq.empty)
+                                      Seq.empty,
+                                    dir: String = newTxnDir())
       : Seq[Entry] = {
+    import org.apache.spark.sql.functions.{col, try_variant_get}
     // a partitioned table's batches MUST carry every partition column
     // (Delta rejects the same), and partition columns are always
     // stats-collected (their per-file exact value — min==max by the
@@ -2194,62 +2197,69 @@ object TxLog {
     val pNames = pcols.map(_._1.toLowerCase).toSet
     val dtypes = pcols ++ statsCols.filterNot(c => pNames.contains(c.toLowerCase))
       .map(c => c -> statsDtype(dataTypeAt(df.schema, c)))
-    // declared variant-path stats ride the same collection scan: a
-    // declared path whose column this batch doesn't carry (schema
+    // a declared path whose column this batch doesn't carry (schema
     // evolution) is skipped — its entries stay conservatively scanned,
     // sound, until the column lands again or a maintenance re-collect
-    import org.apache.spark.sql.functions.try_variant_get
-    val have2 = df.schema.fields.collect {
+    val variants = df.schema.fields.collect {
       case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType] =>
         f.name.toLowerCase -> f.name
     }.toMap
     val varSpecs = varStats.flatMap { case (c, p, t) =>
       // the KEY keeps the declared physical casing (Entry.statsFor is
       // exact-match); only column RESOLUTION follows the batch's
-      have2.get(c.toLowerCase).map { actual =>
+      variants.get(c.toLowerCase).map { actual =>
         val (dtype, sparkT) = variantStatsTarget(t)
-        (s"$c$p",
-          try_variant_get(org.apache.spark.sql.functions.col(actual),
-            p, sparkT), dtype)
+        (s"$c$p", try_variant_get(col(actual), p, sparkT), dtype)
       }
     }
-    val rels = land(df, base, pcols.map(_._1))
-    if (rels.isEmpty) Seq.empty // all-empty write: no part files
-    else {
-      // even with no stats columns the per-file ROW COUNT is collected
-      // (a column-free scan — footer metadata weight): row counts are
-      // what metadata COUNT(*) pushdown, live-row compaction sizing,
-      // and full-mask entry drops all run on, so a stat-less commit or
-      // purge must not silently demote the table to rows=-1
-      val spark = df.sparkSession
-      // metadata-only fast path: everything a plain-column spec needs
-      // is already in the landed files' footers (row counts + typed
-      // min/max) — no second scan of the batch. Declared variant-path
-      // stats need expression evaluation, so their presence keeps the
-      // scan; so does any footer shape the fast path cannot render
-      // byte-identically (INT96 ts, NaN/±0.0 doubles, dropped stats).
-      val fast = if (varSpecs.nonEmpty) None
-        else footerEntries(spark, base, rels,
-          dtypes.map { case (c, t) => (c, t) })
-      fast.getOrElse {
-        val txnDir = s"$base/${rels.head.split('/').dropRight(1).mkString("/")}"
-        val specs = dtypes.map { case (c, t) =>
-          (c, org.apache.spark.sql.functions.col(c), t) } ++ varSpecs
-        val byFile = statsByFile(spark.read.parquet(txnDir), specs)
-        val keys = specs.map { case (k, _, t) => (k, t) }
-        rels.map(rel => entryFromStats(rel, byFile, keys))
-      }
+    // the writer tracks top-level columns whose batch type has the
+    // declared dtype; nested leaves and variant paths take the scan
+    val tracked = varSpecs.isEmpty && dtypes.forall { case (c, t) =>
+      df.schema.fields.exists(f => f.name.equalsIgnoreCase(c) &&
+        scala.util.Try(statsDtype(f.dataType)).toOption.contains(t))
     }
+    val files = landSplit(df, base, dir, pcols.map(_._1),
+      if (tracked) dtypes.map(_._1) else Seq.empty)
+    landedEntries(df.sparkSession, base, files,
+      dtypes.map { case (c, t) => (c, col(c), t) } ++ varSpecs, tracked)
   }
+
+  /** Manifest entries for just-landed `files`, stats keyed by `specs`
+    * (stats key, source expression, dtype). The writer's inline stats
+    * serve when `tracked` and every file's are exact; otherwise one
+    * [[statsByFile]] scan of the files' dirs re-collects them all. That
+    * scan is what the stats strings are defined by — inline stats are
+    * byte-equal to it (TxFooterStatsSpec pins the pair per type), and
+    * the shapes the tracker cannot render exactly (NaN, ±0.0, dates
+    * outside 0001–9999, nested leaves, variant paths) take it. A file
+    * that is all-NULL in a stats column gets no stats FOR THAT COLUMN
+    * and is treated as always-overlapping there. */
+  private[graft] def landedEntries(spark: SparkSession, base: String,
+                                   files: Seq[graft.sources.TxLogFileResult],
+                                   specs: Seq[(String,
+                                     org.apache.spark.sql.Column, String)],
+                                   tracked: Boolean = true): Seq[Entry] =
+    if (files.isEmpty) Seq.empty
+    else if (tracked && files.forall(_.exact))
+      files.map(f => Entry(f.path, f.rows, f.stats.map {
+        case (c, t, mn, mx) => ColStats(c, t, mn, mx) }))
+    else {
+      val dirs = files.map(f =>
+        resolve(base, f.path.substring(0, f.path.lastIndexOf('/')))).distinct
+      val byFile = statsByFile(spark.read.parquet(dirs: _*), specs)
+      val keys = specs.map { case (k, _, t) => (k, t) }
+      files.map(f => entryFromStats(f.path, byFile, keys))
+    }
 
   /** Per-file row counts and min/max stats for `raw` (any parquet
     * read), keyed by file NAME: one aggregate scan with map-side
-    * combine, one tiny row per file back on the driver. Shared by the
-    * land path and [[convertParquet]]. Each spec is (stats key,
-    * source EXPRESSION, dtype) — plain columns pass `col(c)`; the
-    * declared variant-path stats ([[declareVariantStats]]) pass the
-    * `try_variant_get` extraction, so a semi-structured batch collects
-    * typed skipping stats in the SAME single scan as its siblings. */
+    * combine, one tiny row per file back on the driver. Shared by
+    * [[landedEntries]]' fallback and [[convertParquet]]. Each spec is
+    * (stats key, source EXPRESSION, dtype) — plain columns pass
+    * `col(c)`; the declared variant-path stats ([[declareVariantStats]])
+    * pass the `try_variant_get` extraction, so a semi-structured batch
+    * collects typed skipping stats in the SAME single scan as its
+    * siblings. */
   private def statsByFile(raw: DataFrame,
                           specs: Seq[(String, org.apache.spark.sql.Column, String)])
       : Map[String, org.apache.spark.sql.Row] = {
@@ -2268,173 +2278,10 @@ object TxLog {
       .toMap
   }
 
-  /** FOOTER-harvested per-file stats — the metadata-only fast path of
-    * the land-time collection: row counts and min/max come from the
-    * parquet footers of the just-landed files instead of a SECOND full
-    * scan of the batch (guide §6 — at 100 TB the land write should be
-    * the only pass over the batch's bytes; re-reading 100% of what was
-    * just written to derive a few numbers per file is pure I/O tax,
-    * and on the bench it is one whole Spark job per commit).
-    *
-    * Exactness contract: the manifest stats string must be BYTE-EQUAL
-    * to what the scan path (`min(cast(col AS castType)).cast(string)`)
-    * would produce — readers compare strings, and witnesses expose
-    * them. The conversions below are exact for the whole stats matrix
-    * ([[statsDtype]]): integral types and MICROS/MILLIS timestamps
-    * (floorDiv to seconds = `cast(ts AS long)`), float widened through
-    * double (same widening the scan casts through), DATE days rendered
-    * by the same Catalyst Cast the scan executes, strings compared in
-    * unsigned byte order (parquet's STRING order == UTF8String order).
-    * Anything the footer cannot reproduce exactly returns None and the
-    * caller runs the scan: INT96 timestamps (deprecated stats), NaN or
-    * signed-zero double extremes (aggregate ordering vs footer
-    * omission/compare differ), missing or dropped statistics
-    * (oversized values), unknown type shapes. All-NULL columns carry
-    * no stats in either path. TxFooterStatsSpec pins scan/footer
-    * equality per type, including the fallback triggers. */
-  private def footerEntries(spark: SparkSession, base: String,
-                            rels: Seq[String],
-                            keys: Seq[(String, String)]): Option[Seq[Entry]] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    import org.apache.spark.sql.types.{DateType, DoubleType, StringType}
-    val conf = spark.sessionState.newHadoopConf()
-    def renderDouble(d: Double): String =
-      Cast(Literal(d, DoubleType), StringType).eval().toString
-    def renderDate(days: Int): String =
-      Cast(Literal(days, DateType), StringType).eval().toString
-    // local control flow: any shape the footer cannot reproduce
-    // exactly punts the WHOLE batch to the scan path
-    case class Punt() extends Exception
-    // one file's (rows, per-key Option[min,max] strings); None = punt
-    def fileStats(rel: String): Option[(Long, Seq[Option[(String, String)]])] = {
-      val in = HadoopInputFile.fromPath(new Path(resolve(base, rel)), conf)
-      val r = ParquetFileReader.open(in)
-      try {
-        val footer = r.getFooter
-        import scala.jdk.CollectionConverters._
-        val blocks = footer.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        val perKey: Seq[Option[(String, String)]] = keys.map {
-          case (key, dtype) =>
-            val want = key.toLowerCase
-            // (blockRows, chunk) per block; a landed file that lacks
-            // the column cannot have come from this write — punt
-            val chunks = blocks.map { b =>
-              (b.getRowCount, b.getColumns.asScala.find(
-                _.getPath.toDotString.toLowerCase == want))
-            }
-            if (rows == 0L) None // empty file: no stats in either path
-            else if (chunks.exists(_._2.isEmpty)) throw Punt()
-            else {
-              val sts = chunks.map { case (n, c) =>
-                (n, c.get.getStatistics, c.get.getPrimitiveType)
-              }
-              // absent/unset stats (dropped oversized values, foreign
-              // writer) are indistinguishable from data — punt; a block
-              // that is provably all-NULL just contributes no values
-              if (sts.exists { case (n, st, _) =>
-                  st == null || (!st.hasNonNullValue &&
-                    !(st.isNumNullsSet && st.getNumNulls == n)) })
-                throw Punt()
-              val valued = sts.filter(_._2.hasNonNullValue)
-              if (valued.isEmpty) None // all-NULL column: no stats
-              else {
-                val pt = valued.head._3
-                val ann = pt.getLogicalTypeAnnotation
-                def longOf(v: Any): Long = v match {
-                  case i: java.lang.Integer => i.longValue
-                  case l: java.lang.Long => l.longValue
-                  case _ => throw Punt()
-                }
-                def dblOf(v: Any): Double = v match {
-                  case f: java.lang.Float => f.doubleValue
-                  case d: java.lang.Double => d.doubleValue
-                  case _ => throw Punt()
-                }
-                def binOf(v: Any): org.apache.spark.unsafe.types.UTF8String =
-                  v match {
-                    case b: org.apache.parquet.io.api.Binary =>
-                      org.apache.spark.unsafe.types.UTF8String
-                        .fromBytes(b.getBytes)
-                    case _ => throw Punt()
-                  }
-                (dtype, pt.getPrimitiveTypeName, ann) match {
-                  // null annotation = plain signed int; an UNSIGNED
-                  // annotation (foreign writer) would decode its
-                  // footer min/max as wrong signed longs — punt
-                  case ("long", INT32 | INT64, a)
-                      if a == null || (a match {
-                        case i: LogicalTypeAnnotation
-                            .IntLogicalTypeAnnotation => i.isSigned
-                        case _ => false
-                      }) =>
-                    Some((
-                      valued.map(s => longOf(s._2.genericGetMin)).min.toString,
-                      valued.map(s => longOf(s._2.genericGetMax)).max.toString))
-                  case ("long", INT64,
-                      ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation) =>
-                    val div = ts.getUnit match {
-                      case LogicalTypeAnnotation.TimeUnit.MICROS => 1000000L
-                      case LogicalTypeAnnotation.TimeUnit.MILLIS => 1000L
-                      case LogicalTypeAnnotation.TimeUnit.NANOS => 1000000000L
-                    }
-                    Some((
-                      Math.floorDiv(valued.map(s =>
-                        longOf(s._2.genericGetMin)).min, div).toString,
-                      Math.floorDiv(valued.map(s =>
-                        longOf(s._2.genericGetMax)).max, div).toString))
-                  case ("double", FLOAT | DOUBLE, _) =>
-                    val mn = valued.map(s => dblOf(s._2.genericGetMin)).min
-                    val mx = valued.map(s => dblOf(s._2.genericGetMax)).max
-                    // NaN poisons footer stats; ±0.0 ordering differs
-                    // between footer compare and aggregate ordering
-                    if (mn.isNaN || mx.isNaN || mn == 0.0d || mx == 0.0d)
-                      throw Punt()
-                    Some((renderDouble(mn), renderDouble(mx)))
-                  case ("date", INT32,
-                      _: LogicalTypeAnnotation.DateLogicalTypeAnnotation) =>
-                    val mnD = valued.map(s =>
-                      longOf(s._2.genericGetMin).toInt).min
-                    val mxD = valued.map(s =>
-                      longOf(s._2.genericGetMax).toInt).max
-                    // outside 0001-01-01..9999-12-31 the rendered form
-                    // gains a sign/extra digit, so chronological order
-                    // (footer) and rendered-string order (the scan:
-                    // castType("date") == "string") diverge — punt
-                    if (mnD < -719162 || mxD > 2932896) throw Punt()
-                    Some((renderDate(mnD), renderDate(mxD)))
-                  case ("string", BINARY,
-                      _: LogicalTypeAnnotation.StringLogicalTypeAnnotation) =>
-                    Some((
-                      valued.map(s => binOf(s._2.genericGetMin)).min.toString,
-                      valued.map(s => binOf(s._2.genericGetMax)).max.toString))
-                  case _ => throw Punt() // INT96 timestamp, decimal, ...
-                }
-              }
-            }
-        }
-        Some((rows, perKey))
-      } finally r.close()
-    }
-    // the punt contract is all-or-nothing — any Punt fails the whole
-    // batch over to the scan path
-    try Some(readFooters(rels) { rel =>
-      val (rows, perKey) = fileStats(rel).get
-      Entry(rel, rows, keys.zip(perKey).collect {
-        case ((c, t), Some((mn, mx))) => ColStats(c, t, mn, mx)
-      })
-    })
-    catch { case Punt() => None }
-  }
-
-  /** The one footer harvest ([[footerEntries]], [[readFiles]]): `f`
-    * over `paths` on a bounded driver pool, so 10⁴ files pay
-    * O(files/threads) open round-trips; one path runs inline. The
-    * first failure is rethrown unwrapped and cancels the queued reads. */
+  /** The one footer harvest ([[readFiles]]): `f` over `paths` on a
+    * bounded driver pool, so 10⁴ files pay O(files/threads) open
+    * round-trips; one path runs inline. The first failure is rethrown
+    * unwrapped and cancels the queued reads. */
   private def readFooters[T](paths: Seq[String])(f: String => T): Seq[T] =
     if (paths.size <= 1) paths.map(f)
     else {
@@ -3569,7 +3416,8 @@ object TxLog {
             s"partition column '$c' is not in the DataFrame's schema"))
         f.name -> partitionDtype(f.dataType)
       }
-      t.publish(t.stage(landEntriesRaw(df, base, statsCols, pspec)),
+      t.publish(landEntriesRaw(df, base, statsCols, pspec,
+          dir = t.stageDir(newTxnDir())),
         Map.empty, operation = "CREATE TABLE AS SELECT",
         meta = _.copy(schema = Some(df.schema), partitions = pspec))
     }
@@ -4055,8 +3903,8 @@ object TxLog {
     * files, so vacuum/clone treat it uniformly), staged to `t` before
     * the write, and return its base-relative dir. */
   private def landDvDir(t: Txn, df: DataFrame): String = {
-    val dir = t.stageDir(s"$DataDir/${java.util.UUID.randomUUID()}")
-    df.write.mode("error").parquet(s"${t.base}/$dir")
+    val dir = t.stageDir(newTxnDir())
+    landFiles(df, t.base, dir)
     dir
   }
 

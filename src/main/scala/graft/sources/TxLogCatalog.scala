@@ -691,7 +691,8 @@ class StagedTxLogTable(base: String, ident: Identifier,
               pspec.map(_._1), TxLogParquetOut(tableSchema), pIdx)
           }
           override def commit(messages: Array[WriterCommitMessage]): Unit =
-            staged = TxLogWriteCommit.toEntries(messages) // defer publish
+            staged = TxLogWriteCommit.toEntries(base, tableSchema,
+              pspec.map(_._1), messages) // defer publish
           override def abort(messages: Array[WriterCommitMessage]): Unit =
             TxLogWriteCommit.dropTxn(base, s"data/$txn")
         }

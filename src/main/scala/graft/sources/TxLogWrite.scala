@@ -19,11 +19,11 @@ import graft.operators.TxLog
   *
   * Protocol, mapped onto DSv2's two-phase commit:
   *  - executors write parquet files under a fresh per-write txn dir
-  *    (`data/<uuid>[-e<epoch>]/part-<partition>-<task>.parquet`)
+  *    (`data/<uuid>[-e<epoch>]/part-<partition>-<dir>-<task>-c<n>...`)
   *    through Spark's own parquet writer ([[TxLogParquetOut]]),
   *    tracking rows + per-column min/max INLINE — stats ride the
-  *    commit messages, so no read-back scan is needed (cheaper than
-  *    [[TxLog.landEntries]]);
+  *    commit messages, so no read-back scan is needed (the same writer
+  *    as [[TxLog.landFiles]]);
   *  - `BatchWrite.commit` publishes one manifest from the collected
   *    messages under the same CAS retry as [[TxLog.append]]: a
   *    conflict re-reads ONE manifest, the landed data is reused;
@@ -252,9 +252,13 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
 
 /** Serializable per-file result: path (base-relative), rows, and one
   * (column, dtype, minRepr, maxRepr) per stats column that saw at
-  * least one non-null value. */
+  * least one non-null value. `exact` is false when a tracked value has
+  * no byte-identical inline rendering ([[StatsTracker.exact]]); the
+  * driver then re-collects the batch's stats by scan
+  * ([[TxLog.landedEntries]]). */
 case class TxLogFileResult(path: String, rows: Long,
-                           stats: Seq[(String, String, String, String)])
+                           stats: Seq[(String, String, String, String)],
+                           exact: Boolean = true)
 
 /** One task's commit message — SEVERAL files when the table is
   * partitioned (the rolling writer emits one per partition tuple). */
@@ -263,12 +267,16 @@ case class TxLogWriterMessage(files: Seq[TxLogFileResult])
 
 /** Spark's parquet writer for one write's physical schema, prepared
   * ONCE on the driver with the session SQLConf — compression, timestamp
-  * type and the footer's row-metadata key are the ones [[TxLog.land]]
-  * writes. Each task opens its files through [[open]] with the job
-  * conf prepared here. */
+  * type and the footer's key-value metadata are what `df.write.parquet`
+  * writes, with VARIANT columns UNSHREDDED (the two-binary layout every
+  * landed variant file carries; Spark's reader rebuilds shredded files
+  * too, so this is a layout choice, not a reader limit). Each task
+  * opens its files through [[open]] with the job conf prepared here,
+  * rolling at `spark.sql.files.maxRecordsPerFile` rows when set. */
 final class TxLogParquetOut private (
     schema: StructType, factory: OutputWriterFactory,
-    jobConf: org.apache.spark.util.SerializableConfiguration)
+    jobConf: org.apache.spark.util.SerializableConfiguration,
+    val maxRecordsPerFile: Long)
     extends Serializable {
   def conf: Configuration = jobConf.value
 
@@ -276,21 +284,33 @@ final class TxLogParquetOut private (
     new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       conf, new org.apache.hadoop.mapreduce.TaskAttemptID())
 
+  /** The file name suffix Spark's own writer uses (`.snappy.parquet`). */
+  def extension: String = factory.getFileExtension(context)
+
   def open(path: String): OutputWriter =
     factory.newInstance(path, schema, context)
 }
 
 object TxLogParquetOut {
-  def apply(schema: StructType): TxLogParquetOut = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
-    val spark = org.apache.spark.sql.SparkSession.active
+  def apply(schema: StructType,
+            spark: org.apache.spark.sql.SparkSession =
+              org.apache.spark.sql.SparkSession.active): TxLogParquetOut = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
+    import org.apache.spark.sql.internal.SQLConf
+    val sqlConf = spark.sessionState.conf.clone()
+    sqlConf.setConf(SQLConf.VARIANT_WRITE_SHREDDING_ENABLED, false)
+    // the checks `df.write.parquet` makes before its job
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.verifySchema(
+      new ParquetFileFormat, schema, false)
+    org.apache.spark.sql.graftbridge.ColumnBridge.checkColumnNameDuplication(
+      schema.fieldNames.toSeq, sqlConf.caseSensitiveAnalysis)
     val job = org.apache.hadoop.mapreduce.Job.getInstance(
       spark.sessionState.newHadoopConf())
-    val sqlConf = spark.sessionState.conf
     val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
       new ParquetOptions(Map.empty[String, String], sqlConf))
     new TxLogParquetOut(schema, factory,
-      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
+      new org.apache.spark.util.SerializableConfiguration(job.getConfiguration),
+      sqlConf.maxRecordsPerFile)
   }
 }
 
@@ -369,7 +389,8 @@ class TxLogBatchWrite(base: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val entries = TxLogWriteCommit.toEntries(messages)
+    val entries = TxLogWriteCommit.toEntries(base, schema, statsCols,
+      messages)
     TxLogWriteCommit.publishWithRetry(spark, base, entries,
       mode = mode, schemaCols = schema.fieldNames.toSeq)
   }
@@ -392,7 +413,8 @@ class TxLogStreamingWrite(base: String, schema: StructType,
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val entries = TxLogWriteCommit.toEntries(messages)
+    val entries = TxLogWriteCommit.toEntries(base, schema, statsCols,
+      messages)
     TxLogWriteCommit.publishEpochWithRetry(spark, base, entries,
       appId = s"sink-$queryId", epochId = epochId,
       schemaCols = schema.fieldNames.toSeq,
@@ -489,15 +511,23 @@ object TxLogOverwriteSupport {
   * messages → manifest entries, one transaction ([[TxLog.txn]]) per
   * commit (data reused on conflict, exactly like [[TxLog.append]]). */
 object TxLogWriteCommit {
-  def toEntries(messages: Array[WriterCommitMessage]): Seq[TxLog.Entry] =
-    messages.toSeq
+  /** The landed non-empty files' manifest entries: the writer's inline
+    * stats on `statsCols`, or a scan's where it could not render them
+    * exactly ([[TxLog.landedEntries]]). Each file's `schema` seeds the
+    * read path's footer-schema cache. */
+  def toEntries(base: String, schema: StructType, statsCols: Seq[String],
+                messages: Array[WriterCommitMessage]): Seq[TxLog.Entry] = {
+    val files = messages.toSeq
       .collect { case m: TxLogWriterMessage => m.files }.flatten
-      .collect {
-        case f if f.rows > 0 =>
-          TxLog.Entry(f.path, f.rows, f.stats.map { case (c, t, mn, mx) =>
-            TxLog.ColStats(c, t, mn, mx)
-          })
-      }
+      .filter(_.rows > 0)
+    TxLog.seedFooterSchemas(base, files.map(_.path), schema)
+    TxLog.landedEntries(org.apache.spark.sql.SparkSession.active, base,
+      files, statsCols.map { c =>
+        val f = schema.fields.find(_.name.equalsIgnoreCase(c)).get
+        (c, org.apache.spark.sql.functions.col(c),
+          TxLogWriteSupport.statsDtype(f.dataType))
+      })
+  }
 
   /** Delete an aborted write's txn dir — unless the latest version
     * references it: an abort can follow a `commit()` whose CAS already
@@ -639,15 +669,20 @@ object TxLogWriteCommit {
 }
 
 /** Typed running min/max for one stats column — primitive comparisons
-  * on the per-row hot path, string reprs produced ONCE at commit.
-  * UTF8String values from an UnsafeRow point into the row's reused
-  * buffer, so a new string extreme is CLONED when stored. */
+  * on the per-row hot path, string reprs produced ONCE at commit,
+  * rendered by the same Catalyst `Cast` the stats scan
+  * (`min(cast(c AS castType)).cast(string)`) executes, so inline and
+  * scanned stats are byte-equal. UTF8String values from an UnsafeRow
+  * point into the row's reused buffer, so a new string extreme is
+  * CLONED when stored. */
 class StatsTracker(idx: Int, name: String, dt: DataType)
     extends Serializable {
   private val dtype = TxLogWriteSupport.statsDtype(dt)
   private var seen = false
+  private var nan = false
   private var minL = Long.MaxValue; private var maxL = Long.MinValue
-  private var minD = Double.NaN; private var maxD = Double.NaN
+  private var minD = Double.PositiveInfinity
+  private var maxD = Double.NegativeInfinity
   private var minU: UTF8String = _; private var maxU: UTF8String = _
 
   def update(row: InternalRow): Unit = {
@@ -670,8 +705,11 @@ class StatsTracker(idx: Int, name: String, dt: DataType)
       case DoubleType | FloatType =>
         val v = if (dt == DoubleType) row.getDouble(idx)
                 else row.getFloat(idx).toDouble
-        if (minD.isNaN || v < minD) minD = v
-        if (maxD.isNaN || v > maxD) maxD = v
+        if (v.isNaN) nan = true
+        else {
+          if (v < minD) minD = v
+          if (v > maxD) maxD = v
+        }
       case StringType =>
         val v = row.getUTF8String(idx)
         if (minU == null || v.compareTo(minU) < 0) minU = v.clone()
@@ -681,19 +719,35 @@ class StatsTracker(idx: Int, name: String, dt: DataType)
     seen = true
   }
 
+  /** Whether [[result]] is byte-equal to the stats scan's rendering.
+    * Not for: NaN (Spark orders it above every double, the comparisons
+    * here never record it), a ±0.0 extreme (the aggregate's pick
+    * between equal -0.0 and 0.0 depends on row order), and dates
+    * outside 0001–9999 (rendered with a sign or a fifth digit, string
+    * order stops being date order). */
+  def exact: Boolean = !seen || (dt match {
+    case DoubleType | FloatType =>
+      !nan && minD != 0.0d && maxD != 0.0d
+    case DateType => minL >= -719162L && maxL <= 2932896L
+    case _ => true
+  })
+
   /** (column, dtype, minRepr, maxRepr) — None when every row was NULL. */
   def result: Option[(String, String, String, String)] =
-    if (!seen) None
-    else Some(dt match {
-      case DateType => (name, dtype,
-        java.time.LocalDate.ofEpochDay(minL).toString,
-        java.time.LocalDate.ofEpochDay(maxL).toString)
-      case LongType | IntegerType | ShortType | ByteType =>
-        (name, dtype, minL.toString, maxL.toString)
-      case DoubleType | FloatType =>
-        (name, dtype, minD.toString, maxD.toString)
-      case _ => (name, dtype, minU.toString, maxU.toString)
-    })
+    if (!seen || (nan && minD > maxD)) None
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      def render(v: Any, t: DataType): String =
+        Cast(Literal(v, t), StringType).eval().toString
+      Some(dt match {
+        case DateType => (name, dtype, render(minL.toInt, DateType),
+          render(maxL.toInt, DateType))
+        case DoubleType | FloatType => (name, dtype,
+          render(minD, DoubleType), render(maxD, DoubleType))
+        case StringType => (name, dtype, minU.toString, maxU.toString)
+        case _ => (name, dtype, minL.toString, maxL.toString)
+      })
+    }
 }
 
 class TxLogWriterFactory(base: String, txnRel: String, schema: StructType,
@@ -701,8 +755,8 @@ class TxLogWriterFactory(base: String, txnRel: String, schema: StructType,
                          pIdx: Seq[Int] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new TxLogDataWriter(base, txnRel, f"part-$partitionId%05d-$taskId",
-      schema, statsCols, out, pIdx)
+    new TxLogDataWriter(base, txnRel, TxLogDataWriter.stem(txnRel,
+      partitionId, taskId), schema, statsCols, out, pIdx)
 }
 
 class TxLogStreamingWriterFactory(base: String, txnRelPrefix: String,
@@ -711,27 +765,35 @@ class TxLogStreamingWriterFactory(base: String, txnRelPrefix: String,
                                   pIdx: Seq[Int] = Seq.empty)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new TxLogDataWriter(base, s"$txnRelPrefix-e$epochId",
-      f"part-$partitionId%05d-$taskId", schema, statsCols, out, pIdx)
+                            epochId: Long): DataWriter[InternalRow] = {
+    val txnRel = s"$txnRelPrefix-e$epochId"
+    new TxLogDataWriter(base, txnRel,
+      TxLogDataWriter.stem(txnRel, partitionId, taskId), schema, statsCols,
+      out, pIdx)
+  }
 }
 
-/** One task's parquet output, written through Spark's parquet writer
-  * ([[TxLogParquetOut]]), with rows + per-stats-column min/max tracked
-  * INLINE (Catalyst-internal comparisons on the fly; reprs match the
-  * landEntries cast path so both write routes prune identically).
-  * Files are created lazily on the first row — an empty task commits
-  * an empty message, never an empty file.
+/** One task's parquet output: every file TxLog lands — the DSv2 sink's
+  * tasks and [[TxLog.landFiles]]' (data files and sidecars) — is
+  * written here, through Spark's parquet writer ([[TxLogParquetOut]]),
+  * with rows + per-stats-column min/max tracked INLINE
+  * ([[StatsTracker]]). Files are created on the first row, so an empty
+  * task writes no file, unless `eager` (the one empty file Spark's own
+  * writer leaves when a whole write is empty, carrying the schema).
+  * File names carry the txn dir's name and the task attempt, so they
+  * are unique across the table (sidecars key on names) and a retried
+  * attempt never overwrites a failed one's file.
   *
-  * On a PARTITIONED table (`pIdx` non-empty) the writer ROLLS to a
-  * fresh file whenever the partition tuple changes — with the
-  * required clustering+ordering each tuple arrives contiguously, so
-  * one file per tuple per task (Spark's dynamic-partition write
-  * shape). Purity is unconditional: unsorted input would yield MORE
-  * files, never a mixed one. */
+  * The writer ROLLS to a fresh file at `maxRecordsPerFile` rows and, on
+  * a PARTITIONED table (`pIdx` non-empty), whenever the partition
+  * tuple changes — with input clustered and sorted by the tuple, one
+  * file per tuple per task (Spark's dynamic-partition write shape).
+  * Purity is unconditional: unsorted input would yield MORE files,
+  * never a mixed one. */
 class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
                       schema: StructType, statsCols: Seq[String],
-                      out: TxLogParquetOut, pIdx: Seq[Int] = Seq.empty)
+                      out: TxLogParquetOut, pIdx: Seq[Int] = Seq.empty,
+                      eager: Boolean = false)
     extends DataWriter[InternalRow] {
   private var rel: String = _
   private var writer: OutputWriter = _
@@ -741,6 +803,7 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
   private var curKey: Seq[Any] = _
   private val done =
     scala.collection.mutable.ArrayBuffer.empty[TxLogFileResult]
+  if (eager) openFile()
 
   /** The row's partition tuple as stable values (UTF8String points
     * into the row's reused buffer — clone before keeping). */
@@ -755,13 +818,13 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
 
   private def finishFile(): Unit = if (writer != null) {
     writer.close()
-    done += TxLogFileResult(rel, rows, tracked.flatMap(_.result))
+    done += TxLogFileResult(rel, rows, tracked.flatMap(_.result),
+      tracked.forall(_.exact))
     writer = null
   }
 
   private def openFile(): Unit = {
-    rel = s"$txnRel/$fileStem" +
-      (if (pIdx.isEmpty) "" else s"-s$fileSeq") + ".parquet"
+    rel = f"$txnRel/$fileStem-c$fileSeq%03d${out.extension}"
     fileSeq += 1
     rows = 0L
     // resolve case-insensitively but record stats under the REQUESTED
@@ -776,12 +839,11 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
   }
 
   override def write(row: InternalRow): Unit = {
-    if (pIdx.nonEmpty) {
-      val k = keyOf(row)
-      if (writer == null || curKey != k) {
-        finishFile(); openFile(); curKey = k
-      }
-    } else if (writer == null) openFile()
+    val k = if (pIdx.isEmpty) null else keyOf(row)
+    if (writer == null || (pIdx.nonEmpty && curKey != k) ||
+        (out.maxRecordsPerFile > 0 && rows >= out.maxRecordsPerFile)) {
+      finishFile(); openFile(); curKey = k
+    }
     writer.write(row)
     rows += 1L
     tracked.foreach(_.update(row))
@@ -802,4 +864,10 @@ class TxLogDataWriter(base: String, txnRel: String, fileStem: String,
   }
 
   override def close(): Unit = ()
+}
+
+object TxLogDataWriter {
+  /** A task's file-name stem: partition, txn dir name, task attempt. */
+  def stem(txnRel: String, partitionId: Int, taskId: Long): String =
+    f"part-$partitionId%05d-${txnRel.split('/').last}-$taskId"
 }

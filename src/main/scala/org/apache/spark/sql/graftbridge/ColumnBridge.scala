@@ -25,6 +25,13 @@ object ColumnBridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** Spark's duplicate-column check for a write schema (the one
+    * `df.write` makes). */
+  def checkColumnNameDuplication(names: Seq[String],
+                                 caseSensitive: Boolean): Unit =
+    org.apache.spark.sql.util.SchemaUtils.checkColumnNameDuplication(
+      names, caseSensitive)
+
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 

@@ -62,6 +62,19 @@ object CountingFileSystem {
     Option(counts.get((op, new Path(path).toUri.getPath)))
       .map(_.get).getOrElse(0L)
 
+  /** Calls of `op` on any path under the dir `prefix` made while
+    * `body` runs (same caveat as [[during]]). */
+  def duringUnder[T](op: String, prefix: String)(body: => T): (T, Long) = {
+    import scala.jdk.CollectionConverters._
+    val dir = new Path(prefix).toUri.getPath + "/"
+    def total: Long = counts.asScala.iterator.collect {
+      case ((o, p), n) if o == op && p.startsWith(dir) => n.get
+    }.sum
+    val before = total
+    val out = body
+    (out, total - before)
+  }
+
   /** Calls of `op` on `path` made while `body` runs. Counts are global
     * to the JVM, so `body` must be the only thing touching `path`. */
   def during[T](op: String, path: String)(body: => T): (T, Long) = {

@@ -258,7 +258,7 @@ class TxLogWrite(base: String, info: LogicalWriteInfo,
   * ([[TxLog.landedEntries]]). */
 case class TxLogFileResult(path: String, rows: Long,
                            stats: Seq[(String, String, String, String)],
-                           exact: Boolean = true)
+                           exact: Boolean)
 
 /** One task's commit message — SEVERAL files when the table is
   * partitioned (the rolling writer emits one per partition tuple). */

@@ -1742,8 +1742,8 @@ object TxLog {
     * MOR commits since the last purge, small), each filtered to the
     * file names that actually reference it. None when no entry has a
     * DV. */
-  private def dvFrame(spark: SparkSession, base: String,
-                      entries: Seq[Entry]): Option[DataFrame] = {
+  private[graft] def dvFrame(spark: SparkSession, base: String,
+                             entries: Seq[Entry]): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
     val dved = entries.filter(_.dv.isDefined)
     if (dved.isEmpty) None
@@ -3864,6 +3864,217 @@ object TxLog {
     if (b.isNullAt(0)) None else Some((b.getString(0), b.getString(1)))
   }
 
+  /** A merge or apply source's keys, collected on the driver.
+    * `values(i)` holds key `i`'s distinct non-NULL values (what the hit
+    * scan pushes as `In`), `tuples` the distinct key tuples without a
+    * NULL, `dupes` the tuples the source holds more than once, `rows`
+    * the source's row count and `types` the keys' source types. Tuples
+    * compare by [[keyNorm]]. */
+  private final case class KeySet(values: Seq[Seq[Any]], tuples: Set[Seq[Any]],
+                                  dupes: Set[Seq[Any]], rows: Long,
+                                  types: Seq[org.apache.spark.sql.types.DataType])
+
+  /** `source`'s [[KeySet]] on `keys`, or None when it holds more rows
+    * than Spark would broadcast in a join:
+    * `spark.sql.autoBroadcastJoinThreshold` divided by the key row's
+    * size, checked by collecting at most that many rows plus one (a
+    * persisted micro-batch reports no size to check up front). A
+    * threshold of -1 disables the driver path. */
+  private def collectKeySet(source: DataFrame,
+                            keys: Seq[String]): Option[KeySet] = {
+    import org.apache.spark.sql.functions.col
+    val sel = source.select(keys.map(col): _*)
+    val threshold = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val rowSize = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(sel.queryExecution.analyzed.output)
+    if (threshold <= 0) None
+    else collectCapped(sel, (BigInt(threshold) / rowSize).toLong).map { rows =>
+      val tuples = rows.map(_.toSeq)
+      val full = tuples.filterNot(_.contains(null)).map(_.map(keyNorm))
+      KeySet(keys.indices.map(i => tuples.map(_(i)).filter(_ != null).distinct),
+        full.toSet,
+        full.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.toSet,
+        rows.size.toLong, sel.schema.fields.toSeq.map(_.dataType))
+    }
+  }
+
+  /** A key value in the form two equal keys share whatever their
+    * numeric types (the target's INT and the source's BIGINT). */
+  private def keyNorm(v: Any): Any = v match {
+    case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
+              _: java.lang.Long) => n.asInstanceOf[Number].longValue
+    case f: java.lang.Float => keyNorm(f.toDouble)
+    case d: java.lang.Double if math.abs(d) < 9.0e18 && d == math.rint(d) =>
+      d.longValue
+    case d: java.math.BigDecimal => keyNorm(d.doubleValue)
+    case d: scala.math.BigDecimal => keyNorm(d.doubleValue)
+    case other => other
+  }
+
+  /** The hit predicate for a [[KeySet]]: each key column IN its values
+    * (`keys` are the physical names), which pushes into the parquet
+    * read. Exact for one key; for several it admits tuples the source
+    * lacks, which [[landMaskKeyed]] drops on the driver. */
+  private def keyFilter(keys: Seq[String], ks: KeySet): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    keys.zip(ks.values).map { case (k, vs) => col(k).isin(vs: _*) }.reduce(_ && _)
+  }
+
+  /** Does an entry's stats range on one column admit any of the key
+    * values `reprs` (stats reprs)? Binary search over the keys sorted
+    * in each stats type's order, so a file costs O(log keys). */
+  private final class KeyProbe(reprs: Seq[String]) {
+    private val sorted = scala.collection.mutable.Map.empty[String, Array[String]]
+    def admits(st: ColStats): Boolean = {
+      val a = sorted.getOrElseUpdate(st.dtype,
+        reprs.toArray.sortWith(cmp(st.dtype, _, _) < 0))
+      var (lo, hi) = (0, a.length)
+      while (lo < hi) {
+        val m = (lo + hi) >>> 1
+        if (cmp(st.dtype, a(m), st.min) < 0) lo = m + 1 else hi = m
+      }
+      lo < a.length && cmp(st.dtype, a(lo), st.max) <= 0
+    }
+  }
+
+  /** The touched files of a key-matching verb, split from the rest of
+    * `entries` (both in log order), on physical stats column `statsCol`
+    * (none: every file is touched): with the source's keys `ks`, the
+    * entries whose stats admit some key and whose bloom index on the
+    * column, if any, admits one too ([[bloomAdmitted]]); else (a source
+    * too large to collect) the entries overlapping the source's key
+    * `span`. Entries without stats on the column are touched too,
+    * unless the source has no key on it at all. */
+  private def keyTouched(s: Snapshot, entries: Seq[Entry],
+                         statsCol: Option[String], ks: Option[KeySet],
+                         statsIdx: Int, span: => Option[(String, String)])
+      : (Seq[Entry], Seq[Entry]) = {
+    val byStats: Entry => Boolean = (statsCol, ks) match {
+      case (None, _) => _ => true
+      case (Some(_), Some(k)) if k.values(statsIdx).isEmpty => _ => false
+      case (Some(c), Some(k)) =>
+        val probe = new KeyProbe(k.values(statsIdx).map(reprOf))
+        _.statsFor(c).forall(probe.admits)
+      case (Some(c), None) => span match {
+        case Some((lo, hi)) => touchesRange(_, c, lo, hi)
+        case None => _ => false // empty / all-NULL source
+      }
+    }
+    val split = entries.partition(byStats)
+    (statsCol, ks) match {
+      case (Some(c), Some(k)) if split._1.exists(_.bloomFor(c).isDefined) =>
+        val kept = bloomAdmitted(s, split._1, c, k.values(statsIdx),
+          k.types(statsIdx)).map(_.path).toSet
+        entries.partition(e => kept(e.path))
+      case _ => split
+    }
+  }
+
+  /** Of `entries`, those whose bloom index on physical `column` may
+    * hold one of `values` (of Spark type `dtype`): every value's k bit
+    * positions are computed in one local projection (no Spark job), one
+    * job per bloom sidecar reads just the rows at those positions, and
+    * a file stays when it holds all k positions of some value. Entries
+    * without a bloom on the column stay. */
+  private def bloomAdmitted(s: Snapshot, entries: Seq[Entry], column: String,
+                            values: Seq[Any],
+                            dtype: org.apache.spark.sql.types.DataType)
+      : Seq[Entry] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val valuesDf = s.spark.createDataFrame(
+      java.util.Arrays.asList(values.map(Row(_)): _*),
+      StructType(Seq(StructField("__v", dtype))))
+    val kept = entries.filter(_.bloomFor(column).isDefined)
+      .groupBy(_.bloomFor(column).get).toSeq.flatMap { case (ref, es) =>
+        val wanted = valuesDf.select(bloomPosCols(col("__v"), ref.m, ref.k,
+          ref.dtype): _*).collect().map(r => (0 until ref.k).map(r.getLong).toSet)
+        val present = readFiles(s.spark, Seq(resolve(s.base, ref.dir)), None,
+            mergeSchema = false)
+          .where(col(DvPosCol).isin(wanted.flatten.distinct: _*) &&
+            col(DvFileCol).isin(es.map(e => fileName(e.path)): _*))
+          .select(DvFileCol, DvPosCol).collect()
+          .groupMap(_.getString(0))(_.getLong(1)).view.mapValues(_.toSet)
+        es.filter(e => present.get(fileName(e.path))
+          .exists(ps => wanted.exists(_.subsetOf(ps))))
+      }.map(_.path).toSet
+    entries.filter(e => e.bloomFor(column).isEmpty || kept(e.path))
+  }
+
+  private def cardinalityViolation = new IllegalStateException(
+    "MERGE: a target row matched multiple source rows with a " +
+      "firing WHEN MATCHED clause — nondeterministic result " +
+      "(Delta's cardinality violation); de-duplicate the source " +
+      "on the ON keys first")
+
+  /** Mask the rows of the tagged raw read `tagged` (of `touched`, on
+    * physical `keys`) whose key tuple is in `ks`, with the mask merged
+    * on the driver: one scan job collects each hit's coordinates and
+    * keys ([[keyFilter]] pushed into it), several-key hits outside `ks`
+    * are dropped, and [[landMaskDriver]] lands the merged sidecar. With
+    * a `cardinality` source, a LIVE hit (not already masked) whose tuple
+    * that source holds twice fails the merge (the MERGE cardinality
+    * law). Hits beyond the driver-side mask limit fall back to the
+    * distributed build over `exactHits`, the verb's key join. */
+  private def landMaskKeyed(t: Txn, touched: Seq[Entry], tagged: DataFrame,
+                            keys: Seq[String], ks: KeySet,
+                            cardinality: Option[DataFrame],
+                            exactHits: => DataFrame)
+      : Option[(String, Map[String, Long])] = {
+    import org.apache.spark.sql.functions.col
+    val hits = tagged.where(keyFilter(keys, ks))
+      .select((Seq(DvFileCol, DvPosCol) ++ keys).map(col): _*)
+    maskRoom(t.spark, touched).flatMap(collectCapped(hits, _)) match {
+      case None =>
+        if (ks.dupes.nonEmpty) cardinality.foreach(
+          requireCardinality(t.snapshot, touched, exactHits, _, keys))
+        landMaskSidecar(t, touched, exactHits)
+      case Some(rows0) =>
+        def tuple(r: org.apache.spark.sql.Row) = (2 until r.length).map(i => keyNorm(r.get(i)))
+        val rows = if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
+        val prior = priorMasks(t.base, touched)
+        if (cardinality.isDefined && ks.dupes.nonEmpty && rows.exists { r =>
+            !prior.get(r.getString(0))
+              .exists(java.util.Arrays.binarySearch(_, r.getLong(1)) >= 0) &&
+              ks.dupes(tuple(r)) }) throw cardinalityViolation
+        landMaskDriver(t, touched, prior,
+          rows.groupMap(_.getString(0))(_.getLong(1)))
+    }
+  }
+
+  /** The MERGE cardinality law as Spark jobs, for hits or sources too
+    * large to collect: no live row of `hits` (tagged rows of `touched`
+    * matching `source` on physical `keys`) may match a key tuple
+    * `source` holds twice. */
+  private def requireCardinality(s: Snapshot, touched: Seq[Entry],
+                                 hits: DataFrame, source: DataFrame,
+                                 keys: Seq[String]): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val dupKeys = source.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n")).where(col("__n") > 1).drop("__n")
+    if (!liveRows(s, touched, hits).join(dupKeys, keys, "left_semi").isEmpty)
+      throw cardinalityViolation
+  }
+
+  /** `tagged` (a raw tagged read of `touched`) without the rows their
+    * prior masks delete. Within the driver-side mask limit the
+    * positions come from [[priorMasks]] and filter each task's rows, no
+    * Spark job; above it, the anti-join against [[dvFrame]]. */
+  private def liveRows(s: Snapshot, touched: Seq[Entry],
+                       tagged: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, udf}
+    val dved = touched.filter(_.dv.isDefined)
+    if (dved.isEmpty) tagged
+    else if (maskRoom(s.spark, dved).isDefined) {
+      val masks = priorMasks(s.base, dved)
+      val dead = udf((f: String, p: Long) =>
+        masks.get(f).exists(java.util.Arrays.binarySearch(_, p) >= 0))
+      tagged.where(!dead(col(DvFileCol), col(DvPosCol)))
+    } else tagged.join(dvFrame(s.spark, s.base, dved).get,
+      Seq(DvFileCol, DvPosCol), "left_anti")
+  }
+
   /** `entries` minus the inputs a land replaces. */
   private def withoutInputs(entries: Seq[Entry],
                             land: Txn.Land[_]): Seq[Entry] = {
@@ -3914,12 +4125,16 @@ object TxLog {
     * data file is rewritten or dropped from disk, so at 100 TB a
     * delete commits in O(deleted rows), not O(touched files), and a
     * high-churn delete workload stops amplifying writes the way
-    * [[deleteRange]]'s copy-on-write does. Reads apply the mask as an
-    * anti-join on the row index ([[readEntries]]); [[purgeDeletes]]
-    * (Delta `REORG … APPLY (PURGE)`) later folds masks into rewritten
-    * files. A file already carrying a mask gets a MERGED sidecar (old
-    * positions stay deleted); a file whose every row is masked is
-    * dropped from the manifest. File skipping stays sound — stats
+    * [[deleteRange]]'s copy-on-write does. While the touched files'
+    * masks fit the driver-side limit (`spark.graft.txlog.dsv2MaxMaskRows`)
+    * the delete is two Spark jobs: one scan collects the hit positions,
+    * and the merged mask lands as one sidecar file
+    * ([[landMaskSidecar]]). Reads apply the mask inside the DSv2 scan
+    * or as an anti-join on the row index ([[readEntries]]);
+    * [[purgeDeletes]] (Delta `REORG … APPLY (PURGE)`) later folds masks
+    * into rewritten files. A file already carrying a mask gets a
+    * MERGED sidecar (old positions stay deleted); a file whose every
+    * row is masked is dropped from the manifest. File skipping stays sound — stats
     * ranges only widen truth (a masked row no longer exists but its
     * stats band remains), which can never un-skip a live row. Returns
     * the published version (the current one when nothing matches). */
@@ -4011,15 +4226,100 @@ object TxLog {
   /** Land one merged mask sidecar for `touched`: new hit positions
     * (from the tagged `hits0`, any extra columns ignored) unioned with
     * the entries' EXISTING masks, distinct. Returns the sidecar dir
-    * and per-file mask sizes read back from the landed bytes (bounded
-    * driver metadata — one row per touched file), or None when there
-    * is nothing to mask (the landed empty dir stays staged to `t`,
-    * unreferenced, so the transaction deletes it). */
+    * and the per-file mask sizes, or None when there is nothing to
+    * mask. While the touched files' prior positions plus the hits fit
+    * the driver-side mask limit (`spark.graft.txlog.dsv2MaxMaskRows`),
+    * one scan job collects the hits and [[landMaskDriver]] merges and
+    * lands them; above it, [[landMaskDistributed]] builds the mask as
+    * Spark jobs. */
   private def landMaskSidecar(t: Txn, touched: Seq[Entry], hits0: DataFrame)
+      : Option[(String, Map[String, Long])] = {
+    val hits = hits0.select(DvFileCol, DvPosCol)
+    maskRoom(t.spark, touched).flatMap(collectCapped(hits, _)) match {
+      case Some(rows) => landMaskDriver(t, touched, priorMasks(t.base, touched),
+        rows.groupMap(_.getString(0))(_.getLong(1)))
+      case None => landMaskDistributed(t, touched, hits)
+    }
+  }
+
+  /** The hit positions the driver may still take for `touched`: the
+    * driver-side mask limit minus the positions their masks already
+    * hold (manifest `dv.rows`, no sidecar read), None when those alone
+    * exceed it. */
+  private def maskRoom(spark: SparkSession, touched: Seq[Entry]): Option[Long] =
+    Some(graft.sources.TxLogSource.maxMaskRows(spark) -
+      touched.flatMap(_.dv).map(_.rows).sum).filter(_ >= 0)
+
+  /** `touched`' prior mask positions by file name, read on the driver
+    * ([[graft.sources.TxLogSource.dvPositionsByFile]], no Spark job). */
+  private def priorMasks(base: String,
+                         touched: Seq[Entry]): Map[String, Array[Long]] =
+    graft.sources.TxLogSource.dvPositionsByFile(base, touched)
+      .map { case (path, ps) => fileName(path) -> ps }
+
+  /** The driver-side mask build: each touched file's `prior` positions
+    * (by file name) unioned with its new `hits`, landed as ONE sidecar
+    * file in one Spark job ([[landDvDir]] over a single partition
+    * serving the merged positions). The sidecar is the same
+    * (file, position) parquet dataset the distributed build lands, one
+    * file instead of one per shuffle partition, and the per-file
+    * counts are the merged sets' sizes. */
+  private def landMaskDriver(t: Txn, touched: Seq[Entry],
+                             prior: Map[String, Array[Long]],
+                             hits: Map[String, Iterable[Long]])
+      : Option[(String, Map[String, Long])] = {
+    val masks = touched.map(e => fileName(e.path)).flatMap { n =>
+      val ps = (prior.getOrElse(n, Array.emptyLongArray) ++
+        hits.getOrElse(n, Nil)).distinct.sorted
+      if (ps.isEmpty) None else Some(n -> ps)
+    }
+    if (masks.isEmpty) None
+    else {
+      val rows = t.spark.sparkContext.parallelize(masks, 1).flatMap {
+        case (n, ps) => ps.iterator.map(p => org.apache.spark.sql.Row(n, p))
+      }
+      val dir = landDvDir(t, t.spark.createDataFrame(rows,
+        graft.sources.TxLogSource.SidecarSchema))
+      Some(dir -> masks.map { case (n, ps) => n -> ps.length.toLong }.toMap)
+    }
+  }
+
+  /** Up to `cap` rows of `df`, collected in ONE Spark job whose tasks
+    * each return at most `cap + 1` rows; None when `df` holds more
+    * (the rows already received are dropped as soon as the total
+    * passes `cap`). */
+  private def collectCapped(df: DataFrame,
+                            cap: Long): Option[Seq[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    val qe = df.queryExecution
+    val toRow = CatalystTypeConverters.createToScalaConverter(qe.analyzed.schema)
+    val take = math.min(cap + 1, Int.MaxValue.toLong).toInt
+    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[InternalRow]]
+    var n = 0L
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("txlog driver collect")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd,
+        (it: Iterator[InternalRow]) => it.take(take).map(_.copy()).toArray,
+        (_: Int, rows: Array[InternalRow]) => if (n <= cap) {
+          n += rows.length
+          if (n <= cap) parts += rows else parts.clear()
+        })
+    }
+    if (n > cap) None
+    else Some(parts.toSeq.flatten.map(r =>
+      toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+  }
+
+  /** The distributed mask build: the new hits unioned with the prior
+    * masks ([[dvFrame]]), distinct, landed one file per shuffle
+    * partition, with the per-file counts from the same cached frame.
+    * None when there is nothing to mask (the landed empty dir stays
+    * staged to `t`, unreferenced, so the transaction deletes it). */
+  private def landMaskDistributed(t: Txn, touched: Seq[Entry],
+                                  newHits: DataFrame)
       : Option[(String, Map[String, Long])] = {
     import org.apache.spark.sql.functions.col
     val (spark, base) = (t.spark, t.base)
-    val newHits = hits0.select(DvFileCol, DvPosCol)
     val allDv = (dvFrame(spark, base, touched) match {
       case Some(old) => newHits.unionByName(old).distinct()
       case None => newHits // raw positions are unique by construction
@@ -4126,10 +4426,7 @@ object TxLog {
         val hits0 = raw.where(coalesce(cond, lit(false)))
         // live hits only: a previously-masked (deleted) row matching
         // the predicate must not come back as an updated image
-        val live = dvFrame(spark, base, touched) match {
-          case Some(m) => hits0.join(m, Seq(DvFileCol, DvPosCol), "left_anti")
-          case None => hits0
-        }
+        val live = liveRows(s, touched, hits0)
         // SQL UPDATE semantics: every SET expression evaluates against
         // the OLD row simultaneously (SET a = b, b = a swaps) — one
         // select, never a sequential withColumn fold (which would feed
@@ -4184,24 +4481,23 @@ object TxLog {
     require(keys.contains(statsCol),
       s"statsCol $statsCol must be a merge key (got $keys) — range " +
         "skipping is only sound when pruning on the match key")
-    val (lo, hi) = keySpan(source, statsCol).getOrElse(
-      // empty / all-null source: nothing to merge
-      return snapshot(spark, base).cur)
-    mergeMorWhere(spark, base, source, keys,
-      s => touchesRange(_, s.physical(statsCol), lo, hi), Seq(statsCol),
-      maxAttempts)
+    mergeMorWhere(spark, base, source, keys, Some(statsCol), maxAttempts,
+      cardinality = false)
   }
 
   /** [[mergeMor]] that picks its own pruning column — the SQL
-    * `MERGE INTO` surface, where the caller supplies only the ON
-    * keys: the first key carrying manifest stats (on the snapshot the
-    * call starts from) prunes the touched set; a table with no stats
-    * on any key merges un-pruned (every file semi-join-checked, still
-    * zero files rewritten). */
+    * `MERGE INTO … UPDATE SET * … INSERT *` surface, where the caller
+    * supplies only the ON keys: the first key carrying manifest stats
+    * (on the snapshot the call starts from) prunes the touched set; a
+    * table with no stats on any key merges un-pruned (every file
+    * checked for the keys, still zero files rewritten). With
+    * `cardinality`, a target row matching two source rows fails the
+    * merge, as [[mergeClauses]]' does. */
   def mergeMorAuto(spark: SparkSession, base: String, source0: DataFrame,
-                   keys0: Seq[String], maxAttempts: Int = 5): Long = {
+                   keys0: Seq[String], maxAttempts: Int = 5,
+                   cardinality: Boolean = false): Long = {
     val s = snapshot(spark, base)
-    val cur = s.cur
+    s.cur // the target must exist
     val source = s.toPhysical(source0)
     val statsKey = keys0.find { k0 =>
       val k = s.physical(k0)
@@ -4209,51 +4505,58 @@ object TxLog {
         scala.util.Try(statsDtype(source.schema(k).dataType)).isSuccess &&
         s.entries.exists(_.statsFor(k).isDefined)
     }
-    statsKey match {
-      case Some(k) => mergeMor(spark, base, source0, keys0, k, maxAttempts)
-      case None =>
-        if (source0.isEmpty) cur
-        else mergeMorWhere(spark, base, source0, keys0, _ => _ => true,
-          Seq.empty, maxAttempts)
-    }
+    mergeMorWhere(spark, base, source0, keys0, statsKey, maxAttempts,
+      cardinality)
   }
 
   /** Shared MOR-merge core: mask target rows whose `keys` appear in
-    * `source` (within the candidate entries `touchedAt` selects on the
-    * attempt's snapshot), land the whole source as new files, publish
-    * in one commit. The source, `keys` and `primaryStats` speak
-    * logical names; each attempt translates them under its snapshot. */
+    * `source`, land the whole source as new files, publish in one
+    * commit. The source, `keys` and `statsCol` speak logical names;
+    * each attempt translates them under its snapshot. A source within
+    * Spark's broadcast threshold has its keys collected once
+    * ([[collectKeySet]]): the touched files are those whose `statsCol`
+    * stats admit some key, the hit scan pushes the keys into the read,
+    * and the mask merges on the driver ([[landMaskKeyed]]). A larger
+    * source prunes by its key span and finds hits with a semi-join.
+    * With `statsCol` set, a source with no non-NULL value on it merges
+    * nothing; without it, only an empty source does. */
   private def mergeMorWhere(spark: SparkSession, base: String,
                             source0: DataFrame, keys0: Seq[String],
-                            touchedAt: Snapshot => Entry => Boolean,
-                            primaryStats0: Seq[String],
-                            maxAttempts: Int): Long = {
+                            statsCol0: Option[String], maxAttempts: Int,
+                            cardinality: Boolean): Long = {
     import org.apache.spark.sql.functions.col
     requireNoRowIdColumn(source0)
+    val keySet = collectKeySet(source0, keys0)
+    val statsIdx = statsCol0.map(keys0.indexOf(_)).getOrElse(0)
+    lazy val span = statsCol0.flatMap(keySpan(source0, _))
+    val nothing = keySet match {
+      case Some(ks) => ks.rows == 0 || statsCol0.isDefined && ks.values(statsIdx).isEmpty
+      case None => statsCol0.isDefined && span.isEmpty
+    }
+    if (nothing) return snapshot(spark, base).cur
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
       val s = t.snapshot
       val source = s.toPhysical(source0)
       val keys = keys0.map(s.physical)
-      val primaryStats = primaryStats0.map(s.physical)
       // GENERATED BY DEFAULT on merges: advance the high-water past any
       // explicit id the source carries
       val idMaxes = sourceIdentityMaxes(s, source)
-      val (touched, carried) = t.entries.partition(touchedAt(s))
+      val (touched, carried) = keyTouched(s, t.entries,
+        statsCol0.map(s.physical), keySet, statsIdx, span)
+      val primaryStats = statsCol0.toSeq.map(s.physical)
+      lazy val tagged = taggedRead(s, touched)
+      // target rows whose key tuple appears in the source
+      lazy val exactHits = tagged.join(
+        source.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      lazy val keyHits = keySet.fold(exactHits)(ks => tagged.where(keyFilter(keys, ks)))
       // tracked tables: matched source rows inherit their target
       // row's stable id (Delta preserves ids through MERGE UPDATE);
       // unmatched rows land NULL and take the file's fresh span
       val sourceW =
         if (touched.isEmpty || t.meta.rowIdHighWater.isEmpty) source
-        else {
-          val tagged = attachRowIds(spark, touched, taggedRead(s, touched))
-          val live = dvFrame(spark, base, touched) match {
-            case Some(m) => tagged.join(m, Seq(DvFileCol, DvPosCol),
-              "left_anti")
-            case None => tagged
-          }
-          inheritMergeIds(source, live, keys)
-        }
+        else inheritMergeIds(source,
+          liveRows(s, touched, attachRowIds(spark, touched, keyHits)), keys)
       var newEntries: Seq[Entry] = null
       val doLand = () => newEntries = landEntriesMulti(t, sourceW,
         preservedStatsCols(touched, primaryStats, sourceW.schema),
@@ -4262,15 +4565,17 @@ object TxLog {
       val masked =
         if (touched.isEmpty) { doLand(); Seq.empty }
         else {
-          // matched = target rows whose key tuple appears in the source.
-          // The source land and the mask-sidecar build are independent
+          // the source land and the mask build are independent
           // actions — overlap them on driver threads (guide §2.6)
-          val hits0 = taggedRead(s, touched)
-            .join(source.select(keys.map(col): _*).distinct(),
-              keys, "left_semi")
           var maskRes: Option[(String, Map[String, Long])] = None
-          Par.all(doLand,
-            () => maskRes = landMaskSidecar(t, touched, hits0))
+          val check = if (cardinality) Some(source) else None
+          Par.all(doLand, () => maskRes = keySet match {
+            case Some(ks) =>
+              landMaskKeyed(t, touched, tagged, keys, ks, check, exactHits)
+            case None =>
+              check.foreach(requireCardinality(s, touched, exactHits, _, keys))
+              landMaskSidecar(t, touched, exactHits)
+          })
           maskRes match {
             case None => touched // insert-only batch
             case Some((dvDir, counts)) => remask(touched, dvDir, counts)
@@ -4404,25 +4709,25 @@ object TxLog {
       case Seq(MergeDelete(None)) => true
       case _ => false
     }
+    // the source's keys, collected once when small enough to broadcast
+    val keySet = collectKeySet(source, keys)
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
       val entries = t.entries
       // GENERATED BY DEFAULT advance (like mergeMorWhere)
       val idMaxes = sourceIdentityMaxes(t.snapshot, source)
-      // an EMPTY target (file-less create, fully-deleted snapshot) is
-      // a legitimate MERGE target for the NOT MATCHED half — its
-      // schema comes from the declared #schema line when no file can
-      // supply one
       // the target surface is the EVOLVED one (union of live files ∪
-      // declared schema): a one-footer `read` on a schema-evolved
+      // declared schema): a one-footer schema on a schema-evolved
       // unmapped table could miss file-evolved columns, and the image
-      // projection below would then land their loss permanently
-      val baseSchema = scala.util.Try(readEvolved(spark, base).schema)
-        .getOrElse(t.meta.schema.getOrElse(
-          throw new IllegalStateException(
-            s"MERGE into the empty table at $base with no declared " +
-              "schema — declare one (createTable / CREATE TABLE) or " +
-              "write data first")))
+      // projection below would then land their loss permanently. An
+      // EMPTY target (file-less create, fully-deleted snapshot) is a
+      // legitimate MERGE target for the NOT MATCHED half — its schema
+      // comes from the declared #schema line
+      val baseSchema = graft.sources.TxLogSource.mergeTargetSchema(t.snapshot)
+        .getOrElse(throw new IllegalStateException(
+          s"MERGE into the empty table at $base with no declared " +
+            "schema — declare one (createTable / CREATE TABLE) or " +
+            "write data first"))
       // MERGE schema evolution (Delta `schema.autoMerge` / dbt-spark
       // `on_schema_change: append_new_columns`): source columns
       // absent from the target ADD to its schema in the SAME commit
@@ -4464,28 +4769,24 @@ object TxLog {
       }
       def castTo(c: String, v: Column): Column =
         v.cast(targetSchema(targetSchema.fieldIndex(c)).dataType).as(c)
-      // span pruning on the first ON key carrying stats in BOTH the
-      // source and some manifest entry (mergeMorAuto's rule)
+      // pruning on the first ON key carrying stats in BOTH the source
+      // and some manifest entry (mergeMorAuto's rule): files whose
+      // stats admit some source key, else (a source too large to
+      // collect) files overlapping the source's key span. With an
+      // EMPTY source nothing can match, so only by-source clauses act
       val statsKey = keys.find { k0 =>
         val k = t.snapshot.physical(k0)
         source.columns.find(_.equalsIgnoreCase(k0)).exists(n =>
           scala.util.Try(statsDtype(source.schema(n).dataType)).isSuccess) &&
           entries.exists(_.statsFor(k).isDefined)
       }
-      val span = statsKey.flatMap(keySpan(source, _))
-      val inSpan: Entry => Boolean = span match {
-        case Some((lo, hi)) =>
-          val phys = t.snapshot.physical(statsKey.get)
-          e => touchesRange(e, phys, lo, hi)
-        case None =>
-          // no usable stats key, or an EMPTY source: with an empty
-          // source nothing can match, so only by-source clauses act
-          if (statsKey.isDefined) _ => false else _ => true
-      }
+      val (touched0, rest) = keyTouched(t.snapshot, entries,
+        statsKey.map(t.snapshot.physical), keySet,
+        statsKey.map(keys.indexOf(_)).getOrElse(0),
+        statsKey.flatMap(keySpan(source, _)))
       val needAllForBySource = notMatchedBySource.nonEmpty
       // dropped: provably every row is by-source-not-matched and the
       // only by-source clause is an unconditional DELETE
-      val (touched0, rest) = entries.partition(inSpan)
       val (dropped, outOfSpan) =
         if (needAllForBySource && uncondSyncDelete) (rest, Seq.empty[Entry])
         else if (needAllForBySource) (Seq.empty[Entry], rest)
@@ -4517,18 +4818,22 @@ object TxLog {
       // (Delta preserves ids through MERGE UPDATE), insert images
       // carry NULL and take the file's fresh span at read
       val tracked = mCur.rowIdHighWater.isDefined
+      // without a by-source clause only rows matching some source key
+      // can fire or block an insert: the collected keys push into the
+      // read
       val live: Option[DataFrame] =
         if (touched.isEmpty) None
         else {
-          val raw0 = t.snapshot.logical(taggedRead(t.snapshot, touched),
-            Seq(DvFileCol, DvPosCol, RowIdCol))
+          val tagged = taggedRead(t.snapshot, touched)
+          val raw0 = t.snapshot.logical(keySet match {
+            case Some(ks) if !needAllForBySource =>
+              tagged.where(keyFilter(keys.map(t.snapshot.physical), ks))
+            case _ => tagged
+          }, Seq(DvFileCol, DvPosCol, RowIdCol))
           val raw =
             if (tracked) attachRowIds(spark, touched, raw0)
             else dropRowId(raw0)
-          Some(dvFrame(spark, base, touched) match {
-            case Some(m) => raw.join(m, Seq(DvFileCol, DvPosCol), "left_anti")
-            case None => raw
-          })
+          Some(liveRows(t.snapshot, touched, raw))
         }
       val fired: Option[DataFrame] = live.filter(_ => matched.nonEmpty)
         .map(_.join(srcP, keyEq, "inner")
@@ -4541,11 +4846,7 @@ object TxLog {
         fired.foreach { f =>
           val dup = f.groupBy(col(DvFileCol), col(DvPosCol)).count()
             .where(col("count") > 1).limit(1)
-          if (!dup.isEmpty) throw new IllegalStateException(
-            "MERGE: a target row matched multiple source rows with a " +
-              "firing WHEN MATCHED clause — nondeterministic result " +
-              "(Delta's cardinality violation); de-duplicate the source " +
-              "on the ON keys first")
+          if (!dup.isEmpty) throw cardinalityViolation
         }
         // not-matched-by-source rows and their firing clause
         val nmbsFired: Option[DataFrame] =
@@ -4812,8 +5113,10 @@ object TxLog {
       s"statsCol $statsCol0 must be a key (got $keys0)")
     import org.apache.spark.sql.functions.col
     var checkedCons = Map.empty[String, String]
+    var keySet: Option[KeySet] = None
     var keyRange: Option[(String, String)] = None
     var syncRange: Option[Option[(String, String)]] = None
+    val statsIdx = keys0.indexOf(statsCol0)
     TxLog.txn(spark, base, maxAttempts) { t =>
       val (entries, txns) = (t.entries, t.txns)
       // already applied: a replay after a restart, or a racing replica
@@ -4836,10 +5139,11 @@ object TxLog {
           // at a time
           val statsCols = (Seq(statsCol) ++ entries.flatMap(_.stats.map(_.column)))
             .distinct.filter(inserts.schema.fieldNames.contains)
-          // the inserts land and the delete/sync key-bound aggregates
-          // are independent actions on different inputs: overlap them
-          // on driver threads (guide §2.6) instead of paying land +
-          // bounds latencies back to back on every CDC batch
+          // the inserts land and the delete-key collection (or the
+          // delete/sync key-bound aggregates) are independent actions on
+          // different inputs: overlap them on driver threads (guide
+          // §2.6) instead of paying both latencies back to back on
+          // every CDC batch
           var landed: Seq[Entry] = null
           Par.all(
             () => {
@@ -4849,7 +5153,13 @@ object TxLog {
               checkedCons = checked
             },
             () => {
-              keyRange = keySpan(deleteKeys, statsCol) // None: no deletes
+              // without a sync clause, a delete-key set small enough to
+              // broadcast is collected: it selects the touched files and
+              // pushes into the hit scan
+              keySet = if (syncKeys.isDefined) None
+                else collectKeySet(deleteKeys, keys)
+              if (keySet.isEmpty)
+                keyRange = keySpan(deleteKeys, statsCol) // None: no deletes
               // sync-delete span: a target file whose stats range is
               // DISJOINT from it cannot hold any source key — every row
               // vanished, the file drops metadata-only. Outer None = no
@@ -4866,11 +5176,8 @@ object TxLog {
         val idMaxes =
           if (guardIdentity) Map.empty[String, Long]
           else sourceIdentityMaxes(s, inserts)
-        val semiTouched = keyRange match {
-          case Some((lo, hi)) =>
-            entries.filter(touchesRange(_, statsCol, lo, hi))
-          case None => Seq.empty[Entry]
-        }
+        val semiTouched = keyTouched(s, entries, Some(statsCol), keySet,
+          statsIdx, keyRange)._1
         // sync half: in-span files are read once for the anti mask
         // (absence is unprovable from stats — intrinsic to the
         // semantics); provably-disjoint files drop whole, zero bytes
@@ -4890,20 +5197,22 @@ object TxLog {
           if (touched.isEmpty) touched
           else {
             val read = taggedRead(s, touched)
-            val semiHits =
-              if (keyRange.isEmpty) None
-              else Some(read.join(
-                deleteKeys.select(keys.map(col): _*).distinct(),
-                keys, "left_semi"))
+            lazy val semiHits = read.join(
+              deleteKeys.select(keys.map(col): _*).distinct(),
+              keys, "left_semi")
             val antiHits = syncKeys.map(sk => read.join(
               sk.select(keys.map(col): _*).distinct(), keys, "left_anti"))
-            val hits = (semiHits, antiHits) match {
+            lazy val hits = (keyRange.map(_ => semiHits), antiHits) match {
               case (Some(semi), Some(anti)) => // a row can satisfy both masks
                 semi.select(DvFileCol, DvPosCol)
                   .unionByName(anti.select(DvFileCol, DvPosCol)).distinct()
               case (one, other) => one.orElse(other).get
             }
-            landMaskSidecar(t, touched, hits) match {
+            (keySet match {
+              case Some(ks) =>
+                landMaskKeyed(t, touched, read, keys, ks, None, semiHits)
+              case None => landMaskSidecar(t, touched, hits)
+            }) match {
               case None => touched // no key actually present
               case Some((dvDir, counts)) => remask(touched, dvDir, counts)
             }

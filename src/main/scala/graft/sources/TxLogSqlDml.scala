@@ -27,11 +27,20 @@ import graft.operators.TxLog
   * verbs: zero data files rewritten, commit cost O(changed rows),
   * manifest stats pre-pruning where the predicate allows.
   *
-  * Supported MERGE shape is the dbt one: a single equi-key ON
-  * conjunction, `WHEN MATCHED THEN UPDATE SET *`, `WHEN NOT MATCHED
-  * THEN INSERT *` (either clause optional, DELETE accepted in the
-  * matched slot). Anything fancier fails LOUDLY with the shape we do
-  * support — never a silent wrong answer.
+  * MERGE takes one of two routes. The unconditional star shapes —
+  * the dbt one, `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+  * INSERT *`, and its single-clause, DELETE and `NOT MATCHED BY SOURCE
+  * DELETE` variants — plan [[TxLogMergeCommand]], which runs the upsert
+  * as [[TxLog.mergeMorAuto]] (source keys collected on the driver, the
+  * mask merged there) and the rest as [[TxLog.applyBatch]]. The
+  * analyzer may expand the stars before this rule runs (it does for a
+  * temp-view source): an expanded `UPDATE SET *` keeps
+  * `UpdateAction.fromStar`, and [[TxLogMergeStars]] records which
+  * inserts were `INSERT *`. Every other shape with an equi-key ON
+  * conjunction — conditional clauses, explicit assignments, several
+  * clauses — plans [[TxLogMergeClausesCommand]] over
+  * [[TxLog.mergeClauses]]. Anything else fails LOUDLY with the shapes
+  * supported — never a silent wrong answer.
   */
 case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -134,11 +143,21 @@ case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         unsupported(s"non-equi-key ON: ${mergeCond.sql}"))
       // FAST PATH — the exact unconditional star shapes keep their
       // proven single-verb routes (upsert / decomposed semi-anti /
-      // full-sync), which also carry the sharpest stats pruning
+      // full-sync), which also carry the sharpest stats pruning. The
+      // analyzer may already have expanded the stars by the time this
+      // rule sees the plan ([[TxLogMergeStars]] has the details)
+      val insertStars = TxLogMergeStars.insertStars(m)
       val fastSync = notMatchedBySource == Seq(DeleteAction(None))
-      val fastUpdate = matched == Seq(UpdateStarAction(None))
+      val fastUpdate = matched match {
+        case Seq(UpdateStarAction(None)) | Seq(UpdateAction(None, _, true)) => true
+        case _ => false
+      }
       val fastDeleteM = matched == Seq(DeleteAction(None))
-      val fastInsert = notMatched == Seq(InsertStarAction(None))
+      val fastInsert = notMatched match {
+        case Seq(InsertStarAction(None)) => true
+        case Seq(InsertAction(None, _)) => insertStars(0)
+        case _ => false
+      }
       val fastShape =
         (matched.isEmpty || fastUpdate || fastDeleteM) &&
           (notMatched.isEmpty || fastInsert) &&
@@ -158,6 +177,9 @@ case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // column sets at run time.
         val tag = new MergeSideTagger(target, source, unsupported)
         def clauseOf(a: MergeAction, ctx: String): SqlMergeClause = a match {
+          case UpdateAction(cond, _, true) => // an expanded UPDATE SET *
+            SqlMergeClause("updateStar", cond.map(c =>
+              new ExprBox(tag(c))), Seq.empty, ctx)
           case UpdateAction(cond, assigns, _) =>
             SqlMergeClause("update", cond.map(c =>
               new ExprBox(tag(c))), assigns.map(asn =>
@@ -178,7 +200,12 @@ case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case other => unsupported(s"action $other in $ctx")
         }
         val matchedCl = matched.map(clauseOf(_, "matched"))
-        val notMatchedCl = notMatched.map(clauseOf(_, "insert"))
+        val notMatchedCl = notMatched.zipWithIndex.map {
+          case (InsertAction(cond, _), i) if insertStars(i) => // expanded
+            SqlMergeClause("insertStar", cond.map(c =>
+              new ExprBox(tag(c))), Seq.empty, "insert")
+          case (a, _) => clauseOf(a, "insert")
+        }
         val nmbsCl = notMatchedBySource.map(clauseOf(_, "bySource"))
         matchedCl.foreach(c => if (c.kind.startsWith("insert"))
           unsupported("INSERT in WHEN MATCHED"))
@@ -192,6 +219,36 @@ case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
     case other => other
   }
+}
+
+/** Records which NOT MATCHED actions of a MERGE were written `INSERT
+  * *`. The analyzer expands a star action into explicit assignments
+  * once both merge sides resolve, which for a temp-view source happens
+  * before [[TxLogSqlDmlRule]] runs. An expanded `UPDATE SET *` keeps
+  * `UpdateAction.fromStar`; an expanded `INSERT *` is indistinguishable
+  * from the explicit full-column insert, whose extra source columns are
+  * ordinary unreferenced inputs rather than a schema change. This rule
+  * runs in the analyzer's hint batch, before any resolution, and tags
+  * the plan node with the star insert positions; the tag travels with
+  * the node through resolution. */
+private[sources] object TxLogMergeStars extends Rule[LogicalPlan] {
+  private val Tag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[Int]]("graft.insertStars")
+
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    plan.foreach {
+      case m: MergeIntoTable if m.getTagValue(Tag).isEmpty =>
+        m.setTagValue(Tag, m.notMatchedActions.zipWithIndex.collect {
+          case (_: InsertStarAction, i) => i
+        }.toSet)
+      case _ => ()
+    }
+    plan
+  }
+
+  /** The positions of `m`'s NOT MATCHED actions written `INSERT *`. */
+  def insertStars(m: MergeIntoTable): Set[Int] = m.getTagValue(Tag).getOrElse(
+    m.notMatchedActions.zipWithIndex.collect { case (_: InsertStarAction, i) => i }.toSet)
 }
 
 /** Tags every attribute reference in a captured MERGE clause
@@ -310,6 +367,7 @@ object TxLogSqlDml {
     * ensureInjected never carries two copies of the rule. */
   def injectInto(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     if (armed.add(ext)) {
+      ext.injectHintResolutionRule(_ => TxLogMergeStars)
       ext.injectResolutionRule(s => TxLogSqlDmlRule(s))
       // the grammar rung: OPTIMIZE / VACUUM / DESCRIBE HISTORY
       ext.injectParser((_, delegate) => new TxLogSqlParser(delegate))
@@ -375,15 +433,9 @@ case class TxLogMergeClausesCommand(base: String, keys: Seq[String],
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val src: DataFrame = ColumnBridge.ofRows(spark, sourcePlan)
     // an EMPTY target (file-less create, fully-deleted snapshot) is a
-    // legitimate MERGE target for the NOT MATCHED half — mirror the
-    // verb's own fallback to the declared #schema rather than crash
-    // on the read (the empty-table incremental-bootstrap shape)
-    val baseSchema = scala.util.Try(TxLog.read(spark, base).schema)
-      .getOrElse(TxLog.snapshot(spark, base).meta.schema
-        .getOrElse(throw new IllegalArgumentException(
-          s"MERGE INTO txlog($base): the table is empty and declares " +
-            "no schema — declare one (CREATE TABLE) or write data " +
-            "first")))
+    // legitimate MERGE target for the NOT MATCHED half — its declared
+    // #schema serves (the empty-table incremental-bootstrap shape)
+    val baseSchema = TxLogMergeCommand.targetSchema(spark, base)
     // MERGE schema evolution over SQL (Delta's autoMerge conf): a
     // STAR action with source columns absent from the target either
     // EVOLVES the target (conf on — dbt `on_schema_change:
@@ -502,7 +554,7 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     val src: DataFrame = org.apache.spark.sql.graftbridge.ColumnBridge
       .ofRows(spark, sourcePlan)
-    val targetSchema = TxLog.read(spark, base).schema
+    val targetSchema = TxLogMergeCommand.targetSchema(spark, base)
     val targetCols = targetSchema.fieldNames.toSeq
     val missingKeys = keys.filterNot(k =>
       src.columns.exists(_.equalsIgnoreCase(k)))
@@ -562,8 +614,10 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
     val statsCol = keys.headOption.getOrElse(
       throw new IllegalArgumentException("MERGE needs at least one key"))
     if (upsert && insert && !syncDelete) {
-      // UPDATE SET * + INSERT * ≡ upsert: anti-by-key ∪ source
-      TxLog.mergeMorAuto(spark, base, aligned, keys)
+      // UPDATE SET * + INSERT * ≡ upsert: anti-by-key ∪ source; a
+      // target row matching two source rows fails, as on the clause
+      // route
+      TxLog.mergeMorAuto(spark, base, aligned, keys, cardinality = true)
     } else {
       // decomposed shapes: the matched/not-matched split is a
       // semi/anti join against the CURRENT target keys, then one
@@ -580,7 +634,8 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
         else if (insert) aligned.join(targetKeys, keys, "left_anti")
         // pure DELETE: no coverage requirement, so `aligned` must not
         // be touched — an empty frame in the TARGET's shape serves
-        else TxLog.read(spark, base).limit(0)
+        else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          targetSchema)
       // WHEN NOT MATCHED BY SOURCE THEN DELETE: rows whose key is
       // absent from the source die in the SAME commit (full-sync)
       TxLog.applyBatch(spark, base, deletes, inserts, keys, statsCol,
@@ -588,4 +643,15 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
     }
     Seq.empty
   }
+}
+
+object TxLogMergeCommand {
+  /** The logical schema a SQL MERGE targets: the latest snapshot's
+    * ([[TxLogSource.mergeTargetSchema]]), built without a read plan. */
+  private[graft] def targetSchema(spark: SparkSession, base: String)
+      : org.apache.spark.sql.types.StructType =
+    TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, base))
+      .getOrElse(throw new IllegalArgumentException(
+        s"MERGE INTO txlog($base): the table is empty and declares " +
+          "no schema — declare one (CREATE TABLE) or write data first"))
 }

@@ -174,8 +174,8 @@ object TxLogSource {
     * manifest references no files (fully-deleted snapshot / freshly
     * created empty table) — callers with a declared-schema fallback
     * (the catalog) handle that case. */
-  private[sources] def snapshotSchema(spark: SparkSession, base: String,
-                                      target: Long): StructType =
+  private[graft] def snapshotSchema(spark: SparkSession, base: String,
+                                    target: Long): StructType =
     cachedSchema(base, target, TxLog.commitModTime(spark, base, target)) {
       val files = TxLog.manifestFiles(spark, base, target)
         .map(rel => TxLog.resolve(base, rel))
@@ -255,6 +255,16 @@ object TxLogSource {
         }
       }
     }
+
+  /** The logical schema a MERGE targets at snapshot `s`, taken from
+    * the log and the cached footers alone (no read plan, so no Spark
+    * job and no path check): [[snapshotSchema]], the surface the
+    * catalog serves, with mapped, widened and declared-only columns;
+    * for a version without files, its declared `#schema`, if any. */
+  private[graft] def mergeTargetSchema(s: graft.operators.Snapshot)
+      : Option[StructType] =
+    if (s.entries.isEmpty && s.meta.widened.isEmpty) s.meta.schema
+    else Some(snapshotSchema(s.spark, s.base, s.cur))
 
   /** Logical→physical name map of one version (lowercased logical
     * keys; empty = identity — the table has no column mapping). The
@@ -547,7 +557,8 @@ object TxLogSource {
     * `spark.graft.txlog.dsv2MaxMaskRows`. */
   private val DefaultMaxMaskRows = 16L * 1000 * 1000
 
-  private val SidecarSchema = StructType(Seq(
+  /** A mask sidecar's columns: (file name, deleted row position). */
+  private[graft] val SidecarSchema = StructType(Seq(
     StructField(TxLog.DvFileCol, StringType),
     StructField(TxLog.DvPosCol, LongType)))
 
@@ -564,12 +575,13 @@ object TxLogSource {
     * ONCE (positions bucketed by file name as they stream past), so a
     * snapshot whose single MOR commit masked F files costs one
     * O(sidecar rows) pass, not F of them. Serves every DSv2 batch and
-    * change-feed scan, and with them [[TxLog.readPoint]]/
+    * change-feed scan, the MOR verbs' driver-side mask merges and
+    * live-row filters, and [[TxLog.readPoint]]/
     * [[TxLog.readRanges]] ([[pinnedRead]]), which keep
     * [[TxLog.readEntries]]' distributed anti-join for masks over
     * [[maxMaskRows]]; bulk analytics over heavily-masked snapshots
     * belong on [[TxLog.read]], which always masks that way. */
-  private[sources] def dvPositionsByFile(base: String,
+  private[graft] def dvPositionsByFile(base: String,
                                          entries: Seq[TxLog.Entry])
       : Map[String, Array[Long]] = {
     import scala.collection.mutable

@@ -700,4 +700,106 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
       } finally sql.conf.unset(graft.sources.TxLogSqlDml.AutoMergeConf)
     } finally sql.sql("DROP TABLE IF EXISTS txdml_am")
   }
+
+  private def analyzed(q: String) =
+    sql.sessionState.executePlan(sql.sessionState.sqlParser.parsePlan(q)).analyzed
+
+  private def starMerge(table: String, src: String) =
+    s"MERGE INTO $table t USING $src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+
+  test("the dbt star MERGE over a temp view plans TxLogMergeCommand (the " +
+    "analyzer has already expanded its stars), and reading the target " +
+    "schema starts no Spark job") {
+    val base = "/tmp/graft_txsqldml/route"
+    seed(base, "txdml_route")
+    try {
+      sql.range(95, 110).selectExpr("cast(id AS INT) AS k",
+          "concat('new-', id) AS s", "cast(id AS DOUBLE) AS v")
+        .createOrReplaceTempView("txdml_route_src")
+      val q = starMerge("txdml_route", "txdml_route_src")
+      val (plan, jobs) = SparkTestBase.jobsDuring(analyzed(q))
+      assert(plan.isInstanceOf[graft.sources.TxLogMergeCommand],
+        plan.getClass.getSimpleName)
+      assert(jobs == 0, s"$jobs Spark jobs while analysing the MERGE")
+      // an explicit assignment list stays on the clause route
+      assert(analyzed("MERGE INTO txdml_route t USING txdml_route_src s " +
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.k, s.s, s.v)")
+        .isInstanceOf[graft.sources.TxLogMergeClausesCommand])
+      sql.sql(q)
+      val snap = TxLog.read(spark, base)
+      assert(snap.count() == 109)
+      assert(snap.where("k >= 95 AND s = concat('new-', k)").count() == 15)
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_route")
+
+    // past 32 files a read plan lists its paths in a Spark job; the
+    // MERGE's schema comes from the snapshot and footer cache instead
+    val wide = "/tmp/graft_txsqldml/route40"
+    TxLog.drop(spark, wide)
+    import spark.implicits._
+    TxLog.commit((1 to 400).map(i => (i, s"n-$i", i * 1.0)).toDF("k", "s", "v")
+      .repartition(40), wide, None, Some("k"))
+    val (schema, schemaJobs) = SparkTestBase.jobsDuring(
+      graft.sources.TxLogMergeCommand.targetSchema(spark, wide))
+    assert(schemaJobs == 0, s"$schemaJobs Spark jobs for the target schema")
+    assert(schema.fieldNames.toSeq == Seq("k", "s", "v"))
+  }
+
+  test("star MERGE cardinality: two source rows for one MATCHED key fail " +
+    "and publish nothing; a duplicated UNMATCHED key inserts both rows") {
+    val base = "/tmp/graft_txsqldml/card"
+    seed(base, "txdml_card")
+    try {
+      sql.sql("SELECT 5 AS k, 'a' AS s, 1.0D AS v UNION ALL " +
+        "SELECT 5, 'b', 2.0D UNION ALL SELECT 300, 'c', 3.0D")
+        .createOrReplaceTempView("txdml_card_dup")
+      assert(analyzed(starMerge("txdml_card", "txdml_card_dup"))
+        .isInstanceOf[graft.sources.TxLogMergeCommand])
+      val v0 = TxLog.latestVersion(spark, base).get
+      val err = intercept[Exception](
+        sql.sql(starMerge("txdml_card", "txdml_card_dup")))
+      assert(err.getMessage.contains("matched multiple source rows"),
+        err.getMessage)
+      assert(TxLog.latestVersion(spark, base).get == v0)
+      sql.sql("SELECT 500 AS k, 'x' AS s, 1.0D AS v UNION ALL " +
+        "SELECT 500, 'y', 2.0D UNION ALL SELECT 7, 'z', 3.0D")
+        .createOrReplaceTempView("txdml_card_new")
+      sql.sql(starMerge("txdml_card", "txdml_card_new"))
+      val snap = TxLog.read(spark, base)
+      assert(snap.count() == 102)
+      assert(snap.where("k = 500").select("s").as[String](
+        org.apache.spark.sql.Encoders.STRING).collect().toSet == Set("x", "y"))
+      assert(snap.where("k = 7").select("s").head.getString(0) == "z")
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_card")
+  }
+
+  test("star MERGE over a temp view with an extra source column fails " +
+    "loudly by default and evolves the target under autoMerge — the " +
+    "expanded stars no longer drop the column silently") {
+    val base = "/tmp/graft_txsqldml/amview"
+    seed(base, "txdml_amview")
+    try {
+      sql.range(90, 110).selectExpr("cast(id AS INT) AS k",
+          "concat('n-', id) AS s", "id * 1.0D AS v", "'web' AS channel")
+        .createOrReplaceTempView("txdml_amview_src")
+      val err = intercept[Exception](
+        sql.sql(starMerge("txdml_amview", "txdml_amview_src")))
+      assert(err.getMessage.contains("channel") &&
+        err.getMessage.contains("autoMerge"), err.getMessage)
+      // a conditional star clause takes the clause route, same rule
+      val cond = intercept[Exception](sql.sql(
+        "MERGE INTO txdml_amview t USING txdml_amview_src s ON t.k = s.k " +
+          "WHEN MATCHED AND s.v > 95 THEN UPDATE SET * " +
+          "WHEN NOT MATCHED THEN INSERT *"))
+      assert(cond.getMessage.contains("channel"), cond.getMessage)
+      assert(TxLog.read(spark, base).columns.toSet == Set("k", "s", "v"))
+      sql.conf.set(TxLogSqlDml.AutoMergeConf, "true")
+      try sql.sql(starMerge("txdml_amview", "txdml_amview_src"))
+      finally sql.conf.unset(TxLogSqlDml.AutoMergeConf)
+      val live = sql.read.format("graft.sources.TxLogSource").load(base)
+      assert(live.count() == 109)
+      assert(live.where("channel = 'web'").count() == 20)
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_amview")
+  }
 }

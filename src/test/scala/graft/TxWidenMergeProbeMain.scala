@@ -128,7 +128,7 @@ object TxWidenMergeProbeMain {
       ()
     }
     println(f"    new bytes written: ${newBytes(m, beforeM) / 1e6}%.1f MB " +
-      "(vs ~700 MB full rebuild at this scale — TxSqlDmlProbeMain)")
+      "(vs ~700 MB for a full rebuild at this scale, BENCH_NOTES.md)")
     // sanity: deletes deleted, inserts gated by the flag
     val snap = TxLog.read(spark, m)
     val nNow = snap.count()

@@ -4310,6 +4310,17 @@ object TxLog {
       toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
   }
 
+  /** `df`, holding `rows` rows, coalesced to as many partitions as its
+    * estimated size needs at `spark.sql.files.maxPartitionBytes` each
+    * (the bytes Spark reads as one partition), so a small source lands
+    * as one file however many partitions it was read in. */
+  private def coalesceToSize(df: DataFrame, rows: Long): DataFrame = {
+    val rowSize = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
+    val perPart = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    df.coalesce((BigInt(rows) * rowSize / perPart + 1).min(Int.MaxValue).toInt)
+  }
+
   /** The distributed mask build: the new hits unioned with the prior
     * masks ([[dvFrame]]), distinct, landed one file per shuffle
     * partition, with the per-file counts from the same cached frame.
@@ -4557,9 +4568,12 @@ object TxLog {
         if (touched.isEmpty || t.meta.rowIdHighWater.isEmpty) source
         else inheritMergeIds(source,
           liveRows(s, touched, attachRowIds(spark, touched, keyHits)), keys)
+      // a collected source lands as the files its size needs: the
+      // source of a small MERGE is one file, not one per partition
+      val landed = keySet.fold(sourceW)(ks => coalesceToSize(sourceW, ks.rows))
       var newEntries: Seq[Entry] = null
-      val doLand = () => newEntries = landEntriesMulti(t, sourceW,
-        preservedStatsCols(touched, primaryStats, sourceW.schema),
+      val doLand = () => newEntries = landEntriesMulti(t, landed,
+        preservedStatsCols(touched, primaryStats, landed.schema),
         recomputeGenerated = true)
         .filter(_.rows != 0L)
       val masked =

@@ -761,6 +761,14 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         sql.sql(starMerge("txdml_card", "txdml_card_dup")))
       assert(err.getMessage.contains("matched multiple source rows"),
         err.getMessage)
+      // the same law when the source is too large to collect (no
+      // broadcast: the distributed check)
+      sql.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val big = try intercept[Exception](
+          sql.sql(starMerge("txdml_card", "txdml_card_dup")))
+        finally sql.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      assert(big.getMessage.contains("matched multiple source rows"),
+        big.getMessage)
       assert(TxLog.latestVersion(spark, base).get == v0)
       sql.sql("SELECT 500 AS k, 'x' AS s, 1.0D AS v UNION ALL " +
         "SELECT 500, 'y', 2.0D UNION ALL SELECT 7, 'z', 3.0D")

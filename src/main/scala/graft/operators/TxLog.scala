@@ -4031,8 +4031,10 @@ object TxLog {
           requireCardinality(t.snapshot, touched, exactHits, _, keys))
         landMaskSidecar(t, touched, exactHits)
       case Some(rows0) =>
-        def tuple(r: org.apache.spark.sql.Row) = (2 until r.length).map(i => keyNorm(r.get(i)))
-        val rows = if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
+        def tuple(r: org.apache.spark.sql.Row) =
+          (2 until r.length).map(i => keyNorm(r.get(i)))
+        val rows =
+          if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
         val prior = priorMasks(t.base, touched)
         if (cardinality.isDefined && ks.dupes.nonEmpty && rows.exists { r =>
             !prior.get(r.getString(0))
@@ -4310,10 +4312,11 @@ object TxLog {
       toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
   }
 
-  /** `df`, holding `rows` rows, coalesced to as many partitions as its
-    * estimated size needs at `spark.sql.files.maxPartitionBytes` each
-    * (the bytes Spark reads as one partition), so a small source lands
-    * as one file however many partitions it was read in. */
+  /** `df`, holding at most `rows` rows, coalesced to as many
+    * partitions as its estimated size needs at
+    * `spark.sql.files.maxPartitionBytes` each (the bytes Spark reads as
+    * one partition), so a small write lands as one file however many
+    * partitions it was read in. */
   private def coalesceToSize(df: DataFrame, rows: Long): DataFrame = {
     val rowSize = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
       .EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
@@ -4454,7 +4457,11 @@ object TxLog {
               .map { case (_, e) => e.as(c) }.getOrElse(col(c))) ++
             appended.map(k => set(k).as(k)): _*)
         }
-        val updatedP = s.toPhysical(updated)
+        // the images are at most the touched files' rows: they land as
+        // the files that size needs, not one per file the scan split
+        val updatedP =
+          if (touched.exists(_.rows < 0)) s.toPhysical(updated)
+          else coalesceToSize(s.toPhysical(updated), touched.map(_.rows).sum)
         // the post-image land and the mask-sidecar build are
         // independent actions — overlap them (guide §2.6)
         var newEntries: Seq[Entry] = null

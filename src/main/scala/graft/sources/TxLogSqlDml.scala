@@ -235,20 +235,23 @@ private[sources] object TxLogMergeStars extends Rule[LogicalPlan] {
   private val Tag =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[Int]]("graft.insertStars")
 
+  private def stars(m: MergeIntoTable): Set[Int] =
+    m.notMatchedActions.zipWithIndex.collect {
+      case (_: InsertStarAction, i) => i
+    }.toSet
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     plan.foreach {
       case m: MergeIntoTable if m.getTagValue(Tag).isEmpty =>
-        m.setTagValue(Tag, m.notMatchedActions.zipWithIndex.collect {
-          case (_: InsertStarAction, i) => i
-        }.toSet)
+        m.setTagValue(Tag, stars(m))
       case _ => ()
     }
     plan
   }
 
   /** The positions of `m`'s NOT MATCHED actions written `INSERT *`. */
-  def insertStars(m: MergeIntoTable): Set[Int] = m.getTagValue(Tag).getOrElse(
-    m.notMatchedActions.zipWithIndex.collect { case (_: InsertStarAction, i) => i }.toSet)
+  def insertStars(m: MergeIntoTable): Set[Int] =
+    m.getTagValue(Tag).getOrElse(stars(m))
 }
 
 /** Tags every attribute reference in a captured MERGE clause

@@ -222,4 +222,22 @@ class TxLogDmlJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snap.where("k IN (8, 16, 100000)").as[(Long, String, Double)]
       .collect().map(_._2).toSet == Set("b-8", "b-16", "b-100000"))
   }
+
+  test("a two-key merge masks exactly the source's key tuples, not every " +
+    "row whose keys each appear somewhere in the source") {
+    def run(base: String): Set[(Int, Int, String)] = {
+      TxLog.drop(spark, base)
+      TxLog.commit(Seq((1, 1, "t11"), (2, 2, "t22"), (1, 2, "t12"), (3, 3, "t33"))
+        .toDF("a", "b", "s"), base, None, Some("a"))
+      TxLog.mergeMor(spark, base, Seq((1, 2, "s12"), (2, 1, "s21"))
+        .toDF("a", "b", "s"), Seq("a", "b"), "a")
+      TxLog.read(spark, base).as[(Int, Int, String)].collect().toSet
+    }
+    val expected = Set((1, 1, "t11"), (2, 2, "t22"), (3, 3, "t33"),
+      (1, 2, "s12"), (2, 1, "s21"))
+    assert(run(s"$root/twokey") == expected)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(run(s"$root/twokey_join") == expected)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 }

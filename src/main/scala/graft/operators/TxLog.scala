@@ -4312,11 +4312,10 @@ object TxLog {
       toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
   }
 
-  /** `df`, holding at most `rows` rows, coalesced to as many
-    * partitions as its estimated size needs at
-    * `spark.sql.files.maxPartitionBytes` each (the bytes Spark reads as
-    * one partition), so a small write lands as one file however many
-    * partitions it was read in. */
+  /** `df`, holding `rows` rows, coalesced to as many partitions as its
+    * estimated size needs at `spark.sql.files.maxPartitionBytes` each
+    * (the bytes Spark reads as one partition), so a small source lands
+    * as one file however many partitions it was read in. */
   private def coalesceToSize(df: DataFrame, rows: Long): DataFrame = {
     val rowSize = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
       .EstimationUtils.getSizePerRow(df.queryExecution.analyzed.output)
@@ -4457,11 +4456,7 @@ object TxLog {
               .map { case (_, e) => e.as(c) }.getOrElse(col(c))) ++
             appended.map(k => set(k).as(k)): _*)
         }
-        // the images are at most the touched files' rows: they land as
-        // the files that size needs, not one per file the scan split
-        val updatedP =
-          if (touched.exists(_.rows < 0)) s.toPhysical(updated)
-          else coalesceToSize(s.toPhysical(updated), touched.map(_.rows).sum)
+        val updatedP = s.toPhysical(updated)
         // the post-image land and the mask-sidecar build are
         // independent actions — overlap them (guide §2.6)
         var newEntries: Seq[Entry] = null
@@ -4740,15 +4735,8 @@ object TxLog {
       // the target surface is the EVOLVED one (union of live files ∪
       // declared schema): a one-footer schema on a schema-evolved
       // unmapped table could miss file-evolved columns, and the image
-      // projection below would then land their loss permanently. An
-      // EMPTY target (file-less create, fully-deleted snapshot) is a
-      // legitimate MERGE target for the NOT MATCHED half — its schema
-      // comes from the declared #schema line
+      // projection below would then land their loss permanently
       val baseSchema = graft.sources.TxLogSource.mergeTargetSchema(t.snapshot)
-        .getOrElse(throw new IllegalStateException(
-          s"MERGE into the empty table at $base with no declared " +
-            "schema — declare one (createTable / CREATE TABLE) or " +
-            "write data first"))
       // MERGE schema evolution (Delta `schema.autoMerge` / dbt-spark
       // `on_schema_change: append_new_columns`): source columns
       // absent from the target ADD to its schema in the SAME commit

@@ -435,10 +435,8 @@ case class TxLogMergeClausesCommand(base: String, keys: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val src: DataFrame = ColumnBridge.ofRows(spark, sourcePlan)
-    // an EMPTY target (file-less create, fully-deleted snapshot) is a
-    // legitimate MERGE target for the NOT MATCHED half — its declared
-    // #schema serves (the empty-table incremental-bootstrap shape)
-    val baseSchema = TxLogMergeCommand.targetSchema(spark, base)
+    val baseSchema =
+      TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, base))
     // MERGE schema evolution over SQL (Delta's autoMerge conf): a
     // STAR action with source columns absent from the target either
     // EVOLVES the target (conf on — dbt `on_schema_change:
@@ -557,7 +555,8 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
   override def run(spark: SparkSession): Seq[Row] = {
     val src: DataFrame = org.apache.spark.sql.graftbridge.ColumnBridge
       .ofRows(spark, sourcePlan)
-    val targetSchema = TxLogMergeCommand.targetSchema(spark, base)
+    val targetSchema =
+      TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, base))
     val targetCols = targetSchema.fieldNames.toSeq
     val missingKeys = keys.filterNot(k =>
       src.columns.exists(_.equalsIgnoreCase(k)))
@@ -646,15 +645,4 @@ case class TxLogMergeCommand(base: String, keys: Seq[String],
     }
     Seq.empty
   }
-}
-
-object TxLogMergeCommand {
-  /** The logical schema a SQL MERGE targets: the latest snapshot's
-    * ([[TxLogSource.mergeTargetSchema]]), built without a read plan. */
-  private[graft] def targetSchema(spark: SparkSession, base: String)
-      : org.apache.spark.sql.types.StructType =
-    TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, base))
-      .getOrElse(throw new IllegalArgumentException(
-        s"MERGE INTO txlog($base): the table is empty and declares " +
-          "no schema — declare one (CREATE TABLE) or write data first"))
 }

@@ -259,12 +259,16 @@ object TxLogSource {
   /** The logical schema a MERGE targets at snapshot `s`, taken from
     * the log and the cached footers alone (no read plan, so no Spark
     * job and no path check): [[snapshotSchema]], the surface the
-    * catalog serves, with mapped, widened and declared-only columns;
-    * for a version without files, its declared `#schema`, if any. */
-  private[graft] def mergeTargetSchema(s: graft.operators.Snapshot)
-      : Option[StructType] =
-    if (s.entries.isEmpty && s.meta.widened.isEmpty) s.meta.schema
-    else Some(snapshotSchema(s.spark, s.base, s.cur))
+    * catalog serves, with mapped, widened and declared-only columns.
+    * A version without files (a file-less create, a fully-deleted
+    * snapshot) is a legitimate target for the NOT MATCHED half and
+    * serves its declared `#schema`; without one the MERGE fails. */
+  private[graft] def mergeTargetSchema(s: graft.operators.Snapshot): StructType =
+    if (s.entries.nonEmpty || s.meta.widened.nonEmpty)
+      snapshotSchema(s.spark, s.base, s.cur)
+    else s.meta.schema.getOrElse(throw new IllegalStateException(
+      s"MERGE into the empty table at ${s.base} with no declared schema " +
+        "— declare one (createTable / CREATE TABLE) or write data first"))
 
   /** Logical→physical name map of one version (lowercased logical
     * keys; empty = identity — the table has no column mapping). The
@@ -549,9 +553,10 @@ object TxLogSource {
     }
   }
 
-  /** Hard cap on the total masked-row positions the DSv2 planner will
-    * materialize on the driver (each is a Long serialized into its
-    * file's InputPartition): 16M positions ≈ 128 MB. The manifest
+  /** Hard cap on the total masked-row positions the DSv2 planner, and
+    * a MOR verb's mask build, will materialize on the driver (each is a
+    * Long, serialized into its file's InputPartition or merged into the
+    * verb's sidecar): 16M positions ≈ 128 MB. The manifest
     * carries every entry's dv.rows, so the bound is checked from
     * metadata BEFORE any sidecar byte is read. Override with
     * `spark.graft.txlog.dsv2MaxMaskRows`. */

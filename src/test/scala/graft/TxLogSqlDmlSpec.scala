@@ -741,7 +741,7 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
     TxLog.commit((1 to 400).map(i => (i, s"n-$i", i * 1.0)).toDF("k", "s", "v")
       .repartition(40), wide, None, Some("k"))
     val (schema, schemaJobs) = SparkTestBase.jobsDuring(
-      graft.sources.TxLogMergeCommand.targetSchema(spark, wide))
+      graft.sources.TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, wide)))
     assert(schemaJobs == 0, s"$schemaJobs Spark jobs for the target schema")
     assert(schema.fieldNames.toSeq == Seq("k", "s", "v"))
   }

@@ -3874,40 +3874,60 @@ object TxLog {
                                   dupes: Set[Seq[Any]], rows: Long,
                                   types: Seq[org.apache.spark.sql.types.DataType])
 
+  /** The most source keys a key-matching verb collects: the largest key
+    * set measured at which the pushed `In` list still matched the
+    * semi-join (BENCH_NOTES, "Driver-side bounds"). */
+  private val MaxKeySetRows = 3000L
+
   /** `source`'s [[KeySet]] on `keys`, or None when it holds more rows
     * than Spark would broadcast in a join:
     * `spark.sql.autoBroadcastJoinThreshold` divided by the key row's
-    * size, checked by collecting at most that many rows plus one (a
-    * persisted micro-batch reports no size to check up front). A
-    * threshold of -1 disables the driver path. */
+    * size, and at most [[MaxKeySetRows]], checked by collecting at most
+    * that many rows ([[collectCapped]]: a persisted micro-batch reports
+    * no size to check up front). A threshold of -1 disables the driver
+    * path. */
   private def collectKeySet(source: DataFrame,
                             keys: Seq[String]): Option[KeySet] = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
     import org.apache.spark.sql.functions.col
     val sel = source.select(keys.map(col): _*)
     val threshold = source.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val rowSize = org.apache.spark.sql.catalyst.plans.logical.statsEstimation
       .EstimationUtils.getSizePerRow(sel.queryExecution.analyzed.output)
+    val cap = (BigInt(threshold) / rowSize).min(MaxKeySetRows).toLong
+    val toRow = CatalystTypeConverters.createToScalaConverter(sel.schema)
     if (threshold <= 0) None
-    else collectCapped(sel, (BigInt(threshold) / rowSize).toLong).map { rows =>
-      val tuples = rows.map(_.toSeq)
+    else collectCapped(sel, cap, rowSize.toLong).map { rows0 =>
+      val tuples = rows0.map(r =>
+        toRow(r).asInstanceOf[org.apache.spark.sql.Row].toSeq)
       val full = tuples.filterNot(_.contains(null)).map(_.map(keyNorm))
       KeySet(keys.indices.map(i => tuples.map(_(i)).filter(_ != null).distinct),
         full.toSet,
         full.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.toSet,
-        rows.size.toLong, sel.schema.fields.toSeq.map(_.dataType))
+        tuples.size.toLong, sel.schema.fields.toSeq.map(_.dataType))
     }
   }
 
+  private val LongMin = java.math.BigDecimal.valueOf(Long.MinValue)
+  private val LongMax = java.math.BigDecimal.valueOf(Long.MaxValue)
+
   /** A key value in the form two equal keys share whatever their
-    * numeric types (the target's INT and the source's BIGINT). */
+    * numeric types (the target's INT and the source's BIGINT, an
+    * integral DECIMAL and a BIGINT). Decimals stay exact: an integral
+    * one within BIGINT's range becomes a Long, any other loses only its
+    * trailing zeros; only FLOAT and DOUBLE go through a double. */
   private def keyNorm(v: Any): Any = v match {
     case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer |
               _: java.lang.Long) => n.asInstanceOf[Number].longValue
     case f: java.lang.Float => keyNorm(f.toDouble)
     case d: java.lang.Double if math.abs(d) < 9.0e18 && d == math.rint(d) =>
       d.longValue
-    case d: java.math.BigDecimal => keyNorm(d.doubleValue)
-    case d: scala.math.BigDecimal => keyNorm(d.doubleValue)
+    case d: java.math.BigDecimal =>
+      val s = d.stripTrailingZeros
+      if (s.scale <= 0 && s.compareTo(LongMin) >= 0 && s.compareTo(LongMax) <= 0)
+        s.longValue
+      else s
+    case d: scala.math.BigDecimal => keyNorm(d.bigDecimal)
     case other => other
   }
 
@@ -4015,33 +4035,37 @@ object TxLog {
     * are dropped, and [[landMaskDriver]] lands the merged sidecar. With
     * a `cardinality` source, a LIVE hit (not already masked) whose tuple
     * that source holds twice fails the merge (the MERGE cardinality
-    * law). Hits beyond the driver-side mask limit fall back to the
-    * distributed build over `exactHits`, the verb's key join. */
+    * law). Hits beyond the driver-side limits ([[maskRoom]],
+    * [[collectCapped]]) fall back to the distributed build over
+    * `exactHits`, the verb's key join. */
   private def landMaskKeyed(t: Txn, touched: Seq[Entry], tagged: DataFrame,
                             keys: Seq[String], ks: KeySet,
                             cardinality: Option[DataFrame],
                             exactHits: => DataFrame)
       : Option[(String, Map[String, Long])] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.functions.col
     val hits = tagged.where(keyFilter(keys, ks))
       .select((Seq(DvFileCol, DvPosCol) ++ keys).map(col): _*)
-    maskRoom(t.spark, touched).flatMap(collectCapped(hits, _)) match {
+    maskRoom(t.spark, touched)
+      .flatMap(collectCapped(hits, _, hitRowBytes(hits, touched))) match {
       case None =>
         if (ks.dupes.nonEmpty) cardinality.foreach(
           requireCardinality(t.snapshot, touched, exactHits, _, keys))
-        landMaskSidecar(t, touched, exactHits)
+        landMaskDistributed(t, touched, exactHits)
       case Some(rows0) =>
-        def tuple(r: org.apache.spark.sql.Row) =
-          (2 until r.length).map(i => keyNorm(r.get(i)))
+        val keyTypes = hits.schema.fields.toSeq.drop(2).map(_.dataType)
+        val toScala = keyTypes.map(CatalystTypeConverters.createToScalaConverter)
+        def tuple(r: InternalRow) = keyTypes.indices.map(i =>
+          keyNorm(toScala(i)(r.get(i + 2, keyTypes(i)))))
         val rows =
           if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
         val prior = priorMasks(t.base, touched)
         if (cardinality.isDefined && ks.dupes.nonEmpty && rows.exists { r =>
-            !prior.get(r.getString(0))
+            !prior.get(r.getUTF8String(0).toString)
               .exists(java.util.Arrays.binarySearch(_, r.getLong(1)) >= 0) &&
               ks.dupes(tuple(r)) }) throw cardinalityViolation
-        landMaskDriver(t, touched, prior,
-          rows.groupMap(_.getString(0))(_.getLong(1)))
+        landMaskDriver(t, touched, prior, hitPositions(rows))
     }
   }
 
@@ -4060,9 +4084,10 @@ object TxLog {
   }
 
   /** `tagged` (a raw tagged read of `touched`) without the rows their
-    * prior masks delete. Within the driver-side mask limit the
-    * positions come from [[priorMasks]] and filter each task's rows, no
-    * Spark job; above it, the anti-join against [[dvFrame]]. */
+    * prior masks delete. While the positions fit the driver-side limits
+    * ([[maskRoom]]; every task ships them) they come from [[priorMasks]]
+    * and filter each task's rows, no Spark job; above them, the
+    * anti-join against [[dvFrame]]. */
   private def liveRows(s: Snapshot, touched: Seq[Entry],
                        tagged: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, udf}
@@ -4127,12 +4152,12 @@ object TxLog {
     * data file is rewritten or dropped from disk, so at 100 TB a
     * delete commits in O(deleted rows), not O(touched files), and a
     * high-churn delete workload stops amplifying writes the way
-    * [[deleteRange]]'s copy-on-write does. While the touched files'
-    * masks fit the driver-side limit (`spark.graft.txlog.dsv2MaxMaskRows`)
-    * the delete is two Spark jobs: one scan collects the hit positions,
-    * and the merged mask lands as one sidecar file
-    * ([[landMaskSidecar]]). Reads apply the mask inside the DSv2 scan
-    * or as an anti-join on the row index ([[readEntries]]);
+    * [[deleteRange]]'s copy-on-write does. While the hits and the
+    * touched files' masks fit the driver-side limits ([[maskRoom]]: at
+    * most 10,000 new hits) the delete is two Spark jobs: one scan
+    * collects the hit positions, and the merged mask lands as one
+    * sidecar file ([[landMaskSidecar]]). Reads apply the mask inside
+    * the DSv2 scan or as an anti-join on the row index ([[readEntries]]);
     * [[purgeDeletes]] (Delta `REORG … APPLY (PURGE)`) later folds masks
     * into rewritten files. A file already carrying a mask gets a
     * MERGED sidecar (old positions stay deleted); a file whose every
@@ -4230,27 +4255,55 @@ object TxLog {
     * the entries' EXISTING masks, distinct. Returns the sidecar dir
     * and the per-file mask sizes, or None when there is nothing to
     * mask. While the touched files' prior positions plus the hits fit
-    * the driver-side mask limit (`spark.graft.txlog.dsv2MaxMaskRows`),
-    * one scan job collects the hits and [[landMaskDriver]] merges and
-    * lands them; above it, [[landMaskDistributed]] builds the mask as
-    * Spark jobs. */
+    * the driver-side limits ([[maskRoom]]), one scan job collects the
+    * hits and [[landMaskDriver]] merges and lands them; above them,
+    * [[landMaskDistributed]] builds the mask as Spark jobs. */
   private def landMaskSidecar(t: Txn, touched: Seq[Entry], hits0: DataFrame)
       : Option[(String, Map[String, Long])] = {
     val hits = hits0.select(DvFileCol, DvPosCol)
-    maskRoom(t.spark, touched).flatMap(collectCapped(hits, _)) match {
+    maskRoom(t.spark, touched)
+      .flatMap(collectCapped(hits, _, hitRowBytes(hits, touched))) match {
       case Some(rows) => landMaskDriver(t, touched, priorMasks(t.base, touched),
-        rows.groupMap(_.getString(0))(_.getLong(1)))
+        hitPositions(rows))
       case None => landMaskDistributed(t, touched, hits)
     }
   }
 
-  /** The hit positions the driver may still take for `touched`: the
-    * driver-side mask limit minus the positions their masks already
-    * hold (manifest `dv.rows`, no sidecar read), None when those alone
-    * exceed it. */
-  private def maskRoom(spark: SparkSession, touched: Seq[Entry]): Option[Long] =
-    Some(graft.sources.TxLogSource.maxMaskRows(spark) -
-      touched.flatMap(_.dv).map(_.rows).sum).filter(_ >= 0)
+  /** The most bytes a MOR verb brings to the driver in one collection
+    * (source keys, mask hits) or ships to every task of one scan (prior
+    * mask positions): a quarter of `spark.driver.maxResultSize` (unless
+    * 0, unlimited) and of `spark.rpc.message.maxSize`. */
+  private def driverCollectBytes(spark: SparkSession): Long = {
+    val conf = spark.sparkContext.getConf
+    val maxResult = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val rpc = conf.getSizeAsMb("spark.rpc.message.maxSize", "128") << 20
+    if (maxResult > 0) math.min(maxResult, rpc) / 4 else rpc / 4
+  }
+
+  /** The most new hits a mask merges on the driver: the largest hit set
+    * measured at which the driver-side build still matched the
+    * distributed one (BENCH_NOTES, "Driver-side bounds"). */
+  private val MaxDriverHits = 10000L
+
+  /** The bytes one collected row of the hit scan `hits` is estimated to
+    * take: Spark's per-row estimate for its columns plus the longest
+    * file name among `touched`, which its file column carries. */
+  private def hitRowBytes(hits: DataFrame, touched: Seq[Entry]): Long =
+    org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(hits.queryExecution.analyzed.output).toLong +
+      touched.map(e => fileName(e.path).length).maxOption.getOrElse(0)
+
+  /** The new hits the driver may still merge into `touched`' masks: at
+    * most [[MaxDriverHits]], and with the prior positions (counted from
+    * the manifest's `dv.rows`) within
+    * `spark.graft.txlog.dsv2MaxMaskRows`. None when the prior positions
+    * alone pass that limit or, at 8 bytes each, [[driverCollectBytes]]. */
+  private def maskRoom(spark: SparkSession, touched: Seq[Entry]): Option[Long] = {
+    val prior = touched.flatMap(_.dv).map(_.rows).sum
+    Some(math.min(MaxDriverHits,
+        graft.sources.TxLogSource.maxMaskRows(spark) - prior))
+      .filter(_ >= 0 && 8 * prior <= driverCollectBytes(spark))
+  }
 
   /** `touched`' prior mask positions by file name, read on the driver
     * ([[graft.sources.TxLogSource.dvPositionsByFile]], no Spark job). */
@@ -4259,57 +4312,103 @@ object TxLog {
     graft.sources.TxLogSource.dvPositionsByFile(base, touched)
       .map { case (path, ps) => fileName(path) -> ps }
 
+  /** Collected hit rows (file name, position, …) as positions by file
+    * name, without a boxed value per row. */
+  private def hitPositions(rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : Map[String, Array[Long]] = {
+    import scala.collection.mutable
+    val byFile = mutable.HashMap.empty[
+      org.apache.spark.unsafe.types.UTF8String, mutable.ArrayBuilder.ofLong]
+    rows.foreach(r => byFile.getOrElseUpdate(r.getUTF8String(0),
+      new mutable.ArrayBuilder.ofLong) += r.getLong(1))
+    byFile.iterator.map { case (n, ps) => n.toString -> ps.result() }.toMap
+  }
+
+  /** The positions one task of [[landMaskDriver]] lands: 8 MiB of
+    * them, far below Spark's RPC message limit. */
+  private val MaskSliceRows = 1 << 20
+
   /** The driver-side mask build: each touched file's `prior` positions
-    * (by file name) unioned with its new `hits`, landed as ONE sidecar
-    * file in one Spark job ([[landDvDir]] over a single partition
-    * serving the merged positions). The sidecar is the same
-    * (file, position) parquet dataset the distributed build lands, one
-    * file instead of one per shuffle partition, and the per-file
-    * counts are the merged sets' sizes. */
+    * (by file name) unioned with its new `hits`, landed in one Spark job
+    * ([[landDvDir]]) whose tasks each serve at most [[MaskSliceRows]]
+    * merged positions, so a mask of up to that size is ONE sidecar
+    * file. The sidecar is the same (file, position) parquet dataset the
+    * distributed build lands, and the per-file counts are the merged
+    * sets' sizes. */
   private def landMaskDriver(t: Txn, touched: Seq[Entry],
                              prior: Map[String, Array[Long]],
-                             hits: Map[String, Iterable[Long]])
+                             hits: Map[String, Array[Long]])
       : Option[(String, Map[String, Long])] = {
     val masks = touched.map(e => fileName(e.path)).flatMap { n =>
-      val ps = (prior.getOrElse(n, Array.emptyLongArray) ++
-        hits.getOrElse(n, Nil)).distinct.sorted
+      val ps = sortedDistinct(Array.concat(prior.getOrElse(n, Array.emptyLongArray),
+        hits.getOrElse(n, Array.emptyLongArray)))
       if (ps.isEmpty) None else Some(n -> ps)
     }
     if (masks.isEmpty) None
     else {
-      val rows = t.spark.sparkContext.parallelize(masks, 1).flatMap {
-        case (n, ps) => ps.iterator.map(p => org.apache.spark.sql.Row(n, p))
+      // consecutive slices of the (file, positions) list, each at most
+      // MaskSliceRows positions: one land task each
+      val slices = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Array[Long])]]
+      var (cur, room) = (Vector.empty[(String, Array[Long])], MaskSliceRows)
+      for ((n, ps) <- masks) {
+        var from = 0
+        while (from < ps.length) {
+          val part = ps.slice(from, from + room)
+          cur :+= n -> part
+          room -= part.length
+          from += part.length
+          if (room == 0) { slices += cur; cur = Vector.empty; room = MaskSliceRows }
+        }
       }
+      if (cur.nonEmpty) slices += cur
+      val rows = t.spark.sparkContext.parallelize(slices.toSeq, slices.size)
+        .flatMap(_.iterator.flatMap { case (n, ps) =>
+          ps.iterator.map(p => org.apache.spark.sql.Row(n, p))
+        })
       val dir = landDvDir(t, t.spark.createDataFrame(rows,
         graft.sources.TxLogSource.SidecarSchema))
       Some(dir -> masks.map { case (n, ps) => n -> ps.length.toLong }.toMap)
     }
   }
 
-  /** Up to `cap` rows of `df`, collected in ONE Spark job whose tasks
-    * each return at most `cap + 1` rows; None when `df` holds more
-    * (the rows already received are dropped as soon as the total
-    * passes `cap`). */
-  private def collectCapped(df: DataFrame,
-                            cap: Long): Option[Seq[org.apache.spark.sql.Row]] = {
-    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+  /** `a`, sorted in place, without repeats. */
+  private def sortedDistinct(a: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(a)
+    var n = 0
+    for (p <- a) if (n == 0 || a(n - 1) != p) { a(n) = p; n += 1 }
+    java.util.Arrays.copyOf(a, n)
+  }
+
+  /** Up to `cap` rows of `df`, copied, collected in ONE Spark job;
+    * None when `df` holds more. Each task returns at most `cap` rows,
+    * and fewer when the job's partitions times `rowBytes` (the estimated
+    * size of one collected row) would pass [[driverCollectBytes]]: a
+    * task holding more than its share returns none, and the result is
+    * None. */
+  private def collectCapped(df: DataFrame, cap: Long, rowBytes: Long)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
     val qe = df.queryExecution
-    val toRow = CatalystTypeConverters.createToScalaConverter(qe.analyzed.schema)
-    val take = math.min(cap + 1, Int.MaxValue.toLong).toInt
     val parts = scala.collection.mutable.ArrayBuffer.empty[Array[InternalRow]]
-    var n = 0L
+    var (n, over) = (0L, false)
     org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
         qe, Some("txlog driver collect")) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd,
-        (it: Iterator[InternalRow]) => it.take(take).map(_.copy()).toArray,
-        (_: Int, rows: Array[InternalRow]) => if (n <= cap) {
-          n += rows.length
-          if (n <= cap) parts += rows else parts.clear()
+      val rdd = qe.toRdd
+      val share = math.min(cap, driverCollectBytes(df.sparkSession) /
+        math.max(rowBytes, 1) / math.max(rdd.getNumPartitions, 1))
+      val take = math.min(share + 1, Int.MaxValue.toLong).toInt
+      df.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => {
+          val rows = it.take(take).map(_.copy()).toArray
+          if (rows.length > share) null else rows
+        },
+        (_: Int, rows: Array[InternalRow]) => if (!over) {
+          if (rows != null) n += rows.length
+          over = rows == null || n > cap
+          if (over) parts.clear() else parts += rows
         })
     }
-    if (n > cap) None
-    else Some(parts.toSeq.flatten.map(r =>
-      toRow(r).asInstanceOf[org.apache.spark.sql.Row]))
+    if (over) None else Some(parts.toSeq.flatten)
   }
 
   /** `df`, holding `rows` rows, coalesced to as many partitions as its
@@ -4323,16 +4422,18 @@ object TxLog {
     df.coalesce((BigInt(rows) * rowSize / perPart + 1).min(Int.MaxValue).toInt)
   }
 
-  /** The distributed mask build: the new hits unioned with the prior
-    * masks ([[dvFrame]]), distinct, landed one file per shuffle
-    * partition, with the per-file counts from the same cached frame.
-    * None when there is nothing to mask (the landed empty dir stays
-    * staged to `t`, unreferenced, so the transaction deletes it). */
+  /** The distributed mask build: the new hits (of the tagged `hits0`)
+    * unioned with the prior masks ([[dvFrame]]), distinct, landed one
+    * file per shuffle partition, with the per-file counts from the same
+    * cached frame. None when there is nothing to mask (the landed empty
+    * dir stays staged to `t`, unreferenced, so the transaction deletes
+    * it). */
   private def landMaskDistributed(t: Txn, touched: Seq[Entry],
-                                  newHits: DataFrame)
+                                  hits0: DataFrame)
       : Option[(String, Map[String, Long])] = {
     import org.apache.spark.sql.functions.col
     val (spark, base) = (t.spark, t.base)
+    val newHits = hits0.select(DvFileCol, DvPosCol)
     val allDv = (dvFrame(spark, base, touched) match {
       case Some(old) => newHits.unionByName(old).distinct()
       case None => newHits // raw positions are unique by construction
@@ -4525,14 +4626,15 @@ object TxLog {
   /** Shared MOR-merge core: mask target rows whose `keys` appear in
     * `source`, land the whole source as new files, publish in one
     * commit. The source, `keys` and `statsCol` speak logical names;
-    * each attempt translates them under its snapshot. A source within
-    * Spark's broadcast threshold has its keys collected once
-    * ([[collectKeySet]]): the touched files are those whose `statsCol`
-    * stats admit some key, the hit scan pushes the keys into the read,
-    * and the mask merges on the driver ([[landMaskKeyed]]). A larger
-    * source prunes by its key span and finds hits with a semi-join.
-    * With `statsCol` set, a source with no non-NULL value on it merges
-    * nothing; without it, only an empty source does. */
+    * each attempt translates them under its snapshot. A source of at
+    * most [[MaxKeySetRows]] rows within Spark's broadcast threshold has
+    * its keys collected once ([[collectKeySet]]): the touched files are
+    * those whose `statsCol` stats admit some key, the hit scan pushes
+    * the keys into the read, and the mask merges on the driver
+    * ([[landMaskKeyed]]). A larger source prunes by its key span, finds
+    * hits with a semi-join and builds the mask as Spark jobs. Only an
+    * empty source merges nothing; a source row with a NULL key matches
+    * no target row and lands as an insert. */
   private def mergeMorWhere(spark: SparkSession, base: String,
                             source0: DataFrame, keys0: Seq[String],
                             statsCol0: Option[String], maxAttempts: Int,
@@ -4543,8 +4645,8 @@ object TxLog {
     val statsIdx = statsCol0.map(keys0.indexOf(_)).getOrElse(0)
     lazy val span = statsCol0.flatMap(keySpan(source0, _))
     val nothing = keySet match {
-      case Some(ks) => ks.rows == 0 || statsCol0.isDefined && ks.values(statsIdx).isEmpty
-      case None => statsCol0.isDefined && span.isEmpty
+      case Some(ks) => ks.rows == 0
+      case None => (statsCol0.isEmpty || span.isEmpty) && source0.isEmpty
     }
     if (nothing) return snapshot(spark, base).cur
     txn(spark, base, maxAttempts) { t =>
@@ -4588,9 +4690,9 @@ object TxLog {
           Par.all(doLand, () => maskRes = keySet match {
             case Some(ks) =>
               landMaskKeyed(t, touched, tagged, keys, ks, check, exactHits)
-            case None =>
+            case None => // a large source: the hits are the join's
               check.foreach(requireCardinality(s, touched, exactHits, _, keys))
-              landMaskSidecar(t, touched, exactHits)
+              landMaskDistributed(t, touched, exactHits)
           })
           maskRes match {
             case None => touched // insert-only batch
@@ -4725,7 +4827,8 @@ object TxLog {
       case Seq(MergeDelete(None)) => true
       case _ => false
     }
-    // the source's keys, collected once when small enough to broadcast
+    // the source's keys, collected once when small enough
+    // ([[collectKeySet]])
     val keySet = collectKeySet(source, keys)
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
@@ -5162,9 +5265,9 @@ object TxLog {
               checkedCons = checked
             },
             () => {
-              // without a sync clause, a delete-key set small enough to
-              // broadcast is collected: it selects the touched files and
-              // pushes into the hit scan
+              // without a sync clause, a small delete-key set is
+              // collected ([[collectKeySet]]): it selects the touched
+              // files and pushes into the hit scan
               keySet = if (syncKeys.isDefined) None
                 else collectKeySet(deleteKeys, keys)
               if (keySet.isEmpty)
@@ -5220,6 +5323,9 @@ object TxLog {
             (keySet match {
               case Some(ks) =>
                 landMaskKeyed(t, touched, read, keys, ks, None, semiHits)
+              // delete keys too many to collect: the hits are the join's
+              case None if syncKeys.isEmpty =>
+                landMaskDistributed(t, touched, hits)
               case None => landMaskSidecar(t, touched, hits)
             }) match {
               case None => touched // no key actually present

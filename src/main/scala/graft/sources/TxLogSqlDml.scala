@@ -31,8 +31,9 @@ import graft.operators.TxLog
   * the dbt one, `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
   * INSERT *`, and its single-clause, DELETE and `NOT MATCHED BY SOURCE
   * DELETE` variants — plan [[TxLogMergeCommand]], which runs the upsert
-  * as [[TxLog.mergeMorAuto]] (source keys collected on the driver, the
-  * mask merged there) and the rest as [[TxLog.applyBatch]]. The
+  * as [[TxLog.mergeMorAuto]] (a small source's keys collected on the
+  * driver and the mask merged there, a large one joined) and the rest
+  * as [[TxLog.applyBatch]]. The
   * analyzer may expand the stars before this rule runs (it does for a
   * temp-view source): an expanded `UPDATE SET *` keeps
   * `UpdateAction.fromStar`, and [[TxLogMergeStars]] records which

@@ -197,6 +197,25 @@ class TxLogDmlJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(snapshotRows(dist) == snapshotRows(drv))
   }
 
+  test("a deleteRangeMor whose hits would pass spark.driver.maxResultSize " +
+    "on the driver takes the distributed build and succeeds") {
+    val base = copyOfSeed(s"$root/maxresult")
+    // 9,000 hits, within the driver-side hit limit, of about 100 bytes
+    // each as collected rows: 900 KB, over the result limit set here
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try org.apache.spark.GraftTestAccess.withCoreConf(spark.sparkContext,
+        "spark.driver.maxResultSize", "512k") {
+      TxLog.deleteRangeMor(spark, base, "k", 0L, 8999L)
+    } finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    assert(TxLog.read(spark, base).count() == nRows - 9000)
+    assert(TxLog.read(spark, base).where("k < 9000").isEmpty)
+    val dirs = TxLog.snapshotEntries(spark, base,
+      TxLog.latestVersion(spark, base).get).flatMap(_.dv).map(_.dir).distinct
+    assert(dirs.size == 1 && new java.io.File(s"$base/${dirs.head}")
+      .listFiles().count(f => TxLog.isDataFileName(f.getName)) > 1,
+      "the distributed build lands one file per shuffle partition")
+  }
+
   test("a key-matching merge on a bloom-indexed key reads only the files " +
     "whose bloom admits a source key") {
     CountingFileSystem.install(spark.sparkContext.hadoopConfiguration)

@@ -810,4 +810,53 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
       assert(live.where("channel = 'web'").count() == 20)
     } finally sql.sql("DROP TABLE IF EXISTS txdml_amview")
   }
+
+  test("a star MERGE over a temp view whose rows all have NULL keys " +
+    "inserts them: a NULL key matches no target row") {
+    val base = "/tmp/graft_txsqldml/nullkeys"
+    seed(base, "txdml_nullkeys")
+    try {
+      sql.sql("SELECT CAST(NULL AS INT) AS k, 'a' AS s, 1.0D AS v UNION ALL " +
+        "SELECT CAST(NULL AS INT), 'b', 2.0D")
+        .createOrReplaceTempView("txdml_nullkeys_src")
+      assert(analyzed(starMerge("txdml_nullkeys", "txdml_nullkeys_src"))
+        .isInstanceOf[graft.sources.TxLogMergeCommand])
+      def nullRows() = TxLog.read(spark, base).where("k IS NULL").select("s")
+        .as[String](org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq
+      sql.sql(starMerge("txdml_nullkeys", "txdml_nullkeys_src"))
+      assert(TxLog.read(spark, base).count() == 102)
+      assert(nullRows() == Seq("a", "b"))
+      // the same when the source is too large to collect
+      sql.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try sql.sql(starMerge("txdml_nullkeys", "txdml_nullkeys_src"))
+      finally sql.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      assert(TxLog.read(spark, base).count() == 104)
+      assert(nullRows() == Seq("a", "a", "b", "b"))
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_nullkeys")
+  }
+
+  test("star MERGE on DECIMAL(20,0) keys that a double cannot tell " +
+    "apart: distinct source keys are no duplicate, and each matches " +
+    "only its own target row") {
+    val base = "/tmp/graft_txsqldml/deckeys"
+    TxLog.drop(spark, base)
+    def keys(rows: Seq[(String, String)]) = rows.map { case (k, s) =>
+      s"SELECT CAST('$k' AS DECIMAL(20,0)) AS k, '$s' AS s" }.mkString(" UNION ALL ")
+    TxLog.commit(sql.sql(keys(Seq("9007199254740992" -> "t0",
+      "12345678901234567890" -> "t2"))), base, None, None)
+    sql.sql("DROP TABLE IF EXISTS txdml_deckeys")
+    sql.sql("CREATE TABLE txdml_deckeys USING graft.sources.TxLogSource " +
+      s"OPTIONS (path '$base')")
+    try {
+      val source = Seq("9007199254740992" -> "s0", "9007199254740993" -> "s1",
+        "12345678901234567890" -> "s2", "12345678901234567891" -> "s3")
+      sql.sql(keys(source)).createOrReplaceTempView("txdml_deckeys_src")
+      assert(analyzed(starMerge("txdml_deckeys", "txdml_deckeys_src"))
+        .isInstanceOf[graft.sources.TxLogMergeCommand])
+      sql.sql(starMerge("txdml_deckeys", "txdml_deckeys_src"))
+      val got = TxLog.read(spark, base).collect()
+        .map(r => r.getDecimal(0).toPlainString -> r.getString(1)).toSet
+      assert(got == source.toSet)
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_deckeys")
+  }
 }

@@ -1630,15 +1630,6 @@ object TxLog {
                         tsMillis: Long): DataFrame =
     readVersion(spark, base, versionAtTimestamp(spark, base, tsMillis))
 
-  /** Pin version `v`'s commit instant (the commit file's mtime — the
-    * clock [[versionAtTimestamp]] reads). Fixture/test seam: lets a
-    * deterministic harness ask timestamp-travel questions without
-    * sleeping between commits. The snapshot cache is purged for the
-    * table: its staleness guard IS the commit mtime, so rewriting the
-    * clock must drop the cached entries — a drop-and-recreate that
-    * pins the SAME instants would otherwise revive the PREVIOUS
-    * table's entry list (caught by the bench's repeated-invocation
-    * runs: RESTORE republished a prior incarnation's dead paths). */
   /** First version whose in-commit stamp is >= `tsMillis` — the
     * START-bound ceiling rule (a floor there would leak changes
     * committed BEFORE the requested start into a feed). Some(1) when
@@ -1659,6 +1650,15 @@ object TxLog {
     }
   }
 
+  /** Pin version `v`'s commit instant (the commit file's mtime — the
+    * clock [[versionAtTimestamp]] reads). Fixture/test seam: lets a
+    * deterministic harness ask timestamp-travel questions without
+    * sleeping between commits. The snapshot cache is purged for the
+    * table: its staleness guard IS the commit mtime, so rewriting the
+    * clock must drop the cached entries — a drop-and-recreate that
+    * pins the SAME instants would otherwise revive the PREVIOUS
+    * table's entry list (caught by the bench's repeated-invocation
+    * runs: RESTORE republished a prior incarnation's dead paths). */
   def setCommitTime(spark: SparkSession, base: String, v: Long,
                     tsMillis: Long): Unit = {
     val f = fs(base, spark)
@@ -4029,43 +4029,51 @@ object TxLog {
       "on the ON keys first")
 
   /** Mask the rows of the tagged raw read `tagged` (of `touched`, on
-    * physical `keys`) whose key tuple is in `ks`, with the mask merged
-    * on the driver: one scan job collects each hit's coordinates and
-    * keys ([[keyFilter]] pushed into it), several-key hits outside `ks`
-    * are dropped, and [[landMaskDriver]] lands the merged sidecar. With
-    * a `cardinality` source, a LIVE hit (not already masked) whose tuple
-    * that source holds twice fails the merge (the MERGE cardinality
-    * law). Hits beyond the driver-side limits ([[maskRoom]],
-    * [[collectCapped]]) fall back to the distributed build over
-    * `exactHits`, the verb's key join. */
+    * physical `keys`) that `exactHits`, the verb's key join, finds. With
+    * a collected key set `keySet` the mask is merged on the driver: one
+    * scan job collects each hit's coordinates and keys ([[keyFilter]]
+    * pushed into it), several-key hits outside the set are dropped, and
+    * [[landMaskDriver]] lands the merged sidecar. With a `cardinality`
+    * source, a LIVE hit (not already masked) whose tuple that source
+    * holds twice fails the merge (the MERGE cardinality law). Without a
+    * key set, or with hits beyond the driver-side limits
+    * ([[maskRoom]], [[collectCapped]]), the mask is the distributed
+    * build over `exactHits`, and the law runs as Spark jobs
+    * ([[requireCardinality]]). */
   private def landMaskKeyed(t: Txn, touched: Seq[Entry], tagged: DataFrame,
-                            keys: Seq[String], ks: KeySet,
+                            keys: Seq[String], keySet: Option[KeySet],
                             cardinality: Option[DataFrame],
                             exactHits: => DataFrame)
       : Option[(String, Map[String, Long])] = {
     import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
     import org.apache.spark.sql.functions.col
-    val hits = tagged.where(keyFilter(keys, ks))
-      .select((Seq(DvFileCol, DvPosCol) ++ keys).map(col): _*)
-    maskRoom(t.spark, touched)
-      .flatMap(collectCapped(hits, _, hitRowBytes(hits, touched))) match {
-      case None =>
-        if (ks.dupes.nonEmpty) cardinality.foreach(
-          requireCardinality(t.snapshot, touched, exactHits, _, keys))
-        landMaskDistributed(t, touched, exactHits)
-      case Some(rows0) =>
-        val keyTypes = hits.schema.fields.toSeq.drop(2).map(_.dataType)
-        val toScala = keyTypes.map(CatalystTypeConverters.createToScalaConverter)
-        def tuple(r: InternalRow) = keyTypes.indices.map(i =>
-          keyNorm(toScala(i)(r.get(i + 2, keyTypes(i)))))
-        val rows =
-          if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
-        val prior = priorMasks(t.base, touched)
-        if (cardinality.isDefined && ks.dupes.nonEmpty && rows.exists { r =>
-            !prior.get(r.getUTF8String(0).toString)
-              .exists(java.util.Arrays.binarySearch(_, r.getLong(1)) >= 0) &&
-              ks.dupes(tuple(r)) }) throw cardinalityViolation
-        landMaskDriver(t, touched, prior, hitPositions(rows))
+    def distributed(dupes: Boolean) = {
+      if (dupes) cardinality.foreach(
+        requireCardinality(t.snapshot, touched, exactHits, _, keys))
+      landMaskDistributed(t, touched, exactHits)
+    }
+    keySet match {
+      case None => distributed(dupes = true)
+      case Some(ks) =>
+        val hits = tagged.where(keyFilter(keys, ks))
+          .select((Seq(DvFileCol, DvPosCol) ++ keys).map(col): _*)
+        maskRoom(t.spark, touched)
+          .flatMap(collectCapped(hits, _, hitRowBytes(hits, touched))) match {
+          case None => distributed(ks.dupes.nonEmpty)
+          case Some(rows0) =>
+            val keyTypes = hits.schema.fields.toSeq.drop(2).map(_.dataType)
+            val toScala = keyTypes.map(CatalystTypeConverters.createToScalaConverter)
+            def tuple(r: InternalRow) = keyTypes.indices.map(i =>
+              keyNorm(toScala(i)(r.get(i + 2, keyTypes(i)))))
+            val rows =
+              if (keys.size == 1) rows0 else rows0.filter(r => ks.tuples(tuple(r)))
+            val prior = priorMasks(t.base, touched)
+            if (cardinality.isDefined && ks.dupes.nonEmpty && rows.exists { r =>
+                !prior.get(r.getUTF8String(0).toString)
+                  .exists(java.util.Arrays.binarySearch(_, r.getLong(1)) >= 0) &&
+                  ks.dupes(tuple(r)) }) throw cardinalityViolation
+            landMaskDriver(t, touched, prior, hitPositions(rows))
+        }
     }
   }
 
@@ -4595,8 +4603,8 @@ object TxLog {
     require(keys.contains(statsCol),
       s"statsCol $statsCol must be a merge key (got $keys) — range " +
         "skipping is only sound when pruning on the match key")
-    mergeMorWhere(spark, base, source, keys, Some(statsCol), maxAttempts,
-      cardinality = false)
+    mergeMorWhere(spark, base, source, keys, (_, _) => Some(statsCol),
+      maxAttempts, cardinality = false)
   }
 
   /** [[mergeMor]] that picks its own pruning column — the SQL
@@ -4609,19 +4617,16 @@ object TxLog {
     * merge, as [[mergeClauses]]' does. */
   def mergeMorAuto(spark: SparkSession, base: String, source0: DataFrame,
                    keys0: Seq[String], maxAttempts: Int = 5,
-                   cardinality: Boolean = false): Long = {
-    val s = snapshot(spark, base)
-    s.cur // the target must exist
-    val source = s.toPhysical(source0)
-    val statsKey = keys0.find { k0 =>
-      val k = s.physical(k0)
-      source.columns.contains(k) &&
-        scala.util.Try(statsDtype(source.schema(k).dataType)).isSuccess &&
-        s.entries.exists(_.statsFor(k).isDefined)
-    }
-    mergeMorWhere(spark, base, source0, keys0, statsKey, maxAttempts,
-      cardinality)
-  }
+                   cardinality: Boolean = false): Long =
+    mergeMorWhere(spark, base, source0, keys0, (s, cast) => {
+      val source = s.toPhysical(cast)
+      keys0.find { k0 =>
+        val k = s.physical(k0)
+        source.columns.contains(k) &&
+          scala.util.Try(statsDtype(source.schema(k).dataType)).isSuccess &&
+          s.entries.exists(_.statsFor(k).isDefined)
+      }
+    }, maxAttempts, cardinality)
 
   /** Shared MOR-merge core: mask target rows whose `keys` appear in
     * `source`, land the whole source as new files, publish in one
@@ -4634,13 +4639,31 @@ object TxLog {
     * ([[landMaskKeyed]]). A larger source prunes by its key span, finds
     * hits with a semi-join and builds the mask as Spark jobs. Only an
     * empty source merges nothing; a source row with a NULL key matches
-    * no target row and lands as an insert. */
+    * no target row and lands as an insert. Each source column the
+    * target declares is cast to the target's type and spelling first,
+    * so the landed files and the collected keys carry the table's
+    * types. `statsColOf` picks the pruning key from the snapshot the
+    * call starts from and the cast source. */
   private def mergeMorWhere(spark: SparkSession, base: String,
-                            source0: DataFrame, keys0: Seq[String],
-                            statsCol0: Option[String], maxAttempts: Int,
-                            cardinality: Boolean): Long = {
+                            input: DataFrame, keys0: Seq[String],
+                            statsColOf: (Snapshot, DataFrame) => Option[String],
+                            maxAttempts: Int, cardinality: Boolean): Long = {
     import org.apache.spark.sql.functions.col
-    requireNoRowIdColumn(source0)
+    requireNoRowIdColumn(input)
+    val s0 = snapshot(spark, base)
+    s0.cur // the target must exist
+    val source0 =
+      if (s0.entries.isEmpty && s0.meta.schema.isEmpty) input // no shape yet
+      else {
+        val target = graft.sources.TxLogSource.mergeTargetSchema(s0)
+        input.select(input.columns.toSeq.map { c =>
+          target.fields.find(_.name.equalsIgnoreCase(c)) match {
+            case Some(f) => col(c).cast(f.dataType).as(f.name)
+            case None => col(c)
+          }
+        }: _*)
+      }
+    val statsCol0 = statsColOf(s0, source0)
     val keySet = collectKeySet(source0, keys0)
     val statsIdx = statsCol0.map(keys0.indexOf(_)).getOrElse(0)
     lazy val span = statsCol0.flatMap(keySpan(source0, _))
@@ -4648,7 +4671,7 @@ object TxLog {
       case Some(ks) => ks.rows == 0
       case None => (statsCol0.isEmpty || span.isEmpty) && source0.isEmpty
     }
-    if (nothing) return snapshot(spark, base).cur
+    if (nothing) return s0.cur
     txn(spark, base, maxAttempts) { t =>
       t.cur // the target must exist
       val s = t.snapshot
@@ -4687,13 +4710,8 @@ object TxLog {
           // actions — overlap them on driver threads (guide §2.6)
           var maskRes: Option[(String, Map[String, Long])] = None
           val check = if (cardinality) Some(source) else None
-          Par.all(doLand, () => maskRes = keySet match {
-            case Some(ks) =>
-              landMaskKeyed(t, touched, tagged, keys, ks, check, exactHits)
-            case None => // a large source: the hits are the join's
-              check.foreach(requireCardinality(s, touched, exactHits, _, keys))
-              landMaskDistributed(t, touched, exactHits)
-          })
+          Par.all(doLand, () => maskRes =
+            landMaskKeyed(t, touched, tagged, keys, keySet, check, exactHits))
           maskRes match {
             case None => touched // insert-only batch
             case Some((dvDir, counts)) => remask(touched, dvDir, counts)
@@ -4748,6 +4766,8 @@ object TxLog {
     *     pair. A target row that would be modified by MORE THAN ONE
     *     source row fails loudly (Delta's cardinality violation) —
     *     nondeterministic last-write-wins is never silently picked.
+    *     As in Delta, a lone unconditional `WHEN MATCHED THEN DELETE`
+    *     is exempt: deleting a row twice is deterministic.
     *   - `notMatched`: `WHEN NOT MATCHED [AND cond] THEN INSERT …`,
     *     conditions/values over SOURCE columns only.
     *   - `notMatchedBySource`: `WHEN NOT MATCHED BY SOURCE [AND cond]
@@ -4765,8 +4785,8 @@ object TxLog {
     * them; with no NOT-MATCHED-BY-SOURCE clause, span-disjoint files
     * are never read at all; with exactly `WHEN NOT MATCHED BY SOURCE
     * THEN DELETE` (unconditional), span-disjoint files drop
-    * METADATA-ONLY (every row provably vanished — the [[applyBatch]]
-    * sync optimization); a CONDITIONAL by-source clause must read
+    * METADATA-ONLY (every row provably vanished); a CONDITIONAL
+    * by-source clause must read
     * them once (absence of a key is unprovable from stats; the write
     * stays O(fired rows)). The fired matched pairs are persisted for
     * the commit's duration — they feed the cardinality check, the
@@ -4823,10 +4843,8 @@ object TxLog {
       }
     // unconditional by-source DELETE is the one by-source shape where
     // span-disjoint files can drop metadata-only
-    val uncondSyncDelete = notMatchedBySource match {
-      case Seq(MergeDelete(None)) => true
-      case _ => false
-    }
+    val uncondSyncDelete = notMatchedBySource == Seq(MergeDelete(None))
+    val deleteOnly = matched == Seq(MergeDelete(None))
     // the source's keys, collected once when small enough
     // ([[collectKeySet]])
     val keySet = collectKeySet(source, keys)
@@ -4954,8 +4972,9 @@ object TxLog {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       try {
         // Delta's cardinality law: a target row modified by the merge
-        // must match at most ONE source row
-        fired.foreach { f =>
+        // must match at most ONE source row, unless the one matched
+        // clause is an unconditional DELETE
+        if (!deleteOnly) fired.foreach { f =>
           val dup = f.groupBy(col(DvFileCol), col(DvPosCol)).count()
             .where(col("count") > 1).limit(1)
           if (!dup.isEmpty) throw cardinalityViolation
@@ -5034,7 +5053,10 @@ object TxLog {
         }
         // mask: fired matched rows ∪ fired by-source rows
         val maskParts =
-          fired.map(_.select(DvFileCol, DvPosCol)).toSeq ++
+          fired.map { f => // deleteOnly: a row may have fired twice
+            val hits = f.select(DvFileCol, DvPosCol)
+            if (deleteOnly) hits.distinct() else hits
+          }.toSeq ++
             nmbsFired.map(_.select(DvFileCol, DvPosCol)).toSeq
         val maskHits = maskParts.reduceLeftOption(_.unionByName(_))
         val masked = maskHits.flatMap(landMaskSidecar(t, touched, _)) match {
@@ -5187,153 +5209,72 @@ object TxLog {
                    deleteKeys: DataFrame, inserts: DataFrame,
                    keys: Seq[String], statsCol: String,
                    appId: String, batchId: Long,
-                   maxAttempts: Int = 5): Long =
-    applyBatchCore(spark, base, deleteKeys, inserts, keys, statsCol,
-      Some(appId -> batchId), maxAttempts)
-
-  /** One-shot (delete-keys, inserts) batch WITHOUT exactly-once txn
-    * tracking — the SQL `MERGE INTO` decomposed shapes (update-only,
-    * insert-only, delete-matched) ride this so ad-hoc DML does not
-    * grow the manifest's `#txn` map one line per statement. Same
-    * single-commit mask+append semantics as [[applyChanges]].
-    *
-    * `syncKeys` (SQL `WHEN NOT MATCHED BY SOURCE THEN DELETE`)
-    * additionally masks every target row whose key is ABSENT from it —
-    * the incremental full-sync shape: vanished rows die, surviving
-    * rows stay in place, nothing rewrites. Absence is unprovable from
-    * stats, so the in-span files are read once (an intrinsic cost of
-    * the semantics — the WRITE stays O(vanished rows)); files whose
-    * stats range is provably DISJOINT from the sync keys' span are
-    * dropped metadata-only, without a single byte read — a re-sync
-    * that moves a key window retires old bands for free. */
-  def applyBatch(spark: SparkSession, base: String,
-                 deleteKeys: DataFrame, inserts: DataFrame,
-                 keys: Seq[String], statsCol: String,
-                 maxAttempts: Int = 5,
-                 syncKeys: Option[DataFrame] = None): Long =
-    applyBatchCore(spark, base, deleteKeys, inserts, keys, statsCol,
-      None, maxAttempts, guardIdentity = false, syncKeys0 = syncKeys)
-
-  private def applyBatchCore(spark: SparkSession, base: String,
-                             deleteKeys0: DataFrame, inserts0: DataFrame,
-                             keys0: Seq[String], statsCol0: String,
-                             txn: Option[(String, Long)],
-                             maxAttempts: Int,
-                             guardIdentity: Boolean = true,
-                             syncKeys0: Option[DataFrame] = None): Long = {
-    require(keys0.contains(statsCol0),
-      s"statsCol $statsCol0 must be a key (got $keys0)")
+                   maxAttempts: Int = 5): Long = {
+    require(keys.contains(statsCol),
+      s"statsCol $statsCol must be a key (got $keys)")
     import org.apache.spark.sql.functions.col
     var checkedCons = Map.empty[String, String]
     var keySet: Option[KeySet] = None
     var keyRange: Option[(String, String)] = None
-    var syncRange: Option[Option[(String, String)]] = None
-    val statsIdx = keys0.indexOf(statsCol0)
-    TxLog.txn(spark, base, maxAttempts) { t =>
+    val statsIdx = keys.indexOf(statsCol)
+    txn(spark, base, maxAttempts) { t =>
       val (entries, txns) = (t.entries, t.txns)
       // already applied: a replay after a restart, or a racing replica
-      if (txn.exists { case (appId, batchId) =>
-          txns.getOrElse(appId, -1L) >= batchId }) t.cur
+      if (txns.getOrElse(appId, -1L) >= batchId) t.cur
       else {
         // mapped tables: both CDC halves run in PHYSICAL namespace
         // (same translation as the merge verbs)
         val s = t.snapshot
-        val deleteKeys = s.toPhysical(deleteKeys0)
-        val inserts = s.toPhysical(inserts0)
-        val syncKeys = syncKeys0.map(s.toPhysical)
-        val keys = keys0.map(s.physical)
-        val statsCol = s.physical(statsCol0)
+        val deleteKeysP = s.toPhysical(deleteKeys)
+        val insertsP = s.toPhysical(inserts)
+        val keysP = keys.map(s.physical)
+        val statsColP = s.physical(statsCol)
         val newEntries = t.once {
           // appended replica files keep every stats dimension the
           // snapshot's entries carry (same contract as the other
           // MOR/merge verbs' preservedStatsCols) — a Z-ordered source's
           // 2-D skipping must survive replication, not decay one batch
           // at a time
-          val statsCols = (Seq(statsCol) ++ entries.flatMap(_.stats.map(_.column)))
-            .distinct.filter(inserts.schema.fieldNames.contains)
+          val statsCols = (Seq(statsColP) ++ entries.flatMap(_.stats.map(_.column)))
+            .distinct.filter(insertsP.schema.fieldNames.contains)
           // the inserts land and the delete-key collection (or the
-          // delete/sync key-bound aggregates) are independent actions on
+          // delete key-bound aggregate) are independent actions on
           // different inputs: overlap them on driver threads (guide
           // §2.6) instead of paying both latencies back to back on
           // every CDC batch
           var landed: Seq[Entry] = null
           Par.all(
             () => {
-              val (es, checked) = landEntriesChecked(t, inserts, statsCols,
-                guardIdentity = guardIdentity)
+              val (es, checked) = landEntriesChecked(t, insertsP, statsCols,
+                guardIdentity = true)
               landed = es.filter(_.rows != 0L)
               checkedCons = checked
             },
             () => {
-              // without a sync clause, a small delete-key set is
-              // collected ([[collectKeySet]]): it selects the touched
-              // files and pushes into the hit scan
-              keySet = if (syncKeys.isDefined) None
-                else collectKeySet(deleteKeys, keys)
+              // a small delete-key set is collected ([[collectKeySet]]):
+              // it selects the touched files and pushes into the hit scan
+              keySet = collectKeySet(deleteKeysP, keysP)
               if (keySet.isEmpty)
-                keyRange = keySpan(deleteKeys, statsCol) // None: no deletes
-              // sync-delete span: a target file whose stats range is
-              // DISJOINT from it cannot hold any source key — every row
-              // vanished, the file drops metadata-only. Outer None = no
-              // sync clause; inner None = an EMPTY sync source (all
-              // vanishes).
-              syncRange = syncKeys.map(keySpan(_, statsCol))
+                keyRange = keySpan(deleteKeysP, statsColP) // None: no deletes
             })
           landed
         }
         checkedCons = reEnforceIfChanged(t, newEntries, checkedCons)
-        // the unguarded (SQL MERGE) path runs GENERATED BY DEFAULT like
-        // the merge verbs: re-landed images legitimately carry existing
-        // ids, and the high-water must advance past any id in the batch
-        val idMaxes =
-          if (guardIdentity) Map.empty[String, Long]
-          else sourceIdentityMaxes(s, inserts)
-        val semiTouched = keyTouched(s, entries, Some(statsCol), keySet,
-          statsIdx, keyRange)._1
-        // sync half: in-span files are read once for the anti mask
-        // (absence is unprovable from stats — intrinsic to the
-        // semantics); provably-disjoint files drop whole, zero bytes
-        val (syncTouched, syncDropped) = syncRange match {
-          case None => (Seq.empty[Entry], Seq.empty[Entry])
-          case Some(None) => (Seq.empty[Entry], entries) // empty source
-          case Some(Some((lo, hi))) =>
-            entries.partition(touchesRange(_, statsCol, lo, hi))
-        }
-        val droppedPaths = syncDropped.map(_.path).toSet
-        val touchedPaths = (semiTouched ++ syncTouched).map(_.path)
-          .toSet -- droppedPaths
-        val touched = entries.filter(e => touchedPaths.contains(e.path))
-        val carried = entries.filterNot(e =>
-          touchedPaths.contains(e.path) || droppedPaths.contains(e.path))
+        val (touched, carried) = keyTouched(s, entries, Some(statsColP), keySet,
+          statsIdx, keyRange)
         val masked =
           if (touched.isEmpty) touched
           else {
             val read = taggedRead(s, touched)
-            lazy val semiHits = read.join(
-              deleteKeys.select(keys.map(col): _*).distinct(),
-              keys, "left_semi")
-            val antiHits = syncKeys.map(sk => read.join(
-              sk.select(keys.map(col): _*).distinct(), keys, "left_anti"))
-            lazy val hits = (keyRange.map(_ => semiHits), antiHits) match {
-              case (Some(semi), Some(anti)) => // a row can satisfy both masks
-                semi.select(DvFileCol, DvPosCol)
-                  .unionByName(anti.select(DvFileCol, DvPosCol)).distinct()
-              case (one, other) => one.orElse(other).get
-            }
-            (keySet match {
-              case Some(ks) =>
-                landMaskKeyed(t, touched, read, keys, ks, None, semiHits)
-              // delete keys too many to collect: the hits are the join's
-              case None if syncKeys.isEmpty =>
-                landMaskDistributed(t, touched, hits)
-              case None => landMaskSidecar(t, touched, hits)
-            }) match {
+            landMaskKeyed(t, touched, read, keysP, keySet, None,
+              read.join(deleteKeysP.select(keysP.map(col): _*).distinct(),
+                keysP, "left_semi")) match {
               case None => touched // no key actually present
               case Some((dvDir, counts)) => remask(touched, dvDir, counts)
             }
           }
-        t.publish(carried ++ masked ++ newEntries, txn.fold(txns)(txns + _),
-          operation = "APPLY CHANGES", meta = mergeIdentityAdvance(idMaxes))
+        t.publish(carried ++ masked ++ newEntries, txns + (appId -> batchId),
+          operation = "APPLY CHANGES")
       }
     }
   }

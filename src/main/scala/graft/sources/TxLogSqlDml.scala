@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.functions.lit
 
 import graft.operators.TxLog
 
@@ -27,21 +27,18 @@ import graft.operators.TxLog
   * verbs: zero data files rewritten, commit cost O(changed rows),
   * manifest stats pre-pruning where the predicate allows.
   *
-  * MERGE takes one of two routes. The unconditional star shapes —
-  * the dbt one, `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-  * INSERT *`, and its single-clause, DELETE and `NOT MATCHED BY SOURCE
-  * DELETE` variants — plan [[TxLogMergeCommand]], which runs the upsert
-  * as [[TxLog.mergeMorAuto]] (a small source's keys collected on the
-  * driver and the mask merged there, a large one joined) and the rest
-  * as [[TxLog.applyBatch]]. The
+  * Every MERGE with an equi-key ON conjunction plans one command,
+  * [[TxLogMergeClausesCommand]], whatever its clauses: conditional or
+  * not, star or explicit assignments, any number of them. The
   * analyzer may expand the stars before this rule runs (it does for a
   * temp-view source): an expanded `UPDATE SET *` keeps
   * `UpdateAction.fromStar`, and [[TxLogMergeStars]] records which
-  * inserts were `INSERT *`. Every other shape with an equi-key ON
-  * conjunction — conditional clauses, explicit assignments, several
-  * clauses — plans [[TxLogMergeClausesCommand]] over
-  * [[TxLog.mergeClauses]]. Anything else fails LOUDLY with the shapes
-  * supported — never a silent wrong answer.
+  * inserts were `INSERT *`. At run time the dbt upsert, exactly `WHEN
+  * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`, runs as
+  * [[TxLog.mergeMorAuto]] (a small source's keys collected on the
+  * driver and the mask merged there, a large one joined); every other
+  * shape runs as [[TxLog.mergeClauses]]. Anything else fails LOUDLY
+  * with the shapes supported — never a silent wrong answer.
   */
 case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -142,81 +139,55 @@ case class TxLogSqlDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
               "UPDATE/DELETE clauses (star or explicit assignments)")))
       val keys = equiKeys(mergeCond).getOrElse(
         unsupported(s"non-equi-key ON: ${mergeCond.sql}"))
-      // FAST PATH — the exact unconditional star shapes keep their
-      // proven single-verb routes (upsert / decomposed semi-anti /
-      // full-sync), which also carry the sharpest stats pruning. The
-      // analyzer may already have expanded the stars by the time this
-      // rule sees the plan ([[TxLogMergeStars]] has the details)
-      val insertStars = TxLogMergeStars.insertStars(m)
-      val fastSync = notMatchedBySource == Seq(DeleteAction(None))
-      val fastUpdate = matched match {
-        case Seq(UpdateStarAction(None)) | Seq(UpdateAction(None, _, true)) => true
-        case _ => false
-      }
-      val fastDeleteM = matched == Seq(DeleteAction(None))
-      val fastInsert = notMatched match {
-        case Seq(InsertStarAction(None)) => true
-        case Seq(InsertAction(None, _)) => insertStars(0)
-        case _ => false
-      }
-      val fastShape =
-        (matched.isEmpty || fastUpdate || fastDeleteM) &&
-          (notMatched.isEmpty || fastInsert) &&
-          (notMatchedBySource.isEmpty || fastSync)
       if (matched.isEmpty && notMatched.isEmpty &&
           notMatchedBySource.isEmpty)
         unsupported("no actions")
-      if (fastShape)
-        TxLogMergeCommand(base, keys, source,
-          upsert = fastUpdate, insert = fastInsert,
-          deleteMatched = fastDeleteM, syncDelete = fastSync)
-      else {
-        // GENERAL PATH — conditional / multi-clause / explicit
-        // assignments → [[TxLog.mergeClauses]]. Attribute references
-        // are tagged by SIDE here (where the plans still carry
-        // qualifiers and exprIds) and resolved against the live
-        // column sets at run time.
-        val tag = new MergeSideTagger(target, source, unsupported)
-        def clauseOf(a: MergeAction, ctx: String): SqlMergeClause = a match {
-          case UpdateAction(cond, _, true) => // an expanded UPDATE SET *
-            SqlMergeClause("updateStar", cond.map(c =>
-              new ExprBox(tag(c))), Seq.empty, ctx)
-          case UpdateAction(cond, assigns, _) =>
-            SqlMergeClause("update", cond.map(c =>
-              new ExprBox(tag(c))), assigns.map(asn =>
-              tag.assignKey(asn.key) -> new ExprBox(tag(asn.value))), ctx)
-          case UpdateStarAction(cond) =>
-            SqlMergeClause("updateStar", cond.map(c =>
-              new ExprBox(tag(c))), Seq.empty, ctx)
-          case DeleteAction(cond) =>
-            SqlMergeClause("delete", cond.map(c =>
-              new ExprBox(tag(c))), Seq.empty, ctx)
-          case InsertAction(cond, assigns) =>
-            SqlMergeClause("insert", cond.map(c =>
-              new ExprBox(tag(c))), assigns.map(asn =>
-              tag.assignKey(asn.key) -> new ExprBox(tag(asn.value))), ctx)
-          case InsertStarAction(cond) =>
-            SqlMergeClause("insertStar", cond.map(c =>
-              new ExprBox(tag(c))), Seq.empty, ctx)
-          case other => unsupported(s"action $other in $ctx")
-        }
-        val matchedCl = matched.map(clauseOf(_, "matched"))
-        val notMatchedCl = notMatched.zipWithIndex.map {
-          case (InsertAction(cond, _), i) if insertStars(i) => // expanded
-            SqlMergeClause("insertStar", cond.map(c =>
-              new ExprBox(tag(c))), Seq.empty, "insert")
-          case (a, _) => clauseOf(a, "insert")
-        }
-        val nmbsCl = notMatchedBySource.map(clauseOf(_, "bySource"))
-        matchedCl.foreach(c => if (c.kind.startsWith("insert"))
-          unsupported("INSERT in WHEN MATCHED"))
-        notMatchedCl.foreach(c => if (!c.kind.startsWith("insert"))
-          unsupported("UPDATE/DELETE in WHEN NOT MATCHED"))
-        nmbsCl.foreach(c => if (c.kind.startsWith("insert"))
-          unsupported("INSERT in WHEN NOT MATCHED BY SOURCE"))
-        TxLogMergeClausesCommand(base, keys, source,
-          matchedCl, notMatchedCl, nmbsCl)
+      // Attribute references are tagged by SIDE here (where the plans
+      // still carry qualifiers and exprIds) and resolved against the
+      // live column sets at run time. The analyzer may already have
+      // expanded the stars by the time this rule sees the plan
+      // ([[TxLogMergeStars]] has the details)
+      val insertStars = TxLogMergeStars.insertStars(m)
+      val tag = new MergeSideTagger(target, source, unsupported)
+      def clauseOf(a: MergeAction, ctx: String): SqlMergeClause = a match {
+        case UpdateAction(cond, _, true) => // an expanded UPDATE SET *
+          SqlMergeClause("updateStar", cond.map(c =>
+            new ExprBox(tag(c))), Seq.empty, ctx)
+        case UpdateAction(cond, assigns, _) =>
+          SqlMergeClause("update", cond.map(c =>
+            new ExprBox(tag(c))), assigns.map(asn =>
+            tag.assignKey(asn.key) -> new ExprBox(tag(asn.value))), ctx)
+        case UpdateStarAction(cond) =>
+          SqlMergeClause("updateStar", cond.map(c =>
+            new ExprBox(tag(c))), Seq.empty, ctx)
+        case DeleteAction(cond) =>
+          SqlMergeClause("delete", cond.map(c =>
+            new ExprBox(tag(c))), Seq.empty, ctx)
+        case InsertAction(cond, assigns) =>
+          SqlMergeClause("insert", cond.map(c =>
+            new ExprBox(tag(c))), assigns.map(asn =>
+            tag.assignKey(asn.key) -> new ExprBox(tag(asn.value))), ctx)
+        case InsertStarAction(cond) =>
+          SqlMergeClause("insertStar", cond.map(c =>
+            new ExprBox(tag(c))), Seq.empty, ctx)
+        case other => unsupported(s"action $other in $ctx")
       }
+      val matchedCl = matched.map(clauseOf(_, "matched"))
+      val notMatchedCl = notMatched.zipWithIndex.map {
+        case (InsertAction(cond, _), i) if insertStars(i) => // expanded
+          SqlMergeClause("insertStar", cond.map(c =>
+            new ExprBox(tag(c))), Seq.empty, "insert")
+        case (a, _) => clauseOf(a, "insert")
+      }
+      val nmbsCl = notMatchedBySource.map(clauseOf(_, "bySource"))
+      matchedCl.foreach(c => if (c.kind.startsWith("insert"))
+        unsupported("INSERT in WHEN MATCHED"))
+      notMatchedCl.foreach(c => if (!c.kind.startsWith("insert"))
+        unsupported("UPDATE/DELETE in WHEN NOT MATCHED"))
+      nmbsCl.foreach(c => if (c.kind.startsWith("insert"))
+        unsupported("INSERT in WHEN NOT MATCHED BY SOURCE"))
+      TxLogMergeClausesCommand(base, keys, source,
+        matchedCl, notMatchedCl, nmbsCl)
 
     case other => other
   }
@@ -382,10 +353,6 @@ object TxLogSqlDml {
       .sessionExtensions(spark))
 }
 
-/** `UPDATE <txlog table> SET ... WHERE ...` → merge-on-read update:
-  * hit rows are masked and their updated images land as new files in
-  * ONE commit. Captured expressions travel as SQL text (re-parsed
-  * against the snapshot read), so the command is plan-independent. */
 /** Opaque expression holder: keeps captured (deliberately by-name,
   * hence "unresolved") expressions out of the command's
   * TreeNode-visible fields — CheckAnalysis would otherwise fail the
@@ -395,6 +362,11 @@ final class ExprBox(val e: Expression) extends Serializable {
   override def toString: String = e.sql
 }
 
+/** `UPDATE <txlog table> SET ... WHERE ...` → merge-on-read update:
+  * hit rows are masked and their updated images land as new files in
+  * ONE commit. Captured expressions travel by name ([[ExprBox]]) and
+  * resolve against the snapshot read, so the command is
+  * plan-independent. */
 case class TxLogUpdateCommand(base: String, condExpr: Option[ExprBox],
                               sets: Seq[(String, ExprBox)])
     extends LeafRunnableCommand {
@@ -420,7 +392,8 @@ object SqlMergeClause {
   val SrcTag: String = TxLog.MergeSrcPrefix // "__src_"
 }
 
-/** General conditional multi-clause `MERGE INTO` →
+/** Every `MERGE INTO` a txlog table supports. The dbt upsert runs as
+  * [[TxLog.mergeMorAuto]]; every other shape runs as
   * [[TxLog.mergeClauses]]: side tags resolve against the LIVE target
   * and source column sets, star actions expand to full coverage, and
   * the verb executes the Delta clause semantics (first-match-wins,
@@ -534,116 +507,21 @@ case class TxLogMergeClausesCommand(base: String, keys: Seq[String],
         TxLog.MergeInsert(c.cond.map(colOf(_, c.ctx)), starValues())
       case other => err(s"unknown clause kind $other")
     }
-    TxLog.mergeClauses(spark, base, src, keys,
+    def only(cs: Seq[SqlMergeClause], kind: String) =
+      cs.size == 1 && cs.head.kind == kind && cs.head.cond.isEmpty
+    // the dbt upsert, exactly `WHEN MATCHED THEN UPDATE SET * WHEN NOT
+    // MATCHED THEN INSERT *`: mask the matched target rows and land the
+    // whole source, under the same cardinality law
+    if (!evolve && bySource.isEmpty && only(matched, "updateStar") &&
+        only(notMatched, "insertStar")) {
+      starValues() // fails unless the source covers every target column
+      TxLog.mergeMorAuto(spark, base, src, keys, cardinality = true)
+    } else TxLog.mergeClauses(spark, base, src, keys,
       matched = matched.map(toWhen),
       notMatched = notMatched.map(toWhen)
         .map(_.asInstanceOf[TxLog.MergeInsert]),
       notMatchedBySource = bySource.map(toWhen),
       evolveSchema = evolve)
-    Seq.empty
-  }
-}
-
-/** `MERGE INTO <txlog table> USING <source> ON <equi-keys> ...` →
-  * merge-on-read merge/applyChanges: matched target rows are masked;
-  * the source lands as new files (upsert) in ONE commit. */
-case class TxLogMergeCommand(base: String, keys: Seq[String],
-                             sourcePlan: LogicalPlan,
-                             upsert: Boolean, insert: Boolean,
-                             deleteMatched: Boolean,
-                             syncDelete: Boolean = false)
-    extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    val src: DataFrame = org.apache.spark.sql.graftbridge.ColumnBridge
-      .ofRows(spark, sourcePlan)
-    val targetSchema =
-      TxLogSource.mergeTargetSchema(TxLog.snapshot(spark, base))
-    val targetCols = targetSchema.fieldNames.toSeq
-    val missingKeys = keys.filterNot(k =>
-      src.columns.exists(_.equalsIgnoreCase(k)))
-    require(missingKeys.isEmpty,
-      s"MERGE INTO txlog($base): source lacks ON key(s) " +
-        missingKeys.mkString(", "))
-    // star shapes with EXTRA source columns leave the fast path: the
-    // aligned projection below would silently DROP them (data loss).
-    // With autoMerge on they route through the general clause verb's
-    // schema evolution; off, the same loud error the clause route
-    // raises.
-    val extraSrc = src.schema.fields.toSeq.filterNot(f =>
-      targetCols.exists(_.equalsIgnoreCase(f.name)))
-    if ((upsert || insert) && extraSrc.nonEmpty) {
-      val autoMerge = spark.conf
-        .get(TxLogSqlDml.AutoMergeConf, "false").toBoolean
-      require(autoMerge,
-        s"MERGE INTO txlog($base): UPDATE SET * / INSERT * would DROP " +
-          s"source column(s) ${extraSrc.map(_.name).mkString(", ")} " +
-          "not present in the target — set " +
-          s"${TxLogSqlDml.AutoMergeConf}=true to evolve the target " +
-          "schema (old rows read NULL), or project them away in the " +
-          "source")
-      val missing = targetCols.filterNot(c =>
-        src.columns.exists(_.equalsIgnoreCase(c)))
-      require(missing.isEmpty,
-        s"MERGE INTO txlog($base): INSERT/UPDATE SET * needs the source " +
-          s"to cover every target column; missing ${missing.mkString(", ")}")
-      def srcName(c: String): String =
-        src.columns.find(_.equalsIgnoreCase(c)).getOrElse(c)
-      val star = (targetCols ++ extraSrc.map(_.name))
-        .map(c => c -> TxLog.sourceCol(srcName(c))).toMap
-      TxLog.mergeClauses(spark, base, src, keys,
-        matched =
-          if (upsert) Seq(TxLog.MergeUpdate(None, star))
-          else if (deleteMatched) Seq(TxLog.MergeDelete(None))
-          else Seq.empty,
-        notMatched =
-          if (insert) Seq(TxLog.MergeInsert(None, star)) else Seq.empty,
-        notMatchedBySource =
-          if (syncDelete) Seq(TxLog.MergeDelete(None)) else Seq.empty,
-        evolveSchema = true)
-      return Seq.empty
-    }
-    // SET */INSERT * need full column coverage, CAST to the target's
-    // types (a bigint source landing next to int files would poison
-    // later snapshot reads); a pure DELETE only needs the keys
-    lazy val aligned = {
-      val missing = targetCols.filterNot(c =>
-        src.columns.exists(_.equalsIgnoreCase(c)))
-      require(missing.isEmpty,
-        s"MERGE INTO txlog($base): INSERT/UPDATE SET * needs the source " +
-          s"to cover every target column; missing ${missing.mkString(", ")}")
-      src.select(targetCols.map(c =>
-        col(c).cast(targetSchema(c).dataType).as(c)): _*)
-    }
-    val statsCol = keys.headOption.getOrElse(
-      throw new IllegalArgumentException("MERGE needs at least one key"))
-    if (upsert && insert && !syncDelete) {
-      // UPDATE SET * + INSERT * ≡ upsert: anti-by-key ∪ source; a
-      // target row matching two source rows fails, as on the clause
-      // route
-      TxLog.mergeMorAuto(spark, base, aligned, keys, cardinality = true)
-    } else {
-      // decomposed shapes: the matched/not-matched split is a
-      // semi/anti join against the CURRENT target keys, then one
-      // mask+append commit (no #txn growth for ad-hoc statements).
-      // A pure DELETE works from the keys alone (no column coverage).
-      val targetKeys = TxLog.read(spark, base).select(keys.map(col): _*)
-      val srcKeys = src.select(keys.map(k =>
-        col(k).cast(targetSchema(k).dataType).as(k)): _*)
-      val deletes =
-        if (deleteMatched || upsert) srcKeys else srcKeys.limit(0)
-      val inserts =
-        if (upsert && insert) aligned // upsert + sync: every source row
-        else if (upsert) aligned.join(targetKeys, keys, "left_semi")
-        else if (insert) aligned.join(targetKeys, keys, "left_anti")
-        // pure DELETE: no coverage requirement, so `aligned` must not
-        // be touched — an empty frame in the TARGET's shape serves
-        else spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          targetSchema)
-      // WHEN NOT MATCHED BY SOURCE THEN DELETE: rows whose key is
-      // absent from the source die in the SAME commit (full-sync)
-      TxLog.applyBatch(spark, base, deletes, inserts, keys, statsCol,
-        syncKeys = if (syncDelete) Some(srcKeys) else None)
-    }
     Seq.empty
   }
 }

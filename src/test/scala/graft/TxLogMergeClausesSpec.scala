@@ -81,6 +81,25 @@ class TxLogMergeClausesSpec extends AnyFunSuite {
     assert(v == TxLog.latestVersion(spark, base).get)
   }
 
+  test("a lone unconditional WHEN MATCHED THEN DELETE is exempt from the " +
+    "cardinality law (Delta's rule): duplicate source keys delete their " +
+    "row once, with the mask merged on the driver and distributed") {
+    import spark.implicits._
+    val key = "spark.graft.txlog.dsv2MaxMaskRows"
+    for ((limit, i) <- Seq(None, Some("1")).zipWithIndex) {
+      val base = s"/tmp/graft_txmc/deldup$i"
+      target(base, Seq((1, 10, "a"), (2, 20, "a"), (3, 30, "a")))
+      val src = Seq(1, 1, 3, 3, 3, 9).toDF("k")
+      limit.foreach(spark.conf.set(key, _))
+      val v = try TxLog.mergeClauses(spark, base, src, Seq("k"),
+          matched = Seq(MergeDelete(None)))
+        finally spark.conf.unset(key)
+      assert(snapshot(base) == Set((2, 20, "a")), limit)
+      assert(TxLog.manifest(spark, base, v)._1.flatMap(_.dv).map(_.rows).sum
+        == 2L, limit)
+    }
+  }
+
   test("row-precise conditional masking: two target rows share a key; " +
     "a clause conditioned on a TARGET column fires on exactly one — " +
     "only that row is masked and replaced") {

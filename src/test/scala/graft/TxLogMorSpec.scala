@@ -280,6 +280,28 @@ class TxLogMorSpec extends AnyFunSuite {
     assert(contents(TxLog.read(spark, base)) == expect + ((7777L, "s-7777")))
   }
 
+  test("mergeMor and mergeMorAuto land the source in the target's " +
+    "types: a DOUBLE b merged into a DECIMAL(10,2) b (and an INT key " +
+    "into a BIGINT one) reads back") {
+    val merges: Seq[(String, (String, org.apache.spark.sql.DataFrame) => Long)] =
+      Seq("mergeMor" -> ((b, src) => TxLog.mergeMor(spark, b, src, Seq("k"), "k")),
+        "mergeMorAuto" -> ((b, src) => TxLog.mergeMorAuto(spark, b, src, Seq("k"))))
+    for ((name, merge) <- merges) {
+      val base = s"/tmp/graft_txmor/decimal_$name"
+      TxLog.drop(spark, base)
+      TxLog.commit(spark.sql(
+        "SELECT 1L AS k, CAST(1.50 AS DECIMAL(10,2)) AS b UNION ALL " +
+          "SELECT 2L, CAST(2.25 AS DECIMAL(10,2))"), base, None, Some("k"))
+      merge(base, spark.sql("SELECT 2 AS k, 7.5D AS b"))
+      val read = TxLog.read(spark, base)
+      assert(read.schema("b").dataType ==
+        org.apache.spark.sql.types.DecimalType(10, 2), name)
+      val got = read.collect().map(r => r.getLong(0) -> r.getDecimal(1).toPlainString)
+      assert(got.toSet == Set(1L -> "1.50", 2L -> "7.50") && got.length == 2,
+        s"$name: ${got.toSeq}")
+    }
+  }
+
   test("CDF mode (_change_type) carries MOR deletes downstream " +
     "row-precisely — batch and streaming agree") {
     val base = "/tmp/graft_txmor/cdfstream"

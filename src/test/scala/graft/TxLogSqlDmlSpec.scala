@@ -708,9 +708,10 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
     s"MERGE INTO $table t USING $src s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
 
-  test("the dbt star MERGE over a temp view plans TxLogMergeCommand (the " +
-    "analyzer has already expanded its stars), and reading the target " +
-    "schema starts no Spark job") {
+  test("the dbt star MERGE over a temp view plans TxLogMergeClausesCommand " +
+    "(the analyzer has already expanded its stars) and runs the MOR " +
+    "upsert's Spark jobs, and reading the target schema starts no Spark " +
+    "job") {
     val base = "/tmp/graft_txsqldml/route"
     seed(base, "txdml_route")
     try {
@@ -719,15 +720,17 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         .createOrReplaceTempView("txdml_route_src")
       val q = starMerge("txdml_route", "txdml_route_src")
       val (plan, jobs) = SparkTestBase.jobsDuring(analyzed(q))
-      assert(plan.isInstanceOf[graft.sources.TxLogMergeCommand],
+      assert(plan.isInstanceOf[graft.sources.TxLogMergeClausesCommand],
         plan.getClass.getSimpleName)
       assert(jobs == 0, s"$jobs Spark jobs while analysing the MERGE")
-      // an explicit assignment list stays on the clause route
       assert(analyzed("MERGE INTO txdml_route t USING txdml_route_src s " +
         "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v " +
         "WHEN NOT MATCHED THEN INSERT (k, s, v) VALUES (s.k, s.s, s.v)")
         .isInstanceOf[graft.sources.TxLogMergeClausesCommand])
-      sql.sql(q)
+      // the upsert's jobs (mergeMorAuto: key set, source land, hit
+      // collection, mask land); the general clause verb takes more
+      val (_, runJobs) = SparkTestBase.jobsDuring(sql.sql(q))
+      assert(runJobs == 4, s"$runJobs Spark jobs running the MERGE")
       val snap = TxLog.read(spark, base)
       assert(snap.count() == 109)
       assert(snap.where("k >= 95 AND s = concat('new-', k)").count() == 15)
@@ -755,7 +758,7 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         "SELECT 5, 'b', 2.0D UNION ALL SELECT 300, 'c', 3.0D")
         .createOrReplaceTempView("txdml_card_dup")
       assert(analyzed(starMerge("txdml_card", "txdml_card_dup"))
-        .isInstanceOf[graft.sources.TxLogMergeCommand])
+        .isInstanceOf[graft.sources.TxLogMergeClausesCommand])
       val v0 = TxLog.latestVersion(spark, base).get
       val err = intercept[Exception](
         sql.sql(starMerge("txdml_card", "txdml_card_dup")))
@@ -780,6 +783,35 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         org.apache.spark.sql.Encoders.STRING).collect().toSet == Set("x", "y"))
       assert(snap.where("k = 7").select("s").head.getString(0) == "z")
     } finally sql.sql("DROP TABLE IF EXISTS txdml_card")
+  }
+
+  test("the cardinality law holds on every star shape: UPDATE SET * " +
+    "alone and the upsert with NOT MATCHED BY SOURCE DELETE fail on two " +
+    "source rows for one matched key and publish nothing; a lone " +
+    "WHEN MATCHED THEN DELETE takes them") {
+    val base = "/tmp/graft_txsqldml/cardshapes"
+    seed(base, "txdml_cardsh")
+    try {
+      sql.sql("SELECT 5 AS k, 'a' AS s, 1.0D AS v UNION ALL " +
+        "SELECT 5, 'b', 2.0D UNION ALL SELECT 300, 'c', 3.0D")
+        .createOrReplaceTempView("txdml_cardsh_dup")
+      val v0 = TxLog.latestVersion(spark, base).get
+      for (q <- Seq(
+          "MERGE INTO txdml_cardsh t USING txdml_cardsh_dup s ON t.k = s.k " +
+            "WHEN MATCHED THEN UPDATE SET *",
+          starMerge("txdml_cardsh", "txdml_cardsh_dup") +
+            " WHEN NOT MATCHED BY SOURCE THEN DELETE")) {
+        val err = intercept[Exception](sql.sql(q))
+        assert(err.getMessage.contains("matched multiple source rows"),
+          s"$q: ${err.getMessage}")
+        assert(TxLog.latestVersion(spark, base).get == v0, q)
+      }
+      sql.sql("MERGE INTO txdml_cardsh t USING txdml_cardsh_dup s " +
+        "ON t.k = s.k WHEN MATCHED THEN DELETE")
+      val snap = TxLog.read(spark, base)
+      assert(snap.count() == 99)
+      assert(snap.where("k = 5").isEmpty)
+    } finally sql.sql("DROP TABLE IF EXISTS txdml_cardsh")
   }
 
   test("star MERGE over a temp view with an extra source column fails " +
@@ -820,7 +852,7 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         "SELECT CAST(NULL AS INT), 'b', 2.0D")
         .createOrReplaceTempView("txdml_nullkeys_src")
       assert(analyzed(starMerge("txdml_nullkeys", "txdml_nullkeys_src"))
-        .isInstanceOf[graft.sources.TxLogMergeCommand])
+        .isInstanceOf[graft.sources.TxLogMergeClausesCommand])
       def nullRows() = TxLog.read(spark, base).where("k IS NULL").select("s")
         .as[String](org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq
       sql.sql(starMerge("txdml_nullkeys", "txdml_nullkeys_src"))
@@ -852,7 +884,7 @@ class TxLogSqlDmlSpec extends AnyFunSuite {
         "12345678901234567890" -> "s2", "12345678901234567891" -> "s3")
       sql.sql(keys(source)).createOrReplaceTempView("txdml_deckeys_src")
       assert(analyzed(starMerge("txdml_deckeys", "txdml_deckeys_src"))
-        .isInstanceOf[graft.sources.TxLogMergeCommand])
+        .isInstanceOf[graft.sources.TxLogMergeClausesCommand])
       sql.sql(starMerge("txdml_deckeys", "txdml_deckeys_src"))
       val got = TxLog.read(spark, base).collect()
         .map(r => r.getDecimal(0).toPlainString -> r.getString(1)).toSet
